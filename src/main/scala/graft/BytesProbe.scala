@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * CURRENT registered operator and the pre-round-19 LEGACY spelling
   * (reconstructed verbatim from the history) on k×-scaled document corpora
   * ([[ScaleProbe.buildCorpus]]), tallies `shuffleWriteMetrics` per run, and
-  * checksums both outputs (order-independent sum of row hashes) so the
+  * checksums both outputs (row count and exact sum of row hashes) so the
   * before/after binaries are proven output-equal at every probed scale.
   *
   * Usage: `runMain graft.BytesProbe [k,k,...]` (default `8,64`).
@@ -35,15 +35,16 @@ object BytesProbe {
     def reset(): Unit = { bytes.set(0); recs.set(0) }
   }
 
-  /** Order-independent output digest: (row count, bit_xor of row hashes) —
-    * the StreamNeardupHotProbe checksum pattern (a SUM of full-range
-    * xxhash64 longs overflows under ANSI). Columns in sorted-name order. */
-  private def checksum(df: DataFrame): (Long, Long) = {
+  /** Order-independent output digest: (row count, sum of row hashes) —
+    * the combiner of `perfbench/Checksum`. The sum is exact in
+    * decimal(38,0) (2^63 summed over 10^19 rows fits); an XOR would cancel
+    * duplicate rows in pairs. Columns in sorted-name order. */
+  private def checksum(df: DataFrame): (Long, java.math.BigDecimal) = {
     val cols = df.columns.sorted.map(c => col(c).cast("string"))
-    val r = df.select(xxhash64(cols: _*).as("h"))
+    val r = df.select(xxhash64(cols: _*).cast("decimal(38,0)").as("h"))
       .agg(count(lit(1)).as("n"),
-           coalesce(expr("bit_xor(h)"), lit(0L)).as("x")).head()
-    (r.getLong(0), r.getLong(1))
+           coalesce(sum(col("h")), lit(0).cast("decimal(38,0)")).as("x")).head()
+    (r.getLong(0), r.getDecimal(1))
   }
 
   // ---- LEGACY spellings, verbatim from the pre-round-19 tree (df408bc^) ----
@@ -141,7 +142,7 @@ object BytesProbe {
         val (b, r) = (tally.bytes.get, tally.recs.get)
         val (n, cs) = checksum(fn(spark, kDir))
         println(f"[bytesprobe] k=$k%-4d $label%-24s wall=$wall%8.2fs " +
-          f"shufMB=${b / 1e6}%10.1f shufRows=$r%12d rows=$n%9d checksum=$cs%20d")
+          f"shufMB=${b / 1e6}%10.1f shufRows=$r%12d rows=$n%9d checksum=$cs%22s")
       }
     }
     spark.stop()

@@ -31,12 +31,13 @@ object Caching {
     * planning, no job) against the shuffle width and scatters only below
     * half of it — the regime where idle cores exist.
     *
-    * Why RANGE with an explicit width: a hash repartition on the same key
-    * as an upstream aggregate is provably redundant and gets planned away,
-    * and AQE coalesces width-unspecified exchanges by their BYTE size —
-    * the wrong cost model for a stage whose output is many times its
-    * input (measured: the hash spelling re-coalesced to one partition and
-    * the win vanished).
+    * Why a HASH repartition with an explicit width: the gate admits only
+    * scan+project frames, so no upstream exchange can make it redundant;
+    * an explicit width plans REPARTITION_BY_NUM, which AQE never coalesces
+    * by byte size (the wrong cost model for a stage whose output is many
+    * times its input); and unlike a range repartition it needs no sampling
+    * job and scan to find bounds. Hash partitioning on the key still
+    * satisfies every downstream key-clustered aggregation or window.
     *
     * How the count is read (round-10 advisor): from the physical plan's
     * LEAF file scans (`FileSourceScanExec.inputRDDs()` — driver-side
@@ -70,7 +71,7 @@ object Caching {
     }
     val allFileScans = leaves.nonEmpty && scanParts.length == leaves.length
     if (!alreadyWide && allFileScans && width >= 1 && scanParts.sum * 2 <= width)
-      df.repartitionByRange(width, key)
+      df.repartition(width, key)
     else df
   }
 }

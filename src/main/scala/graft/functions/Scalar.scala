@@ -216,7 +216,7 @@ object Scalar {
   val fnJson: Q = (s, d) =>
     // Two JSON parses per row fuse into the scan stage; on the fixture's
     // single split that serializes on one core. The conditional scatter
-    // (Caching.scatterIfNarrow) range-partitions on event_id so the parse
+    // (Caching.scatterIfNarrow) hash-partitions on event_id so the parse
     // moves from one core to the session width (sort-free since round 15,
     // so the scatter is the plan's only exchange).
     graft.Caching.scatterIfNarrow(Tables.events(s, d), col("event_id"))

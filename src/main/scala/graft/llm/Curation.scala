@@ -318,7 +318,7 @@ object Curation {
     * joinable gram relation. */
   private def wordGrams(docs: DataFrame): DataFrame = {
     val n = DecontamNgramN
-    // Conditionally range-scatter the raw documents before the n-gram
+    // Conditionally scatter the raw documents before the n-gram
     // explode: the query's heaviest compute (measured 1.1 s serial at
     // sf0.1, evaluated by BOTH uncached consumer branches) would
     // otherwise fuse into a narrow scan's task — see
@@ -445,18 +445,19 @@ object Curation {
   val ingestDedup: Q = (s, d) => {
     val docs = Tables.documents(s, d)
     val isNew = col("doc_id") % 10 === 7
-    // Round 20 (verdict item 6): ONE text pass for the whole operator. The
-    // round-19 spelling still read `documents.text` twice — the sha256 pass
-    // and the shingle-cache recipe each scanned it. One fused scan now
-    // projects (doc_id, sha256, distinct shingle-hash array) and is the
-    // operator's only cached frame; the exact arm reads (doc_id, h) from
-    // it, the near arm explodes the arrays, and the per-doc sizes are
-    // size(shs) — no aggregation at all. Text ReadSchema in the committed
-    // plan: 2 → 1.
+    // One fused scan projects (doc_id, sha256, distinct shingle-hash array)
+    // and is the operator's only cached frame (text ReadSchema 1); the exact
+    // arm reads (doc_id, h) from it, the near arm explodes the arrays, and
+    // the per-doc sizes are size(shs) — no aggregation at all. The tokens
+    // are projected BEFORE the shingle lambda: written inline, they sat in
+    // the lambda body, which subexpression elimination skips, so every
+    // 5-gram re-split its whole document (O(tokens²) per document).
+    // CollapseProject keeps the two projections apart because the shingle
+    // array reads `toks` more than once.
     val base = graft.Caching.scatterIfNarrow(docs, col("doc_id"))
       .select(col("doc_id"), sha2(col("text"), 256).as("h"),
-        Dedup.shingleHashArray(
-          filter(split(lower(col("text")), "\\s+"), t => t =!= "")).as("shs"))
+        filter(split(lower(col("text")), "\\s+"), t => t =!= "").as("toks"))
+      .select(col("doc_id"), col("h"), Dedup.shingleHashArray(col("toks")).as("shs"))
       .transform(graft.Caching.cachedOnce)
     // Round 19: the exact check is ONE aggregation over the hash group, not
     // a batch-vs-corpus self-join. Per content hash: the minimum CORPUS doc

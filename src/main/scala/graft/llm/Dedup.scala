@@ -22,13 +22,13 @@ object Dedup {
 
   /** doc_id + deduplicated whitespace tokens of lowercased text.
     *
-    * Conditionally range-scattered across the shuffle width before
+    * Conditionally hash-scattered across the shuffle width before
     * returning: every consumer (shingles, simhash signatures, substring
     * spans, winnowing) immediately row-multiplies with an explode+hash
     * pass, so when the scan under-parallelizes the session that heavy
     * compute would fuse into a single task — see
-    * [[graft.Caching.scatterIfNarrow]] for the gate and the
-    * range-vs-hash rationale. */
+    * [[graft.Caching.scatterIfNarrow]] for the gate and the choice of
+    * partitioning. */
   def tokens(s: SparkSession, d: String): DataFrame =
     graft.Caching.scatterIfNarrow(
       Tables.documents(s, d)

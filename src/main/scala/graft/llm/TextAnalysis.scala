@@ -109,12 +109,13 @@ object TextAnalysis {
     if (fits) facts.join(broadcast(vocab), key) else facts.join(vocab, key)
   }
 
-  /** One row per (doc, token). Conditionally range-scattered BEFORE the
-    * explode ([[graft.Caching.scatterIfNarrow]]): the explode multiplies
-    * each document by its token count, so on an under-parallelized scan
-    * the whole text family's heaviest compute would fuse into one task.
-    * Range partitioning on doc_id still satisfies every downstream
-    * doc_id-clustered aggregation/window, so consumers lose no fusion. */
+  /** One row per (doc, token). Conditionally hash-scattered on doc_id
+    * BEFORE the explode ([[graft.Caching.scatterIfNarrow]]): the explode
+    * multiplies each document by its token count, so on an
+    * under-parallelized scan the whole text family's heaviest compute would
+    * fuse into one task. Hash partitioning on doc_id still satisfies every
+    * downstream doc_id-clustered aggregation/window, so consumers lose no
+    * fusion. */
   private def toks(s: SparkSession, d: String): DataFrame =
     graft.Caching.scatterIfNarrow(Tables.documents(s, d), col("doc_id"))
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
@@ -125,7 +126,7 @@ object TextAnalysis {
     * per-doc aggregates from (round 19). cachedOnce, so every consumer in a
     * session — [[bpeEncode]], [[unigramLogprob]] — shares one
     * materialization, and the aggregation collapses into the tokenize
-    * stage (scatterIfNarrow range-partitions on doc_id, which satisfies
+    * stage (scatterIfNarrow hash-partitions on doc_id, which satisfies
     * the (doc_id, w) clustering, so no extra exchange is planned). The
     * frame is aggregated, not raw-exploded — the caching discipline the
     * dsir/perplexity A/Bs established. */
@@ -268,8 +269,8 @@ object TextAnalysis {
     // session builds it once for all four), and the old explicit
     // `.repartition(doc_id)` after the aggregation is GONE: the plan-audited
     // build already leaves the frame clustered on doc_id (scatterIfNarrow's
-    // range partitioning satisfies the (doc_id, w) grouping, so the agg
-    // plans no exchange and the ranking window below accepts the range
+    // hash partitioning satisfies the (doc_id, w) grouping, so the agg
+    // plans no exchange and the ranking window below accepts the doc_id
     // clustering as-is) — the repartition was a pure extra exchange of
     // every tf row, measured at +1 Exchange in the committed before-plan.
     // At production scan widths the agg exchanges on (doc_id, w) and the

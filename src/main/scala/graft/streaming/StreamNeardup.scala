@@ -475,17 +475,15 @@ object StreamNeardup {
   def admitNeardupBatch(s: SparkSession, d: String,
                         horizonDocs: Long = HorizonDocsDefault): DataFrame = {
     val docs = graft.Tables.documents(s, d)
-    // Round 20 (verdict item 6, same fusion as
-    // [[graft.llm.Curation.ingestDedup]]): ONE text pass projects
-    // (doc_id, sha256, distinct shingle-hash array) as the operator's only
-    // cached frame — the round-19 spelling still scanned `documents.text`
-    // twice (sha256 frame + shingle-cache recipe). The exact self-join
-    // reads (doc_id, h) from it, the near arm explodes the arrays, sizes
-    // are size(shs). Text ReadSchema in the committed plan: 2 → 1.
+    // The same fused scan as [[graft.llm.Curation.ingestDedup]], tokens
+    // projected once per document before the shingle lambda: (doc_id,
+    // sha256, distinct shingle-hash array) is the operator's only cached
+    // frame. The exact self-join reads (doc_id, h) from it, the near arm
+    // explodes the arrays, sizes are size(shs).
     val base = graft.Caching.scatterIfNarrow(docs, col("doc_id"))
       .select(col("doc_id"), sha2(col("text"), 256).as("h"),
-        graft.llm.Dedup.shingleHashArray(
-          filter(split(lower(col("text")), "\\s+"), t => t =!= "")).as("shs"))
+        filter(split(lower(col("text")), "\\s+"), t => t =!= "").as("toks"))
+      .select(col("doc_id"), col("h"), graft.llm.Dedup.shingleHashArray(col("toks")).as("shs"))
       .transform(graft.Caching.cachedOnce)
     val hashed = base.select(col("doc_id"), col("h"))
     val exact = hashed.as("x")

@@ -294,6 +294,40 @@ class ExplainInvariantsSpec extends SparkSpec {
       "the small incoming-batch side must broadcast into the corpus pass")
   }
 
+  /** Every node of `p`, descending once into each distinct cached build. */
+  private def withBuilds(p: SparkPlan): Seq[SparkPlan] = {
+    val nodes = flattenPlan(p)
+    val builds = nodes.collect {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => m.relation
+    }.groupBy(_.cacheBuilder).values.map(_.head)
+    nodes ++ builds.flatMap(r => withBuilds(r.cachedPlan))
+  }
+
+  test("ingest dedup and its stream twin tokenize each document once, not once per shingle") {
+    // A tokenizer written inside the shingle lambda re-splits the whole
+    // document for every 5-gram (lambda bodies are exempt from
+    // subexpression elimination): O(tokens²) per document.
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, StringSplit}
+    for (df <- Seq(graft.llm.Curation.ingestDedup(spark, sfDir),
+                   graft.streaming.StreamNeardup.admitNeardupBatch(spark, sfDir))) {
+      val exprs = withBuilds(df.queryExecution.executedPlan).flatMap(_.expressions)
+      val splits = exprs.flatMap(_.collect { case e: StringSplit => e })
+      val inLambda = exprs.flatMap(_.collect { case l: LambdaFunction => l })
+        .flatMap(_.function.collect { case e: StringSplit => e })
+      assert(splits.size == 1 && inLambda.isEmpty,
+        s"${splits.size} tokenizer(s), ${inLambda.size} inside a lambda")
+    }
+  }
+
+  test("ingest dedup reads documents.text once") {
+    val df = graft.llm.Curation.ingestDedup(spark, sfDir)
+    val textScans = withBuilds(df.queryExecution.executedPlan).collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.requiredSchema.fieldNames.contains("text") => f
+    }
+    assert(textScans.size == 1, s"text ReadSchema count ${textScans.size}")
+  }
+
   test("bpe encode deploys the merged vocabulary as a broadcast join") {
     val p = plan(graft.llm.TextAnalysis.bpeEncode(spark, sfDir))
     assert(p.contains("BroadcastHashJoin"),

@@ -407,8 +407,10 @@ class LlmSpec extends SparkSpec {
   test("quality classifier: hashed-BoW linear score matches an in-memory recompute") {
     def md5hex(s: String): String = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    // sort-free registration (its order lives in SparkEntry.dumpSort)
     val got = TextAnalysis.qualityClassifier(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(4), r.getInt(5)))
+      .sortBy(_._1)
     val toks = memToks()
     assert(got.map(_._1).toSeq == toks.keys.toSeq.sorted)
     got.foreach { case (id, nToks, dotMilli, score6, keep) =>
@@ -453,8 +455,9 @@ class LlmSpec extends SparkSpec {
   }
 
   test("keyword search: AND + NOT semantics are exhaustive (no missed doc)") {
+    // sort-free registration (its order lives in SparkEntry.dumpSort)
     val got = TextAnalysis.keywordSearch(spark, sfDir).collect()
-      .map(_.getLong(0)).toSeq
+      .map(_.getLong(0)).toSeq.sorted
     val terms = Seq("join", "window", "scan")
     val expected = memToks().collect {
       case (id, tk) if terms.forall(tk.contains) && !tk.contains("slow") => id

@@ -10,14 +10,33 @@ import org.apache.spark.sql.functions._
   */
 class ScatterGateSpec extends SparkSpec {
 
-  private def hasRangeRepartition(df: org.apache.spark.sql.DataFrame): Boolean =
-    df.queryExecution.logical.toString.contains("RepartitionByExpression")
+  /** The partitionings of the shuffles in `df`'s executed plan. */
+  private def shufflePartitionings(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.catalyst.plans.physical.Partitioning] =
+    flattenPlan(df.queryExecution.executedPlan).collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e.outputPartitioning
+    }
 
   test("narrow file-scan frame below half the shuffle width gets scattered") {
     // fixtures are single-split at test scale; shuffle width is 4 in SparkSpec
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     val out = Caching.scatterIfNarrow(docs, col("doc_id"))
-    assert(hasRangeRepartition(out), "under-parallelized scan must scatter")
+    val width = spark.sessionState.conf.numShufflePartitions
+    val group = "scatter-gate-spec"
+    spark.sparkContext.setJobGroup(group, "scatter")
+    try out.write.format("noop").mode("overwrite").save()
+    finally spark.sparkContext.clearJobGroup()
+    val parts = shufflePartitionings(out)
+    assert(parts.size == 1, s"under-parallelized scan must scatter once: $parts")
+    parts.head match {
+      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+        assert(h.numPartitions == width, s"scatter must keep the full width: $h")
+      case other => fail(s"scatter must be a hash exchange, got $other")
+    }
+    // one job for the shuffle-map stage and one for the result: a range
+    // scatter would add a third, its sampling job
+    val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    assert(jobs == 2, s"expected no sampling job, saw $jobs jobs")
     assert(out.count() == docs.count())
   }
 
