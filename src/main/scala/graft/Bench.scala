@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints ONE compact JSON line for the driver.
   *
@@ -60,55 +59,43 @@ object Bench {
     * parsed as real JSON, numeric non-underscore fields only, so prose in
     * `_comment` can never be ingested as a baseline entry. */
   def weakList(results: Seq[(String, Option[Double])], baselinePath: String,
-               sfDir: String): Option[Seq[String]] = {
-    import org.json4s._
-    val p = java.nio.file.Paths.get(baselinePath)
-    val fields: Option[List[JField]] =
-      if (!java.nio.file.Files.exists(p)) None
-      else scala.util.Try(org.json4s.jackson.JsonMethods.parse(
-        java.nio.file.Files.readString(p))).toOption.collect { case JObject(fs) => fs }
-    fields.flatMap { fs =>
-      // exact-segment match: contains("sf0.1") also matched sf0.12/sf0.15
-      val recordedSf = fs.collectFirst { case JField("_sf", JString(s)) => s }
-      val segments = sfDir.split('/').filter(_.nonEmpty).toSet
-      if (!recordedSf.exists(segments.contains)) None
-      else {
-        val base: Map[String, Double] = fs.iterator.collect {
-          case JField(k, JDouble(d)) if !k.startsWith("_") => k -> d
-          case JField(k, JInt(i)) if !k.startsWith("_") => k -> i.toDouble
-          case JField(k, JLong(l)) if !k.startsWith("_") => k -> l.toDouble
-          case JField(k, JDecimal(d)) if !k.startsWith("_") => k -> d.toDouble
-        }.toMap
-        Some(results.collect {
-          case (n, Some(t)) if base.get(n).exists(b => b >= 0.25 && t > 2 * b) => n
-        })
+               sfDir: String): Option[Seq[String]] =
+    baseline(baselinePath, sfDir).map { base =>
+      results.collect {
+        case (n, Some(t)) if !n.startsWith("_") &&
+          base.get(n).exists(b => b >= 0.25 && t > 2 * b) => n
       }
     }
-  }
 
   /** The recorded quiet-window floor for the headline TOTAL (`_graft_quiet_floor`
-    * in the baseline file), applied under the same `_sf` exact-segment guard as
-    * the per-query map. This is the storm detector's reference: a run total
-    * more than 1.5× above the quietest controlled window ever recorded on this
-    * HEAD's lineage is either a real regression (which a re-run reproduces) or
-    * an ambient storm (which a re-run escapes) — either way the re-run tells
+    * in the baseline file), under the same `_sf` guard as [[weakList]].
+    * This is the storm detector's reference: a run total more than 1.5×
+    * above the quietest controlled window ever recorded on this HEAD's
+    * lineage is either a real regression (which a re-run reproduces) or an
+    * ambient storm (which a re-run escapes) — either way the re-run tells
     * the truth and costs nothing when the window is quiet. */
-  def quietFloor(baselinePath: String, sfDir: String): Option[Double] = {
+  def quietFloor(baselinePath: String, sfDir: String): Option[Double] =
+    baseline(baselinePath, sfDir).flatMap(_.get("_graft_quiet_floor"))
+
+  /** The numeric fields of the baseline file, or None when the file is
+    * missing or unparseable or its `_sf` is not an exact path segment of
+    * `sfDir` (contains("sf0.1") also matched sf0.12/sf0.15). */
+  private def baseline(path: String, sfDir: String): Option[Map[String, Double]] = {
     import org.json4s._
-    val p = java.nio.file.Paths.get(baselinePath)
+    val p = java.nio.file.Paths.get(path)
     if (!java.nio.file.Files.exists(p)) None
     else scala.util.Try(org.json4s.jackson.JsonMethods.parse(
       java.nio.file.Files.readString(p))).toOption.collect { case JObject(fs) => fs }
-      .flatMap { fs =>
-        val recordedSf = fs.collectFirst { case JField("_sf", JString(s)) => s }
+      .filter { fs =>
         val segments = sfDir.split('/').filter(_.nonEmpty).toSet
-        if (!recordedSf.exists(segments.contains)) None
-        else fs.collectFirst {
-          case JField("_graft_quiet_floor", JDouble(d)) => d
-          case JField("_graft_quiet_floor", JInt(i)) => i.toDouble
-          case JField("_graft_quiet_floor", JDecimal(d)) => d.toDouble
-        }
+        fs.collectFirst { case JField("_sf", JString(s)) => s }.exists(segments.contains)
       }
+      .map(_.iterator.collect {
+        case JField(k, JDouble(d)) => k -> d
+        case JField(k, JInt(i)) => k -> i.toDouble
+        case JField(k, JLong(l)) => k -> l.toDouble
+        case JField(k, JDecimal(d)) => k -> d.toDouble
+      }.toMap)
   }
 
   /** System load-1 (runnable-thread average over the last minute), the ambient
@@ -124,39 +111,15 @@ object Bench {
     // ANN + exact-scan would charge the index the cost it exists to avoid.
     sys.props("graft.ann.recall") = "0"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // The generated-code cache holds 100 compiled units by default; a full
-      // headline pass generates more than that, so round-robin passes would
-      // re-run janino on every query. Plenty of heap — keep them all.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Input-split sizing was A/B'd here (2 MB maxPartitionBytes / 128 KB
-      // openCost to spread the 11 MB lineitem scan over more than the 3
-      // tasks the 4 MB openCost floor yields): the apparent win did not
-      // replicate once run order was controlled — same-JVM later sessions
-      // are JIT-warmer, which masqueraded as a split-size effect — and the
-      // sort-bound queries (project_select, sort_global) consistently pay
-      // for the extra map outputs under a range exchange. Defaults kept;
-      // at a real 100 TB deployment the default 128 MB split IS the right
-      // figure (SURVEY §7.5).
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // AQE's coalescer floors partitions at minPartitionSize (1 MB default)
-      // even with parallelismFirst=true, so a ~3 MB shuffle collapses to 2-3
-      // tasks and a CPU-heavy stage behind it (window sort, range sort)
-      // serializes on 2 of 32 idle cores (measured: llm_tfidf's window+sort
-      // stages ran 2-task at ~1 s combined). 256 KB keeps small-but-hot
-      // stages parallel; at 100 TB every real shuffle dwarfs either floor,
-      // so this only affects the small-data regime it is meant for.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
-    // Dev hook: SPARK_GRAFT_EXTRA_CONF="k=v,k=v" for cross-process config
-    // A/B runs (same-JVM A/B is confounded by JIT warmth — see BASELINE.md).
-    val spark = Confs.extraConfPairs()
-      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    // Input-split sizing was A/B'd (2 MB maxPartitionBytes / 128 KB openCost
+    // to spread the 11 MB lineitem scan over more than 3 tasks): the apparent
+    // win did not replicate once run order was controlled, and the sort-bound
+    // queries pay for the extra map outputs under a range exchange. Defaults
+    // kept; at 100 TB the default 128 MB split IS the right figure (SURVEY §7.5).
+    // SPARK_GRAFT_EXTRA_CONF="k=v,k=v" (applied by the factory) carries
+    // cross-process config A/Bs, e.g. spark.sql.adaptive.enabled=false —
+    // same-JVM A/B is confounded by JIT warmth (see BASELINE.md).
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Pre-touch the fixture files into the OS page cache before any timing:
     // on a shared VM the first scan of a cold file pays disk latency that has
@@ -202,10 +165,8 @@ object Bench {
     // of swallowing all of a query's attempts inside one spike window (this
     // is exactly what produced the 4x llm_pipeline_e2e outlier in BENCH_r04 —
     // min of 3 consecutive attempts, all inside the same spike).
-    val rr = sys.env.getOrElse("SPARK_GRAFT_BENCH_RR", "1") != "0"
     val schedule: Seq[(Int, String)] =
-      if (rr) for (pass <- 1 to attempts; name <- names) yield (pass, name)
-      else for (name <- names; pass <- 1 to attempts) yield (pass, name)
+      for (pass <- 1 to attempts; name <- names) yield (pass, name)
     val timed = scala.collection.mutable.Map.empty[String, List[Double]]
     val failedOnce = scala.collection.mutable.Set.empty[String]
     // Prepared-plan protocol (round-12 verdict #1 names per-query analysis
@@ -296,8 +257,9 @@ object Bench {
     // precondition: load-1 measured from inside the run is dominated by
     // our own 32 runnable threads (measured: 0.06 → 3.2 on a dead-quiet
     // window), so the loads are emitted for adjudication, not decisions.
-    val floor = quietFloor(sys.env.getOrElse("SPARK_GRAFT_BASELINE_FILE",
-      "tools/duckdb_per_query_sf0.1.json"), sfDir)
+    val baselineFile = sys.env.getOrElse("SPARK_GRAFT_BASELINE_FILE",
+      "tools/duckdb_per_query_sf0.1.json")
+    val floor = quietFloor(baselineFile, sfDir)
     val maxRetries =
       sys.env.get("SPARK_GRAFT_BENCH_RETRIES").flatMap(_.toIntOption).getOrElse(1)
     var retries = 0
@@ -321,8 +283,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = results.flatMap(_._2).sum
     val nFailed = results.count(_._2.isEmpty)
-    val weak = weakList(results, sys.env.getOrElse("SPARK_GRAFT_BASELINE_FILE",
-      "tools/duckdb_per_query_sf0.1.json"), sfDir)
+    val weak = weakList(results, baselineFile, sfDir)
     // null ⇒ no baseline applied (absent file / sf mismatch) — NOT a quiet run
     val weakJson = weak.map(_.map("\"" + _ + "\"").mkString("[", ",", "]"))
       .getOrElse("null")

@@ -20,17 +20,12 @@ object CatalogRoundtrip {
   val TableName = "graft_orders_persist"
 
   def session(base: String): SparkSession =
-    SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-catalog-roundtrip")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"$base/warehouse")
+    Sessions.builder(
+      "spark.sql.warehouse.dir" -> s"$base/warehouse",
       // metastore db under the same base dir: the catalog's entire state
       // lives on disk, so a later JVM sees exactly what this one committed
-      .config("javax.jdo.option.ConnectionURL",
-              s"jdbc:derby:;databaseName=$base/metastore_db;create=true")
+      "javax.jdo.option.ConnectionURL" ->
+        s"jdbc:derby:;databaseName=$base/metastore_db;create=true")
       .enableHiveSupport()
       .getOrCreate()
 

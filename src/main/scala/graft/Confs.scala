@@ -25,9 +25,9 @@ object Confs {
   def longConf(s: SparkSession, key: String): Option[Long] =
     parse(s, key, "an integer", _.toLong)
 
-  /** The SPARK_GRAFT_EXTRA_CONF dev hook ("k=v,k=v" session-conf overrides
-    * for cross-process A/Bs and conf-selected variants), parsed once here
-    * instead of four copies in Bench/Verify/ScaleProbe/RecallProbe.
+  /** The SPARK_GRAFT_EXTRA_CONF dev hook ("k=v,k=v" conf overrides for
+    * cross-process A/Bs and conf-selected variants), parsed once here and
+    * applied by [[Sessions.builder]].
     * Key and value are trimmed INDIVIDUALLY: "key = value" used to set a
     * conf key with a trailing space, which no reader ever matches — the
     * intended variant silently didn't run in the tool whose job was to run
@@ -44,7 +44,15 @@ object Confs {
       }.toSeq
     }
 
-  /** Apply the hook to a live session (Verify/ScaleProbe/RecallProbe). */
-  def applyExtraConf(s: SparkSession): Unit =
-    extraConfPairs().foreach { case (k, v) => s.conf.set(k, v) }
+  /** Run `body` with the session confs `kv` set, then restore each key to
+    * its previous value (or unset it) — for callers sharing one session. */
+  def withConf[A](s: SparkSession, kv: (String, String)*)(body: => A): A = {
+    val prev = kv.map { case (k, _) => k -> s.conf.getOption(k) }
+    kv.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 }

@@ -3,11 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev-only scaling probe: time registered operators on a k×-scaled copy of
-  * the fixtures and report t(k×)/t(1×) against k. Near-linear ratios are the
-  * empirical check behind SURVEY §7.5's "every plan shuffles on its keys and
-  * scales out" claim; a super-linear ratio is a scale bug to fix, measured
-  * rather than argued. NOT part of the shipped library surface.
+/** The k×-scaled fixture corpora every `graft.Dev` probe runs over
+  * (`Dev scale`, `recall`, `ivf`, `bytes`, `stream`).
   *
   * Scaling preserves workload SHAPE instead of degenerating it:
   * - every id column is remapped per copy (id + copy·stride) so keys stay
@@ -22,18 +19,6 @@ import org.apache.spark.sql.functions._
   *   on one coordinate (cosine structure within a copy preserved).
   * - events/orders/lineitem timestamps are kept verbatim (density grows k×,
   *   the realistic shape for a busier system over the same wall-clock span).
-  *
-  * The B×B vector kernels are O(n²/B) compute by declared spec with B a
-  * session conf that grows with the corpus (spark.graft.vector.blocks);
-  * the probe sets B ∝ k to exercise exactly that documented scale path.
-  *
-  * Usage: runMain graft.ScaleProbe [k] [name,name,...]
-  * Env: SPARK_GRAFT_SF_DIR (base fixtures, default sf0.1),
-  *      SPARK_GRAFT_SCALE_DIR (scratch, default /tmp/graft_scaleprobe),
-  *      SPARK_GRAFT_SCALE_TABLES (comma list; when set, only these tables
-  *      get the k× treatment and the rest land 1× in the scaled dir — the
-  *      k=128 memory-regime probe scales documents+embeddings without
-  *      paying a 77M-row lineitem write its target queries never read).
   */
 object ScaleProbe {
   private val idCols: Map[String, Seq[String]] = Map(
@@ -55,7 +40,7 @@ object ScaleProbe {
   private val dims = Set("region", "nation")
 
   def scaleTable(spark: SparkSession, base: String, name: String, k: Int,
-                 outDir: String): Unit = {
+                 outDir: String, regime: String): Unit = {
     val df = if (name == "events") Tables.events(spark, base)
              else Tables.load(spark, base, name)
     val out =
@@ -92,7 +77,7 @@ object ScaleProbe {
               // corpus for the neardup candidate budget
               // (graft.llm.Dedup.NeardupCapConf). Default stays the
               // round-11 bijective remap that preserves workload shape.
-              if (sys.env.get("SPARK_GRAFT_SCALE_TRANSFORM").contains("megacluster"))
+              if (regime == "megacluster")
                 shifted.withColumn("text",
                   if (i == 0) col("text")
                   else concat(col("text"), lit(s" graftcopytag$i")))
@@ -105,7 +90,7 @@ object ScaleProbe {
               // pseudo-random one — a corpus with NO neighborhood structure,
               // the known-hard ANN regime that brackets the default
               // transform's near-dup-heavy (easy-recall) regime from below.
-              if (sys.env.get("SPARK_GRAFT_SCALE_TRANSFORM").contains("randvec"))
+              if (regime == "randvec")
                 shifted.withColumn("embedding",
                   transform(col("embedding"), (v, j) =>
                     ((pmod(xxhash64(col("vec_id") * lit(64L) + j.cast("long")),
@@ -114,8 +99,7 @@ object ScaleProbe {
               else shifted.withColumn("embedding",
                 transform(col("embedding"),
                   (v, j) => when(j === 0, v + lit(i.toFloat * 1e-4f)).otherwise(v)))
-            case "events"
-                if sys.env.get("SPARK_GRAFT_SCALE_TRANSFORM").contains("hotkey") =>
+            case "events" if regime == "hotkey" =>
               // SPARK_GRAFT_SCALE_TRANSFORM=hotkey (round-15 validation item
               // 3): collapse every even event_id onto ONE global user —
               // ~50% of the scaled stream lands on a single key, the
@@ -135,7 +119,7 @@ object ScaleProbe {
   }
 
   /** Build (or reuse) the 1× and k× corpora under `scratch`; returns
-    * (oneDir, kDir). Shared by the timing probe and [[RecallProbe]].
+    * (oneDir, kDir).
     *
     * 1× goes through the same write path so both sides read identically
     * laid-out parquet (file counts, encoders) — the comparison then isolates
@@ -154,18 +138,18 @@ object ScaleProbe {
     * mismatch under reuse forces a rewrite of that dir rather than a
     * wrong-looking ratio. */
   /** Same-JVM memoization of built corpus dirs (dir -> manifest): a multi-k
-    * probe (RecallProbe ks=64,128) otherwise rewrites the identical x1 dir
+    * probe (`Dev recall 64,128`) otherwise rewrites the identical x1 dir
     * once per k even without SPARK_GRAFT_SCALE_REUSE. */
   private val builtInJvm = scala.collection.concurrent.TrieMap.empty[String, String]
 
-  def buildCorpus(spark: SparkSession, base: String, k: Int,
-                  scratch: String): (String, String) = {
+  def buildCorpus(spark: SparkSession, base: String, k: Int, scratch: String,
+                  env: Map[String, String] = sys.env): (String, String) = {
     val oneDir = s"$scratch/x1"
     val kDir = s"$scratch/x$k"
-    val scaleOnly: Set[String] = sys.env.get("SPARK_GRAFT_SCALE_TABLES")
+    val scaleOnly: Set[String] = env.get("SPARK_GRAFT_SCALE_TABLES")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Tables.names.toSet)
-    val reuse = sys.env.get("SPARK_GRAFT_SCALE_REUSE").exists(_ == "1")
-    val transform = sys.env.getOrElse("SPARK_GRAFT_SCALE_TRANSFORM", "default")
+    val reuse = env.get("SPARK_GRAFT_SCALE_REUSE").exists(_ == "1")
+    val transform = env.getOrElse("SPARK_GRAFT_SCALE_TRANSFORM", "default")
     val manifest =
       s"base=$base\ntables=${scaleOnly.toSeq.sorted.mkString(",")}\ntransform=$transform\n"
     def manifestPath(dir: String) = java.nio.file.Paths.get(s"$dir/_graft_manifest")
@@ -183,153 +167,16 @@ object ScaleProbe {
       (reuse && manifestMatches(dir) && written(dir, n)) ||
         (builtInJvm.get(dir).contains(manifest) && written(dir, n))
     Tables.names.foreach(n =>
-      if (!reusable(oneDir, n)) scaleTable(spark, base, n, 1, oneDir))
-    Tables.names.foreach(n =>
+      if (!reusable(oneDir, n)) scaleTable(spark, base, n, 1, oneDir, transform))
+    // k = 1: kDir is oneDir, already written
+    if (k > 1) Tables.names.foreach(n =>
       if (!reusable(kDir, n))
-        scaleTable(spark, base, n, if (scaleOnly(n)) k else 1, kDir))
+        scaleTable(spark, base, n, if (scaleOnly(n)) k else 1, kDir, transform))
     Seq(oneDir, kDir).foreach { dir =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
       java.nio.file.Files.writeString(manifestPath(dir), manifest)
       builtInJvm.put(dir, manifest)
     }
     (oneDir, kDir)
-  }
-
-  /** Spill/memory tally for the constrained-heap validation
-    * (SPARK_GRAFT_SCALE_SPILL=1): sums task-level spill bytes and tracks the
-    * peak per-task execution memory across every task that runs while armed.
-    * Confirms the heavy shapes SPILL instead of OOM when the executor heap
-    * is production-sized (a 100 TB cluster gives an executor 4-16 GiB, not
-    * the sandbox's 128 GiB). */
-  private[graft] class SpillTally extends org.apache.spark.scheduler.SparkListener {
-    val disk = new java.util.concurrent.atomic.AtomicLong
-    val mem = new java.util.concurrent.atomic.AtomicLong
-    val peak = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        disk.addAndGet(m.diskBytesSpilled)
-        mem.addAndGet(m.memoryBytesSpilled)
-        peak.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
-      }
-    }
-    def reset(): Unit = { disk.set(0); mem.set(0); peak.set(0) }
-    def report: String =
-      f"spill disk=${disk.get / 1e6}%.0f MB mem=${mem.get / 1e6}%.0f MB " +
-      f"peakTaskMem=${peak.get / 1e6}%.0f MB"
-  }
-
-  def main(args: Array[String]): Unit = {
-    val k = if (args.nonEmpty) args(0).toInt else 8
-    val defaultNames = Seq(
-      "agg_hash_group", "join_inner_hash", "sort_global", "mr_wordcount",
-      "window_ranking", "topk_per_group", "llm_exact_dedup",
-      "llm_neardup_pairs", "llm_dedup_clusters", "llm_minhash_estimate",
-      "llm_simsearch_topk", "llm_tfidf", "llm_bm25", "llm_pipeline_e2e",
-      "stream_session")
-    val names = if (args.length > 1) args(1).split(",").toSeq else defaultNames
-    val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val scratch = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scaleprobe")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    sys.props("graft.ann.recall") = "0"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // see graft.Bench: keep small-but-hot AQE-coalesced stages parallel
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_NEARDUP_CAP=m turns the per-doc candidate budget on for
-    // the probed queries (the mega-cluster containment run).
-    sys.env.get("SPARK_GRAFT_NEARDUP_CAP").foreach(m =>
-      spark.conf.set(graft.llm.Dedup.NeardupCapConf, m))
-    // same dev hook as graft.Bench: "k=v,k=v" session-conf overrides for
-    // probe-time A/Bs (key-scheme forcing, broadcast-threshold isolation)
-    graft.Confs.applyExtraConf(spark)
-
-    val (oneDir, kDir) = buildCorpus(spark, base, k, scratch)
-
-    def bestOf(n: Int)(body: => Unit): Double =
-      (1 to n).map { _ =>
-        val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-      }.min
-    // Shuffle-file reclamation BETWEEN timing phases (round 15): a probe
-    // JVM with a 48-80 GiB heap almost never GCs, so the weak-ref
-    // ContextCleaner never releases finished-pass shuffle files — at k=512
-    // the PPJoin's tens-of-GB shingle shuffles accumulated across
-    // warmup+timed invocations until the DISK filled mid-probe (two dead
-    // runs, 40 GB of orphaned blockmgr dirs). periodicGC.interval was tried
-    // first and REJECTED: a timer-driven full GC of a mega-heap lands
-    // inside timed passes and reads as a 10-15 s pause (measured: the 1×
-    // CC pass inflated 1.25 s → 16.7 s). Explicit GC between phases
-    // reclaims the dead passes' files with zero measurement pollution; the
-    // sleep lets the cleaner's async deletion drain.
-    def reclaimShuffles(): Unit = { System.gc(); Thread.sleep(2000) }
-    // Between QUERIES the session cache is also dropped: cachedOnce entries
-    // (the PPJoin pair caches) hold strong refs to their full shuffle
-    // LINEAGE via the CacheManager, so GC alone can never release those
-    // files — at 512× the two CC variants' pinned pair chains alone
-    // exceeded the disk. Never called between a query's own phases: the
-    // warmup-populates / timed-pass-reuses cache protocol (round 13) is
-    // what the probe measures.
-    def dropCachesBetweenQueries(): Unit = {
-      spark.catalog.clearCache()
-      reclaimShuffles()
-    }
-    // SPARK_GRAFT_SCALE_PASSES trims the per-query sample count for probes
-    // whose single run is minutes long (k=512 simhash crossover) — at that
-    // duration ambient noise is a small fraction and 3 passes buy little.
-    val passes = sys.env.get("SPARK_GRAFT_SCALE_PASSES").map(_.toInt).getOrElse(3)
-    val spill: Option[SpillTally] =
-      if (sys.env.get("SPARK_GRAFT_SCALE_SPILL").contains("1")) {
-        val t = new SpillTally
-        spark.sparkContext.addSparkListener(t)
-        Some(t)
-      } else None
-
-    val rows = names.filter(SparkEntry.queries.contains).map { name =>
-      val fn = SparkEntry.queries(name)
-      // documented scale path for the B×B kernels: B grows with the corpus
-      spark.conf.set("spark.graft.vector.blocks", "8")
-      try fn(spark, oneDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () } // warmup
-      reclaimShuffles()
-      val t1 = bestOf(passes)(fn(spark, oneDir).write.format("noop").mode("overwrite").save())
-      // rounds-at-depth diagnostic for the iterative CC variants: report
-      // the iteration count alongside wall time (round-15 validation item —
-      // the star variant's reason to exist is its O(log n) round bound)
-      def ccRounds(): Option[Int] = name match {
-        case "llm_dedup_clusters" => Some(graft.llm.Curation.lastPropagationRounds)
-        case "llm_dedup_clusters_star" => Some(graft.llm.Curation.lastStarRounds)
-        case _ => None
-      }
-      val rounds1 = ccRounds()
-      spark.conf.set("spark.graft.vector.blocks", (8 * k).toString)
-      reclaimShuffles()
-      try fn(spark, kDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      reclaimShuffles()
-      spill.foreach(_.reset()) // tally the timed k× passes only
-      val tk = bestOf(passes)(fn(spark, kDir).write.format("noop").mode("overwrite").save())
-      reclaimShuffles()
-      spill.foreach(t => println(s"[scaleprobe] $name ${k}x ${t.report}"))
-      for (r1 <- rounds1; rk <- ccRounds())
-        println(s"[scaleprobe] $name rounds: ${r1} at 1x -> ${rk} at ${k}x")
-      val ratio = tk / t1
-      // row printed immediately: a crash later in the list (e.g. an OOM on
-      // a heavier query) must not lose the measurements already taken
-      println(f"[scaleprobe] $name%-22s t1=$t1%8.3f tk=$tk%8.3f ratio=$ratio%7.2f")
-      dropCachesBetweenQueries()
-      (name, t1, tk, ratio)
-    }
-    println(f"%n== ScaleProbe k=$k base=$base ==")
-    println(f"${"query"}%-22s ${"t(1x)"}%8s ${"t(kx)"}%8s ${"ratio"}%7s  (linear = ${k}.0)")
-    rows.foreach { case (n, t1, tk, r) =>
-      println(f"$n%-22s $t1%8.3f $tk%8.3f $r%7.2f")
-    }
-    spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,21 +7,11 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see graft.Bench: keep small-but-hot AQE-coalesced stages parallel
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
-      .getOrCreate()
+    // SPARK_GRAFT_EXTRA_CONF (applied by the factory) lets conf-selected
+    // variants (e.g. the spark.graft.asof.epochKey two-level as-of) run
+    // through the exact verify/compare path. The correctness gate runs with it unset.
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // same dev hook as graft.Bench/ScaleProbe/RecallProbe: "k=v,k=v"
-    // session-conf overrides — lets conf-selected variants (e.g. the
-    // spark.graft.asof.epochKey two-level as-of) run through the exact
-    // verify/compare path. The driver's gate runs with it unset.
-    Confs.applyExtraConf(spark)
     new java.io.File(outDir).mkdirs()
     // A thrown query must leave a LOUD artifact, not just a stderr line: in
     // round 8 a fixture-encoding drift made 43 queries throw at analysis

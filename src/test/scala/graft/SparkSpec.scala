@@ -24,6 +24,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     p +: kids.flatMap(flattenPlan)
   }
 
+  /** Run `body` with the session confs `kv` set, restoring them afterwards. */
+  def withConf[A](kv: (String, String)*)(body: => A): A =
+    Confs.withConf(spark, kv: _*)(body)
+
   /** Recursive delete for test-scoped scratch dirs (fixture copies written
     * by individual tests must not leak a parquet per run — round-7 advice). */
   def deleteDir(path: String): Unit =
@@ -37,13 +41,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
+    val s = Sessions.builder("spark.sql.warehouse.dir" ->
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -21,6 +21,11 @@ case class SdVec(ts: Timestamp, vec_id: Long, embedding: Array[Float])
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
+  /** transformWithState needs the RocksDB state store provider when it runs
+    * as a real stream (the batch-mode registrations scope their own). */
+  private val RocksDbProvider = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   // the per-run flush counters this suite delta-asserts are OFF by default
   // (round-18: production flush paths no longer touch the shared maps) —
   // opt in for the whole suite; harmless to leave on for the JVM's lifetime
@@ -137,32 +142,24 @@ class StreamingSpec extends SparkSpec {
     // transformWithState requires the RocksDB state store provider when
     // running as a real stream (batch mode, used by the oracle-checked
     // registration, does not)
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[graft.streaming.GraftEvent]
-    val q = graft.streaming.Streams.userTotalsTws(mem.toDS())
-      .writeStream.format("memory").queryName("tws_t")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      mem.addData(
-        graft.streaming.GraftEvent(ts("2024-01-01 10:00:00"), "click", 1, 10),
-        graft.streaming.GraftEvent(ts("2024-01-01 10:01:00"), "view", 1, 7))
-      q.processAllAvailable()
-      mem.addData(graft.streaming.GraftEvent(ts("2024-01-01 10:02:00"), "view", 1, 9))
-      q.processAllAvailable()
-      val latest = spark.table("tws_t")
-        .orderBy(col("n_events").desc).where(col("user_id") === 1).head
-      // state carried across batches: 3 events total, max id from batch 1
-      assert(latest.getAs[Long]("n_events") == 3)
-      assert(latest.getAs[Long]("max_event_id") == 10)
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withConf(RocksDbProvider) {
+      val mem = MemoryStream[graft.streaming.GraftEvent]
+      val q = graft.streaming.Streams.userTotalsTws(mem.toDS())
+        .writeStream.format("memory").queryName("tws_t")
+        .outputMode(OutputMode.Update()).start()
+      try {
+        mem.addData(
+          graft.streaming.GraftEvent(ts("2024-01-01 10:00:00"), "click", 1, 10),
+          graft.streaming.GraftEvent(ts("2024-01-01 10:01:00"), "view", 1, 7))
+        q.processAllAvailable()
+        mem.addData(graft.streaming.GraftEvent(ts("2024-01-01 10:02:00"), "view", 1, 9))
+        q.processAllAvailable()
+        val latest = spark.table("tws_t")
+          .orderBy(col("n_events").desc).where(col("user_id") === 1).head
+        // state carried across batches: 3 events total, max id from batch 1
+        assert(latest.getAs[Long]("n_events") == 3)
+        assert(latest.getAs[Long]("max_event_id") == 10)
+      } finally q.stop()
     }
   }
 
@@ -171,50 +168,42 @@ class StreamingSpec extends SparkSpec {
     // the property a 100 TB streaming job actually relies on: kill the query
     // mid-stream, restart from the same checkpointLocation, and the state
     // store (and source offsets) resume where the last commit left off
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_tws").toString
-    val mem = MemoryStream[graft.streaming.GraftEvent]
-    // foreachBatch sink: the memory sink refuses checkpoint recovery in
-    // Update mode (it cannot rebuild dropped batches); foreachBatch is the
-    // restartable sink a production job uses
-    val seen = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]
-    def start() = graft.streaming.Streams.userTotalsTws(mem.toDS())
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        seen.synchronized {
-          seen ++= df.collect().map(r =>
-            (r.getLong(0), r.getLong(1), r.getLong(2)))
-        }; ()
-      }
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Update()).start()
-    val q1 = start()
-    try {
-      mem.addData(
-        graft.streaming.GraftEvent(ts("2024-01-01 10:00:00"), "click", 1, 10),
-        graft.streaming.GraftEvent(ts("2024-01-01 10:01:00"), "view", 1, 7))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    q1.awaitTermination()
-    // data arriving while the query is DOWN...
-    mem.addData(graft.streaming.GraftEvent(ts("2024-01-01 10:02:00"), "view", 1, 9))
-    val q2 = start()
-    try {
-      q2.processAllAvailable()
-      val latest = seen.synchronized { seen.filter(_._1 == 1L).maxBy(_._2) }
-      // ...is merged into the RECOVERED ValueState: 3 events total and the
-      // pre-restart max id prove both state and offsets survived the restart
-      assert(latest._2 == 3, s"n_events=${latest._2}, seen=$seen")
-      assert(latest._3 == 10, s"max_event_id=${latest._3}")
-    } finally {
-      q2.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withConf(RocksDbProvider) {
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_tws").toString
+      val mem = MemoryStream[graft.streaming.GraftEvent]
+      // foreachBatch sink: the memory sink refuses checkpoint recovery in
+      // Update mode (it cannot rebuild dropped batches); foreachBatch is the
+      // restartable sink a production job uses
+      val seen = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]
+      def start() = graft.streaming.Streams.userTotalsTws(mem.toDS())
+        .writeStream
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          seen.synchronized {
+            seen ++= df.collect().map(r =>
+              (r.getLong(0), r.getLong(1), r.getLong(2)))
+          }; ()
+        }
+        .option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Update()).start()
+      val q1 = start()
+      try {
+        mem.addData(
+          graft.streaming.GraftEvent(ts("2024-01-01 10:00:00"), "click", 1, 10),
+          graft.streaming.GraftEvent(ts("2024-01-01 10:01:00"), "view", 1, 7))
+        q1.processAllAvailable()
+      } finally q1.stop()
+      q1.awaitTermination()
+      // data arriving while the query is DOWN...
+      mem.addData(graft.streaming.GraftEvent(ts("2024-01-01 10:02:00"), "view", 1, 9))
+      val q2 = start()
+      try {
+        q2.processAllAvailable()
+        val latest = seen.synchronized { seen.filter(_._1 == 1L).maxBy(_._2) }
+        // ...is merged into the RECOVERED ValueState: 3 events total and the
+        // pre-restart max id prove both state and offsets survived the restart
+        assert(latest._2 == 3, s"n_events=${latest._2}, seen=$seen")
+        assert(latest._3 == 10, s"max_event_id=${latest._3}")
+      } finally q2.stop()
     }
   }
 
@@ -388,122 +377,106 @@ class StreamingSpec extends SparkSpec {
   test("stateful streaming as-of: ValueState enriches facts across micro-batches (unbounded dim)") {
     implicit val sq = spark.sqlContext
     import graft.streaming.AsofStreamRow
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[AsofStreamRow]
-    val q = Streams.latestPurchaseAsof(mem.toDS())
-      .writeStream.format("memory").queryName("asof_tws_t")
-      .outputMode(OutputMode.Append()).start()
-    def dim(t: String, u: Long, id: Long) =
-      AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
-    def fact(t: String, u: Long, id: Long, et: String = "view") =
-      AsofStreamRow(ts(t), u, id, is_dim = false, et)
-    try {
-      // batch 1: user 1 buys then views; user 2 views with NO purchase yet;
-      // user 3 buys and views at the SAME timestamp (inclusive boundary)
-      mem.addData(
-        dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:05:00", 1, 1),
-        fact("2024-01-01 10:01:00", 2, 10),
-        dim("2024-01-01 11:00:00", 3, 120), fact("2024-01-01 11:00:00", 3, 20))
-      q.processAllAvailable()
-      // batch 2: user 1's dim UPDATES mid-stream (the unbounded-dim case);
-      // user 2's first purchase arrives
-      mem.addData(
-        dim("2024-01-01 10:10:00", 1, 101), fact("2024-01-01 10:12:00", 1, 2, "click"),
-        dim("2024-01-01 10:20:00", 2, 110))
-      q.processAllAvailable()
-      // batch 3: state must have CARRIED (user 2's fact sees batch-2's dim);
-      // a LATE dim older than user 1's state must not regress enrichment
-      mem.addData(
-        fact("2024-01-01 10:25:00", 2, 11),
-        dim("2024-01-01 10:01:00", 1, 99), fact("2024-01-01 10:30:00", 1, 3))
-      q.processAllAvailable()
-      val got = spark.table("asof_tws_t").collect()
-        .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-        .toMap
-      assert(got === Map(
-        1L -> Some(100L),  // first purchase visible in-batch
-        10L -> None,       // fact before any purchase → NULL (left semantics)
-        20L -> Some(120L), // purchase at the SAME ts counts (inclusive as-of)
-        2L -> Some(101L),  // mid-stream dim update wins over batch-1 state
-        11L -> Some(110L), // state carried across micro-batches
-        3L -> Some(101L))) // late out-of-order dim ignored: state is monotone
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withConf(RocksDbProvider) {
+      val mem = MemoryStream[AsofStreamRow]
+      val q = Streams.latestPurchaseAsof(mem.toDS())
+        .writeStream.format("memory").queryName("asof_tws_t")
+        .outputMode(OutputMode.Append()).start()
+      def dim(t: String, u: Long, id: Long) =
+        AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
+      def fact(t: String, u: Long, id: Long, et: String = "view") =
+        AsofStreamRow(ts(t), u, id, is_dim = false, et)
+      try {
+        // batch 1: user 1 buys then views; user 2 views with NO purchase yet;
+        // user 3 buys and views at the SAME timestamp (inclusive boundary)
+        mem.addData(
+          dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:05:00", 1, 1),
+          fact("2024-01-01 10:01:00", 2, 10),
+          dim("2024-01-01 11:00:00", 3, 120), fact("2024-01-01 11:00:00", 3, 20))
+        q.processAllAvailable()
+        // batch 2: user 1's dim UPDATES mid-stream (the unbounded-dim case);
+        // user 2's first purchase arrives
+        mem.addData(
+          dim("2024-01-01 10:10:00", 1, 101), fact("2024-01-01 10:12:00", 1, 2, "click"),
+          dim("2024-01-01 10:20:00", 2, 110))
+        q.processAllAvailable()
+        // batch 3: state must have CARRIED (user 2's fact sees batch-2's dim);
+        // a LATE dim older than user 1's state must not regress enrichment
+        mem.addData(
+          fact("2024-01-01 10:25:00", 2, 11),
+          dim("2024-01-01 10:01:00", 1, 99), fact("2024-01-01 10:30:00", 1, 3))
+        q.processAllAvailable()
+        val got = spark.table("asof_tws_t").collect()
+          .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
+          .toMap
+        assert(got === Map(
+          1L -> Some(100L),  // first purchase visible in-batch
+          10L -> None,       // fact before any purchase → NULL (left semantics)
+          20L -> Some(120L), // purchase at the SAME ts counts (inclusive as-of)
+          2L -> Some(101L),  // mid-stream dim update wins over batch-1 state
+          11L -> Some(110L), // state carried across micro-batches
+          3L -> Some(101L))) // late out-of-order dim ignored: state is monotone
+      } finally q.stop()
     }
   }
 
   test("buffered as-of: out-of-order rows ACROSS micro-batches still get the exact as-of match") {
     implicit val sq = spark.sqlContext
     import graft.streaming.AsofStreamRow
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[AsofStreamRow]
-    // 30-minute watermark = the out-of-order tolerance horizon; rows may
-    // arrive in ANY order across batches as long as they're inside it
-    val q = Streams.latestPurchaseAsofBuffered(
-        mem.toDS().withWatermark("ts", "30 minutes"), streaming = true)
-      .writeStream.format("memory").queryName("asof_buf_t")
-      .outputMode(OutputMode.Append()).start()
-    def dim(t: String, u: Long, id: Long) =
-      AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
-    def fact(t: String, u: Long, id: Long) =
-      AsofStreamRow(ts(t), u, id, is_dim = false, "view")
-    def table() = spark.table("asof_buf_t").collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-      .toMap
-    try {
-      // batch 1: user 1's dim + a LATER fact; user 9 is the watermark mover.
-      // wm after batch 1 = 10:20 - 30m = 09:50 → nothing finalizes.
-      mem.addData(
-        dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:15:00", 1, 1),
-        fact("2024-01-01 10:20:00", 9, 90))
-      q.processAllAvailable()
-      // the fact is INSIDE the watermark horizon → buffered, not emitted:
-      // the in-order processor would already have (wrongly, if more dims
-      // come) finalized it here
-      assert(!table().contains(1L), s"fact 1 must still be buffered: ${table()}")
-      // batch 2: an OUT-OF-ORDER dim (10:10) arrives AFTER the 10:15 fact
-      // — the exact case the in-order contract forbids — plus an
-      // out-of-order fact (10:12) and the mover. handleInputRows sees the
-      // late-events watermark (09:50) so it can't finalize user 1's rows;
-      // the drain is TIMER-driven — either at this batch's end (timers
-      // check against the eviction watermark, 10:20) or in the next batch.
-      mem.addData(
-        dim("2024-01-01 10:10:00", 1, 101), fact("2024-01-01 10:12:00", 1, 2),
-        fact("2024-01-01 10:50:00", 9, 91))
-      q.processAllAvailable()
-      // batch 3: only the mover — user 1 gets NO input, so whatever is
-      // still buffered for it drains purely on timers. wm ≥ 10:20: user
-      // 1's 10:00/10:10/10:12/10:15 finalize in EVENT-TIME order — fact 2
-      // and fact 1 both see the late dim 101 (the in-order processor
-      // would have answered 100 for fact 1).
-      mem.addData(fact("2024-01-01 11:30:00", 9, 92))
-      q.processAllAvailable()
-      val got = table()
-      assert(got.get(1L) === Some(Some(101L)),
-        s"fact 1 must see the out-of-order dim 101: $got")
-      assert(got.get(2L) === Some(Some(101L)),
-        s"fact 2 (itself out-of-order) must see dim 101: $got")
-      // user 9's 10:20 fact also finalized by now (wm ≥ 10:20 in batch 3's
-      // timer pass or batch 4) — it saw no dim ever
-      mem.addData(fact("2024-01-01 12:00:00", 9, 93))
-      q.processAllAvailable()
-      assert(table().get(90L) === Some(None), s"fact 90 has no dim: ${table()}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withConf(RocksDbProvider) {
+      val mem = MemoryStream[AsofStreamRow]
+      // 30-minute watermark = the out-of-order tolerance horizon; rows may
+      // arrive in ANY order across batches as long as they're inside it
+      val q = Streams.latestPurchaseAsofBuffered(
+          mem.toDS().withWatermark("ts", "30 minutes"), streaming = true)
+        .writeStream.format("memory").queryName("asof_buf_t")
+        .outputMode(OutputMode.Append()).start()
+      def dim(t: String, u: Long, id: Long) =
+        AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
+      def fact(t: String, u: Long, id: Long) =
+        AsofStreamRow(ts(t), u, id, is_dim = false, "view")
+      def table() = spark.table("asof_buf_t").collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
+        .toMap
+      try {
+        // batch 1: user 1's dim + a LATER fact; user 9 is the watermark mover.
+        // wm after batch 1 = 10:20 - 30m = 09:50 → nothing finalizes.
+        mem.addData(
+          dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:15:00", 1, 1),
+          fact("2024-01-01 10:20:00", 9, 90))
+        q.processAllAvailable()
+        // the fact is INSIDE the watermark horizon → buffered, not emitted:
+        // the in-order processor would already have (wrongly, if more dims
+        // come) finalized it here
+        assert(!table().contains(1L), s"fact 1 must still be buffered: ${table()}")
+        // batch 2: an OUT-OF-ORDER dim (10:10) arrives AFTER the 10:15 fact
+        // — the exact case the in-order contract forbids — plus an
+        // out-of-order fact (10:12) and the mover. handleInputRows sees the
+        // late-events watermark (09:50) so it can't finalize user 1's rows;
+        // the drain is TIMER-driven — either at this batch's end (timers
+        // check against the eviction watermark, 10:20) or in the next batch.
+        mem.addData(
+          dim("2024-01-01 10:10:00", 1, 101), fact("2024-01-01 10:12:00", 1, 2),
+          fact("2024-01-01 10:50:00", 9, 91))
+        q.processAllAvailable()
+        // batch 3: only the mover — user 1 gets NO input, so whatever is
+        // still buffered for it drains purely on timers. wm ≥ 10:20: user
+        // 1's 10:00/10:10/10:12/10:15 finalize in EVENT-TIME order — fact 2
+        // and fact 1 both see the late dim 101 (the in-order processor
+        // would have answered 100 for fact 1).
+        mem.addData(fact("2024-01-01 11:30:00", 9, 92))
+        q.processAllAvailable()
+        val got = table()
+        assert(got.get(1L) === Some(Some(101L)),
+          s"fact 1 must see the out-of-order dim 101: $got")
+        assert(got.get(2L) === Some(Some(101L)),
+          s"fact 2 (itself out-of-order) must see dim 101: $got")
+        // user 9's 10:20 fact also finalized by now (wm ≥ 10:20 in batch 3's
+        // timer pass or batch 4) — it saw no dim ever
+        mem.addData(fact("2024-01-01 12:00:00", 9, 93))
+        q.processAllAvailable()
+        assert(table().get(90L) === Some(None), s"fact 90 has no dim: ${table()}")
+      } finally q.stop()
     }
   }
 
@@ -519,53 +492,45 @@ class StreamingSpec extends SparkSpec {
     // would have answered 100 for it.
     implicit val sq = spark.sqlContext
     import graft.streaming.{AsofStreamRow, EpochAsof}
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[AsofStreamRow]
-    val q = EpochAsof.latestPurchaseAsofBufferedEpoch(
-        mem.toDS().withWatermark("ts", "30 minutes"), widthSec = 600L)
-      .writeStream.format("memory").queryName("asof_buf_epoch_t")
-      .outputMode(OutputMode.Append()).start()
-    def dim(t: String, u: Long, id: Long) =
-      AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
-    def fact(t: String, u: Long, id: Long) =
-      AsofStreamRow(ts(t), u, id, is_dim = false, "view")
-    def table() = spark.table("asof_buf_epoch_t").collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-      .toMap
-    try {
-      // batch 1: epoch-A dim + a LATER epoch-B fact; user 9 moves the
-      // watermark. wm after batch 1 = 09:50 → nothing finalizes.
-      mem.addData(
-        dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:15:00", 1, 1),
-        fact("2024-01-01 10:20:00", 9, 90))
-      q.processAllAvailable()
-      assert(!table().contains(1L), s"fact 1 must still be buffered: ${table()}")
-      // batch 2: the OUT-OF-ORDER epoch-B dim (10:11) and the pre-dim
-      // epoch-B fact (10:10:30), plus the mover. Eviction wm reaches 10:20.
-      mem.addData(
-        dim("2024-01-01 10:11:00", 1, 101), fact("2024-01-01 10:10:30", 1, 2),
-        fact("2024-01-01 10:50:00", 9, 91))
-      q.processAllAvailable()
-      // batch 3: mover only — remaining epoch-B rows drain on timers.
-      mem.addData(fact("2024-01-01 11:30:00", 9, 92))
-      q.processAllAvailable()
-      val got = table()
-      assert(got.get(1L) === Some(Some(101L)),
-        s"fact 1 must see the out-of-order in-epoch dim 101: $got")
-      assert(got.get(2L) === Some(Some(100L)),
-        s"fact 2 precedes epoch B's dims — boundary prefix must answer 100: $got")
-      mem.addData(fact("2024-01-01 12:00:00", 9, 93))
-      q.processAllAvailable()
-      assert(table().get(90L) === Some(None), s"fact 90 has no dim: ${table()}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withConf(RocksDbProvider) {
+      val mem = MemoryStream[AsofStreamRow]
+      val q = EpochAsof.latestPurchaseAsofBufferedEpoch(
+          mem.toDS().withWatermark("ts", "30 minutes"), widthSec = 600L)
+        .writeStream.format("memory").queryName("asof_buf_epoch_t")
+        .outputMode(OutputMode.Append()).start()
+      def dim(t: String, u: Long, id: Long) =
+        AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
+      def fact(t: String, u: Long, id: Long) =
+        AsofStreamRow(ts(t), u, id, is_dim = false, "view")
+      def table() = spark.table("asof_buf_epoch_t").collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
+        .toMap
+      try {
+        // batch 1: epoch-A dim + a LATER epoch-B fact; user 9 moves the
+        // watermark. wm after batch 1 = 09:50 → nothing finalizes.
+        mem.addData(
+          dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:15:00", 1, 1),
+          fact("2024-01-01 10:20:00", 9, 90))
+        q.processAllAvailable()
+        assert(!table().contains(1L), s"fact 1 must still be buffered: ${table()}")
+        // batch 2: the OUT-OF-ORDER epoch-B dim (10:11) and the pre-dim
+        // epoch-B fact (10:10:30), plus the mover. Eviction wm reaches 10:20.
+        mem.addData(
+          dim("2024-01-01 10:11:00", 1, 101), fact("2024-01-01 10:10:30", 1, 2),
+          fact("2024-01-01 10:50:00", 9, 91))
+        q.processAllAvailable()
+        // batch 3: mover only — remaining epoch-B rows drain on timers.
+        mem.addData(fact("2024-01-01 11:30:00", 9, 92))
+        q.processAllAvailable()
+        val got = table()
+        assert(got.get(1L) === Some(Some(101L)),
+          s"fact 1 must see the out-of-order in-epoch dim 101: $got")
+        assert(got.get(2L) === Some(Some(100L)),
+          s"fact 2 precedes epoch B's dims — boundary prefix must answer 100: $got")
+        mem.addData(fact("2024-01-01 12:00:00", 9, 93))
+        q.processAllAvailable()
+        assert(table().get(90L) === Some(None), s"fact 90 has no dim: ${table()}")
+      } finally q.stop()
     }
   }
 
@@ -593,64 +558,56 @@ class StreamingSpec extends SparkSpec {
     // concurrent-queries case below pins the scoping itself.)
     implicit val sq = spark.sqlContext
     import graft.streaming.{AsofStreamRow, BufferedAsofProcessor}
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[AsofStreamRow]
-    val q = Streams.latestPurchaseAsofBuffered(
-        mem.toDS().withWatermark("ts", "30 minutes"), streaming = true)
-      .writeStream.format("memory").queryName("asof_buf_noamp")
-      .outputMode(OutputMode.Append()).start()
-    def dim(t: String, u: Long, id: Long) =
-      AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
-    def fact(t: String, u: Long, id: Long) =
-      AsofStreamRow(ts(t), u, id, is_dim = false, "view")
-    def table() = spark.table("asof_buf_noamp").collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-      .toMap
-    try {
-      // key 1 buffers a dim + facts; mover key 9 keeps the watermark ~30
-      // minutes behind them, so NOTHING finalizes for several batches
-      mem.addData(
-        dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:05:00", 1, 1),
-        fact("2024-01-01 10:15:00", 9, 90))
-      q.processAllAvailable()
-      // first batch: each key's first input has no armed timer yet, so the
-      // buffer is read once per key — the baseline for the READ-skip pin
-      val baseReads = BufferedAsofProcessor.bufferReads(q.runId)
-      mem.addData(fact("2024-01-01 10:10:00", 1, 2),
-                  fact("2024-01-01 10:16:00", 9, 91))
-      q.processAllAvailable()
-      mem.addData(fact("2024-01-01 10:17:00", 9, 92))
-      q.processAllAvailable()
-      mem.addData(fact("2024-01-01 10:18:00", 9, 93))
-      q.processAllAvailable()
-      assert(!table().contains(1L) && !table().contains(2L),
-        s"key 1 must still be fully buffered: ${table()}")
-      assert(BufferedAsofProcessor.stateRewrites(q.runId) === 0L,
-        "no-flush batches must not rewrite the ListState buffer")
-      // round-17 READ-skip pin (the rewrite-skip's sibling): those same
-      // no-flush batches must not re-MATERIALIZE the buffer either — the
-      // armed drain timer proves nothing is ready, so input appends blind
-      assert(BufferedAsofProcessor.bufferReads(q.runId) === baseReads,
-        "no-flush batches must not re-read the O(horizon) ListState buffer")
-      // now drain: the mover pushes the watermark past everything — key 1's
-      // rows finalize in event-time order (partial flushes past this point
-      // MAY legitimately rewrite the remaining buffer)
-      mem.addData(fact("2024-01-01 12:00:00", 9, 94))
-      q.processAllAvailable()
-      mem.addData(fact("2024-01-01 13:00:00", 9, 95))
-      q.processAllAvailable()
-      val got = table()
-      assert(got.get(1L) === Some(Some(100L)), s"fact 1 sees dim 100: $got")
-      assert(got.get(2L) === Some(Some(100L)), s"fact 2 sees dim 100: $got")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withConf(RocksDbProvider) {
+      val mem = MemoryStream[AsofStreamRow]
+      val q = Streams.latestPurchaseAsofBuffered(
+          mem.toDS().withWatermark("ts", "30 minutes"), streaming = true)
+        .writeStream.format("memory").queryName("asof_buf_noamp")
+        .outputMode(OutputMode.Append()).start()
+      def dim(t: String, u: Long, id: Long) =
+        AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
+      def fact(t: String, u: Long, id: Long) =
+        AsofStreamRow(ts(t), u, id, is_dim = false, "view")
+      def table() = spark.table("asof_buf_noamp").collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
+        .toMap
+      try {
+        // key 1 buffers a dim + facts; mover key 9 keeps the watermark ~30
+        // minutes behind them, so NOTHING finalizes for several batches
+        mem.addData(
+          dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:05:00", 1, 1),
+          fact("2024-01-01 10:15:00", 9, 90))
+        q.processAllAvailable()
+        // first batch: each key's first input has no armed timer yet, so the
+        // buffer is read once per key — the baseline for the READ-skip pin
+        val baseReads = BufferedAsofProcessor.bufferReads(q.runId)
+        mem.addData(fact("2024-01-01 10:10:00", 1, 2),
+                    fact("2024-01-01 10:16:00", 9, 91))
+        q.processAllAvailable()
+        mem.addData(fact("2024-01-01 10:17:00", 9, 92))
+        q.processAllAvailable()
+        mem.addData(fact("2024-01-01 10:18:00", 9, 93))
+        q.processAllAvailable()
+        assert(!table().contains(1L) && !table().contains(2L),
+          s"key 1 must still be fully buffered: ${table()}")
+        assert(BufferedAsofProcessor.stateRewrites(q.runId) === 0L,
+          "no-flush batches must not rewrite the ListState buffer")
+        // round-17 READ-skip pin (the rewrite-skip's sibling): those same
+        // no-flush batches must not re-MATERIALIZE the buffer either — the
+        // armed drain timer proves nothing is ready, so input appends blind
+        assert(BufferedAsofProcessor.bufferReads(q.runId) === baseReads,
+          "no-flush batches must not re-read the O(horizon) ListState buffer")
+        // now drain: the mover pushes the watermark past everything — key 1's
+        // rows finalize in event-time order (partial flushes past this point
+        // MAY legitimately rewrite the remaining buffer)
+        mem.addData(fact("2024-01-01 12:00:00", 9, 94))
+        q.processAllAvailable()
+        mem.addData(fact("2024-01-01 13:00:00", 9, 95))
+        q.processAllAvailable()
+        val got = table()
+        assert(got.get(1L) === Some(Some(100L)), s"fact 1 sees dim 100: $got")
+        assert(got.get(2L) === Some(Some(100L)), s"fact 2 sees dim 100: $got")
+      } finally q.stop()
     }
   }
 
@@ -663,48 +620,40 @@ class StreamingSpec extends SparkSpec {
     // flush (ready and rest both non-empty → exactly the rewrite path).
     implicit val sq = spark.sqlContext
     import graft.streaming.{AsofStreamRow, BufferedAsofProcessor}
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    def dim(t: String, u: Long, id: Long) =
-      AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
-    def fact(t: String, u: Long, id: Long) =
-      AsofStreamRow(ts(t), u, id, is_dim = false, "view")
-    val memA = MemoryStream[AsofStreamRow]
-    val memB = MemoryStream[AsofStreamRow]
-    def start(mem: MemoryStream[AsofStreamRow], name: String) =
-      Streams.latestPurchaseAsofBuffered(
-          mem.toDS().withWatermark("ts", "30 minutes"), streaming = true)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-    val qA = start(memA, "asof_buf_scope_a")
-    val qB = start(memB, "asof_buf_scope_b")
-    try {
-      assert(qA.runId !== qB.runId)
-      // A: key 1 buffers, mover keeps the watermark behind it — no flush
-      memA.addData(
-        dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:05:00", 1, 1),
-        fact("2024-01-01 10:15:00", 9, 90))
-      // B: key 1 holds an early row AND a late row; the mover lifts the
-      // eviction watermark between them → partial flush → one rewrite
-      memB.addData(
-        dim("2024-01-01 10:00:00", 1, 200), fact("2024-01-01 10:01:00", 1, 51),
-        fact("2024-01-01 12:00:00", 1, 52))
-      qA.processAllAvailable(); qB.processAllAvailable()
-      memA.addData(fact("2024-01-01 10:16:00", 9, 91))
-      memB.addData(fact("2024-01-01 11:00:00", 9, 53))
-      qA.processAllAvailable(); qB.processAllAvailable()
-      assert(BufferedAsofProcessor.stateRewrites(qB.runId) >= 1L,
-        "query B's partial flush must count against B's run")
-      assert(BufferedAsofProcessor.stateRewrites(qA.runId) === 0L,
-        "query A never flushed — B's concurrent rewrites must not bleed into A")
-    } finally {
-      qA.stop(); qB.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withConf(RocksDbProvider) {
+      def dim(t: String, u: Long, id: Long) =
+        AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
+      def fact(t: String, u: Long, id: Long) =
+        AsofStreamRow(ts(t), u, id, is_dim = false, "view")
+      val memA = MemoryStream[AsofStreamRow]
+      val memB = MemoryStream[AsofStreamRow]
+      def start(mem: MemoryStream[AsofStreamRow], name: String) =
+        Streams.latestPurchaseAsofBuffered(
+            mem.toDS().withWatermark("ts", "30 minutes"), streaming = true)
+          .writeStream.format("memory").queryName(name)
+          .outputMode(OutputMode.Append()).start()
+      val qA = start(memA, "asof_buf_scope_a")
+      val qB = start(memB, "asof_buf_scope_b")
+      try {
+        assert(qA.runId !== qB.runId)
+        // A: key 1 buffers, mover keeps the watermark behind it — no flush
+        memA.addData(
+          dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:05:00", 1, 1),
+          fact("2024-01-01 10:15:00", 9, 90))
+        // B: key 1 holds an early row AND a late row; the mover lifts the
+        // eviction watermark between them → partial flush → one rewrite
+        memB.addData(
+          dim("2024-01-01 10:00:00", 1, 200), fact("2024-01-01 10:01:00", 1, 51),
+          fact("2024-01-01 12:00:00", 1, 52))
+        qA.processAllAvailable(); qB.processAllAvailable()
+        memA.addData(fact("2024-01-01 10:16:00", 9, 91))
+        memB.addData(fact("2024-01-01 11:00:00", 9, 53))
+        qA.processAllAvailable(); qB.processAllAvailable()
+        assert(BufferedAsofProcessor.stateRewrites(qB.runId) >= 1L,
+          "query B's partial flush must count against B's run")
+        assert(BufferedAsofProcessor.stateRewrites(qA.runId) === 0L,
+          "query A never flushed — B's concurrent rewrites must not bleed into A")
+      } finally { qA.stop(); qB.stop() }
     }
   }
 
@@ -716,58 +665,50 @@ class StreamingSpec extends SparkSpec {
     // cleanup counter) AND behaviorally (output still exact).
     implicit val sq = spark.sqlContext
     import graft.streaming.{AsofStreamRow, EpochAsof, EpochBufferedAsofProcessor}
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[AsofStreamRow]
-    val q = EpochAsof.latestPurchaseAsofBufferedEpoch(
-        mem.toDS().withWatermark("ts", "10 minutes"), widthSec = 600L)
-      .writeStream.format("memory").queryName("asof_buf_epoch_gc")
-      .outputMode(OutputMode.Append()).start()
-    def dim(t: String, u: Long, id: Long) =
-      AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
-    def fact(t: String, u: Long, id: Long) =
-      AsofStreamRow(ts(t), u, id, is_dim = false, "view")
-    def table() = spark.table("asof_buf_epoch_gc").collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-      .toMap
-    try {
-      // epoch A (10:00-10:10) gets a dim + a fact; user 9 keeps moving the
-      // watermark. Cleanup for (1, epochA) is armed at 10:10:00.001.
-      mem.addData(
-        dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:05:00", 1, 1),
-        fact("2024-01-01 10:15:00", 9, 90))
-      q.processAllAvailable()
-      assert(EpochBufferedAsofProcessor.stateCleanups(q.runId) === 0L,
-        "watermark has not reached epoch A's end yet")
-      // movers push the eviction watermark past 10:10:00.001 → epoch A's
-      // rows drain and its epochDim cell is CLEARED by the fired timer
-      mem.addData(fact("2024-01-01 10:25:00", 9, 91))
-      q.processAllAvailable()
-      mem.addData(fact("2024-01-01 10:40:00", 9, 92))
-      q.processAllAvailable()
-      assert(EpochBufferedAsofProcessor.stateCleanups(q.runId) >= 1L,
-        "epoch A's epochDim cell must be cleared once the watermark passes its end")
-      val got = table()
-      assert(got.get(1L) === Some(Some(100L)),
-        s"fact 1 must have drained with its in-epoch dim before cleanup: $got")
-      // a LATER epoch for the same user still works after the cleanup: the
-      // boundary prefix lives in pass 2 (per-user), untouched by pass-1 GC
-      mem.addData(fact("2024-01-01 10:31:00", 1, 2))
-      q.processAllAvailable()
-      mem.addData(fact("2024-01-01 11:30:00", 9, 93))
-      q.processAllAvailable()
-      mem.addData(fact("2024-01-01 12:30:00", 9, 94))
-      q.processAllAvailable()
-      assert(table().get(2L) === Some(Some(100L)),
-        s"epoch-C fact must still resolve via the per-user boundary prefix: ${table()}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withConf(RocksDbProvider) {
+      val mem = MemoryStream[AsofStreamRow]
+      val q = EpochAsof.latestPurchaseAsofBufferedEpoch(
+          mem.toDS().withWatermark("ts", "10 minutes"), widthSec = 600L)
+        .writeStream.format("memory").queryName("asof_buf_epoch_gc")
+        .outputMode(OutputMode.Append()).start()
+      def dim(t: String, u: Long, id: Long) =
+        AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
+      def fact(t: String, u: Long, id: Long) =
+        AsofStreamRow(ts(t), u, id, is_dim = false, "view")
+      def table() = spark.table("asof_buf_epoch_gc").collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
+        .toMap
+      try {
+        // epoch A (10:00-10:10) gets a dim + a fact; user 9 keeps moving the
+        // watermark. Cleanup for (1, epochA) is armed at 10:10:00.001.
+        mem.addData(
+          dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:05:00", 1, 1),
+          fact("2024-01-01 10:15:00", 9, 90))
+        q.processAllAvailable()
+        assert(EpochBufferedAsofProcessor.stateCleanups(q.runId) === 0L,
+          "watermark has not reached epoch A's end yet")
+        // movers push the eviction watermark past 10:10:00.001 → epoch A's
+        // rows drain and its epochDim cell is CLEARED by the fired timer
+        mem.addData(fact("2024-01-01 10:25:00", 9, 91))
+        q.processAllAvailable()
+        mem.addData(fact("2024-01-01 10:40:00", 9, 92))
+        q.processAllAvailable()
+        assert(EpochBufferedAsofProcessor.stateCleanups(q.runId) >= 1L,
+          "epoch A's epochDim cell must be cleared once the watermark passes its end")
+        val got = table()
+        assert(got.get(1L) === Some(Some(100L)),
+          s"fact 1 must have drained with its in-epoch dim before cleanup: $got")
+        // a LATER epoch for the same user still works after the cleanup: the
+        // boundary prefix lives in pass 2 (per-user), untouched by pass-1 GC
+        mem.addData(fact("2024-01-01 10:31:00", 1, 2))
+        q.processAllAvailable()
+        mem.addData(fact("2024-01-01 11:30:00", 9, 93))
+        q.processAllAvailable()
+        mem.addData(fact("2024-01-01 12:30:00", 9, 94))
+        q.processAllAvailable()
+        assert(table().get(2L) === Some(Some(100L)),
+          s"epoch-C fact must still resolve via the per-user boundary prefix: ${table()}")
+      } finally q.stop()
     }
   }
 
@@ -781,74 +722,68 @@ class StreamingSpec extends SparkSpec {
     // BEFORE the restart.
     implicit val sq = spark.sqlContext
     import graft.streaming.{AsofStreamRow, EpochAsof}
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_epochasof").toString
-    val mem = MemoryStream[AsofStreamRow]
-    def dim(t: String, u: Long, id: Long) =
-      AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
-    def fact(t: String, u: Long, id: Long) =
-      AsofStreamRow(ts(t), u, id, is_dim = false, "view")
-    val seen = new scala.collection.mutable.ArrayBuffer[(Long, Option[Long])]
-    def start() = EpochAsof.latestPurchaseAsofBufferedEpoch(
-        mem.toDS().withWatermark("ts", "30 minutes"), widthSec = 600L)
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        seen.synchronized {
-          seen ++= df.collect().map(r =>
-            (r.getLong(0), if (r.isNullAt(3)) None else Some(r.getLong(3))))
-        }; ()
-      }
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Append()).start()
-    val q1 = start()
-    try {
-      // epoch A (10:00-10:10) fully drains BEFORE the restart: the mover
-      // lifts the eviction watermark to 10:15 > epoch A's end, so fact 11
-      // emits (dim 100), epoch A's summary merges into the PASS-2 prefix —
-      // the state the post-restart assert depends on — its cleanup timer
-      // fires (the round-17 GC path runs pre-checkpoint too), and the
-      // epoch-B fact 12 drains via the prefix; the epoch-C fact 13 stays
-      // BUFFERED in pass-1 state across the restart
+    withConf(RocksDbProvider) {
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_epochasof").toString
+      val mem = MemoryStream[AsofStreamRow]
+      def dim(t: String, u: Long, id: Long) =
+        AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
+      def fact(t: String, u: Long, id: Long) =
+        AsofStreamRow(ts(t), u, id, is_dim = false, "view")
+      val seen = new scala.collection.mutable.ArrayBuffer[(Long, Option[Long])]
+      def start() = EpochAsof.latestPurchaseAsofBufferedEpoch(
+          mem.toDS().withWatermark("ts", "30 minutes"), widthSec = 600L)
+        .writeStream
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          seen.synchronized {
+            seen ++= df.collect().map(r =>
+              (r.getLong(0), if (r.isNullAt(3)) None else Some(r.getLong(3))))
+          }; ()
+        }
+        .option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Append()).start()
+      val q1 = start()
+      try {
+        // epoch A (10:00-10:10) fully drains BEFORE the restart: the mover
+        // lifts the eviction watermark to 10:15 > epoch A's end, so fact 11
+        // emits (dim 100), epoch A's summary merges into the PASS-2 prefix —
+        // the state the post-restart assert depends on — its cleanup timer
+        // fires (the round-17 GC path runs pre-checkpoint too), and the
+        // epoch-B fact 12 drains via the prefix; the epoch-C fact 13 stays
+        // BUFFERED in pass-1 state across the restart
+        mem.addData(
+          dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:05:00", 1, 11),
+          fact("2024-01-01 10:12:00", 1, 12), fact("2024-01-01 10:25:00", 1, 13),
+          fact("2024-01-01 10:45:00", 9, 90))
+        q1.processAllAvailable()
+      } finally q1.stop()
+      q1.awaitTermination()
+      val pre = seen.synchronized(seen.toMap)
+      assert(pre.get(11L) === Some(Some(100L)), s"epoch-A fact pre-restart: $pre")
+      assert(pre.get(12L) === Some(Some(100L)), s"epoch-B prefix fact pre-restart: $pre")
+      assert(!pre.contains(13L), s"epoch-C fact must still be buffered: $pre")
+      // while the query is DOWN: an out-of-order epoch-C dim OLDER than the
+      // buffered fact 13, a pre-dim epoch-C fact 15, and a watermark mover
       mem.addData(
-        dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:05:00", 1, 11),
-        fact("2024-01-01 10:12:00", 1, 12), fact("2024-01-01 10:25:00", 1, 13),
-        fact("2024-01-01 10:45:00", 9, 90))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    q1.awaitTermination()
-    val pre = seen.synchronized(seen.toMap)
-    assert(pre.get(11L) === Some(Some(100L)), s"epoch-A fact pre-restart: $pre")
-    assert(pre.get(12L) === Some(Some(100L)), s"epoch-B prefix fact pre-restart: $pre")
-    assert(!pre.contains(13L), s"epoch-C fact must still be buffered: $pre")
-    // while the query is DOWN: an out-of-order epoch-C dim OLDER than the
-    // buffered fact 13, a pre-dim epoch-C fact 15, and a watermark mover
-    mem.addData(
-      dim("2024-01-01 10:21:00", 1, 102), fact("2024-01-01 10:20:30", 1, 15),
-      fact("2024-01-01 11:30:00", 9, 91))
-    val q2 = start()
-    try {
-      q2.processAllAvailable()
-      mem.addData(fact("2024-01-01 12:30:00", 9, 92))
-      q2.processAllAvailable()
-      val got = seen.synchronized(seen.toMap)
-      // recovered pass-1 buffer + post-restart dim: fact 13 (ts 10:25) must
-      // see dim 102 (ts 10:21) that arrived across the restart
-      assert(got.get(13L) === Some(Some(102L)),
-        s"buffered fact must see the post-restart in-epoch dim: $got")
-      // THE recovery pin: fact 15 precedes every epoch-C dim, so it resolves
-      // from the per-user boundary prefix — dim 100, written to pass-2
-      // state before the restart and recovered from the checkpoint
-      assert(got.get(15L) === Some(Some(100L)),
-        s"pre-dim fact must resolve via the RECOVERED boundary prefix: $got")
-    } finally {
-      q2.stop()
-      deleteDir(ckpt)
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        dim("2024-01-01 10:21:00", 1, 102), fact("2024-01-01 10:20:30", 1, 15),
+        fact("2024-01-01 11:30:00", 9, 91))
+      val q2 = start()
+      try {
+        q2.processAllAvailable()
+        mem.addData(fact("2024-01-01 12:30:00", 9, 92))
+        q2.processAllAvailable()
+        val got = seen.synchronized(seen.toMap)
+        // recovered pass-1 buffer + post-restart dim: fact 13 (ts 10:25) must
+        // see dim 102 (ts 10:21) that arrived across the restart
+        assert(got.get(13L) === Some(Some(102L)),
+          s"buffered fact must see the post-restart in-epoch dim: $got")
+        // THE recovery pin: fact 15 precedes every epoch-C dim, so it resolves
+        // from the per-user boundary prefix — dim 100, written to pass-2
+        // state before the restart and recovered from the checkpoint
+        assert(got.get(15L) === Some(Some(100L)),
+          s"pre-dim fact must resolve via the RECOVERED boundary prefix: $got")
+      } finally {
+        q2.stop()
+        deleteDir(ckpt)
       }
     }
   }
@@ -856,59 +791,51 @@ class StreamingSpec extends SparkSpec {
   test("buffered as-of: restart recovery — buffered rows and timers survive the checkpoint") {
     implicit val sq = spark.sqlContext
     import graft.streaming.AsofStreamRow
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_asofbuf").toString
-    val mem = MemoryStream[AsofStreamRow]
-    def dim(t: String, u: Long, id: Long) =
-      AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
-    def fact(t: String, u: Long, id: Long) =
-      AsofStreamRow(ts(t), u, id, is_dim = false, "view")
-    val seen = new scala.collection.mutable.ArrayBuffer[(Long, Option[Long])]
-    def start() = Streams.latestPurchaseAsofBuffered(
-        mem.toDS().withWatermark("ts", "30 minutes"), streaming = true)
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        seen.synchronized {
-          seen ++= df.collect().map(r =>
-            (r.getLong(0), if (r.isNullAt(3)) None else Some(r.getLong(3))))
-        }; ()
-      }
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Append()).start()
-    val q1 = start()
-    try {
-      // fact 1 lands in the ListState BUFFER (wm after batch 1 = 09:50,
-      // nothing finalizes) — then the query dies
+    withConf(RocksDbProvider) {
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_asofbuf").toString
+      val mem = MemoryStream[AsofStreamRow]
+      def dim(t: String, u: Long, id: Long) =
+        AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
+      def fact(t: String, u: Long, id: Long) =
+        AsofStreamRow(ts(t), u, id, is_dim = false, "view")
+      val seen = new scala.collection.mutable.ArrayBuffer[(Long, Option[Long])]
+      def start() = Streams.latestPurchaseAsofBuffered(
+          mem.toDS().withWatermark("ts", "30 minutes"), streaming = true)
+        .writeStream
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          seen.synchronized {
+            seen ++= df.collect().map(r =>
+              (r.getLong(0), if (r.isNullAt(3)) None else Some(r.getLong(3))))
+          }; ()
+        }
+        .option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Append()).start()
+      val q1 = start()
+      try {
+        // fact 1 lands in the ListState BUFFER (wm after batch 1 = 09:50,
+        // nothing finalizes) — then the query dies
+        mem.addData(
+          dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:15:00", 1, 1),
+          fact("2024-01-01 10:20:00", 9, 90))
+        q1.processAllAvailable()
+      } finally q1.stop()
+      q1.awaitTermination()
+      assert(seen.synchronized(seen.isEmpty), s"nothing must emit pre-restart: $seen")
+      // data arriving while the query is DOWN: an out-of-order dim OLDER
+      // than the buffered fact, plus a watermark mover
       mem.addData(
-        dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:15:00", 1, 1),
-        fact("2024-01-01 10:20:00", 9, 90))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    q1.awaitTermination()
-    assert(seen.synchronized(seen.isEmpty), s"nothing must emit pre-restart: $seen")
-    // data arriving while the query is DOWN: an out-of-order dim OLDER
-    // than the buffered fact, plus a watermark mover
-    mem.addData(
-      dim("2024-01-01 10:10:00", 1, 101), fact("2024-01-01 10:50:00", 9, 91))
-    val q2 = start()
-    try {
-      q2.processAllAvailable()
-      // the RECOVERED buffer still holds fact 1; the post-restart dim 101
-      // (ts before fact 1, arrival after AND across a restart) must win —
-      // this exercises recovery of the ListState buffer, the lastDim
-      // ValueState, and the event-time timers together
-      val got = seen.synchronized(seen.toMap)
-      assert(got.get(1L) === Some(Some(101L)),
-        s"buffered fact must see the post-restart out-of-order dim: $got")
-    } finally {
-      q2.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+        dim("2024-01-01 10:10:00", 1, 101), fact("2024-01-01 10:50:00", 9, 91))
+      val q2 = start()
+      try {
+        q2.processAllAvailable()
+        // the RECOVERED buffer still holds fact 1; the post-restart dim 101
+        // (ts before fact 1, arrival after AND across a restart) must win —
+        // this exercises recovery of the ListState buffer, the lastDim
+        // ValueState, and the event-time timers together
+        val got = seen.synchronized(seen.toMap)
+        assert(got.get(1L) === Some(Some(101L)),
+          s"buffered fact must see the post-restart out-of-order dim: $got")
+      } finally q2.stop()
     }
   }
 
@@ -944,43 +871,35 @@ class StreamingSpec extends SparkSpec {
   test("buffered as-of: randomized fully-shuffled stream equals the exact as-of") {
     implicit val sq = spark.sqlContext
     import graft.streaming.AsofStreamRow
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val rnd = new scala.util.Random(20260815L)
-    val base = ts("2024-01-01 00:00:00").getTime
-    val rows = randomAsofRows(20260815L)
-    val expected = exactAsof(rows)
-    assert(expected.values.exists(_.isDefined) && expected.values.exists(_.isEmpty),
-      "fixture must exercise both matched and before-first-dim facts")
-    // the 2-day watermark delay exceeds the 1-day data span, so NO arrival
-    // order can make a row late — a full shuffle is within the out-of-order
-    // tolerance by construction; a far-future mover then drains everything
-    val shuffled = rnd.shuffle(rows)
-    val mover = AsofStreamRow(new Timestamp(base + 6L * 24 * 3600 * 1000L),
-      999L, 999999L, is_dim = false, "view")
-    val mem = MemoryStream[AsofStreamRow]
-    val q = Streams.latestPurchaseAsofBuffered(
-        mem.toDS().withWatermark("ts", "2 days"), streaming = true)
-      .writeStream.format("memory").queryName("asof_rand_t")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      shuffled.grouped(45).foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-      mem.addData(mover)
-      q.processAllAvailable()
-      val got = spark.table("asof_rand_t").where(col("user_id") =!= 999L)
-        .collect()
-        .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-        .toMap
-      assert(got == expected,
-        s"diff: ${(got.toSet diff expected.toSet) ++ (expected.toSet diff got.toSet)}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withConf(RocksDbProvider) {
+      val rnd = new scala.util.Random(20260815L)
+      val base = ts("2024-01-01 00:00:00").getTime
+      val rows = randomAsofRows(20260815L)
+      val expected = exactAsof(rows)
+      assert(expected.values.exists(_.isDefined) && expected.values.exists(_.isEmpty),
+        "fixture must exercise both matched and before-first-dim facts")
+      // the 2-day watermark delay exceeds the 1-day data span, so NO arrival
+      // order can make a row late — a full shuffle is within the out-of-order
+      // tolerance by construction; a far-future mover then drains everything
+      val shuffled = rnd.shuffle(rows)
+      val mover = AsofStreamRow(new Timestamp(base + 6L * 24 * 3600 * 1000L),
+        999L, 999999L, is_dim = false, "view")
+      val mem = MemoryStream[AsofStreamRow]
+      val q = Streams.latestPurchaseAsofBuffered(
+          mem.toDS().withWatermark("ts", "2 days"), streaming = true)
+        .writeStream.format("memory").queryName("asof_rand_t")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        shuffled.grouped(45).foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+        mem.addData(mover)
+        q.processAllAvailable()
+        val got = spark.table("asof_rand_t").where(col("user_id") =!= 999L)
+          .collect()
+          .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
+          .toMap
+        assert(got == expected,
+          s"diff: ${(got.toSet diff expected.toSet) ++ (expected.toSet diff got.toSet)}")
+      } finally q.stop()
     }
   }
 
@@ -992,40 +911,32 @@ class StreamingSpec extends SparkSpec {
     // single-level test so the two pins don't share a fixture.
     implicit val sq = spark.sqlContext
     import graft.streaming.{AsofStreamRow, EpochAsof}
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val rows = randomAsofRows(20260816L)
-    val expected = exactAsof(rows)
-    assert(expected.values.exists(_.isDefined) && expected.values.exists(_.isEmpty),
-      "fixture must exercise both matched and before-first-dim facts")
-    val rnd = new scala.util.Random(20260816L)
-    val shuffled = rnd.shuffle(rows)
-    val mover = AsofStreamRow(new Timestamp(
-      ts("2024-01-01 00:00:00").getTime + 6L * 24 * 3600 * 1000L),
-      999L, 999999L, is_dim = false, "view")
-    val mem = MemoryStream[AsofStreamRow]
-    val q = EpochAsof.latestPurchaseAsofBufferedEpoch(
-        mem.toDS().withWatermark("ts", "2 days"), widthSec = 3600L)
-      .writeStream.format("memory").queryName("asof_rand_epoch_t")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      shuffled.grouped(45).foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-      mem.addData(mover)
-      q.processAllAvailable()
-      val got = spark.table("asof_rand_epoch_t").where(col("user_id") =!= 999L)
-        .collect()
-        .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-        .toMap
-      assert(got == expected,
-        s"diff: ${(got.toSet diff expected.toSet) ++ (expected.toSet diff got.toSet)}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withConf(RocksDbProvider) {
+      val rows = randomAsofRows(20260816L)
+      val expected = exactAsof(rows)
+      assert(expected.values.exists(_.isDefined) && expected.values.exists(_.isEmpty),
+        "fixture must exercise both matched and before-first-dim facts")
+      val rnd = new scala.util.Random(20260816L)
+      val shuffled = rnd.shuffle(rows)
+      val mover = AsofStreamRow(new Timestamp(
+        ts("2024-01-01 00:00:00").getTime + 6L * 24 * 3600 * 1000L),
+        999L, 999999L, is_dim = false, "view")
+      val mem = MemoryStream[AsofStreamRow]
+      val q = EpochAsof.latestPurchaseAsofBufferedEpoch(
+          mem.toDS().withWatermark("ts", "2 days"), widthSec = 3600L)
+        .writeStream.format("memory").queryName("asof_rand_epoch_t")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        shuffled.grouped(45).foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+        mem.addData(mover)
+        q.processAllAvailable()
+        val got = spark.table("asof_rand_epoch_t").where(col("user_id") =!= 999L)
+          .collect()
+          .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
+          .toMap
+        assert(got == expected,
+          s"diff: ${(got.toSet diff expected.toSet) ++ (expected.toSet diff got.toSet)}")
+      } finally q.stop()
     }
   }
 
@@ -1045,115 +956,97 @@ class StreamingSpec extends SparkSpec {
     // through epochs mid-flight
     implicit val sq = spark.sqlContext
     import graft.streaming.{AsofStreamRow, EpochAsof}
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val rnd = new scala.util.Random(20260816L)
-    val base = ts("2024-01-01 00:00:00").getTime
-    def mk(u: Long, i: Int) = {
-      val t = new Timestamp(base + rnd.nextInt(24 * 3600) * 1000L + rnd.nextInt(1000))
-      val isDim = rnd.nextInt(4) == 0
-      AsofStreamRow(t, u, u * 100000 + i, isDim, if (isDim) "purchase" else "view")
-    }
-    // hot user 1 = 300 of 450 rows (~67%); five cold users share the rest
-    val rows = ((1 to 300).map(mk(1L, _)) ++
-      (for (u <- 2L to 6L; i <- 1 to 30) yield mk(u, i))).toVector
-    def exactAsof(rs: Seq[AsofStreamRow]): Map[Long, Option[Long]] =
-      rs.groupBy(_.user_id).values.flatMap { users =>
-        var cur: Option[(Long, Long)] = None
-        users.sortBy(r => (r.ts.getTime, if (r.is_dim) 0 else 1, r.event_id))
-          .flatMap { r =>
-            if (r.is_dim) {
-              if (cur.forall(c => c._1 < r.ts.getTime ||
-                                  (c._1 == r.ts.getTime && c._2 < r.event_id)))
-                cur = Some((r.ts.getTime, r.event_id))
-              None
-            } else Some(r.event_id -> cur.map(_._2))
-          }
-      }.toMap
-    val expected = exactAsof(rows)
-    assert(expected.values.exists(_.isDefined) && expected.values.exists(_.isEmpty),
-      "fixture must exercise both matched and before-first-dim facts")
-    // the in-order contract both spellings share: arrival order = event-time
-    // order; batches of 60 cut through the hourly epochs mid-flight, so
-    // cross-batch epoch state AND cross-epoch boundary state both carry
-    val inOrder = rows.sortBy(r => (r.ts.getTime, if (r.is_dim) 0 else 1, r.event_id))
-    def run(name: String)(mkQuery: org.apache.spark.sql.Dataset[AsofStreamRow] => org.apache.spark.sql.DataFrame): Map[Long, Option[Long]] = {
-      val mem = MemoryStream[AsofStreamRow]
-      val q = mkQuery(mem.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        inOrder.grouped(60).foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-        spark.table(name).collect()
-          .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-          .toMap
-      } finally q.stop()
-    }
-    try {
+    withConf(RocksDbProvider) {
+      val rnd = new scala.util.Random(20260816L)
+      val base = ts("2024-01-01 00:00:00").getTime
+      def mk(u: Long, i: Int) = {
+        val t = new Timestamp(base + rnd.nextInt(24 * 3600) * 1000L + rnd.nextInt(1000))
+        val isDim = rnd.nextInt(4) == 0
+        AsofStreamRow(t, u, u * 100000 + i, isDim, if (isDim) "purchase" else "view")
+      }
+      // hot user 1 = 300 of 450 rows (~67%); five cold users share the rest
+      val rows = ((1 to 300).map(mk(1L, _)) ++
+        (for (u <- 2L to 6L; i <- 1 to 30) yield mk(u, i))).toVector
+      def exactAsof(rs: Seq[AsofStreamRow]): Map[Long, Option[Long]] =
+        rs.groupBy(_.user_id).values.flatMap { users =>
+          var cur: Option[(Long, Long)] = None
+          users.sortBy(r => (r.ts.getTime, if (r.is_dim) 0 else 1, r.event_id))
+            .flatMap { r =>
+              if (r.is_dim) {
+                if (cur.forall(c => c._1 < r.ts.getTime ||
+                                    (c._1 == r.ts.getTime && c._2 < r.event_id)))
+                  cur = Some((r.ts.getTime, r.event_id))
+                None
+              } else Some(r.event_id -> cur.map(_._2))
+            }
+        }.toMap
+      val expected = exactAsof(rows)
+      assert(expected.values.exists(_.isDefined) && expected.values.exists(_.isEmpty),
+        "fixture must exercise both matched and before-first-dim facts")
+      // the in-order contract both spellings share: arrival order = event-time
+      // order; batches of 60 cut through the hourly epochs mid-flight, so
+      // cross-batch epoch state AND cross-epoch boundary state both carry
+      val inOrder = rows.sortBy(r => (r.ts.getTime, if (r.is_dim) 0 else 1, r.event_id))
+      def run(name: String)(mkQuery: org.apache.spark.sql.Dataset[AsofStreamRow] => org.apache.spark.sql.DataFrame): Map[Long, Option[Long]] = {
+        val mem = MemoryStream[AsofStreamRow]
+        val q = mkQuery(mem.toDS())
+          .writeStream.format("memory").queryName(name)
+          .outputMode(OutputMode.Append()).start()
+        try {
+          inOrder.grouped(60).foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+          spark.table(name).collect()
+            .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
+            .toMap
+        } finally q.stop()
+      }
       val single = run("asof_skew_single")(ds => Streams.latestPurchaseAsof(ds))
       val epoch = run("asof_skew_epoch")(ds =>
         EpochAsof.latestPurchaseAsofEpoch(ds, widthSec = 3600L, streaming = true))
       assert(single == expected, "single-level spelling must be the exact as-of")
       assert(epoch == expected,
         s"epoch spelling diverged: ${(epoch.toSet diff expected.toSet) ++ (expected.toSet diff epoch.toSet)}")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("epoch-keyed as-of: boundary resolution, inclusive ties, and late dims match the single-level spelling") {
     implicit val sq = spark.sqlContext
     import graft.streaming.{AsofStreamRow, EpochAsof}
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    def dim(t: String, id: Long) = AsofStreamRow(ts(t), 1, id, is_dim = true, "purchase")
-    def fact(t: String, id: Long) = AsofStreamRow(ts(t), 1, id, is_dim = false, "view")
-    // batch 1: fact before any dim (null); a dim; batch 2: a fact two
-    // epochs later (60 s epochs — crosses empty epochs, pure boundary
-    // resolve); same-ts dim+fact (inclusive); batch 3: a LATE dim that
-    // advances the monotone state and one that doesn't, then facts reading
-    // the result — the monotone-ignore contract both spellings share
-    val batches = Vector(
-      Vector(fact("2024-01-01 09:00:00", 1), dim("2024-01-01 10:00:00", 100)),
-      Vector(fact("2024-01-01 11:30:05", 2),
-             dim("2024-01-01 12:00:00", 110), fact("2024-01-01 12:00:00", 3)),
-      Vector(fact("2024-01-01 13:00:00", 4),
-             dim("2024-01-01 12:30:00", 105), fact("2024-01-01 14:00:00", 5)),
-      Vector(dim("2024-01-01 11:00:00", 90), fact("2024-01-01 15:00:00", 6)))
-    // fact 4 (13:00) sees 105: the dim(12:30) arrives in the SAME batch and
-    // both spellings sort a batch by event time before applying it
-    val expected = Map(1L -> None, 2L -> Some(100L), 3L -> Some(110L),
-      4L -> Some(105L), 5L -> Some(105L), 6L -> Some(105L))
-    def run(name: String)(mkQuery: org.apache.spark.sql.Dataset[AsofStreamRow] => org.apache.spark.sql.DataFrame): Map[Long, Option[Long]] = {
-      val mem = MemoryStream[AsofStreamRow]
-      val q = mkQuery(mem.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-        spark.table(name).collect()
-          .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-          .toMap
-      } finally q.stop()
-    }
-    try {
+    withConf(RocksDbProvider) {
+      def dim(t: String, id: Long) = AsofStreamRow(ts(t), 1, id, is_dim = true, "purchase")
+      def fact(t: String, id: Long) = AsofStreamRow(ts(t), 1, id, is_dim = false, "view")
+      // batch 1: fact before any dim (null); a dim; batch 2: a fact two
+      // epochs later (60 s epochs — crosses empty epochs, pure boundary
+      // resolve); same-ts dim+fact (inclusive); batch 3: a LATE dim that
+      // advances the monotone state and one that doesn't, then facts reading
+      // the result — the monotone-ignore contract both spellings share
+      val batches = Vector(
+        Vector(fact("2024-01-01 09:00:00", 1), dim("2024-01-01 10:00:00", 100)),
+        Vector(fact("2024-01-01 11:30:05", 2),
+               dim("2024-01-01 12:00:00", 110), fact("2024-01-01 12:00:00", 3)),
+        Vector(fact("2024-01-01 13:00:00", 4),
+               dim("2024-01-01 12:30:00", 105), fact("2024-01-01 14:00:00", 5)),
+        Vector(dim("2024-01-01 11:00:00", 90), fact("2024-01-01 15:00:00", 6)))
+      // fact 4 (13:00) sees 105: the dim(12:30) arrives in the SAME batch and
+      // both spellings sort a batch by event time before applying it
+      val expected = Map(1L -> None, 2L -> Some(100L), 3L -> Some(110L),
+        4L -> Some(105L), 5L -> Some(105L), 6L -> Some(105L))
+      def run(name: String)(mkQuery: org.apache.spark.sql.Dataset[AsofStreamRow] => org.apache.spark.sql.DataFrame): Map[Long, Option[Long]] = {
+        val mem = MemoryStream[AsofStreamRow]
+        val q = mkQuery(mem.toDS())
+          .writeStream.format("memory").queryName(name)
+          .outputMode(OutputMode.Append()).start()
+        try {
+          batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+          spark.table(name).collect()
+            .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
+            .toMap
+        } finally q.stop()
+      }
       val single = run("asof_edge_single")(ds => Streams.latestPurchaseAsof(ds))
       val epoch = run("asof_edge_epoch")(ds =>
         EpochAsof.latestPurchaseAsofEpoch(ds, widthSec = 60L, streaming = true))
       assert(single == expected, s"single: $single")
       assert(epoch == expected, s"epoch: $epoch")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1186,7 +1079,7 @@ class StreamingSpec extends SparkSpec {
     Streams.scopedBatchTws(spark)(body.localCheckpoint())
 
   test("epoch as-of STREAMING spellings over the fixture equal the batch twin (probe protocol in miniature)") {
-    // Round-17 (r16 verdict #1): graft.StreamAsofProbe measures the chained
+    // Round-17 (r16 verdict #1): `graft.Dev stream asof` measures the chained
     // streaming spellings at 64× as ts-ordered micro-batch replays whose
     // output checksum must equal the batch-twin exact as-of; this is the
     // same protocol at spec scale on the REAL fixture — sf0.001 events
@@ -1195,46 +1088,42 @@ class StreamingSpec extends SparkSpec {
     // ship (itself oracle-checked at sf0.01).
     implicit val sq = spark.sqlContext
     import graft.streaming.{AsofStreamRow, EpochAsof}
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // ORDER BY MICROSECONDS (round-17 review): the fixture carries sub-ms
-    // timestamps and the processors' state ordering is µs-precision — a
-    // ms-granular sort could place a same-ms dim before an earlier-by-µs
-    // fact across a chunk boundary, a replay-order artifact
-    val rows = Tables.events(spark, sfDir)
-      .select(col("ts"), col("user_id"), col("event_id"),
-              (col("event_type") === "purchase").as("is_dim"), col("event_type"))
-      .as[AsofStreamRow].collect().toVector
-      .sortBy(r => (graft.streaming.LastDimState.micros(r.ts),
-                    if (r.is_dim) 0 else 1, r.event_id))
-    assert(rows.size >= 500, "fixture must be non-trivial")
-    val expected = withBatchTwsForTest(
-        EpochAsof.latestPurchaseAsofEpoch(spark.createDataset(rows), 3600L))
-      .collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-      .toMap
-    def run(name: String, chunks: Seq[Seq[AsofStreamRow]])(
-        mkQuery: org.apache.spark.sql.Dataset[AsofStreamRow] => org.apache.spark.sql.DataFrame)
-        : Map[Long, Option[Long]] = {
-      val mem = MemoryStream[AsofStreamRow]
-      val q = mkQuery(mem.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        chunks.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-        spark.table(name).collect()
-          .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-          .toMap
-      } finally q.stop()
-    }
-    val chunks = rows.grouped(200).map(_.toSeq).toSeq
-    // far-future mover fact drains the buffered spelling's watermark tail
-    val mover = AsofStreamRow(
-      new Timestamp(rows.last.ts.getTime + 90L * 24 * 3600 * 1000),
-      -424242L, -1L, is_dim = false, "view")
-    try {
+    withConf(RocksDbProvider) {
+      // ORDER BY MICROSECONDS (round-17 review): the fixture carries sub-ms
+      // timestamps and the processors' state ordering is µs-precision — a
+      // ms-granular sort could place a same-ms dim before an earlier-by-µs
+      // fact across a chunk boundary, a replay-order artifact
+      val rows = Tables.events(spark, sfDir)
+        .select(col("ts"), col("user_id"), col("event_id"),
+                (col("event_type") === "purchase").as("is_dim"), col("event_type"))
+        .as[AsofStreamRow].collect().toVector
+        .sortBy(r => (graft.streaming.LastDimState.micros(r.ts),
+                      if (r.is_dim) 0 else 1, r.event_id))
+      assert(rows.size >= 500, "fixture must be non-trivial")
+      val expected = withBatchTwsForTest(
+          EpochAsof.latestPurchaseAsofEpoch(spark.createDataset(rows), 3600L))
+        .collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
+        .toMap
+      def run(name: String, chunks: Seq[Seq[AsofStreamRow]])(
+          mkQuery: org.apache.spark.sql.Dataset[AsofStreamRow] => org.apache.spark.sql.DataFrame)
+          : Map[Long, Option[Long]] = {
+        val mem = MemoryStream[AsofStreamRow]
+        val q = mkQuery(mem.toDS())
+          .writeStream.format("memory").queryName(name)
+          .outputMode(OutputMode.Append()).start()
+        try {
+          chunks.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+          spark.table(name).collect()
+            .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
+            .toMap
+        } finally q.stop()
+      }
+      val chunks = rows.grouped(200).map(_.toSeq).toSeq
+      // far-future mover fact drains the buffered spelling's watermark tail
+      val mover = AsofStreamRow(
+        new Timestamp(rows.last.ts.getTime + 90L * 24 * 3600 * 1000),
+        -424242L, -1L, is_dim = false, "view")
       val inOrder = run("fix_epoch_state", chunks)(ds =>
         EpochAsof.latestPurchaseAsofEpoch(ds, widthSec = 3600L, streaming = true))
       assert(inOrder == expected,
@@ -1260,11 +1149,6 @@ class StreamingSpec extends SparkSpec {
         assert((bufferedH - mover.event_id) == expected,
           s"hybrid buffered spelling diverged on ${((bufferedH - mover.event_id).toSet diff expected.toSet).take(3)}")
       } finally spark.conf.unset(EpochAsof.StreamJoinMinGroupConf)
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1328,56 +1212,48 @@ class StreamingSpec extends SparkSpec {
 
   test("state TTL: a conf-driven TTL expires idle per-user state (processing time)") {
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[graft.streaming.GraftEvent]
-    // 150 ms TTL — at 100 TB this is how an unbounded user-id space stops
-    // accumulating state forever (Streams.StateTtlConf plumbs the same
-    // Option into the registered queries)
-    val q = graft.streaming.Streams.userTotalsTws(mem.toDS(), ttlMs = Some(150L))
-      .writeStream.format("memory").queryName("ttl_t")
-      .outputMode(OutputMode.Update()).start()
-    // A ProcessingTime-mode tws stream NEVER quiesces: Spark keeps running
-    // no-data batches to advance processing time for TTL eviction, so
-    // processAllAvailable would block forever. Poll the sink instead.
-    def awaitOutput(cond: => Boolean): Unit = {
-      val t0 = System.currentTimeMillis()
-      while (!cond) {
-        q.exception.foreach(throw _)
-        assert(System.currentTimeMillis() - t0 < 120000,
-          "timed out waiting for streaming output")
-        Thread.sleep(50)
+    withConf(RocksDbProvider) {
+      val mem = MemoryStream[graft.streaming.GraftEvent]
+      // 150 ms TTL — at 100 TB this is how an unbounded user-id space stops
+      // accumulating state forever (Streams.StateTtlConf plumbs the same
+      // Option into the registered queries)
+      val q = graft.streaming.Streams.userTotalsTws(mem.toDS(), ttlMs = Some(150L))
+        .writeStream.format("memory").queryName("ttl_t")
+        .outputMode(OutputMode.Update()).start()
+      // A ProcessingTime-mode tws stream NEVER quiesces: Spark keeps running
+      // no-data batches to advance processing time for TTL eviction, so
+      // processAllAvailable would block forever. Poll the sink instead.
+      def awaitOutput(cond: => Boolean): Unit = {
+        val t0 = System.currentTimeMillis()
+        while (!cond) {
+          q.exception.foreach(throw _)
+          assert(System.currentTimeMillis() - t0 < 120000,
+            "timed out waiting for streaming output")
+          Thread.sleep(50)
+        }
       }
-    }
-    def rows() = spark.table("ttl_t").where(col("user_id") === 1)
-      .collect().map(r => (r.getAs[Long]("n_events"), r.getAs[Long]("max_event_id")))
-    try {
-      mem.addData(
-        graft.streaming.GraftEvent(ts("2024-01-01 10:00:00"), "click", 1, 1),
-        graft.streaming.GraftEvent(ts("2024-01-01 10:01:00"), "view", 1, 2))
-      awaitOutput(rows().exists(_._1 == 2))
-      // 13x the TTL (round-14 ADVICE widened 600→2000 ms): the expiry
-      // direction can't flake — wall clock only moves forward — but a wide
-      // margin keeps the intent unambiguous on a loaded machine
-      Thread.sleep(2000)
-      mem.addData(graft.streaming.GraftEvent(ts("2024-01-01 10:30:00"), "view", 1, 3))
-      // the post-TTL event arrives on EXPIRED (absent) state: the update it
-      // emits restarts at n_events = 1 — carrying event 3's id — instead of
-      // extending to 3
-      awaitOutput(rows().exists(_._2 == 3))
-      val got = rows()
-      assert(got.exists(r => r == ((1L, 3L))),
-        s"post-TTL state must restart at 1 event: ${got.mkString(",")}")
-      assert(!got.exists(_._1 == 3),
-        s"expired state must not extend to 3 events: ${got.mkString(",")}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+      def rows() = spark.table("ttl_t").where(col("user_id") === 1)
+        .collect().map(r => (r.getAs[Long]("n_events"), r.getAs[Long]("max_event_id")))
+      try {
+        mem.addData(
+          graft.streaming.GraftEvent(ts("2024-01-01 10:00:00"), "click", 1, 1),
+          graft.streaming.GraftEvent(ts("2024-01-01 10:01:00"), "view", 1, 2))
+        awaitOutput(rows().exists(_._1 == 2))
+        // 13x the TTL (round-14 ADVICE widened 600→2000 ms): the expiry
+        // direction can't flake — wall clock only moves forward — but a wide
+        // margin keeps the intent unambiguous on a loaded machine
+        Thread.sleep(2000)
+        mem.addData(graft.streaming.GraftEvent(ts("2024-01-01 10:30:00"), "view", 1, 3))
+        // the post-TTL event arrives on EXPIRED (absent) state: the update it
+        // emits restarts at n_events = 1 — carrying event 3's id — instead of
+        // extending to 3
+        awaitOutput(rows().exists(_._2 == 3))
+        val got = rows()
+        assert(got.exists(r => r == ((1L, 3L))),
+          s"post-TTL state must restart at 1 event: ${got.mkString(",")}")
+        assert(!got.exists(_._1 == 3),
+          s"expired state must not extend to 3 events: ${got.mkString(",")}")
+      } finally q.stop()
     }
   }
 
@@ -1388,34 +1264,26 @@ class StreamingSpec extends SparkSpec {
                                horizonMs: Long, wmDelay: String)
       : (Map[Long, (String, Long)], Long, Long) = {
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[NdDoc]
-    val q = graft.streaming.StreamNeardup.streamNeardup(
-        mem.toDF().withWatermark("ts", wmDelay), horizonMs)
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append()).start()
-    try {
-      var peak = 0L
-      var fin = 0L
-      chunks.foreach { b =>
-        mem.addData(b: _*)
-        q.processAllAvailable()
-        fin = Option(q.lastProgress)
-          .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)
-        peak = math.max(peak, fin)
-      }
-      val rows = spark.table(name).collect()
-        .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
-      (rows, peak, fin)
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withConf(RocksDbProvider) {
+      val mem = MemoryStream[NdDoc]
+      val q = graft.streaming.StreamNeardup.streamNeardup(
+          mem.toDF().withWatermark("ts", wmDelay), horizonMs)
+        .writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).start()
+      try {
+        var peak = 0L
+        var fin = 0L
+        chunks.foreach { b =>
+          mem.addData(b: _*)
+          q.processAllAvailable()
+          fin = Option(q.lastProgress)
+            .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)
+          peak = math.max(peak, fin)
+        }
+        val rows = spark.table(name).collect()
+          .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
+        (rows, peak, fin)
+      } finally q.stop()
     }
   }
 
@@ -1428,34 +1296,26 @@ class StreamingSpec extends SparkSpec {
                                 numProbe: Int)
       : (Map[Long, (String, Long)], Long, Long) = {
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[SdVec]
-    val q = graft.streaming.StreamSemdedup.streamSemdedup(
-        mem.toDF().withWatermark("ts", wmDelay), horizonMs, cb, numProbe)
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append()).start()
-    try {
-      var peak = 0L
-      var fin = 0L
-      chunks.foreach { b =>
-        mem.addData(b: _*)
-        q.processAllAvailable()
-        fin = Option(q.lastProgress)
-          .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)
-        peak = math.max(peak, fin)
-      }
-      val rows = spark.table(name).collect()
-        .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
-      (rows, peak, fin)
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withConf(RocksDbProvider) {
+      val mem = MemoryStream[SdVec]
+      val q = graft.streaming.StreamSemdedup.streamSemdedup(
+          mem.toDF().withWatermark("ts", wmDelay), horizonMs, cb, numProbe)
+        .writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).start()
+      try {
+        var peak = 0L
+        var fin = 0L
+        chunks.foreach { b =>
+          mem.addData(b: _*)
+          q.processAllAvailable()
+          fin = Option(q.lastProgress)
+            .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)
+          peak = math.max(peak, fin)
+        }
+        val rows = spark.table(name).collect()
+          .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
+        (rows, peak, fin)
+      } finally q.stop()
     }
   }
 
