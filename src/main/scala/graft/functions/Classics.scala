@@ -19,8 +19,7 @@ object Classics {
   private def tokens(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
-              explode(split(lower(col("text")), "\\s+")).as("w"))
-      .where(col("w") =!= "")
+              explode(graft.llm.Text.words(col("text"))).as("w"))
 
   /** WordCount (~60 LoC of MR): tokenize, count per token. */
   val mrWordcount: Q = (s, d) =>

@@ -23,7 +23,7 @@ object Curation {
   type Q = (SparkSession, String) => DataFrame
 
   /** Dev diagnostic: iteration count of the most recent CC invocation in
-    * this JVM (propagation / alternating-star), read by [[graft.ScaleProbe]]
+    * this JVM (propagation / alternating-star), read by `graft.Dev scale`
     * to report rounds-at-depth alongside wall time. Not part of the library
     * surface; -1 = not yet run. */
   @volatile var lastPropagationRounds: Int = -1
@@ -325,12 +325,10 @@ object Curation {
     // graft.Caching.scatterIfNarrow for the gate and rationale.
     graft.Caching.scatterIfNarrow(docs, col("doc_id"))
       .select(col("doc_id"), col("source"),
-              filter(split(lower(col("text")), "\\s+"), t => t =!= "").as("t"))
+              Text.words(col("text")).as("t"))
       .where(size(col("t")) > 0)
       .select(col("doc_id"), col("source"),
-        explode(when(size(col("t")) >= n,
-            transform(sequence(lit(1), size(col("t")) - (n - 1)),
-              i => concat_ws(" ", slice(col("t"), i, lit(n)))))
+        explode(when(size(col("t")) >= n, Text.grams(col("t"), n))
           .otherwise(array(concat_ws(" ", col("t"))))).as("g"))
   }
 
@@ -443,22 +441,9 @@ object Curation {
     * which is what makes daily ingest O(batch · corpus-overlap), not
     * O(corpus²). */
   val ingestDedup: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
     val isNew = col("doc_id") % 10 === 7
-    // One fused scan projects (doc_id, sha256, distinct shingle-hash array)
-    // and is the operator's only cached frame (text ReadSchema 1); the exact
-    // arm reads (doc_id, h) from it, the near arm explodes the arrays, and
-    // the per-doc sizes are size(shs) — no aggregation at all. The tokens
-    // are projected BEFORE the shingle lambda: written inline, they sat in
-    // the lambda body, which subexpression elimination skips, so every
-    // 5-gram re-split its whole document (O(tokens²) per document).
-    // CollapseProject keeps the two projections apart because the shingle
-    // array reads `toks` more than once.
-    val base = graft.Caching.scatterIfNarrow(docs, col("doc_id"))
-      .select(col("doc_id"), sha2(col("text"), 256).as("h"),
-        filter(split(lower(col("text")), "\\s+"), t => t =!= "").as("toks"))
-      .select(col("doc_id"), col("h"), Dedup.shingleHashArray(col("toks")).as("shs"))
-      .transform(graft.Caching.cachedOnce)
+    // the operator's only cached frame
+    val base = Dedup.contentShingleArrays(s, d)
     // Round 19: the exact check is ONE aggregation over the hash group, not
     // a batch-vs-corpus self-join. Per content hash: the minimum CORPUS doc
     // id (the match target) and the batch ids that collide with it; groups
@@ -593,8 +578,7 @@ object Curation {
   val seqPack: Q = (s, d) => {
     val t = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),
-        size(filter(split(lower(col("text")), "\\s+"), x => x =!= ""))
-          .cast("bigint").as("n_toks"))
+        size(Text.words(col("text"))).cast("bigint").as("n_toks"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang")).orderBy(col("doc_id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
@@ -711,7 +695,7 @@ object Curation {
   val invertedIndex: Q = (s, d) =>
     Tables.documents(s, d)
       .select(col("doc_id"),
-        explode(filter(split(lower(col("text")), "\\s+"), t => t =!= "")).as("w"))
+        explode(Text.words(col("text"))).as("w"))
       .distinct()
       .groupBy(col("w").as("term"))
       .agg(count(lit(1)).as("df"),

@@ -20,7 +20,7 @@ import graft.Tables
 object Dedup {
   type Q = (SparkSession, String) => DataFrame
 
-  /** doc_id + deduplicated whitespace tokens of lowercased text.
+  /** doc_id + the [[Text.words]] tokens of each document.
     *
     * Conditionally hash-scattered across the shuffle width before
     * returning: every consumer (shingles, simhash signatures, substring
@@ -31,9 +31,7 @@ object Dedup {
     * partitioning. */
   def tokens(s: SparkSession, d: String): DataFrame =
     graft.Caching.scatterIfNarrow(
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-                filter(split(lower(col("text")), "\\s+"), t => t =!= "").as("toks")),
+      Tables.documents(s, d).select(col("doc_id"), Text.words(col("text")).as("toks")),
       col("doc_id"))
 
   /** Distinct word 5-gram shingles per document (docs shorter than 5 tokens
@@ -42,9 +40,7 @@ object Dedup {
     tokens(s, d)
       .where(size(col("toks")) >= 5)
       .select(col("doc_id"),
-        explode(array_distinct(
-          transform(sequence(lit(1), size(col("toks")) - 4),
-                    i => concat_ws(" ", slice(col("toks"), i, lit(5)))))).as("sh"))
+        explode(array_distinct(Text.grams(col("toks"), 5))).as("sh"))
 
   /** 64-bit xxhash64 digests of the distinct word-5-gram shingles — the
     * SHUFFLE representation of the near-dup candidate/verify machinery
@@ -74,11 +70,24 @@ object Dedup {
     * than the gram strings — identical sets modulo the same ~n²·2⁻⁶⁴
     * collision bound as [[shingleHashes]], re-proved by the string-exact
     * oracle every round. */
-  def shingleHashArray(toks: Column): Column =
-    when(size(toks) >= 5,
-      array_distinct(transform(sequence(lit(1), size(toks) - 4),
-        i => xxhash64(concat_ws(" ", slice(toks, i, lit(5)))))))
-    .otherwise(array().cast("array<bigint>"))
+  private def shingleHashArray(toks: Column): Column =
+    when(size(toks) >= 5, array_distinct(Text.grams(toks, 5, xxhash64(_))))
+      .otherwise(array().cast("array<bigint>"))
+
+  /** The fused ingest scan behind [[graft.llm.Curation.ingestDedup]] and its
+    * streaming batch twin: per document (doc_id, sha256 `h`, distinct
+    * shingle-hash array `shs`), scattered and cached, read from one text
+    * pass (text ReadSchema 1). The exact arms read (doc_id, h), the near arms
+    * explode `shs`, and per-doc sizes are size(shs). The tokens get their own
+    * projection so the shingle lambda reads a column, not a tokenizer (see
+    * [[Text.grams]]); CollapseProject keeps the two projections apart
+    * because the shingle array reads `toks` more than once. */
+  def contentShingleArrays(s: SparkSession, d: String): DataFrame =
+    graft.Caching.scatterIfNarrow(Tables.documents(s, d), col("doc_id"))
+      .select(col("doc_id"), sha2(col("text"), 256).as("h"),
+              Text.words(col("text")).as("toks"))
+      .select(col("doc_id"), col("h"), shingleHashArray(col("toks")).as("shs"))
+      .transform(graft.Caching.cachedOnce)
 
   /** The near-dup family's CACHED shingle representation (round 20): one
     * per-doc row carrying the distinct shingle-hash ARRAY, instead of the
@@ -771,8 +780,7 @@ object Dedup {
     // stage and feeds BOTH the shared-gram aggregation and the join back —
     // materialize it once
     val spans = t.select(col("doc_id"),
-      explode(transform(sequence(lit(1), size(col("toks")) - (w - 1)),
-        i => xxhash64(concat_ws(" ", slice(col("toks"), i, lit(w)))))).as("g"))
+      explode(Text.grams(col("toks"), w, xxhash64(_))).as("g"))
       .transform(graft.Caching.cachedOnce)
     val shared = spans.groupBy("g")
       .agg(countDistinct(col("doc_id")).as("nd"))
@@ -838,8 +846,7 @@ object Dedup {
     * feeds is llm_inverted_index's shape. */
   val winnowFingerprint: Q = (s, d) => {
     val t = tokens(s, d).where(size(col("toks")) >= 5 + WinnowWindow - 1)
-    val hs = transform(sequence(lit(1), size(col("toks")) - 4),
-      i => md5(concat_ws(" ", slice(col("toks"), i, lit(5)))))
+    val hs = Text.grams(col("toks"), 5, md5)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("j"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.currentRow,

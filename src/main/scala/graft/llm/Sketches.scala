@@ -48,7 +48,7 @@ object Sketches {
 
   private def toks(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .select(explode(filter(split(lower(col("text")), "\\s+"), t => t =!= "")).as("w"))
+      .select(explode(Text.words(col("text"))).as("w"))
 
   private val toksSqlCte: String =
     """toks AS (

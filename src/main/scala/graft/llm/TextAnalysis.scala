@@ -119,7 +119,7 @@ object TextAnalysis {
   private def toks(s: SparkSession, d: String): DataFrame =
     graft.Caching.scatterIfNarrow(Tables.documents(s, d), col("doc_id"))
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-              explode(filter(split(lower(col("text")), "\\s+"), t => t =!= "")).as("w"))
+              explode(Text.words(col("text"))).as("w"))
 
   /** Per-(doc, word) token counts — ONE corpus tokenize pre-aggregated to
     * the (doc_id, w, c) frame several operators derive their own word and
@@ -171,7 +171,7 @@ object TextAnalysis {
   /** Language/quality filter: english docs in a size band with enough tokens. */
   val langFilter: Q = (s, d) =>
     Tables.documents(s, d)
-      .withColumn("n_toks", size(filter(split(lower(col("text")), "\\s+"), t => t =!= "")))
+      .withColumn("n_toks", size(Text.words(col("text"))))
       .where(col("lang") === "en" && col("n_chars").between(100, 400) &&
              col("n_toks") >= 20)
       .select("doc_id", "lang", "n_chars", "n_toks")
@@ -487,12 +487,9 @@ object TextAnalysis {
   /** Bigram extraction + counts (top 100 with total-order tiebreak). */
   val ngrams: Q = (s, d) =>
     Tables.documents(s, d)
-      .select(col("doc_id"),
-              filter(split(lower(col("text")), "\\s+"), t => t =!= "").as("t"))
+      .select(col("doc_id"), Text.words(col("text")).as("t"))
       .where(size(col("t")) >= 2)
-      .select(explode(transform(sequence(lit(1), size(col("t")) - 1),
-        i => concat_ws(" ", element_at(col("t"), i), element_at(col("t"), i + 1))))
-        .as("bigram"))
+      .select(explode(Text.grams(col("t"), 2)).as("bigram"))
       .groupBy("bigram")
       .agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("bigram"))
@@ -548,7 +545,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("lang"), col("label"),
         size(col("embedding")).as("dim"),
         round6(sqrt(Similarity.dot(col("embedding"), col("embedding")))).as("l2_norm"),
-        size(filter(split(lower(col("text")), "\\s+"), t => t =!= "")).as("n_toks"))
+        size(Text.words(col("text"))).as("n_toks"))
   }
 
   val multimodalStructSql: String =
@@ -565,7 +562,7 @@ object TextAnalysis {
   val tokenCount: Q = (s, d) =>
     Tables.documents(s, d)
       .select(col("doc_id"),
-        size(filter(split(lower(col("text")), "\\s+"), t => t =!= "")).as("ws_toks"),
+        size(Text.words(col("text"))).as("ws_toks"),
         size(regexp_extract_all(lower(col("text")), lit("([a-z]{1,4})"), lit(1))).as("bpeish_toks"),
         length(col("text")).as("n_chars2"))
 
@@ -581,7 +578,7 @@ object TextAnalysis {
     * acc*31 + tokenCode mod 2^31-1, with tokenCode from ascii/length so both
     * engines compute identical integers. */
   val rollingHash: Q = (s, d) => {
-    val toksArr = filter(split(lower(col("text")), "\\s+"), t => t =!= "")
+    val toksArr = Text.words(col("text"))
     val code = (t: org.apache.spark.sql.Column) =>
       (ascii(t) * lit(131L) + length(t).cast("long"))
     Tables.documents(s, d)
@@ -621,8 +618,7 @@ object TextAnalysis {
     docs
       .select(sha2(col("text"), 256).as("h"),
         struct(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-          size(filter(split(lower(col("text")), "\\s+"), t => t =!= ""))
-            .as("n_toks")).as("st"))
+          size(Text.words(col("text"))).as("n_toks")).as("st"))
       .groupBy("h").agg(min_by(col("st"), col("st.doc_id")).as("k"))
       .select(col("k.lang").as("lang"), col("k.source").as("source"),
               col("k.n_chars").as("n_chars"), col("k.n_toks").as("n_toks"))
@@ -661,11 +657,9 @@ object TextAnalysis {
     */
   val repetitionFilter: Q = (s, d) => {
     val t = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"),
-        filter(split(lower(col("text")), "\\s+"), x => x =!= "").as("t"))
+      .select(col("doc_id"), col("lang"), Text.words(col("text")).as("t"))
       .where(size(col("t")) >= 2)
-    val bigr = transform(sequence(lit(1), size(col("t")) - 1),
-      i => concat_ws(" ", element_at(col("t"), i), element_at(col("t"), i + 1)))
+    val bigr = Text.grams(col("t"), 2)
     // Round 19: the top-token branch reads the SHARED (doc_id, w, c)
     // pre-aggregation instead of running its own second corpus tokenize —
     // the per-doc max stays clustered on doc_id, so the branch adds no
@@ -1073,8 +1067,7 @@ object TextAnalysis {
     * the explode multiplies rows by ~n/stride, the expected fan-out. */
   val docChunks: Q = (s, d) => {
     val t = Tables.documents(s, d)
-      .select(col("doc_id"),
-              filter(split(lower(col("text")), "\\s+"), x => x =!= "").as("t"))
+      .select(col("doc_id"), Text.words(col("text")).as("t"))
       .withColumn("n_toks", size(col("t")).cast("bigint"))
       .where(col("n_toks") >= 1)
     t.select(col("doc_id"), col("t"), col("n_toks"),
@@ -1183,8 +1176,7 @@ object TextAnalysis {
 
   val spanCorruption: Q = (s, d) => {
     val tk = Tables.documents(s, d)
-      .select(col("doc_id"),
-        posexplode(filter(split(lower(col("text")), "\\s+"), t => t =!= "")))
+      .select(col("doc_id"), posexplode(Text.words(col("text"))))
       .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("tok"))
       .transform(graft.Caching.cachedOnce)
     val n = tk.groupBy("doc_id").agg(count(lit(1)).as("n_toks"))
@@ -1425,8 +1417,7 @@ object TextAnalysis {
     val base = docs
       .select(col("source"), col("lang"), col("n_chars"),
         sha2(col("text"), 256).as("h"),
-        size(filter(split(lower(col("text")), "\\s+"), t => t =!= ""))
-          .cast("bigint").as("n_toks"))
+        size(Text.words(col("text"))).cast("bigint").as("n_toks"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
            countDistinct(col("lang")).as("n_langs"),

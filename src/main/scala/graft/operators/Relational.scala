@@ -51,16 +51,9 @@ object Relational {
       |  AND l_quantity < 10
       |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin
 
-  /** Map-only derived-column projection (disc price / charge, exact
-    * scaled-long arithmetic divided once to double) WITH the
-    * deterministic-compare global sort appended — kept for [[graft.AbBench]]'s
-    * sort-vs-projection attribution and as the historical registered form. */
-  val projectSelect: Q = (s, d) =>
-    projectSelectNoSort(s, d)
-      .orderBy("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-
-  /** The REGISTERED map-only projection (round-12 verdict #1a): the pure
-    * operator a pipeline would run. The deterministic total order the
+  /** The REGISTERED map-only projection (round-12 verdict #1a): disc price
+    * and charge as exact scaled-long arithmetic divided once to double, the
+    * pure operator a pipeline would run. The deterministic total order the
     * oracle hash compare needs is applied by the COMPARATOR side —
     * graft.Verify sorts the dump by [[projectSelectDumpSort]] before
     * writing, matching the oracle SQL's ORDER BY — instead of riding the

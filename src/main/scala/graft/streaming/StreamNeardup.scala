@@ -402,10 +402,8 @@ object StreamNeardup {
     * Input columns: ts (timestamp), doc_id (long), text (string). */
   private def bandRows(docs: DataFrame): DataFrame = {
     import graft.llm.Dedup.{NumHashes, BandSize}
-    val toks = filter(split(lower(col("text")), "\\s+"), t => t =!= "")
-    val shsStr = when(size(col("toks")) >= 5,
-      array_distinct(transform(sequence(lit(1), size(col("toks")) - 4),
-        i => concat_ws(" ", slice(col("toks"), i, lit(5))))))
+    import graft.llm.Text
+    val shsStr = when(size(col("toks")) >= 5, array_distinct(Text.grams(col("toks"), 5)))
       .otherwise(array().cast("array<string>"))
     val mhs = (0 until NumHashes).map { k =>
       array_min(transform(col("shset"), sh => xxhash64(lit(k), sh)))
@@ -424,7 +422,7 @@ object StreamNeardup {
     val minhashBands = when(size(col("shset")) > 0, array(bandStructs: _*))
       .otherwise(array().cast(s"array<struct<band:int,band_hash:bigint>>"))
     docs
-      .withColumn("toks", toks)
+      .withColumn("toks", Text.words(col("text")))
       .withColumn("shset", shsStr)
       .withColumn("h", sha2(col("text"), 256))
       .withColumn("shs", array_sort(transform(col("shset"), sh => xxhash64(sh))))
@@ -474,17 +472,7 @@ object StreamNeardup {
     * banding exactly like `llm_neardup_minhash`). */
   def admitNeardupBatch(s: SparkSession, d: String,
                         horizonDocs: Long = HorizonDocsDefault): DataFrame = {
-    val docs = graft.Tables.documents(s, d)
-    // The same fused scan as [[graft.llm.Curation.ingestDedup]], tokens
-    // projected once per document before the shingle lambda: (doc_id,
-    // sha256, distinct shingle-hash array) is the operator's only cached
-    // frame. The exact self-join reads (doc_id, h) from it, the near arm
-    // explodes the arrays, sizes are size(shs).
-    val base = graft.Caching.scatterIfNarrow(docs, col("doc_id"))
-      .select(col("doc_id"), sha2(col("text"), 256).as("h"),
-        filter(split(lower(col("text")), "\\s+"), t => t =!= "").as("toks"))
-      .select(col("doc_id"), col("h"), graft.llm.Dedup.shingleHashArray(col("toks")).as("shs"))
-      .transform(graft.Caching.cachedOnce)
+    val base = graft.llm.Dedup.contentShingleArrays(s, d)
     val hashed = base.select(col("doc_id"), col("h"))
     val exact = hashed.as("x")
       .join(hashed.as("y"), col("y.h") === col("x.h") &&
