@@ -46,8 +46,16 @@ object Curation {
     * different edge rewrite. Lineage is truncated per round with
     * localCheckpoint so the plan does not grow with the iteration count.
     */
-  val dedupClusters: Q = (s, d) => {
-    val pairs = Dedup.neardupPairs(s, d).select("d1", "d2")
+  val dedupClusters: Q = (s, d) => propagationClusters(Dedup.neardupPairs(s, d))
+
+  /** Round limit of both connected-components loops. A loop that reaches it
+    * unconverged throws rather than return partial labels. */
+  val MaxCcRounds = 64
+
+  /** [[dedupClusters]] over any (d1, d2) pair frame. Throws if some
+    * component's diameter needs more than [[MaxCcRounds]] rounds. */
+  def propagationClusters(edgePairs: DataFrame): DataFrame = {
+    val pairs = edgePairs.select("d1", "d2")
     // The edge cache is clustered on dst — the per-round join's probe key —
     // so every propagation round shuffles ONLY the (small, shrinking) label
     // table; the edge set stays put for the whole loop. (Unpartitioned, the
@@ -71,7 +79,7 @@ object Curation {
       .localCheckpoint(false)
     var changed = 1L
     var rounds = 0
-    while (changed > 0 && rounds < 64) {
+    while (changed > 0 && rounds < MaxCcRounds) {
       val nbrMin = edges
         .join(labels.select(col("id").as("dst"), col("lbl").as("nbr_lbl")), "dst")
         .groupBy(col("src").as("id"))
@@ -94,6 +102,16 @@ object Curation {
       rounds += 1
     }
     lastPropagationRounds = rounds
+    if (changed > 0) throw new IllegalStateException(
+      s"min-label propagation did not converge in $MaxCcRounds rounds: a " +
+      "component's diameter is too large; llm_dedup_clusters_star " +
+      "(alternating star, O(log n) rounds) handles long chains")
+    clusterRows(labels)
+  }
+
+  /** (id, lbl) component labels → the registered rows (doc_id, cluster_id,
+    * cluster_size, is_survivor) of both CC operators. */
+  private def clusterRows(labels: DataFrame): DataFrame = {
     val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "lbl")
       .select(col("id").as("doc_id"), col("lbl").as("cluster_id"),
@@ -142,14 +160,18 @@ object Curation {
     * join+aggregate passes over the edge set, which only shrinks toward
     * one star per component. Registered with the SAME oracle as the
     * propagation operator: both must produce the identical clustering. */
-  val dedupClustersStar: Q = (s, d) => {
+  val dedupClustersStar: Q = (s, d) => starClusters(Dedup.neardupPairs(s, d))
+
+  /** [[dedupClustersStar]] over any (d1, d2) pair frame. Throws if it has
+    * not converged after [[MaxCcRounds]] rounds. */
+  def starClusters(edgePairs: DataFrame): DataFrame = {
     // materialize the pair generation FIRST: both `nodes` and the initial
     // edge set read it, and without this the whole PPJoin pipeline ran
     // twice (once per downstream localCheckpoint). cachedOnce (not
     // localCheckpoint) so repeated invocations in one session also reuse
     // it — a checkpoint is private to its DataFrame and re-ran the full
     // PPJoin pipeline on every warm pass.
-    val pairs = Dedup.neardupPairs(s, d)
+    val pairs = edgePairs
       .select(col("d1").as("a"), col("d2").as("b"))
       .transform(graft.Caching.cachedOnce)
     val nodes = pairs.select(col("a").as("id"))
@@ -181,7 +203,7 @@ object Curation {
     var sig = signature(e)
     var changed = true
     var rounds = 0
-    while (changed && rounds < 64) {
+    while (changed && rounds < MaxCcRounds) {
       // large-star emits (bigger, min)-oriented edges only; small-star reads
       // exactly that orientation, so no intermediate bidirect+distinct pass
       // is needed between the two rewrites — one canonEdges per round
@@ -196,17 +218,14 @@ object Curation {
       rounds += 1
     }
     lastStarRounds = rounds
+    if (changed) throw new IllegalStateException(
+      s"alternating-star connected components did not converge in $MaxCcRounds rounds")
     // converged graph is a star per component: non-min nodes point at the min
-    val labels = nodes
+    clusterRows(nodes
       .join(e.select(col("src").as("id"), col("dst")), Seq("id"), "left")
       .groupBy("id")
       .agg(min("dst").as("md"))
-      .select(col("id"), least(coalesce(col("md"), col("id")), col("id")).as("lbl"))
-    val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, "lbl")
-      .select(col("id").as("doc_id"), col("lbl").as("cluster_id"),
-              col("cluster_size"),
-              when(col("id") === col("lbl"), 1).otherwise(0).as("is_survivor"))
+      .select(col("id"), least(coalesce(col("md"), col("id")), col("id")).as("lbl")))
   }
 
   /** Oracle: transitive closure via recursive CTE over the same exact-Jaccard
@@ -263,23 +282,13 @@ object Curation {
       .select(col("doc_id").as("bench_id"))
     val trainIds = docs.where(col("source") =!= BenchmarkSource)
       .select(col("doc_id").as("train_id"))
-    // size(shs) off the cached array frame — a projection, not an
-    // aggregation over the exploded rows (round 20)
-    val sizes = Dedup.shingleHashArrays(s, d)
-      .where(size(col("shs")) > 0) // evaluated on the CACHED column
-      .select(col("doc_id"), size(col("shs")).cast("bigint").as("n_sh"))
     val inter = sh.select(col("doc_id").as("train_id"), col("sh"))
       .join(trainIds, "train_id")
       .join(broadcast(sh.select(col("doc_id").as("bench_id"), col("sh"))
                         .join(benchIds, "bench_id")), Seq("sh"))
       .groupBy("train_id", "bench_id")
       .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("train_id"), col("n_sh").as("n1")), "train_id")
-      .join(sizes.select(col("doc_id").as("bench_id"), col("n_sh").as("n2")), "bench_id")
-      .withColumn("jac", col("inter").cast("double") /
-                         (col("n1") + col("n2") - col("inter")))
-      .where(col("jac") >= Dedup.JaccardThreshold)
+    Dedup.jaccardAtLeast(inter, "train_id", "bench_id", Dedup.shingleSizes(s, d))
       .select(col("train_id"), col("bench_id"), round(col("jac"), 6).as("jac6"))
   }
 
@@ -443,7 +452,7 @@ object Curation {
   val ingestDedup: Q = (s, d) => {
     val isNew = col("doc_id") % 10 === 7
     // the operator's only cached frame
-    val base = Dedup.contentShingleArrays(s, d)
+    val base = Dedup.shingleHashArrays(s, d)
     // Round 19: the exact check is ONE aggregation over the hash group, not
     // a batch-vs-corpus self-join. Per content hash: the minimum CORPUS doc
     // id (the match target) and the batch ids that collide with it; groups
@@ -456,30 +465,18 @@ object Curation {
       .where(col("exact_match").isNotNull)
       .select(explode(col("new_ids")).as("doc_id"), col("exact_match"))
     // digest shingles, same rationale as decontaminate above (round 19)
-    val sh = base.select(col("doc_id"), explode(col("shs")).as("sh"))
-    val sizes = base.where(size(col("shs")) > 0)
-      .select(col("doc_id"), size(col("shs")).cast("bigint").as("n_sh"))
-    val near = sh.where(!(col("doc_id") % 10 === 7))
+    val sh = Dedup.cachedShingleHashes(s, d)
+    val inter = sh.where(!isNew)
       .select(col("doc_id").as("corpus_id"), col("sh"))
-      .join(broadcast(sh.where(col("doc_id") % 10 === 7)
+      .join(broadcast(sh.where(isNew)
                         .select(col("doc_id").as("new_id"), col("sh"))),
             Seq("sh"))
       .groupBy("new_id", "corpus_id")
       .agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col("doc_id").as("new_id"), col("n_sh").as("n1")), "new_id")
-      .join(sizes.select(col("doc_id").as("corpus_id"), col("n_sh").as("n2")), "corpus_id")
-      .where(col("inter").cast("double") /
-             (col("n1") + col("n2") - col("inter")) >= Dedup.JaccardThreshold)
+    val near = Dedup.jaccardAtLeast(inter, "new_id", "corpus_id", Dedup.shingleSizes(s, d))
       .groupBy(col("new_id").as("doc_id"))
       .agg(min(col("corpus_id")).as("near_match"))
-    base.where(isNew).select("doc_id")
-      .join(exact, Seq("doc_id"), "left")
-      .join(near, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("exact_match").isNotNull, "exact_dup")
-          .when(col("near_match").isNotNull, "near_dup")
-          .otherwise("new").as("verdict"),
-        coalesce(col("exact_match"), col("near_match"), lit(-1L)).as("match_id"))
+    Dedup.admissionVerdicts(base.where(isNew).select("doc_id"), exact, near)
   }
 
   val ingestDedupSql: String =

@@ -62,63 +62,54 @@ object Dedup {
     shingles(s, d).select(col("doc_id"), xxhash64(col("sh")).as("sh"))
 
   /** Per-row distinct shingle-hash ARRAY over a whitespace-token array
-    * column (empty when the doc has fewer than 5 tokens) — the fused-scan
-    * building block for operators that need sha256(text) AND the shingle
-    * set from ONE text pass (round 20, verdict item 6: ingest admission and
-    * its streaming batch twin each read `documents.text` twice, once per
-    * representation). Distinctness is applied to the 8-byte hashes rather
-    * than the gram strings — identical sets modulo the same ~n²·2⁻⁶⁴
-    * collision bound as [[shingleHashes]], re-proved by the string-exact
-    * oracle every round. */
+    * column (empty when the doc has fewer than 5 tokens). Distinctness is
+    * applied to the 8-byte hashes rather than the gram strings — identical
+    * sets modulo the same ~n²·2⁻⁶⁴ collision bound as [[shingleHashes]],
+    * re-proved by the string-exact oracle every round. */
   private def shingleHashArray(toks: Column): Column =
     when(size(toks) >= 5, array_distinct(Text.grams(toks, 5, xxhash64(_))))
       .otherwise(array().cast("array<bigint>"))
 
-  /** The fused ingest scan behind [[graft.llm.Curation.ingestDedup]] and its
-    * streaming batch twin: per document (doc_id, sha256 `h`, distinct
-    * shingle-hash array `shs`), scattered and cached, read from one text
-    * pass (text ReadSchema 1). The exact arms read (doc_id, h), the near arms
-    * explode `shs`, and per-doc sizes are size(shs). The tokens get their own
-    * projection so the shingle lambda reads a column, not a tokenizer (see
-    * [[Text.grams]]); CollapseProject keeps the two projections apart
-    * because the shingle array reads `toks` more than once. */
-  def contentShingleArrays(s: SparkSession, d: String): DataFrame =
+  /** The near-dup family's one CACHED shingle frame: per document
+    * (doc_id, sha256 `h`, distinct shingle-hash array `shs`), read from one
+    * text pass (text ReadSchema 1). The raw documents are scattered first and
+    * tokenized after the exchange, so the tokenize and shingle work spreads
+    * across the full shuffle width. The tokens get their own projection so
+    * the shingle lambda reads a column, not a tokenizer (see [[Text.grams]]);
+    * CollapseProject keeps the two projections apart because the shingle
+    * array reads `toks` more than once.
+    *
+    * One per-doc row carries the whole shingle set instead of the ~100×-more
+    * exploded (doc_id, sh) rows: the same hash payload with a fraction of
+    * the row overhead, and consumers explode on read ([[cachedShingleHashes]],
+    * a narrow Generate over the in-memory scan). The exact-content arm of
+    * ingest admission reads (doc_id, h) off the same frame. */
+  def shingleHashArrays(s: SparkSession, d: String): DataFrame =
+    // NO shingled-docs filter here: a `where(size(shs) > 0)` on the computed
+    // column gets substituted below the scatter exchange by filter pushdown
+    // and re-evaluates the whole shingle pipeline on the narrow pre-scatter
+    // scan — measured 0.9 → 8.4 s solo (ExplainInvariantsSpec pins one
+    // shingle transform per plan). Shingle-less docs cache as empty arrays
+    // (a handful of bytes); explode drops them and [[shingleSizes]] filters
+    // on the CACHED column, which is cheap.
     graft.Caching.scatterIfNarrow(Tables.documents(s, d), col("doc_id"))
       .select(col("doc_id"), sha2(col("text"), 256).as("h"),
               Text.words(col("text")).as("toks"))
       .select(col("doc_id"), col("h"), shingleHashArray(col("toks")).as("shs"))
       .transform(graft.Caching.cachedOnce)
 
-  /** The near-dup family's CACHED shingle representation (round 20): one
-    * per-doc row carrying the distinct shingle-hash ARRAY, instead of the
-    * ~100×-more exploded (doc_id, sh) rows the round-19 cache stored. Same
-    * bytes of hash payload, a fraction of the row overhead in the cache
-    * write and in every per-pass rebuild the honest-cold bench protocol
-    * now charges; consumers explode on read (a narrow Generate over the
-    * in-memory scan). Distinctness moves to the hashes — the family's
-    * accepted collision bound, re-proved by the string-exact oracle. */
-  def shingleHashArrays(s: SparkSession, d: String): DataFrame =
-    // NO shingled-docs filter here: a `where(size(shs) > 0)` on the computed
-    // column gets substituted below the scatter exchange by filter pushdown
-    // and re-evaluates the whole (interpreted-lambda) shingle pipeline on
-    // the narrow pre-scatter scan — measured 0.9 → 8.4 s solo. Shingle-less
-    // docs cache as empty arrays (a handful of bytes); explode drops them
-    // and [[shingleSizes]] filters on the CACHED column, which is cheap.
-    tokens(s, d)
-      .select(col("doc_id"), shingleHashArray(col("toks")).as("shs"))
-      .transform(graft.Caching.cachedOnce)
-
   /** [[shingleHashes]] served from the cached per-doc array frame — the
-    * shape every cached consumer in the family joins on. */
+    * (doc_id, sh) shape every cached consumer in the family joins on. */
   def cachedShingleHashes(s: SparkSession, d: String): DataFrame =
     shingleHashArrays(s, d).select(col("doc_id"), explode(col("shs")).as("sh"))
 
-  /** Per-doc shingle-set sizes straight off the cached array frame — a
-    * projection (`size(shs)`), not an aggregation: the old
-    * `sh.groupBy(doc_id).count` subtree was duplicated by Catalyst into
-    * BOTH size joins of every verify/finish, i.e. two explode+aggregate
-    * passes per query for a number the array already knows. */
-  private def shingleSizes(s: SparkSession, d: String): DataFrame =
+  /** Per-doc shingle-set sizes (doc_id, n_sh) straight off the cached array
+    * frame, shingle-less docs dropped — a projection (`size(shs)`), not an
+    * aggregation: a `sh.groupBy(doc_id).count` subtree was duplicated by
+    * Catalyst into BOTH size joins of every finish, i.e. two
+    * explode+aggregate passes per query for a number the array already
+    * knows. */
+  def shingleSizes(s: SparkSession, d: String): DataFrame =
     shingleHashArrays(s, d)
       .where(size(col("shs")) > 0) // evaluated on the CACHED column
       .select(col("doc_id"), size(col("shs")).cast("bigint").as("n_sh"))
@@ -147,52 +138,58 @@ object Dedup {
 
   val JaccardThreshold = 0.8
 
-  /** Finish a pair set whose `inter` column is ALREADY the exact
-    * intersection count (round 20): join the per-doc sizes and apply the
-    * Jaccard threshold. The naive shared-shingle join enumerates one row
-    * per shared shingle, so its groupBy(d1, d2) count IS |intersection| —
-    * re-deriving it through [[verifyJaccard]]'s two join-backs re-read the
-    * shingle table twice and re-counted what the candidate aggregation had
-    * just counted (the DuckDB oracle's own spelling computes `inter`
-    * directly). Only correct when the pair weights come from the NAIVE
-    * join over the full shingle sets; prefix-filtered candidates carry
-    * prefix-overlap lower bounds and must still re-verify. */
-  private def finishExactInter(ov: DataFrame, sizes: DataFrame,
-                               withSizes: Boolean): DataFrame = {
-    val base = ov
-      .join(sizes.select(col("doc_id").as("d1"), col("n_sh").as("n1")), "d1")
-      .join(sizes.select(col("doc_id").as("d2"), col("n_sh").as("n2")), "d2")
+  /** The family's one exact-Jaccard finish — the verify half of every
+    * filter-and-verify near-dup operator, whatever generated its candidates.
+    * `pairs` carries the two doc-id columns `a` and `b` and `inter`, the
+    * EXACT intersection count of their shingle sets; `sizes` is
+    * (doc_id, n_sh), normally [[shingleSizes]]. Joins `n1` (for `a`) then
+    * `n2` (for `b`), adds `jac = inter / (n1 + n2 − inter)` and keeps
+    * `jac >= JaccardThreshold`. Integer set arithmetic up to the one
+    * division, the same expression the DuckDB oracles spell. */
+  def jaccardAtLeast(pairs: DataFrame, a: String, b: String,
+                     sizes: DataFrame): DataFrame =
+    pairs
+      .join(sizes.select(col("doc_id").as(a), col("n_sh").as("n1")), a)
+      .join(sizes.select(col("doc_id").as(b), col("n_sh").as("n2")), b)
       .withColumn("jac", col("inter").cast("double") /
                          (col("n1") + col("n2") - col("inter")))
       .where(col("jac") >= JaccardThreshold)
-    if (withSizes)
-      base.select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
-                  round(col("jac"), 6).as("jac6"))
-    else base.select(col("d1"), col("d2"), round(col("jac"), 6).as("jac6"))
-  }
 
-  /** Exact-verify a candidate pair set: full intersection counts → Jaccard
-    * filter. Shared by the prefix-filtered exact operator and MinHash-LSH. */
-  private def verifyJaccard(cands: DataFrame, sh: DataFrame, sizes: DataFrame,
-                            withSizes: Boolean): DataFrame = {
-    // the shingle equality is part of the JOIN KEY (d2, sh), never a
-    // post-join filter — otherwise the intermediate is |pairs|*|A|*|B| and
-    // plan-dependent, not |matches| (observed 20x swings under AQE).
-    val base = cands
+  /** The admission verdict tail shared by ingest dedup and its streaming
+    * batch twin: one row per `ids` doc_id, `exact_dup` over `near_dup` over
+    * `new`, with the matching id (`exact_match`, else `near_match`, else
+    * −1). `exact` and `near` are keyed on doc_id. */
+  def admissionVerdicts(ids: DataFrame, exact: DataFrame,
+                        near: DataFrame): DataFrame =
+    ids.join(exact, Seq("doc_id"), "left")
+      .join(near, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        when(col("exact_match").isNotNull, "exact_dup")
+          .when(col("near_match").isNotNull, "near_dup")
+          .otherwise("new").as("verdict"),
+        coalesce(col("exact_match"), col("near_match"), lit(-1L)).as("match_id"))
+
+  /** Exact intersection counts (d1, d2, inter) of a candidate pair set whose
+    * own weights are not exact (prefix-filtered or LSH candidates): joins
+    * each pair back to both shingle sets. The shingle equality is part of
+    * the JOIN KEY (d2, sh), never a post-join filter — otherwise the
+    * intermediate is |pairs|*|A|*|B| and plan-dependent, not |matches|
+    * (observed 20x swings under AQE). Naive shared-shingle candidates need
+    * none of this: their groupBy(d1, d2) count already IS the intersection
+    * (round 20 — the join-backs re-read the shingle table twice to re-count
+    * it). */
+  private def exactInter(cands: DataFrame, sh: DataFrame): DataFrame =
+    cands.select("d1", "d2")
       .join(sh.select(col("doc_id").as("d1"), col("sh")), "d1")
       .join(sh.select(col("doc_id").as("d2"), col("sh")), Seq("d2", "sh"))
       .groupBy("d1", "d2")
       .agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col("doc_id").as("d1"), col("n_sh").as("n1")), "d1")
-      .join(sizes.select(col("doc_id").as("d2"), col("n_sh").as("n2")), "d2")
-      .withColumn("jac", col("inter").cast("double") /
-                         (col("n1") + col("n2") - col("inter")))
-      .where(col("jac") >= JaccardThreshold)
-    if (withSizes)
-      base.select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
-                  round(col("jac"), 6).as("jac6"))
-    else base.select(col("d1"), col("d2"), round(col("jac"), 6).as("jac6"))
-  }
+
+  /** The registered pair shape (d1, d2, inter, n1, n2, jac6) of a finished
+    * pair set. */
+  private def pairRows(finished: DataFrame): DataFrame =
+    finished.select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
+                    round(col("jac"), 6).as("jac6"))
 
   /** Exact near-duplicate pairs: word-5-gram Jaccard >= 0.8 (doc_id < doc_id2).
     * Declared exact semantics — integer set arithmetic end to end.
@@ -310,8 +307,7 @@ object Dedup {
     * partner asc), keep a pair if EITHER endpoint ranks it ≤ m (kNN-graph
     * semantics) ⇒ output ≤ 2·m·|docs| (DedupCapSpec pins subset/equality/
     * bound; BASELINE.md round-13 records the A/B). */
-  private def capPairs(weighted: DataFrame, m: Int,
-                       keepW: Boolean = false): DataFrame = {
+  private def capPairs(weighted: DataFrame, m: Int): DataFrame = {
     val w1 = org.apache.spark.sql.expressions.Window
       .partitionBy(col("d1")).orderBy(col("w").desc, col("d2"))
     val w2 = org.apache.spark.sql.expressions.Window
@@ -320,10 +316,8 @@ object Dedup {
       .withColumn("r1", row_number().over(w1))
       .withColumn("r2", row_number().over(w2))
       .where(col("r1") <= m || col("r2") <= m)
-    // keepW: on the naive path `w` is the exact intersection count — the
-    // caller finishes with [[finishExactInter]] instead of re-verifying
-    if (keepW) ranked.select(col("d1"), col("d2"), col("w").as("inter"))
-    else ranked.select("d1", "d2")
+    // `w` rides along: on the naive path it is the exact intersection count
+    ranked.select("d1", "d2", "w")
   }
 
   /** Size-adaptive switch: below this many (doc, shingle) rows the naive
@@ -332,9 +326,9 @@ object Dedup {
     * sf0.1 fixture — ~0.5M shingle rows — the naive join beats the PPJoin
     * path ~2×, while the prefix filter's candidate-volume savings only
     * amortize once the shingle self-join volume Σf² dominates those fixed
-    * passes). The prefix path re-verifies via [[verifyJaccard]]; the naive
-    * path finishes directly from its exact candidate counts
-    * ([[finishExactInter]], round 20) — identical output either way
+    * passes). The prefix path re-counts intersections ([[exactInter]]);
+    * the naive path's candidate counts already are them (round 20) — both
+    * finish through [[jaccardAtLeast]], identical output either way
     * (LlmSpec pins prefix == naive explicitly, at every scale). */
   val NeardupPrefixMinShingles = 2000000L
 
@@ -399,46 +393,40 @@ object Dedup {
         org.slf4j.LoggerFactory.getLogger(getClass).warn(msg) }
   }
 
-  val neardupPairs: Q = (s, d) => {
-    // shingling (regex split + 5-gram transform + distinct + digest) is the
-    // expensive narrow stage and feeds five plan branches — materialize once
+  /** The exact pair operator with a per-document candidate budget `cap`
+    * (0 = off, the declared exact semantics). Shingling (regex split +
+    * 5-gram transform + distinct + digest) is the expensive narrow stage and
+    * feeds every plan branch, so it is the cached frame; the count reads the
+    * just-materialized cache — one cheap short job, the price of choosing
+    * the right candidate plan for the corpus actually present. Naive-path
+    * pairs carry their exact intersection count out of the candidate
+    * aggregation and finish directly (round 20); prefix-path candidates
+    * carry prefix-overlap lower bounds and re-count exactly. */
+  private def neardupPairsAt(s: SparkSession, d: String, cap: Int): DataFrame = {
     val sh = cachedShingleHashes(s, d)
-    // the count reads the just-materialized cache — one cheap short job,
-    // the price of choosing the right plan for the corpus actually present
     val prefixPath = sh.count() >= NeardupPrefixMinShingles
-    val cap = graft.Confs.intConf(s, NeardupCapConf).getOrElse(0)
     // exact path on a big corpus: check the measured mega-clique boundary
     // BEFORE the verify join can exhaust executor disk (capped runs are
     // volume-bounded by construction and skip the diagnostic)
     if (cap == 0 && prefixPath) guardCandidateVolume(s, d, sh)
-    // Naive-path pairs carry their exact intersection count out of the
-    // candidate aggregation — finish directly (round 20); prefix-path
-    // candidates are prefix-overlap-bounded and re-verify exactly.
-    val sizes = shingleSizes(s, d)
-    if (cap > 0) {
+    val inter =
       if (prefixPath)
-        verifyJaccard(capPairs(weightedCands(sh, prefixPath), cap), sh, sizes, withSizes = true)
-      else
-        finishExactInter(capPairs(weightedCands(sh, prefixPath), cap, keepW = true),
-                         sizes, withSizes = true)
-    } else if (prefixPath) verifyJaccard(prefixCands(sh), sh, sizes, withSizes = true)
-    else finishExactInter(weightedCands(sh, prefixPath = false)
-                            .withColumnRenamed("w", "inter"),
-                          sizes, withSizes = true)
+        exactInter(if (cap > 0) capPairs(weightedCands(sh, prefixPath), cap)
+                   else prefixCands(sh), sh)
+      else {
+        val ov = weightedCands(sh, prefixPath = false)
+        (if (cap > 0) capPairs(ov, cap) else ov).withColumnRenamed("w", "inter")
+      }
+    pairRows(jaccardAtLeast(inter, "d1", "d2", shingleSizes(s, d)))
   }
+
+  val neardupPairs: Q = (s, d) =>
+    neardupPairsAt(s, d, graft.Confs.intConf(s, NeardupCapConf).getOrElse(0))
 
   /** [[neardupPairs]] with the per-document candidate budget forced to `m`
     * — the spec entry point (the operator itself reads [[NeardupCapConf]]). */
-  def neardupPairsCapped(s: SparkSession, d: String, m: Int): DataFrame = {
-    val sh = cachedShingleHashes(s, d)
-    val prefixPath = sh.count() >= NeardupPrefixMinShingles
-    if (prefixPath)
-      verifyJaccard(capPairs(weightedCands(sh, prefixPath), m), sh,
-                    shingleSizes(s, d), withSizes = true)
-    else
-      finishExactInter(capPairs(weightedCands(sh, prefixPath), m, keepW = true),
-                       shingleSizes(s, d), withSizes = true)
-  }
+  def neardupPairsCapped(s: SparkSession, d: String, m: Int): DataFrame =
+    neardupPairsAt(s, d, m)
 
   /** Registered budget default: each doc keeps its top-2 candidate partners
     * (pairs survive if EITHER endpoint ranks them). */
@@ -454,10 +442,10 @@ object Dedup {
     * cheaper weights at 100 TB); DedupCapSpec pins the two equal below the
     * threshold and capped ⊆ uncapped always. */
   val neardupCapped: Q = (s, d) => {
-    val sh = cachedShingleHashes(s, d)
-    finishExactInter(
-      capPairs(weightedCands(sh, prefixPath = false), NeardupCapDefaultM, keepW = true),
-      shingleSizes(s, d), withSizes = true)
+    val ov = capPairs(weightedCands(cachedShingleHashes(s, d), prefixPath = false),
+                      NeardupCapDefaultM)
+    pairRows(jaccardAtLeast(ov.withColumnRenamed("w", "inter"), "d1", "d2",
+                            shingleSizes(s, d)))
   }
 
   val neardupCappedSql: String =
@@ -492,15 +480,16 @@ object Dedup {
     * equivalence spec exercises it at every fixture scale. */
   def neardupPairsPrefix(s: SparkSession, d: String): DataFrame = {
     val sh = cachedShingleHashes(s, d)
-    verifyJaccard(prefixCands(sh), sh, shingleSizes(s, d), withSizes = true)
+    pairRows(jaccardAtLeast(exactInter(prefixCands(sh), sh), "d1", "d2",
+                            shingleSizes(s, d)))
   }
 
   /** Naive all-pairs exact formulation — the specification the prefix-filter
     * version must reproduce; kept for the equivalence test. */
   def neardupPairsAllPairs(s: SparkSession, d: String): DataFrame = {
     val sh = shingleHashes(s, d)
-    verifyJaccard(naiveCands(sh), sh,
-      sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh")), withSizes = true)
+    pairRows(jaccardAtLeast(exactInter(naiveCands(sh), sh), "d1", "d2",
+                            sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))))
   }
 
   val neardupPairsSql: String =
@@ -575,7 +564,8 @@ object Dedup {
     val candidates =
       if (cap > 0) capPairs(pairBands.groupBy("d1", "d2").agg(count(lit(1)).as("w")), cap)
       else pairBands.distinct()
-    verifyJaccard(candidates, sh, shingleSizes(s, d), withSizes = false)
+    jaccardAtLeast(exactInter(candidates, sh), "d1", "d2", shingleSizes(s, d))
+      .select(col("d1"), col("d2"), round(col("jac"), 6).as("jac6"))
   }
 
   val SimhashMaxHamming = 8
@@ -624,17 +614,6 @@ object Dedup {
     * n/128 grows linearly — the fixed-bucket disease). */
   def simhashBandMasks10: Seq[Long] = bandMasksFor(SimhashMaxHamming + 2)
 
-  /** MaxHamming+3 = 11 bands for the TRIPLE-KEY rung (round-12 verdict #2):
-    * <= 8 differing bits dirty at most 8 of the 11 bands, so at least THREE
-    * are clean and the pair agrees exactly on at least one of the
-    * C(11,3) = 165 band triples. A triple key carries ~17-18 bits (vs a
-    * pair's 12-14, a single band's 7), cutting per-table bucket collisions
-    * another ~2^4-2^5x for 165/45 ≈ 3.7x more explode rows — the next rung
-    * of the same collision-vs-explode trade, worth it once the pair-key
-    * scheme's Σ bucket² term dominates again (the residual 75.9x-on-64x the
-    * round-12 probe measured is exactly that term at ~320k docs). */
-  def simhashBandMasks11: Seq[Long] = bandMasksFor(SimhashMaxHamming + 3)
-
   /** SimHash near pairs at Hamming distance <= 8, via pigeonhole banding:
     * split the 64-bit signature into MaxHamming+1 = 9 non-empty bands — a
     * pair within distance 8 MUST agree exactly on at least one band, so
@@ -649,25 +628,6 @@ object Dedup {
     * quadratic reference). */
   val SimhashPairKeyMinDocs = 100000L
 
-  /** Triple-key (165-table) rung: NEVER auto-engaged — conf-only
-    * (`spark.graft.simhash.cleanBands=3`). Round 13 extrapolated a
-    * several-M-doc crossover from the collision-vs-volume terms and set
-    * 8M here; the round-14 k=512 probe (2.56M docs, same corpus for both
-    * schemes, sort-merge pinned) MEASURED pairs 171.6 s vs triples
-    * 1005.6 s — the triple deficit WIDENED from 3.3× at 64× (320k docs)
-    * to 5.9×, because both schemes' collision terms grow together while
-    * the 165/45 = 3.7× explode+join volume penalty never amortizes (the
-    * bigger exploded side also spills first). Full pair-key curve:
-    * 17.7 / 27.8 / 72.2 / 171.6 s at 64/128/256/512× — 2.4× per doubling
-    * at the top end, so even at 4×/doubling beyond, pairs stay ahead of
-    * a triple scheme paying the same growth on 3.7× the base. No measured
-    * regime where triples win → no auto threshold; the rung stays
-    * implemented, pinned lossless, and conf-selectable for corpora whose
-    * signature distribution (unlike this one's) makes 12-14-bit pair
-    * buckets degenerate. */
-  val SimhashTripleKeyMinDocs = Long.MaxValue
-  val SimhashCleanBandsConf = "spark.graft.simhash.cleanBands"
-
   /** One join-key struct per guaranteed-clean-band combination: with
     * `masks.length` bands and at most [[SimhashMaxHamming]] dirty bits,
     * any combination size c <= masks.length - MaxHamming is lossless by
@@ -680,26 +640,27 @@ object Dedup {
              col("simhash").bitwiseAND(lit(m)).as("band_bits"))
     }
 
-  /** Shared candidate machinery: band / band-pair / band-triple keyed
-    * self-join + exact bit_count verify. Every key scheme is LOSSLESS
-    * (pigeonhole over `cleanBands` = 1, 2, 3 guaranteed-clean bands of
-    * 9/10/11), so output is identical — only candidate volume differs. */
+  /** Shared candidate machinery: band / band-pair keyed self-join + exact
+    * bit_count verify. Both key schemes are LOSSLESS (pigeonhole over
+    * `cleanBands` = 1, 2 guaranteed-clean bands of 9/10), so output is
+    * identical — only candidate volume differs. A band-triple rung (11
+    * bands, 165 tables) lost to band pairs at every probe depth (3.3× at
+    * 64×, 5.9× at 512×; BASELINE.md) and is gone. */
   def simhashPairsAt(s: SparkSession, d: String, cleanBands: Int): DataFrame = {
     // cache: the 64-accumulator signature aggregation feeds both join sides
     // and all bands — computing it once matters more than anything downstream
     val sigs = simhashSignatures(s, d).transform(graft.Caching.cachedOnce)
     val keyStructs = cleanBands match {
-      case 1 => comboKeyStructs(simhashBandMasks, 1)    //  9 tables,  ~7-bit keys
-      case 2 => comboKeyStructs(simhashBandMasks10, 2)  //  45 tables, 12-14-bit keys
-      case 3 => comboKeyStructs(simhashBandMasks11, 3)  // 165 tables, ~17-18-bit keys
+      case 1 => comboKeyStructs(simhashBandMasks, 1)    //  9 tables, ~7-bit keys
+      case 2 => comboKeyStructs(simhashBandMasks10, 2)  // 45 tables, 12-14-bit keys
       case other => throw new IllegalArgumentException(
-        s"$SimhashCleanBandsConf must be 1, 2, or 3 (got $other)")
+        s"cleanBands must be 1 or 2 (got $other)")
     }
     val banded = sigs.select(col("doc_id"), col("simhash"),
         explode(array(keyStructs: _*)).as("bb"))
       .select(col("doc_id"), col("simhash"),
               col("bb.band").as("band"), col("bb.band_bits").as("band_bits"))
-    // The banded side is the corpus EXPLODED 45×/165× — size estimates on a
+    // The banded side is the corpus EXPLODED 45× — size estimates on a
     // Generate output are unreliable, and at the 64× probe AQE chose to
     // BROADCAST it (52.8M rows: OOM on an 8 GB heap, 191× wall on 32 GB vs
     // 56.9× with the broadcast suppressed — measured round 13). On the scale
@@ -725,15 +686,9 @@ object Dedup {
   val simhash: Q = (s, d) => {
     // size the key scheme from the (memoized) parquet metadata count — the
     // fixture floor keeps every test corpus on the historical single-band
-    // plan, the probe regimes climb the pair- then triple-key rungs
+    // plan, the probe regimes climb to the pair-key rung
     val n = Tables.countOf(s, d, "documents")
-    val cleanBands = graft.Confs.intConf(s, SimhashCleanBandsConf)
-      .getOrElse {
-        if (n >= SimhashTripleKeyMinDocs) 3
-        else if (n >= SimhashPairKeyMinDocs) 2
-        else 1
-      }
-    simhashPairsAt(s, d, cleanBands)
+    simhashPairsAt(s, d, if (n >= SimhashPairKeyMinDocs) 2 else 1)
   }
 
   /** Quadratic reference formulation for the banding equivalence test. */

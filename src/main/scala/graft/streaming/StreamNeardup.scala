@@ -472,8 +472,8 @@ object StreamNeardup {
     * banding exactly like `llm_neardup_minhash`). */
   def admitNeardupBatch(s: SparkSession, d: String,
                         horizonDocs: Long = HorizonDocsDefault): DataFrame = {
-    val base = graft.llm.Dedup.contentShingleArrays(s, d)
-    val hashed = base.select(col("doc_id"), col("h"))
+    import graft.llm.Dedup
+    val hashed = Dedup.shingleHashArrays(s, d).select(col("doc_id"), col("h"))
     val exact = hashed.as("x")
       .join(hashed.as("y"), col("y.h") === col("x.h") &&
         col("y.doc_id") < col("x.doc_id") &&
@@ -484,29 +484,17 @@ object StreamNeardup {
     // ~45-byte 5-gram strings — the same swap the rest of the near-dup family
     // made in round 18 (see [[graft.llm.Dedup.shingleHashes]] for the
     // collision bound); the string-exact oracle re-proves equality each round.
-    val sh = base.select(col("doc_id"), explode(col("shs")).as("sh"))
-    val sizes = base.where(size(col("shs")) > 0)
-      .select(col("doc_id"), size(col("shs")).cast("bigint").as("n_sh"))
-    val near = sh.as("x")
+    val sh = Dedup.cachedShingleHashes(s, d)
+    val inter = sh.as("x")
       .join(sh.as("y"), col("y.sh") === col("x.sh") &&
         col("y.doc_id") < col("x.doc_id") &&
         col("x.doc_id") - col("y.doc_id") <= horizonDocs)
       .groupBy(col("x.doc_id").as("doc_id"), col("y.doc_id").as("cand_id"))
       .agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col("doc_id"), col("n_sh").as("n1")), "doc_id")
-      .join(sizes.select(col("doc_id").as("cand_id"), col("n_sh").as("n2")), "cand_id")
-      .where(col("inter").cast("double") /
-             (col("n1") + col("n2") - col("inter")) >= graft.llm.Dedup.JaccardThreshold)
+    val near = Dedup.jaccardAtLeast(inter, "doc_id", "cand_id", Dedup.shingleSizes(s, d))
       .groupBy("doc_id")
       .agg(min(col("cand_id")).as("near_match"))
-    hashed.select("doc_id")
-      .join(exact, Seq("doc_id"), "left")
-      .join(near, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("exact_match").isNotNull, "exact_dup")
-          .when(col("near_match").isNotNull, "near_dup")
-          .otherwise("new").as("verdict"),
-        coalesce(col("exact_match"), col("near_match"), lit(-1L)).as("match_id"))
+    Dedup.admissionVerdicts(hashed.select("doc_id"), exact, near)
   }
 
   val streamNeardupSql: String =

@@ -37,6 +37,21 @@ class CurationSpec extends SparkSpec {
     assert(star == prop)
   }
 
+  test("connected components on a 100-node path: propagation throws, star labels every node 0") {
+    // diameter 99: min-label propagation moves the minimum one hop per round
+    // and cannot finish in MaxCcRounds; it must fail, not return the labels
+    // it holds at the limit. The alternating star needs O(log n) rounds.
+    import spark.implicits._
+    val path = (0L until 99L).map(i => (i, i + 1)).toDF("d1", "d2")
+    val e = intercept[IllegalStateException](Curation.propagationClusters(path))
+    assert(e.getMessage.contains("llm_dedup_clusters_star"), e.getMessage)
+    val rows = Curation.starClusters(path).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
+    assert(rows.map(_._1).sorted.toSeq == (0L until 100L))
+    assert(rows.forall { case (id, lbl, n, surv) =>
+      lbl == 0L && n == 100L && surv == (if (id == 0L) 1 else 0) })
+  }
+
   test("corpus shuffle is a deterministic partition into dense shards") {
     val a = Curation.corpusShuffle(spark, sfDir).collect()
     val b = Curation.corpusShuffle(spark, sfDir).collect()

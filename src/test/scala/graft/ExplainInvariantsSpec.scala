@@ -328,6 +328,22 @@ class ExplainInvariantsSpec extends SparkSpec {
     assert(textScans.size == 1, s"text ReadSchema count ${textScans.size}")
   }
 
+  test("the near-dup family builds its shingle array once: no filter pushed below the scatter") {
+    // A filter on the computed `shs` inside the cached frame is pushed below
+    // the scatter exchange and re-runs the whole shingle pipeline on the
+    // narrow pre-scatter scan (measured 0.9 → 8.4 s solo). Count the shingle
+    // lambda (the one ArrayTransform of these plans) across each query's
+    // plan and its cached builds.
+    import org.apache.spark.sql.catalyst.expressions.ArrayTransform
+    for (name <- Seq("llm_neardup_pairs", "llm_decontaminate", "llm_ingest_dedup",
+                     "stream_neardup")) {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val transforms = withBuilds(df.queryExecution.executedPlan)
+        .flatMap(_.expressions).flatMap(_.collect { case t: ArrayTransform => t })
+      assert(transforms.size == 1, s"$name: ${transforms.size} shingle transforms")
+    }
+  }
+
   test("bpe encode deploys the merged vocabulary as a broadcast join") {
     val p = plan(graft.llm.TextAnalysis.bpeEncode(spark, sfDir))
     assert(p.contains("BroadcastHashJoin"),

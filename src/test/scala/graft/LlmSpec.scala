@@ -115,20 +115,16 @@ class LlmSpec extends SparkSpec {
     val naive = Dedup.simhashAllPairs(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(banded == naive)
-    // the scale key schemes are lossless too: <= 8 dirty bits leave >= 2 of
-    // 10 bands (pair keys) / >= 3 of 11 bands (triple keys) clean, so some
-    // pair/triple key matches exactly — identical output, only candidate
-    // volume differs across the three rungs
-    for (cleanBands <- Seq(2, 3)) {
-      val combo = Dedup.simhashPairsAt(spark, sfDir, cleanBands)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(combo == naive, s"cleanBands=$cleanBands diverged from all-pairs")
-    }
+    // the scale key scheme is lossless too: <= 8 dirty bits leave >= 2 of
+    // 10 bands clean, so some pair key matches exactly — identical output,
+    // only candidate volume differs between the two rungs
+    val combo = Dedup.simhashPairsAt(spark, sfDir, 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(combo == naive, "cleanBands=2 diverged from all-pairs")
   }
 
   test("simhash band masks: 9 non-empty disjoint bands covering all 64 bits") {
-    for (masks <- Seq(Dedup.simhashBandMasks, Dedup.simhashBandMasks10,
-                      Dedup.simhashBandMasks11)) {
+    for (masks <- Seq(Dedup.simhashBandMasks, Dedup.simhashBandMasks10)) {
       // no degenerate band: a zero mask would turn its equi-join into the
       // all-pairs cross join the banding exists to avoid (round-1 advice)
       masks.foreach(m => assert(m != 0L, s"zero mask in $masks"))
@@ -140,7 +136,6 @@ class LlmSpec extends SparkSpec {
     }
     assert(Dedup.simhashBandMasks.length == Dedup.SimhashMaxHamming + 1)
     assert(Dedup.simhashBandMasks10.length == Dedup.SimhashMaxHamming + 2)
-    assert(Dedup.simhashBandMasks11.length == Dedup.SimhashMaxHamming + 3)
   }
 
   test("simhash: duplicate documents get identical signatures (hamming 0)") {
