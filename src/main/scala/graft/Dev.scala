@@ -13,8 +13,8 @@ import graft.streaming.{AsofStreamRow, EpochAsof, StreamNeardup, StreamSemdedup,
   * {{{
   * scale   [k] [name,...]             t(k×)/t(1×) per registered query, spill, peak task memory
   * recall  [k,...] [name,...]         ANN recall_at_k over the full k× query set (audit ON)
-  * ivf     <dir>... | --k K [--time]  IVF locality advisory per corpus; --time: advise vs apply
-  * stream  asof [k] [config,...] [widthSec]
+  * ivf     <dir>... | --k K [--time]  IVF sampled probe agreement per corpus; --time: derived np vs np=2
+  * stream  asof [k] [config,...] [widthSec] [hybridMinGroup]
   * stream  neardup [k]
   * stream  neardup-hot [c] [cap] [off,cap]
   * stream  semdedup [k] [exact,default]
@@ -33,7 +33,8 @@ import graft.streaming.{AsofStreamRow, EpochAsof, StreamNeardup, StreamSemdedup,
   * SPARK_GRAFT_STREAM_WM_DELAY (asof). The session is [[Sessions.builder]]'s,
   * so SPARK_GRAFT_CPUS and SPARK_GRAFT_EXTRA_CONF apply (e.g.
   * `spark.graft.neardup.maxPairsPerDoc=m` for the mega-cluster containment
-  * run). */
+  * run). `scale` times each query at its shipped derived sizing (vector
+  * block counts, IVF stride and probes, LSH planes). */
 object Dev {
   def main(args: Array[String]): Unit = {
     val spark = Sessions.builder().getOrCreate()
@@ -178,8 +179,7 @@ object Dev {
         case "llm_dedup_clusters_star" => Some(graft.llm.Curation.lastStarRounds)
         case _ => None
       }
-      def timeAt(dir: String, blocks: Int): Double = {
-        spark.conf.set("spark.graft.vector.blocks", blocks.toString)
+      def timeAt(dir: String): Double = {
         try noop(fn(spark, dir)) catch { case _: Throwable => () } // warmup
         reclaimShuffles()
         ctx.tally.reset() // tally the timed passes only
@@ -187,9 +187,9 @@ object Dev {
         reclaimShuffles()
         t
       }
-      val t1 = timeAt(oneDir, 8)
+      val t1 = timeAt(oneDir)
       val rounds1 = ccRounds()
-      val tk = timeAt(kDir, 8 * k)
+      val tk = timeAt(kDir)
       // row printed immediately: a later crash (an OOM on a heavier query)
       // must not lose the measurements already taken
       println(f"$name%-22s $t1%8.3f $tk%8.3f ${tk / t1}%7.2f  ${k}x ${ctx.tally.memReport}")
@@ -252,13 +252,15 @@ object Dev {
     }
   }
 
-  // ---- ivf: the IVF locality advisory on real corpora --------------------
+  // ---- ivf: IVF cluster locality on real corpora --------------------------
 
-  /** Prints the derived probe count and the advisory outcome per corpus dir
-    * (the synthetic fire/silent regimes are pinned in VectorSpec). `--k K`
-    * builds or reuses the k× corpus first and checks its dir; `--time` adds
-    * the apply-mode end-to-end measurement: the registered probe timed
-    * under advise (derived np) vs apply (np=2 when sampled agreement is 1.0). */
+  /** Prints the derived probe count and the sampled probe agreement per
+    * corpus dir: 1.0 means np=[[graft.llm.AnnIvf.NumProbe]] reproduced the
+    * derived-np top-k on every sampled query (a cluster-local corpus; the
+    * synthetic local/structureless regimes are pinned in VectorSpec).
+    * `--k K` builds or reuses the k× corpus first and checks its dir;
+    * `--time` adds the end-to-end probe timed at the derived np and at
+    * np=NumProbe. */
   private def ivf(ctx: Ctx, args: Seq[String]): Unit = {
     import graft.llm.AnnIvf
     val spark = ctx.spark
@@ -267,27 +269,29 @@ object Dev {
       case -1 => args.filterNot(_ == "--time")
       case i => Seq(ctx.corpus(args(i + 1).toInt)._2)
     }
-    sys.props("graft.ann.recall") = "0"
+    val sampleN = 24
     dirs.foreach { d =>
       val stride = AnnIvf.strideFor(spark, d)
       val np = AnnIvf.numProbeFor(spark, d, stride)
       val n = Tables.countOf(spark, d, "embeddings")
+      val cells = AnnIvf.cellAssignments(spark, d).transform(Caching.cachedOnce)
       val t0 = System.nanoTime()
-      val res = AnnIvf.adviseLocality(spark, d)
-      println(f"[ivf] dir=$d n=$n stride=$stride derivedNp=$np wall=${secs(t0)}%.1fs -> " +
-        res.fold("SILENT (derived np earning its cost)")(m => s"FIRES: $m"))
+      val agreement = AnnIvf.sampledProbeAgreement(spark, d, stride, cells, np, 5, sampleN)
+      println(f"[ivf] dir=$d n=$n stride=$stride derivedNp=$np " +
+        f"agreement(np=${AnnIvf.NumProbe} vs $np, $sampleN queries)=$agreement%.3f " +
+        f"wall=${secs(t0)}%.1fs")
       if (time) {
-        def timed(mode: Seq[(String, String)]): Double =
-          Confs.withConf(spark, mode: _*) {
-            val t = System.nanoTime(); noop(AnnIvf.ivfTopk(spark, d)); secs(t)
-          }
-        val apply = Seq(AnnIvf.AutoProbeConf -> "apply")
-        timed(Nil) // warmup (JIT + page cache + advisory memo)
-        val adv = math.min(timed(Nil), timed(Nil))
-        val app = math.min(timed(apply), timed(apply))
-        val effNp = Confs.withConf(spark, apply: _*)(AnnIvf.effectiveNumProbe(spark, d, stride, 5))
-        println(f"[ivf] timed (best-of-2) advise=$adv%.2fs apply=$app%.2fs " +
-          f"applyNp=$effNp (derived $np)")
+        def timed(at: Int): Double = {
+          val t = System.nanoTime()
+          noop(AnnIvf.probeTopk(spark, d, stride, cells,
+            AnnIvf.probeSet(spark, d, cells), at, 5))
+          secs(t)
+        }
+        timed(np) // warmup (JIT + page cache + index cache)
+        val derived = math.min(timed(np), timed(np))
+        val floor = math.min(timed(AnnIvf.NumProbe), timed(AnnIvf.NumProbe))
+        println(f"[ivf] timed (best-of-2) np=$np: $derived%.2fs " +
+          f"np=${AnnIvf.NumProbe}: $floor%.2fs")
       }
     }
   }
@@ -324,7 +328,8 @@ object Dev {
     def arg(i: Int, default: Int): Int = args.lift(i).map(_.toInt).getOrElse(default)
     val slices = ctx.int("SPARK_GRAFT_STREAM_SLICES", if (args.headOption.contains("asof")) 16 else 8)
     val probe = args.headOption match {
-      case Some("asof") => asofProbe(ctx, arg(1, 64), args.lift(2).map(csv), arg(3, 3600), slices)
+      case Some("asof") => asofProbe(ctx, arg(1, 64), args.lift(2).map(csv), arg(3, 3600),
+        arg(4, 0), slices)
       case Some("neardup") => neardupProbe(ctx, arg(1, 64), slices)
       case Some("neardup-hot") => hotProbe(ctx, arg(1, 2000), arg(2, 16),
         args.lift(3).map(csv).getOrElse(Seq("off", "cap")), slices)
@@ -503,7 +508,7 @@ object Dev {
       Seq(col("embedding").cast("array<float>").as("embedding")), slices)
     val horizon = StreamSemdedup.HorizonVecsDefault
     val cb = StreamSemdedup.codebook(ctx.spark, dir)
-    val npDefault = StreamSemdedup.numProbeFor(ctx.spark, cb.length)
+    val npDefault = graft.llm.AnnIvf.probesFor(cb.length)
     println(s"[stream semdedup] codebook cells=${cb.length} derived np=$npDefault")
     Probe("semdedup", dir, () => StreamSemdedup.semdedupBatch(ctx.spark, dir, horizon),
       modes.map { m =>
@@ -527,9 +532,11 @@ object Dev {
     * dims, the regime where the epoch escape's win shrinks;
     * SPARK_GRAFT_STREAM_WM_DELAY (default 60 seconds) is the buffered
     * spellings' watermark delay — longer than the corpus span, it is the
-    * catch-up regime. */
+    * catch-up regime. `hybridMinGroup` > 0 routes the epoch spellings'
+    * big per-batch unresolved groups through the streaming hybrid
+    * ([[EpochAsof.latestPurchaseAsofEpoch]]'s `streamJoinMinGroup`). */
   private def asofProbe(ctx: Ctx, k: Int, configs: Option[Seq[String]], widthSec: Int,
-                        slices: Int): Probe = {
+                        hybridMinGroup: Int, slices: Int): Probe = {
     val spark = ctx.spark
     import spark.implicits._
     val sparseDims = ctx.env.get("SPARK_GRAFT_STREAM_SPARSEDIMS").map(_.toLong).getOrElse(0L)
@@ -556,11 +563,11 @@ object Dev {
     val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
       "state_single" -> (src => Streams.latestPurchaseAsof(rowsOf(src))),
       "state_epoch" -> (src => EpochAsof.latestPurchaseAsofEpoch(rowsOf(src), widthSec,
-        streaming = true)),
+        streaming = true, streamJoinMinGroup = hybridMinGroup)),
       "buf_single" -> (src => Streams.latestPurchaseAsofBuffered(
         rowsOf(src).withWatermark("ts", wmDelay), streaming = true)),
       "buf_epoch" -> (src => EpochAsof.latestPurchaseAsofBufferedEpoch(
-        rowsOf(src).withWatermark("ts", wmDelay), widthSec)))
+        rowsOf(src).withWatermark("ts", wmDelay), widthSec, hybridMinGroup)))
     val picked = configs.fold(ops)(cs => cs.map(c => c -> ops.toMap.getOrElse(c,
       sys.error(s"unknown asof config $c: expected ${ops.map(_._1).mkString(",")}"))))
     Probe("asof", dir,

@@ -8,8 +8,9 @@ object Verify {
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
     // SPARK_GRAFT_EXTRA_CONF (applied by the factory) lets conf-selected
-    // variants (e.g. the spark.graft.asof.epochKey two-level as-of) run
-    // through the exact verify/compare path. The correctness gate runs with it unset.
+    // variants (e.g. a spark.graft.neardup.streamBandCap of 0, the exact
+    // stream_neardup) run through the exact verify/compare path. The
+    // correctness gate runs with it unset.
     val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -26,48 +26,10 @@ import graft.Tables
 object AnnIvf {
   val CentroidStride = 32
   val NumProbe = 2
-  val NumProbeConf = "spark.graft.ivf.numProbe"
 
   /** The derived default's probed-cell ratio: [[NumProbe]] probes of the
     * ~44-cell sf0.1 fixture codebook ≈ 1/22 of the cells. */
   val ProbeCellDivisor = 22L
-
-  /** Locality advisory knobs (round 17 — round-16 open edge (b) made
-    * actionable WITHOUT changing the default): the scale-derived probe
-    * count holds recall on structureless corpora but pays a measured 3.0×
-    * probe wall (11.96 vs 3.96 s at the 64× corpus, BASELINE.md round-16)
-    * even where cluster locality would let np=2 keep recall 1.0. A
-    * heuristic default that silently switches probe cost on a sampled
-    * statistic was judged worse than a documented knob, so the regime
-    * detection is an ADVISORY: a deterministic md5-selected query sample is
-    * probed at np=[[NumProbe]] AND at the derived np, and when the two
-    * top-k lists agree at ≥ [[LocalityAgreeThreshold]] — the extra probes
-    * found nothing the first two cells didn't — a log warning names the
-    * `spark.graft.ivf.numProbe=2` escape. Runs only when the derived np ≥
-    * [[LocalityMinNp]] (the fixtures derive 2-3 → zero cost there), never
-    * when the user set the conf explicitly (their decision stands), and
-    * costs two sample-sized probes ≈ sampleN/|Q| of the main query.
-    * `spark.graft.ivf.localitySample` sizes the sample (0 disables). */
-  val LocalitySampleConf = "spark.graft.ivf.localitySample"
-  val LocalitySampleDefault = 24
-  val LocalityMinNp = 4
-  val LocalityAgreeThreshold = 0.95
-
-  /** Pure decision for the locality advisory — asserted in VectorSpec.
-    * Some(advisory) when the sampled agreement says the derived probe count
-    * is paying for nothing; None inside the structureless regime the
-    * derived default exists for. */
-  def localityAdvisory(agreement: Double, derivedNp: Int, sampleN: Int): Option[String] =
-    if (derivedNp < LocalityMinNp || sampleN <= 0 ||
-        agreement < LocalityAgreeThreshold) None
-    else Some(
-      f"IVF locality advisory: on a deterministic $sampleN-query sample, " +
-      f"np=$NumProbe reproduces the derived np=$derivedNp top-k at " +
-      f"agreement=$agreement%.3f (>= $LocalityAgreeThreshold) — the corpus " +
-      "is cluster-local and the scale-derived probe count is paying its " +
-      "measured ~3x probe cost (64x corpus, BASELINE.md round-16) for " +
-      s"little recall. Consider $NumProbeConf=$NumProbe for this corpus; " +
-      "the scale-safe derived default is unchanged.")
 
   /** Scale-aware default probe count (round 16 — the round-15 verdict's
     * item 2): hold the probed-cell FRACTION roughly at the fixture
@@ -83,17 +45,18 @@ object AnnIvf {
     * the 64×/128×/256× probe corpora derive 17/23/33 (recall 0.39/0.43/0.47,
     * RISING where the fixed default decayed — BASELINE.md round-16 table). Per-query probe cost becomes np·stride ≈ n/22
     * — deliberately the recall end of the recall/throughput trade for the
-    * regime where no sublinear probe can hold recall (no locality exists);
-    * `spark.graft.ivf.numProbe` still overrides in both directions, and the
-    * derived default is clamped to the cell count. */
-  def numProbeFor(s: SparkSession, d: String, stride: Long): Int = {
-    val cells = math.max(1L,
-      (Tables.countOf(s, d, "embeddings") + stride - 1) / stride)
-    val derived = math.max(NumProbe.toLong,
-      (cells + ProbeCellDivisor - 1) / ProbeCellDivisor)
-    math.max(1L, math.min(cells,
-      graft.Confs.intConf(s, NumProbeConf).map(_.toLong)
-        .getOrElse(derived))).toInt
+    * regime where no sublinear probe can hold recall (no locality exists).
+    * A cluster-local corpus keeps its recall at np=[[NumProbe]]; that is
+    * measured by [[sampledProbeAgreement]] (`graft.Dev ivf`), not decided
+    * here. The derived default is clamped to the cell count. */
+  def numProbeFor(s: SparkSession, d: String, stride: Long): Int =
+    probesFor((Tables.countOf(s, d, "embeddings") + stride - 1) / stride)
+
+  /** [[numProbeFor]]'s rule for a `cells`-cell codebook — also the streaming
+    * semdedup's probe width over its collected codebook. */
+  def probesFor(cells: Long): Int = {
+    val c = math.max(1L, cells)
+    math.min(c, math.max(NumProbe.toLong, (c + ProbeCellDivisor - 1) / ProbeCellDivisor)).toInt
   }
 
   import graft.plans.VectorFunctions.dot
@@ -111,12 +74,11 @@ object AnnIvf {
     * assignment materializes n·n/32 ranking rows — 2 billion at 256k
     * vectors — and OOMs the executors. Floor = [[CentroidStride]] keeps the
     * small fixtures on their historical codebook (√n < 32 up to ~1k
-    * vectors); `spark.graft.ivf.stride` overrides for tuning. */
-  def strideFor(s: SparkSession, d: String): Long =
-    graft.Confs.longConf(s, "spark.graft.ivf.stride").getOrElse {
-      val n = Tables.countOf(s, d, "embeddings") // memoized parquet metadata count
-      math.max(CentroidStride.toLong, math.round(math.sqrt(n.toDouble)))
-    }
+    * vectors). */
+  def strideFor(s: SparkSession, d: String): Long = {
+    val n = Tables.countOf(s, d, "embeddings") // parquet footer row counts
+    math.max(CentroidStride.toLong, math.round(math.sqrt(n.toDouble)))
+  }
 
   /** The deterministic coarse-quantizer codebook (every stride-th vec_id —
     * seedless, so the index is reproducible without storing state; ≈ √n
@@ -176,10 +138,11 @@ object AnnIvf {
               col("cent_id").as("cell"))
   }
 
-  /** The probe-and-rank stage against a prepared (q_id, qv, qn) query set —
-    * shared by the registered query and the locality-advisory sample (which
-    * runs it twice at different np on a 24-row sample). */
-  private def probeTopk(s: SparkSession, d: String, stride: Long,
+  /** The probe-and-rank stage against a prepared (q_id, qv, qn) query set
+    * at `np` probed cells — shared by the registered query (at
+    * [[numProbeFor]]), [[sampledProbeAgreement]] (twice, at different np,
+    * on a query sample) and the specs and `graft.Dev ivf`, which vary np. */
+  private[graft] def probeTopk(s: SparkSession, d: String, stride: Long,
                         cells: DataFrame, probes: DataFrame,
                         np: Int, k: Int): DataFrame = {
     val probed = nearestCells(
@@ -205,18 +168,20 @@ object AnnIvf {
 
   /** The (q_id, qv, qn) query set: label=0 vectors, reusing the index's
     * precomputed norms. */
-  private def probeSet(s: SparkSession, d: String, cells: DataFrame): DataFrame =
+  private[graft] def probeSet(s: SparkSession, d: String, cells: DataFrame): DataFrame =
     Tables.embeddings(s, d).where(col("label") === 0)
       .select(col("vec_id"))
       .join(cells, "vec_id") // reuse the index's vectors+norms for queries
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
               col("nrm").as("qn"))
 
-  /** Measured half of the locality advisory: probe a deterministic
-    * md5-ordered sample of the query set at np=[[NumProbe]] and at the
-    * derived np, and return |topk_low ∩ topk_high| / |topk_high| — 1.0
-    * means the extra probes changed nothing. Deterministic (md5 order with
-    * a q_id tiebreak, seedless codebook). */
+  /** Cluster-locality measurement: probe a deterministic md5-ordered
+    * sample of the query set at np=[[NumProbe]] and at the derived np, and
+    * return |topk_low ∩ topk_high| / |topk_high| — 1.0 means the extra
+    * probes changed nothing (a cluster-local corpus, where np=[[NumProbe]]
+    * would keep recall at a fraction of the probe cost). Deterministic (md5
+    * order with a q_id tiebreak, seedless codebook). Runs Spark jobs, so
+    * the registered query never calls it; `graft.Dev ivf` prints it. */
   def sampledProbeAgreement(s: SparkSession, d: String, stride: Long,
                             cells: DataFrame, derivedNp: Int, k: Int,
                             sampleN: Int): Double = {
@@ -232,127 +197,13 @@ object AnnIvf {
     else lo.intersect(hi).count().toDouble / total
   }
 
-  /** Once-per-JVM memo of measured sample agreements, keyed by everything the
-    * measurement depends on — (dir, resolved stride, derived np, sample
-    * size, k). The stride is in the key (round-17 ADVICE) because it
-    * determines the CODEBOOK: a session changing `spark.graft.ivf.stride`
-    * can land on the same derived np with a different cell structure, and
-    * a verdict measured under the old codebook must not be reused. Round-17
-    * review: without it, EVERY ivfTopk invocation on an advisory-regime
-    * corpus re-paid the two sampled probe jobs at DataFrame-CONSTRUCTION
-    * time and re-logged the warning — a per-pass tax on exactly the probe
-    * runs (ScaleProbe drops the session cache between passes) the advisory
-    * exists to inform. Unlike [[TextAnalysis]]'s vocabFits memo, the key
-    * ALSO carries [[corpusFingerprint]] (round-19): once apply-mode made
-    * this a recall decision rather than a log line, in-place corpus
-    * rewrites at the same path had to invalidate the entry. Compute runs
-    * OUTSIDE any map bin lock (putIfAbsent keeps the first completed
-    * answer on a race). */
-  private val advisedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Int, Int, Int, Int), java.lang.Double]()
-
-  /** Cheap content fingerprint of the corpus the memo'd agreement was
-    * measured on: a hash of the embeddings parquet directory's file listing
-    * (name, size, mtime). Round-19 (r18 ADVICE): with `autoProbe=apply` the
-    * memo became a plan/recall DECISION, and the (dir, stride, np, sampleN,
-    * k) key does not see a corpus rewritten IN PLACE at the same path (e.g.
-    * scale-probe scratch reuse) — a stale agreement=1.0 could silently keep
-    * np=[[NumProbe]] on data it was never measured against. One local
-    * listing per memo lookup; any rewrite changes some part-file's
-    * (name, size, mtime) and so invalidates the entry. Non-local or missing
-    * paths hash to a constant (those corpora keep the documented
-    * immutable-within-a-JVM assumption). */
-  private def corpusFingerprint(d: String): Int = {
-    val dir = new java.io.File(d, "embeddings.parquet")
-    val files = dir.listFiles()
-    if (files == null) 0
-    else scala.util.hashing.MurmurHash3.orderedHash(
-      files.sortBy(_.getName).iterator
-        .map(f => (f.getName, f.length(), f.lastModified())).toSeq)
-  }
-
-  /** The gated, memoized sampled agreement behind both the advisory and
-    * apply-mode. None — without spending the sample probes — when the user
-    * set [[NumProbeConf]] explicitly (their decision stands; this is also
-    * what gives the explicit conf precedence over `autoProbe=apply`), when
-    * the derived np is below [[LocalityMinNp]] (nothing worth escaping —
-    * keeps the sf fixtures and the bench at zero added cost), or when
-    * `spark.graft.ivf.localitySample` is 0. */
-  private def sampledAgreement(s: SparkSession, d: String, k: Int): Option[Double] = {
-    val stride = strideFor(s, d)
-    val np = numProbeFor(s, d, stride)
-    val sampleN = graft.Confs.intConf(s, LocalitySampleConf)
-      .getOrElse(LocalitySampleDefault)
-    if (graft.Confs.intConf(s, NumProbeConf).isDefined ||
-        np < LocalityMinNp || sampleN <= 0) None
-    else {
-      val key = (d, stride, np, sampleN, k, corpusFingerprint(d))
-      val cached = advisedMemo.get(key)
-      Some(
-        if (cached != null) cached.doubleValue()
-        else {
-          val cells = cellAssignmentsAt(s, d, stride)
-            .transform(graft.Caching.cachedOnce)
-          val computed =
-            sampledProbeAgreement(s, d, stride, cells, np, k, sampleN)
-          val prev = advisedMemo.putIfAbsent(key, computed)
-          // warn once per fresh verdict — repeated ivfTopk calls (bench
-          // passes) must not re-spam the log
-          if (prev == null) {
-            localityAdvisory(computed, np, sampleN).foreach(
-              org.slf4j.LoggerFactory.getLogger(getClass).warn(_))
-            computed
-          } else prev.doubleValue()
-        })
-    }
-  }
-
-  /** Run the sampled locality probe for this corpus and return the advisory
-    * (None = silent). Gating — explicit-conf precedence, np floor, sample
-    * off — is [[sampledAgreement]]'s. */
-  def adviseLocality(s: SparkSession, d: String, k: Int = 5): Option[String] = {
-    val np = numProbeFor(s, d, strideFor(s, d))
-    val sampleN = graft.Confs.intConf(s, LocalitySampleConf)
-      .getOrElse(LocalitySampleDefault)
-    sampledAgreement(s, d, k).flatMap(localityAdvisory(_, np, sampleN))
-  }
-
-  /** Apply-mode (round-18, the advisory's last mile — round-17 verdict item
-    * 7): with `spark.graft.ivf.autoProbe=apply`, a corpus whose sampled
-    * agreement is EXACTLY 1.0 — np=[[NumProbe]] reproduced the derived-np
-    * top-k on every sampled query, the strongest locality signal the probe
-    * can emit — probes at np=[[NumProbe]] instead of the derived np,
-    * pocketing the measured ~3× probe cost (BASELINE.md round-16). Anything
-    * below 1.0 keeps the derived np: a 0.96 agreement still means the extra
-    * probes found real neighbors for some queries, and `advise` names that
-    * trade rather than taking it on the user's behalf. Default stays
-    * `advise` — a silent cost/recall switch driven by a sampled statistic
-    * was judged worse than a documented knob (round-17); `apply` is the
-    * documented opt-in form of that knob. An explicit [[NumProbeConf]]
-    * always wins: [[sampledAgreement]] returns None under it, so apply
-    * never engages. */
-  val AutoProbeConf = "spark.graft.ivf.autoProbe"
-  val ApplyAgreement = 1.0
-
-  /** The probe count [[ivfTopk]] actually uses: the derived/explicit np,
-    * except under engaged apply-mode where it collapses to [[NumProbe]]. */
-  def effectiveNumProbe(s: SparkSession, d: String, stride: Long, k: Int): Int = {
-    val np = numProbeFor(s, d, stride)
-    if (np > NumProbe &&
-        s.conf.getOption(AutoProbeConf).contains("apply") &&
-        sampledAgreement(s, d, k).exists(_ >= ApplyAgreement)) NumProbe
-    else np
-  }
-
   /** IVF approximate top-k for the label=0 query set (same output shape as
     * the exact operator and [[AnnLsh.annTopk]]). */
   def ivfTopk(s: SparkSession, d: String, k: Int = 5): DataFrame = {
     graft.plans.VectorFunctions.register(s)
     val stride = strideFor(s, d) // one sizing count serves build AND probe
     val cells = cellAssignmentsAt(s, d, stride).transform(graft.Caching.cachedOnce) // index feeds probe + candidates
-    adviseLocality(s, d, k) // advisory (memoized; logs once); plan change only under autoProbe=apply
-    probeTopk(s, d, stride, cells, probeSet(s, d, cells),
-              effectiveNumProbe(s, d, stride, k), k)
+    probeTopk(s, d, stride, cells, probeSet(s, d, cells), numProbeFor(s, d, stride), k)
       .orderBy("q_id", "rk")
   }
 

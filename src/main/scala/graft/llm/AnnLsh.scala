@@ -10,7 +10,7 @@ import graft.Tables
   * Signature: `NumPlanes` pseudo-random ±1 hyperplanes (components derived
   * from a fixed LCG — deterministic, seedless at runtime); each vector hashes
   * to a bucket = the sign-bit string of its projections. Query probes its own
-  * bucket plus [[multiProbeFor]] Hamming-1 neighbors chosen QUERY-DIRECTED —
+  * bucket plus [[MultiProbe]] Hamming-1 neighbors chosen QUERY-DIRECTED —
   * the flipped planes are those with the smallest |projection| (the bits the
   * query was least confident about, the buckets most likely to hide a true
   * neighbor: the classic multi-probe LSH refinement) — and ranks candidates
@@ -22,25 +22,19 @@ import graft.Tables
   * equi-join on bucket id — candidate volume drops from |Q|·|C| to
   * (1+m)·|Q|·E[bucket size], and both sides shuffle-partition on the bucket
   * key. Recall is tuned by NumPlanes (fewer planes → bigger buckets → higher
-  * recall, more compute) and `spark.graft.lsh.multiProbe` (more probes →
-  * higher recall at linearly more candidate compute — the knob for a
-  * structureless corpus where √n own-bucket probing alone decays; recall
-  * vs m measured at 64× in BASELINE.md). Recall vs the exact baseline is
-  * pinned by a unit test.
+  * recall, more compute) and the multi-probe count m (more probes →
+  * higher recall at linearly more candidate compute — what a structureless
+  * corpus needs where √n own-bucket probing alone decays; recall vs m
+  * measured at 64× in BASELINE.md). Recall vs the exact baseline, and its
+  * monotonicity in m ([[annTopkAt]]), are pinned by unit tests.
   */
 object AnnLsh {
   val NumPlanes = 6
   val Dim = 64
 
-  /** Default extra Hamming-1 probes per query (own bucket + 2). */
+  /** Extra Hamming-1 probes per query (own bucket + 2); below the
+    * [[NumPlanes]] floor, so every signature has that many bits to flip. */
   val MultiProbe = 2
-
-  /** `spark.graft.lsh.multiProbe` overrides; clamped to the plane count
-    * (can't flip more bits than the signature has). */
-  def multiProbeFor(s: SparkSession, planes: Int): Int =
-    math.min(planes, math.max(0,
-      graft.Confs.intConf(s, "spark.graft.lsh.multiProbe")
-        .getOrElse(MultiProbe)))
 
   /** Adaptive plane count: buckets ≈ √n (planes = ⌈log₂√n⌉), the same
     * balance as [[AnnIvf]]'s √n codebook — bucket size and bucket count
@@ -49,14 +43,12 @@ object AnnLsh {
     * the corpus scales (found by the round-12 128× ScaleProbe alongside
     * the IVF stride bug). Floor = [[NumPlanes]] keeps every fixture
     * ≤ ~4k vectors on the historical 64-bucket signature; recall at scale
-    * is then tuned by multi-probing, not by letting buckets balloon.
-    * `spark.graft.lsh.planes` overrides. */
-  def planesFor(s: SparkSession, d: String): Int =
-    graft.Confs.intConf(s, "spark.graft.lsh.planes").getOrElse {
-      val n = Tables.countOf(s, d, "embeddings") // memoized (round-12 advisor)
-      math.max(NumPlanes,
-        math.ceil(math.log(math.sqrt(n.toDouble)) / math.log(2.0)).toInt)
-    }
+    * is then tuned by multi-probing, not by letting buckets balloon. */
+  def planesFor(s: SparkSession, d: String): Int = {
+    val n = Tables.countOf(s, d, "embeddings") // parquet footer row counts
+    math.max(NumPlanes,
+      math.ceil(math.log(math.sqrt(n.toDouble)) / math.log(2.0)).toInt)
+  }
 
   /** Deterministic ±1 hyperplane components (plane p, dimension i). */
   private def planeSign(p: Int, i: Int): Double = {
@@ -94,11 +86,15 @@ object AnnLsh {
     * multi-probe needs the per-plane MARGINS, not just the sign bits, and
     * the label=0 query set is the small side (~10% of the corpus), so the
     * extra planes·Dim multiply-adds never touch the big side. */
-  def annTopk(s: SparkSession, d: String, k: Int = 5): DataFrame = {
+  def annTopk(s: SparkSession, d: String, k: Int = 5): DataFrame =
+    annTopkAt(s, d, MultiProbe, k)
+
+  /** [[annTopk]] with `m` query-directed flips (at most one per plane). */
+  private[graft] def annTopkAt(s: SparkSession, d: String, m: Int,
+                               k: Int = 5): DataFrame = {
     graft.plans.VectorFunctions.register(s)
     import graft.plans.VectorFunctions.dot
     val planes = planesFor(s, d)
-    val m = multiProbeFor(s, planes)
     val sig = signatures(s, d).transform(graft.Caching.cachedOnce) // candidate side
     // (|proj|, 1<<plane) per plane; array_sort orders by margin asc (bit asc
     // on ties) — the flip order of query-directed multi-probe.

@@ -39,8 +39,8 @@ object AnnQuantized {
   }
 
   /** Default corpus blocks in the blocked quantized scan (same B×B shape as
-    * [[Similarity.knnGraph]]'s candidate pass; override with
-    * `spark.graft.vector.blocks` — [[Similarity.vectorBlocks]]). */
+    * [[Similarity.knnGraph]]'s candidate pass; the floor of
+    * [[Similarity.vectorBlocksFor]]). */
   val QBlocks = 16
 
   /** Int8 codes are carried as array<float>: every code is an integer in
@@ -61,7 +61,13 @@ object AnnQuantized {
     * spelling — a broadcast q =!= c theta join scoring |Q|·n ROWS through
     * the join machinery and ranking window — survives as
     * [[simsearchQuantizedExact]], the unit-pinned specification. */
-  val simsearchQuantized: Q = (s, d) => {
+  val simsearchQuantized: Q = (s, d) =>
+    simsearchQuantizedAt(s, d, Similarity.vectorBlocksFor(s, d, QBlocks))
+
+  /** [[simsearchQuantized]] at `blocks` blocks (results are B-invariant;
+    * VectorSpec varies B through this). */
+  private[graft] def simsearchQuantizedAt(s: SparkSession, d: String,
+                                          blocks: Int): DataFrame = {
     graft.plans.VectorFunctions.register(s)
     import Similarity.dot
     // The code-generation transform (a scaled floor op per dimension per
@@ -75,8 +81,7 @@ object AnnQuantized {
       .withColumn("qnorm", sqrt(dot(col("qv"), col("qv"))))
       .withColumn("enorm", sqrt(dot(col("embedding"), col("embedding"))))
     val blk = e.select(
-      pmod(xxhash64(col("vec_id")),
-           lit(Similarity.vectorBlocksFor(s, d, QBlocks))).as("blk"),
+      pmod(xxhash64(col("vec_id")), lit(blocks)).as("blk"),
       col("vec_id"), col("label"), col("qv"), col("qnorm"))
     val qb = blk.where(col("label") === 0).groupBy("blk")
       .agg(collect_list(struct(col("vec_id"), col("qv"), col("qnorm")))

@@ -684,7 +684,7 @@ object Dedup {
   }
 
   val simhash: Q = (s, d) => {
-    // size the key scheme from the (memoized) parquet metadata count — the
+    // size the key scheme from the parquet footer row count — the
     // fixture floor keeps every test corpus on the historical single-band
     // plan, the probe regimes climb to the pair-key rung
     val n = Tables.countOf(s, d, "documents")

@@ -60,10 +60,9 @@ object Similarity {
     * 7.6× faster absolute (BASELINE.md round-12). Exact means exact — no
     * silent semantic switch — but past the measured boundary the operator
     * says so: a warning names the ANN rows, the same pattern as the
-    * near-dup mega-clique guardrail. `spark.graft.simsearch.adviseAnnAbove`
-    * tunes the corpus-size trigger (vectors; 0 disables). */
-  val SimsearchAdviseAnnAboveConf = "spark.graft.simsearch.adviseAnnAbove"
-  val SimsearchAdviseAnnAboveDefault = 100000L
+    * near-dup mega-clique guardrail. The trigger is a corpus size in
+    * vectors. */
+  val SimsearchAdviseAnnAbove = 100000L
 
   /** Some(advisory) when an n-vector corpus is past the measured
     * brute-force boundary, None inside it. Pure — asserted in ScaleSpec. */
@@ -77,16 +76,20 @@ object Similarity {
       s"absolute at that depth) unless exact semantics are required.")
 
   val simsearchTopk: Q = (s, d) => {
-    graft.plans.VectorFunctions.register(s)
-    val threshold = graft.Confs.longConf(s, SimsearchAdviseAnnAboveConf)
-      .getOrElse(SimsearchAdviseAnnAboveDefault)
-    exactKnnAdvisory(Tables.countOf(s, d, "embeddings"), threshold)
+    exactKnnAdvisory(Tables.countOf(s, d, "embeddings"), SimsearchAdviseAnnAbove)
       .foreach(org.slf4j.LoggerFactory.getLogger(getClass).warn(_))
+    simsearchTopkAt(s, d, vectorBlocksFor(s, d, KnnBlocks))
+  }
+
+  /** [[simsearchTopk]]'s blocked pass at `blocks` blocks (results are
+    * B-invariant; VectorSpec varies B through this). */
+  private[graft] def simsearchTopkAt(s: SparkSession, d: String, blocks: Int): DataFrame = {
+    graft.plans.VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"), col("embedding"),
               sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
     val blk = e.select(
-      pmod(xxhash64(col("vec_id")), lit(vectorBlocksFor(s, d, KnnBlocks))).as("blk"),
+      pmod(xxhash64(col("vec_id")), lit(blocks)).as("blk"),
       col("vec_id"), col("label"), col("embedding"), col("nrm"))
     val mem = struct(col("vec_id"), col("embedding"), col("nrm"))
     val qb = blk.where(col("label") === 0).groupBy("blk")
@@ -158,48 +161,38 @@ object Similarity {
        |FROM ranked WHERE rk <= 5
        |ORDER BY q_id, rk""".stripMargin
 
-  /** Block count for the B×B blocked exact kernels, overridable per session
-    * via `spark.graft.vector.blocks`. Results are B-INVARIANT (pinned in
-    * VectorSpec — the kernels are exhaustive over blocks, so B only sets the
-    * parallelism/memory trade): a production job sizes B ≈ n / rows-per-block
-    * so one block's `collect_list` fits a task's memory, growing B with the
-    * corpus instead of letting fixed-B blocks grow with it. */
-  def vectorBlocks(s: SparkSession, default: Int): Int =
-    graft.Confs.intConf(s, "spark.graft.vector.blocks").getOrElse(default)
-
   /** Auto block-size bound: ~4096 members × (64 floats + id + norm) ≈ 1.1 MB
     * per collected block — comfortably inside a task even with B² block
     * pairs in flight. */
   val BlockTargetRows = 4096
 
-  /** [[vectorBlocks]] with the production sizing as the DEFAULT (round 12 —
-    * the IVF-stride lesson applied to the exact kernels): when the conf is
-    * unset, B grows as ⌈n / [[BlockTargetRows]]⌉ so a block's
-    * `collect_list` stays bounded instead of growing linearly with the
-    * corpus (a fixed default B means block size n/B → task OOM at scale).
-    * Results are B-invariant (VectorSpec), so this is purely a
+  /** Block count for the B×B blocked exact kernels (round 12 — the
+    * IVF-stride lesson applied to the exact kernels): B grows as
+    * ⌈n / [[BlockTargetRows]]⌉ so a block's `collect_list` stays bounded
+    * instead of growing linearly with the corpus (a fixed B means block size
+    * n/B → task OOM at scale). Results are B-INVARIANT (pinned in VectorSpec
+    * — the kernels are exhaustive over blocks), so this is purely a
     * memory/parallelism schedule; fixtures (n ≤ 2k) keep their historical
-    * B via the per-kernel floor. */
+    * B via the per-kernel floor `default`. */
   def vectorBlocksFor(s: SparkSession, d: String, default: Int,
-                      fraction: Double = 1.0): Int =
-    graft.Confs.intConf(s, "spark.graft.vector.blocks").getOrElse {
-      // `fraction` = the share of the table the kernel actually blocks
-      // (e.g. the %5 simjoin subset, the even-id kNN-graph half) — sizing
-      // from the full count would make B ~1/fraction× the per-block target
-      val n = Tables.countOf(s, d, "embeddings") * fraction // memoized count
-      math.max(default, math.ceil(n / BlockTargetRows).toInt)
-    }
+                      fraction: Double = 1.0): Int = {
+    // `fraction` = the share of the table the kernel actually blocks
+    // (e.g. the %5 simjoin subset, the even-id kNN-graph half) — sizing
+    // from the full count would make B ~1/fraction× the per-block target
+    val n = Tables.countOf(s, d, "embeddings") * fraction // footer row counts
+    math.max(default, math.ceil(n / BlockTargetRows).toInt)
+  }
 
   /** Blocked exact threshold pairs — the shared 100 TB shape for the exact
     * similarity self-joins below. The declared semantics is the all-pairs
     * `a_id < b_id` theta join; this computes the IDENTICAL pair set (same
     * sequential-fold cosine, same ordering rule, exhaustive over blocks —
     * nothing probabilistic) while keeping the n²-row join out of the plan:
-    * the corpus is hashed into `blocks` groups ([[vectorBlocks]]), the B×B
+    * the corpus is hashed into `blocks` groups ([[vectorBlocksFor]]), the B×B
     * ordered block-pair cross join carries B² bounded rows, and the
     * `graft_cos_thresh_pairs` kernel emits only the qualifying pairs.
     * Pinned equal to the theta-join spelling in VectorSpec. */
-  private def blockedThresholdPairs(e: DataFrame, tau: Double, blocks: Int): DataFrame = {
+  private[graft] def blockedThresholdPairs(e: DataFrame, tau: Double, blocks: Int): DataFrame = {
     val blk = e.select(
       pmod(xxhash64(col("vec_id")), lit(blocks)).as("blk"),
       col("vec_id"), col("embedding"), col("nrm"))
@@ -335,9 +328,8 @@ object Similarity {
   val KnnGraphK = 3
   /** Default corpus blocks in the blocked exact passes: the unit of the
     * B×B block cross join. Sized to the executor count at fixture scale;
-    * override with `spark.graft.vector.blocks` ([[vectorBlocks]]) — a
-    * production job grows B with the corpus so one block's vectors fit a
-    * task's cache. */
+    * [[vectorBlocksFor]] grows B with the corpus so one block's vectors fit
+    * a task's cache. */
   val KnnBlocks = 32
   /** Exact per-(node, block) top taken as candidates — K plus margin so a
     * score tie at the block-local cut can never drop a global top-K edge. */
@@ -405,7 +397,7 @@ object Similarity {
     * reaches the float vectors through plain equi joins. Equality with
     * [[knnGraphExact]] is structural (per-block exact top ⊇ global top),
     * pinned in ClusteringSpec, and stated by the oracle SQL. */
-  private def blockedCandidates(e: DataFrame, blocks: Int): DataFrame = {
+  private[graft] def blockedCandidates(e: DataFrame, blocks: Int): DataFrame = {
     val blk = e.select(
       pmod(xxhash64(col("vec_id")), lit(blocks)).as("blk"),
       col("vec_id"), col("embedding"), col("nrm"))

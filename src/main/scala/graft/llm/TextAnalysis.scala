@@ -56,13 +56,11 @@ object TextAnalysis {
     * plan as IMMUTABLE for the JVM's lifetime — true for the fixture dirs
     * and for the append-only snapshot layout a 100 TB corpus uses, but a
     * vocab that grows past the threshold under the same path would keep the
-    * stale fits=true decision and force an oversized broadcast. Escape
-    * hatch: set `spark.graft.vocab.memoizeFits=false` to recount on every
-    * invocation (the round-7 behavior), or bounce the session for a one-off
-    * refresh. The count Spark job runs OUTSIDE the map's bin lock (a
-    * multi-second job under computeIfAbsent would serialize unrelated
-    * first-touch threads that collide on a bin — round-8 VERDICT #3);
-    * `putIfAbsent` keeps the first completed answer on a race. */
+    * stale fits=true decision and force an oversized broadcast; bounce the
+    * session for a refresh. The count Spark job runs OUTSIDE the map's bin
+    * lock (a multi-second job under computeIfAbsent would serialize
+    * unrelated first-touch threads that collide on a bin — round-8 VERDICT
+    * #3); `putIfAbsent` keeps the first completed answer on a race. */
   private val vocabFits =
     new java.util.concurrent.ConcurrentHashMap[(Int, Long), java.lang.Boolean]()
 
@@ -88,24 +86,16 @@ object TextAnalysis {
   private def vocabJoin(facts: DataFrame, vocab: DataFrame, key: String,
                         fitsProbe: DataFrame = null): DataFrame = {
     val probe = Option(fitsProbe).getOrElse(vocab)
-    val conf = facts.sparkSession.conf
-    val maxRows = conf
-      .get("spark.graft.vocab.broadcastMaxRows", VocabBroadcastMaxRowsDefault.toString)
-      .toLong
-    val memoize = conf.get("spark.graft.vocab.memoizeFits", "true").toBoolean
-    def count(): Boolean = probe.count() <= maxRows
-    val fits: Boolean =
-      if (!memoize) count()
-      else {
-        val k = (probe.queryExecution.analyzed.semanticHash(), maxRows)
-        vocabFits.get(k) match {
-          case null =>
-            val computed: java.lang.Boolean = count() // job outside any lock
-            val prev = vocabFits.putIfAbsent(k, computed)
-            (if (prev == null) computed else prev).booleanValue()
-          case cached => cached.booleanValue()
-        }
-      }
+    val maxRows = graft.Confs.longConf(facts.sparkSession,
+      "spark.graft.vocab.broadcastMaxRows").getOrElse(VocabBroadcastMaxRowsDefault)
+    val k = (probe.queryExecution.analyzed.semanticHash(), maxRows)
+    val fits: Boolean = vocabFits.get(k) match {
+      case null =>
+        val computed: java.lang.Boolean = probe.count() <= maxRows // job outside any lock
+        val prev = vocabFits.putIfAbsent(k, computed)
+        (if (prev == null) computed else prev).booleanValue()
+      case cached => cached.booleanValue()
+    }
     if (fits) facts.join(broadcast(vocab), key) else facts.join(vocab, key)
   }
 

@@ -672,9 +672,14 @@ object Sources {
     "scan_merge_schema" -> scanMergeSchemaSql,
     "sink_scd2" -> sinkScd2Sql,
     "sink_merge_upsert" -> sinkMergeUpsertSql,
+    // one record per line, as scanText declares: a document holding k line
+    // terminators (\r\n, \r or \n — the ones Spark's line reader splits
+    // on) reads back as k + 1 records
     "scan_text" ->
-      """SELECT cast(length(text) as int) AS line_len, count(*) AS n
-        |FROM documents GROUP BY line_len ORDER BY line_len""".stripMargin,
+      """SELECT cast(length(line) as int) AS line_len, count(*) AS n
+        |FROM (SELECT unnest(regexp_split_to_array(text, '\r\n|\r|\n')) AS line
+        |      FROM documents)
+        |GROUP BY line_len ORDER BY line_len""".stripMargin,
     "scan_csv" ->
       """SELECT c_custkey, c_name, c_mktsegment
         |FROM customer ORDER BY c_custkey""".stripMargin,

@@ -53,11 +53,11 @@ import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, ValueS
   * max-by-(ts_us, pid).
   *
   * Cost: one extra shuffle (pass-2 regroup) and a second stateful operator
-  * that EVERY workload pays — which is why this is conf-selected
-  * (`spark.graft.asof.epochKey`, the epoch width in seconds; unset/≤0 =
-  * single-level default), not the default registration: the measured skew
-  * penalty (2.6-3.8× on a 50%-hot stream) is survivable, and a production
-  * job reaches for the two-level spelling when its key histogram says so.
+  * that EVERY workload pays — which is why this is a library a caller
+  * invokes directly (with the epoch width in seconds), not the registered
+  * spelling: the measured skew penalty (2.6-3.8× on a 50%-hot stream) is
+  * survivable, and a production job reaches for the two-level spelling
+  * when its key histogram says so.
   * Width tuning: #epochs per hot key should comfortably exceed the core
   * count; each epoch's rows must fit a task (the same bound the watermark
   * horizon already imposes on the buffered variant). One more density
@@ -73,7 +73,8 @@ import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, ValueS
   * cliff) contribute one marker to the per-user prefix window and
   * hash-join their facts back in parallel; small groups (the
   * measured-dominant singleton regime) resolve inline in the window at
-  * the original cost. See `spark.graft.asof.epochJoinMinGroup`.
+  * the original cost. See the `joinMinGroup` argument of
+  * [[EpochAsof.latestPurchaseAsofEpoch]].
   */
 object AsofEpochMid {
   val Resolved = 0
@@ -81,7 +82,7 @@ object AsofEpochMid {
   val Summary = 2
   /** Streaming-hybrid routing rows (round 18 — the batch twin's hybrid
     * ported to the streaming pass 2, SURVEY open edge (a)): a pass-1 group
-    * whose per-batch unresolved count reaches the conf threshold re-tags
+    * whose per-batch unresolved count reaches the threshold re-tags
     * its unresolved facts [[UnresolvedBig]] (they bypass the per-user
     * pass-2a group via the pass-through buckets) and emits ONE [[Marker]]
     * (user, epoch) row; pass 2a resolves the marker against the boundary
@@ -121,7 +122,7 @@ case class AsofEpochMid(kind: Int, user_id: Long, epoch: Long, event_id: Long,
 /** Pass 1: epoch-local as-of, keyed by (user_id, epoch). State is one
   * monotone O(1) [[LastDimState]] per (user, epoch).
   *
-  * `batchMode = true` (the registered batch twin) skips the state store
+  * `batchMode = true` (the batch twin) skips the state store
   * entirely: in batch every key arrives in ONE call, so the state cell can
   * never be read back — yet paying a RocksDB read+write per (user, epoch)
   * group is the twin's dominant cost at scale (6.4M groups at the 64×
@@ -135,7 +136,7 @@ class EpochLocalAsofProcessor(batchMode: Boolean, ttlMs: Option[Long] = None,
   // TTL matters MORE here than in the single-level spelling: state is
   // per-(user, epoch), so a long-running stream accretes keys linearly with
   // elapsed time (users × epochs) and an epoch's state is dead weight the
-  // moment its facts stop arriving — honor the same conf the single-level
+  // moment its facts stop arriving — honor the same ttlMs the single-level
   // path does (round-16 review: it was silently dropped)
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     last = getHandle.getValueState[LastDimState]("epochDim",
@@ -554,41 +555,30 @@ class EpochJoinResolveProcessor
     }
 }
 
+/** The two-level spelling of the stateful as-of family, called directly
+  * with the epoch width in SECONDS (e.g. 3600 = hourly epochs). Two
+  * cost-only routing thresholds are arguments; any value produces the same
+  * rows (StreamingSpec pins each route at threshold 1, which forces
+  * everything through the join path):
+  *
+  *  - `joinMinGroup` (batch twin, default 32): an unresolved (user, epoch)
+  *    group with at least this many facts resolves via the parallel
+  *    marker+join path; smaller groups resolve inline in the prefix window
+  *    (the cheaper plan — the join path costs an extra shuffle of the
+  *    routed rows).
+  *  - `streamJoinMinGroup` (streaming, round 18 — round-17 verdict item 2;
+  *    default 0 = off): a pass-1 group whose PER-BATCH unresolved count
+  *    reaches this value routes through the marker+join pass-2b path
+  *    ([[AsofEpochMid.routeBig]], [[BoundaryResolveMidProcessor]],
+  *    [[EpochJoinResolveProcessor]]) instead of re-serializing through its
+  *    user's pass-2 group. Off keeps the two-operator chain — the hybrid
+  *    adds a third shuffle + operator hop that EVERY row pays, which the
+  *    dense-dim regime (where pass 1 resolves nearly everything) should not
+  *    buy; reach for it when the dim stream is sparse relative to the epoch
+  *    width AND a hot key exists (the measured regime: hotkey-s2 dims/4096,
+  *    where the two-op chain's pass 2 re-serializes 1.6M facts through one
+  *    task at a 167.8 MB peak). */
 object EpochAsof {
-  /** Session conf selecting the two-level spelling of the stateful as-of
-    * family (`stream_asof_state` AND `stream_asof_buffered`): the epoch
-    * width in SECONDS (e.g. 3600 = hourly epochs). Unset or ≤ 0 keeps the
-    * single-level defaults. */
-  val EpochKeyConf = "spark.graft.asof.epochKey"
-
-  /** Batch-twin hybrid routing threshold: an unresolved (user, epoch) group
-    * with at least this many facts resolves via the parallel marker+join
-    * path; smaller groups resolve inline in the prefix window (the cheaper
-    * plan — the join path costs an extra shuffle of the routed rows).
-    * Cost-only: any value produces the same rows (spec-pinned at 1, which
-    * forces everything through the join path). */
-  val JoinMinGroupConf = "spark.graft.asof.epochJoinMinGroup"
-  val JoinMinGroupDefault = 32L
-
-  /** STREAMING hybrid routing threshold (round 18 — round-17 verdict item
-    * 2): a pass-1 group whose PER-BATCH unresolved count reaches this value
-    * routes through the marker+join pass-2b path ([[AsofEpochMid.routeBig]],
-    * [[BoundaryResolveMidProcessor]], [[EpochJoinResolveProcessor]]) instead
-    * of re-serializing through its user's pass-2 group. Unset or ≤0 (the
-    * default) keeps the two-operator chain — the hybrid adds a third
-    * shuffle + operator hop that EVERY row pays, which the dense-dim regime
-    * (where pass 1 resolves nearly everything) should not buy; reach for it
-    * when the dim stream is sparse relative to the epoch width AND a hot
-    * key exists (the measured regime: hotkey-s2 dims/4096, where the
-    * two-op chain's pass 2 re-serializes 1.6M facts through one task at a
-    * 167.8 MB peak). Cost-only: both routes compute identical rows
-    * (StreamingSpec pins them equal at threshold 1, which forces everything
-    * through the join path). */
-  val StreamJoinMinGroupConf = "spark.graft.asof.epochStreamJoinMinGroup"
-
-  private def streamJoinMinGroup(s: org.apache.spark.sql.SparkSession): Long =
-    graft.Confs.longConf(s, StreamJoinMinGroupConf).filter(_ > 0).getOrElse(0L)
-
   /** Pass-2 pass-through bucket count (see [[BoundaryResolveProcessor]]):
     * well above any core count for full parallelism, small enough that a
     * micro-batch's resolved facts land in a few thousand groups instead of
@@ -596,19 +586,16 @@ object EpochAsof {
     * range. */
   val PassThroughBuckets = 4096L
 
-  def epochWidthFor(s: org.apache.spark.sql.SparkSession): Option[Long] =
-    graft.Confs.longConf(s, EpochKeyConf).filter(_ > 0)
-
   /** Out-of-order STREAMING spelling of the epoch escape (SURVEY open edge
     * (a), built same round): watermark-buffered epoch-local pass 1
     * ([[EpochBufferedAsofProcessor]]) chained into the boundary resolve.
     * The stream must carry a watermark on `ts` (EventTime mode). Streaming
     * only by construction — the BATCH twin of the buffered escape is
     * [[latestPurchaseAsofEpoch]] itself: batch mode flushes everything, the
-    * exact as-of, which is also why the `stream_asof_buffered` registration
-    * reuses it under the conf. */
+    * exact as-of for both family members. */
   def latestPurchaseAsofBufferedEpoch(rows: org.apache.spark.sql.Dataset[AsofStreamRow],
-                                      widthSec: Long): DataFrame = {
+                                      widthSec: Long,
+                                      streamJoinMinGroup: Long = 0L): DataFrame = {
     import rows.sparkSession.implicits._
     val widthUs = widthSec * 1000000L
     // no TTL parameter ON PURPOSE: Spark allows state TTL only under
@@ -618,7 +605,7 @@ object EpochAsof {
     // key space is instead bounded by the per-key cleanup timer (see the
     // processor's state-lifecycle doc): each key self-destructs once the
     // watermark passes its epoch's end
-    val big = streamJoinMinGroup(rows.sparkSession)
+    val big = streamJoinMinGroup
     val mid = rows.groupByKey(r =>
         (r.user_id, Math.floorDiv(LastDimState.micros(r.ts), widthUs)))
       .transformWithState(new EpochBufferedAsofProcessor(widthSec, big),
@@ -664,7 +651,7 @@ object EpochAsof {
     * stateful processors — boundary state must persist across micro-batches,
     * which only a state store can do.
     *
-    * `streaming = false` (the registered batch twin ScaleProbe times) keeps
+    * `streaming = false` (the batch twin StreamingSpec pins) keeps
     * the stateful pass 1 — that IS the parallel heavy lift — but resolves
     * boundaries RELATIONALLY: in batch every key arrives in one call, so
     * pass 1 emits exactly one summary per (user, epoch), and because a
@@ -684,13 +671,15 @@ object EpochAsof {
   def latestPurchaseAsofEpoch(rows: org.apache.spark.sql.Dataset[AsofStreamRow],
                               widthSec: Long,
                               streaming: Boolean = false,
-                              ttlMs: Option[Long] = None): DataFrame = {
+                              ttlMs: Option[Long] = None,
+                              joinMinGroup: Long = 32L,
+                              streamJoinMinGroup: Long = 0L): DataFrame = {
     import rows.sparkSession.implicits._
     val widthUs = widthSec * 1000000L
     // same TTL/time-mode contract as the single-level latestPurchaseAsof:
     // Spark only allows state TTL under ProcessingTime (see StateTtl)
     val mode = if (ttlMs.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    val big = if (streaming) streamJoinMinGroup(rows.sparkSession) else 0L
+    val big = if (streaming) streamJoinMinGroup else 0L
     val mid = rows.groupByKey(r =>
         (r.user_id, Math.floorDiv(LastDimState.micros(r.ts), widthUs)))
       .transformWithState(
@@ -708,9 +697,6 @@ object EpochAsof {
         .toDF("event_id", "user_id", "event_type", "last_purchase_id")
     else {
       import org.apache.spark.sql.functions._
-      val sess = rows.sparkSession
-      val minJoinGroup = graft.Confs.longConf(sess, EpochAsof.JoinMinGroupConf)
-        .getOrElse(EpochAsof.JoinMinGroupDefault)
       // materialize pass 1 once — it feeds every branch below
       val m = mid.toDF("kind", "user_id", "epoch", "event_id", "event_type",
           "ts_us", "pid", "gn").localCheckpoint()
@@ -731,8 +717,8 @@ object EpochAsof {
       // 64× uniform when applied unconditionally). Routing is free: pass 1
       // stamps gn on each Unresolved row.
       val unresolved = m.where(col("kind") === AsofEpochMid.Unresolved)
-      val big = unresolved.where(col("gn") >= minJoinGroup)
-      val small = unresolved.where(col("gn") < minJoinGroup)
+      val big = unresolved.where(col("gn") >= joinMinGroup)
+      val small = unresolved.where(col("gn") < joinMinGroup)
       // a group is entirely big or entirely small (gn is per-group), so an
       // epoch contributes either inline facts or one marker, never both.
       // rank 0 = prefix consumers (inline facts + markers), rank 1 = the

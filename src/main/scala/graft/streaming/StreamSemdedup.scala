@@ -81,17 +81,6 @@ object StreamSemdedup {
     * (a production corpus would use ~0.95+). */
   val Tau: Double = graft.llm.Similarity.NeardupEmbeddingTau
 
-  /** Probe width of the streaming spelling; np ≥ |codebook| = exact mode.
-    * Derived like [[graft.llm.AnnIvf.numProbeFor]]: hold the probed-cell
-    * fraction at ~1/22 of the codebook rather than a fixed count. */
-  val NumProbeConf = "spark.graft.semdedup.numProbe"
-  def numProbeFor(s: SparkSession, cells: Int): Int =
-    math.max(1, math.min(cells,
-      graft.Confs.intConf(s, NumProbeConf).getOrElse(
-        math.max(graft.llm.AnnIvf.NumProbe,
-          ((cells + graft.llm.AnnIvf.ProbeCellDivisor - 1) /
-            graft.llm.AnnIvf.ProbeCellDivisor).toInt))))
-
   /** One offline-codebook centroid: (cent_id, vector, precomputed norm). */
   case class Centroid(cent_id: Long, v: Array[Float], nrm: Double)
 
@@ -222,7 +211,9 @@ object StreamSemdedup {
   /** The streaming spelling: `vecs` must be a streaming DataFrame with
     * columns (ts, vec_id, embedding: array<float>) and a watermark on `ts`.
     * `cb` is the offline codebook ([[codebook]]); `numProbe ≥ cb.length`
-    * makes candidate generation exhaustive (exact mode). */
+    * makes candidate generation exhaustive (exact mode), and
+    * [[graft.llm.AnnIvf.probesFor]] derives the production width (~1/22 of
+    * the codebook, as the batch IVF probes). */
   def streamSemdedup(vecs: DataFrame, horizonMs: Long, cb: Array[Centroid],
                      numProbe: Int, tau: Double = Tau): DataFrame = {
     val s = vecs.sparkSession

@@ -60,8 +60,8 @@ object LastDimState {
 /** State TTL shared by the stateful processors: None = keep forever (the
   * fixture contract — every key stays live), Some(ms) = expire a key's
   * state that long after its last write. At 100 TB an unbounded key space
-  * (user ids) never expires otherwise, so production deployments set
-  * [[Streams.StateTtlConf]]. Spark only allows TTL under
+  * (user ids) never expires otherwise, so production deployments pass a
+  * `ttlMs` to the streaming functions. Spark only allows TTL under
   * TimeMode.ProcessingTime (STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL),
   * so the builders switch time mode when a TTL is configured. */
 object StateTtl {
@@ -373,15 +373,6 @@ class UserTotalsProcessor(ttlMs: Option[Long] = None)
 object Streams {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Session conf: state TTL in ms for the stateful processors (unset =
-    * keep state forever, the fixture contract). See [[StateTtl]] — setting
-    * it also switches the tws builders to TimeMode.ProcessingTime, the only
-    * mode Spark allows TTL under. */
-  val StateTtlConf = "spark.graft.stream.stateTtlMs"
-
-  private def ttlFromConf(s: SparkSession): Option[Long] =
-    graft.Confs.longConf(s, StateTtlConf)
-
   /** Arbitrary keyed state (the §2.10 `stream_stateful` stream-side shape):
     * per-user running event counts + last event type, maintained with
     * flatMapGroupsWithState so it runs identically under readStream with
@@ -591,21 +582,12 @@ object Streams {
   private def withBatchTws(s: SparkSession)(body: => DataFrame): DataFrame =
     scopedBatchTws(s)(body.localCheckpoint())
 
-  /** [[withBatchTws]] for a body that ALREADY materializes its stateful
-    * stage internally (the epoch-keyed as-of checkpoints its pass-1 output
-    * to feed two branches): the provider conf can be restored as soon as
-    * the body has built — its downstream plan is state-store-free — and a
-    * second full-output checkpoint would only duplicate the write. */
-  private def withBatchTwsPreMaterialized(s: SparkSession)(body: => DataFrame): DataFrame =
-    scopedBatchTws(s)(body)
-
   val streamTransformState: Q = (s, d) => {
     import s.implicits._
     withBatchTws(s) {
       userTotalsTws(Tables.events(s, d)
           .select(col("ts"), col("event_type"), col("user_id"), col("event_id"))
-          .as[GraftEvent],
-        ttlFromConf(s))
+          .as[GraftEvent])
     }
   }
 
@@ -658,23 +640,13 @@ object Streams {
       .as[AsofStreamRow]
   }
 
-  /** `spark.graft.asof.epochKey` (epoch width in seconds) selects the
-    * two-level-key skew escape of [[EpochAsof]] — same contract and oracle,
-    * but a hot user's stream processes in parallel across epochs (the
-    * round-15 hot-key probe measured the single-level spelling at 2.6× on a
-    * 50%-hot key; BASELINE.md). Unset = single-level default. */
+  /** The two-level-key skew escape of [[EpochAsof]] has the same contract
+    * and oracle, but a hot user's stream processes in parallel across epochs
+    * (the round-15 hot-key probe measured this single-level spelling at 2.6×
+    * on a 50%-hot key; BASELINE.md). A caller whose key histogram needs it
+    * calls [[EpochAsof.latestPurchaseAsofEpoch]] directly. */
   val streamAsofState: Q = (s, d) =>
-    EpochAsof.epochWidthFor(s) match {
-      case Some(w) => withBatchTwsPreMaterialized(s) {
-        // ttl honored in BOTH spellings (round-16 review: the epoch branch
-        // silently dropped it)
-        EpochAsof.latestPurchaseAsofEpoch(asofStreamRows(s, d), w,
-          ttlMs = ttlFromConf(s))
-      }
-      case None => withBatchTws(s) {
-        latestPurchaseAsof(asofStreamRows(s, d), ttlFromConf(s))
-      }
-    }
+    withBatchTws(s)(latestPurchaseAsof(asofStreamRows(s, d)))
 
   /** Batch registration of the out-of-order-tolerant as-of: same contract
     * and oracle as [[streamAsofState]] (batch mode flushes everything —
@@ -682,20 +654,7 @@ object Streams {
     * variant needs no cross-batch ordering — the MemoryStream spec delivers
     * facts out of order across micro-batches and still matches the oracle. */
   val streamAsofBuffered: Q = (s, d) =>
-    EpochAsof.epochWidthFor(s) match {
-      // the epoch escape's BATCH twin is the same exact as-of for both
-      // family members (batch flushes everything), so the buffered
-      // registration reuses it under the conf; what differs is the
-      // STREAMING spelling (EpochBufferedAsofProcessor, spec-pinned on an
-      // out-of-order MemoryStream)
-      case Some(w) => withBatchTwsPreMaterialized(s) {
-        EpochAsof.latestPurchaseAsofEpoch(asofStreamRows(s, d), w,
-          ttlMs = ttlFromConf(s))
-      }
-      case None => withBatchTws(s) {
-        latestPurchaseAsofBuffered(asofStreamRows(s, d))
-      }
-    }
+    withBatchTws(s)(latestPurchaseAsofBuffered(asofStreamRows(s, d)))
 
   val streamAsofStateSql: String =
     """WITH p AS (

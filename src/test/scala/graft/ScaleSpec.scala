@@ -214,7 +214,7 @@ class ScaleSpec extends SparkSpec {
 
   test("exact kNN past the measured boundary advises the ANN rows (no silent switch)") {
     import graft.llm.Similarity
-    val th = Similarity.SimsearchAdviseAnnAboveDefault
+    val th = Similarity.SimsearchAdviseAnnAbove
     // inside the boundary (every fixture): silent
     assert(Similarity.exactKnnAdvisory(th - 1, th).isEmpty)
     assert(Similarity.exactKnnAdvisory(0L, th).isEmpty)
@@ -222,7 +222,7 @@ class ScaleSpec extends SparkSpec {
     val msg = Similarity.exactKnnAdvisory(th, th)
     assert(msg.isDefined)
     assert(msg.get.contains("llm_simsearch_ivf") && msg.get.contains("llm_simsearch_lsh"))
-    // disabled by conf contract: threshold 0 never fires
+    // a threshold of 0 never fires
     assert(Similarity.exactKnnAdvisory(Long.MaxValue, 0L).isEmpty)
     // and the registered operator still runs the exact path on the fixture
     // (the advisory is a log line, not a plan change)

@@ -28,6 +28,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def withConf[A](kv: (String, String)*)(body: => A): A =
     Confs.withConf(spark, kv: _*)(body)
 
+  /** `body`'s result and the number of Spark jobs started while it ran. */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc) // earlier jobs must not count
+    sc.addSparkListener(l)
+    try {
+      val a = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
   /** Recursive delete for test-scoped scratch dirs (fixture copies written
     * by individual tests must not leak a parquet per run — round-7 advice). */
   def deleteDir(path: String): Unit =

@@ -534,17 +534,16 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("epoch-buffered as-of batch registration (conf-selected) equals the default") {
-    // stream_asof_buffered under epochKey reuses the epoch batch twin —
-    // batch mode flushes everything, so both spellings are the exact as-of
+  test("epoch-buffered as-of: EpochAsof batch twin equals the registered operator") {
+    // the epoch escape's batch twin is the same exact as-of for both family
+    // members — batch mode flushes everything — so a caller reaching for
+    // the epoch spelling gets the registered buffered operator's rows
     val base = Streams.streamAsofBuffered(spark, sfDir).collect().toSeq
       .sortBy(_.getLong(0))
-    spark.conf.set(graft.streaming.EpochAsof.EpochKeyConf, "3600")
-    try {
-      val epoch = Streams.streamAsofBuffered(spark, sfDir).collect().toSeq
-        .sortBy(_.getLong(0))
-      assert(base.nonEmpty && base == epoch)
-    } finally spark.conf.unset(graft.streaming.EpochAsof.EpochKeyConf)
+    val epoch = withBatchTwsForTest(graft.streaming.EpochAsof.latestPurchaseAsofEpoch(
+        asofRows(sfDir), 3600L))
+      .collect().toSeq.sortBy(_.getLong(0))
+    assert(base.nonEmpty && base == epoch)
   }
 
   test("buffered as-of: a batch that flushes nothing performs NO buffer rewrite (write amplification)") {
@@ -1055,12 +1054,8 @@ class StreamingSpec extends SparkSpec {
     // (resolved facts bypass the second pass); the streaming spelling keeps
     // the chained stateful processors — both must compute identical rows
     // from the same pass-1 output (run here in batch, where both work)
-    import graft.streaming.{AsofStreamRow, EpochAsof}
-    import spark.implicits._
-    val rows = graft.Tables.events(spark, sfDir)
-      .select(col("ts"), col("user_id"), col("event_id"),
-              (col("event_type") === "purchase").as("is_dim"), col("event_type"))
-      .as[AsofStreamRow]
+    import graft.streaming.EpochAsof
+    val rows = asofRows(sfDir)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getString(2), if (r.isNullAt(3)) None else Some(r.getLong(3))))
@@ -1077,6 +1072,16 @@ class StreamingSpec extends SparkSpec {
     * third verbatim copy of the save/bootstrap/restore block). */
   private def withBatchTwsForTest(body: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     Streams.scopedBatchTws(spark)(body.localCheckpoint())
+
+  /** The as-of family's input rows over a fixture's events: purchases are
+    * the dims, every other event a fact. */
+  private def asofRows(d: String) = {
+    import spark.implicits._
+    graft.Tables.events(spark, d)
+      .select(col("ts"), col("user_id"), col("event_id"),
+              (col("event_type") === "purchase").as("is_dim"), col("event_type"))
+      .as[graft.streaming.AsofStreamRow]
+  }
 
   test("epoch as-of STREAMING spellings over the fixture equal the batch twin (probe protocol in miniature)") {
     // Round-17 (r16 verdict #1): `graft.Dev stream asof` measures the chained
@@ -1136,33 +1141,29 @@ class StreamingSpec extends SparkSpec {
       // round-18 STREAMING hybrid (r17 verdict #2): threshold 1 forces every
       // unresolved fact through the marker + pass-2b join path — the
       // three-operator chain must still equal the batch twin for BOTH
-      // spellings (the conf is read at build time inside run's mkQuery)
-      spark.conf.set(EpochAsof.StreamJoinMinGroupConf, "1")
-      try {
-        val inOrderH = run("fix_epoch_state_h", chunks)(ds =>
-          EpochAsof.latestPurchaseAsofEpoch(ds, widthSec = 3600L, streaming = true))
-        assert(inOrderH == expected,
-          s"hybrid in-order spelling diverged on ${(inOrderH.toSet diff expected.toSet).take(3)}")
-        val bufferedH = run("fix_epoch_buf_h", chunks :+ Seq(mover))(ds =>
-          EpochAsof.latestPurchaseAsofBufferedEpoch(
-            ds.withWatermark("ts", "60 seconds"), widthSec = 3600L))
-        assert((bufferedH - mover.event_id) == expected,
-          s"hybrid buffered spelling diverged on ${((bufferedH - mover.event_id).toSet diff expected.toSet).take(3)}")
-      } finally spark.conf.unset(EpochAsof.StreamJoinMinGroupConf)
+      // spellings
+      val inOrderH = run("fix_epoch_state_h", chunks)(ds =>
+        EpochAsof.latestPurchaseAsofEpoch(ds, widthSec = 3600L, streaming = true,
+          streamJoinMinGroup = 1L))
+      assert(inOrderH == expected,
+        s"hybrid in-order spelling diverged on ${(inOrderH.toSet diff expected.toSet).take(3)}")
+      val bufferedH = run("fix_epoch_buf_h", chunks :+ Seq(mover))(ds =>
+        EpochAsof.latestPurchaseAsofBufferedEpoch(
+          ds.withWatermark("ts", "60 seconds"), widthSec = 3600L, streamJoinMinGroup = 1L))
+      assert((bufferedH - mover.event_id) == expected,
+        s"hybrid buffered spelling diverged on ${((bufferedH - mover.event_id).toSet diff expected.toSet).take(3)}")
     }
   }
 
-  test("epoch-keyed as-of batch twin (conf-selected) equals the default registration") {
-    // the registered stream_asof_state switches spelling on
-    // spark.graft.asof.epochKey; both must compute the same oracle rows
+  test("epoch-keyed as-of: EpochAsof batch twin equals the registered operator") {
+    // the two-level spelling is a library a skewed caller invokes directly;
+    // it must compute the registered single-level operator's oracle rows
     val base = Streams.streamAsofState(spark, sfDir).collect().toSeq
       .sortBy(_.getLong(0))
-    spark.conf.set(graft.streaming.EpochAsof.EpochKeyConf, "3600")
-    try {
-      val epoch = Streams.streamAsofState(spark, sfDir).collect().toSeq
-        .sortBy(_.getLong(0))
-      assert(base.nonEmpty && base == epoch)
-    } finally spark.conf.unset(graft.streaming.EpochAsof.EpochKeyConf)
+    val epoch = withBatchTwsForTest(graft.streaming.EpochAsof.latestPurchaseAsofEpoch(
+        asofRows(sfDir), 3600L))
+      .collect().toSeq.sortBy(_.getLong(0))
+    assert(base.nonEmpty && base == epoch)
   }
 
   test("epoch-keyed as-of batch twin: both hybrid boundary routes compute the same rows") {
@@ -1172,12 +1173,8 @@ class StreamingSpec extends SparkSpec {
     // (threshold 1) must produce exactly the default's rows. A narrow epoch
     // width (60 s) maximizes unresolved groups so both routes carry real
     // rows.
-    import spark.implicits._
-    import graft.streaming.{AsofStreamRow, EpochAsof}
-    val rows = graft.Tables.events(spark, sfDir)
-      .select(col("ts"), col("user_id"), col("event_id"),
-              (col("event_type") === "purchase").as("is_dim"), col("event_type"))
-      .as[AsofStreamRow]
+    import graft.streaming.EpochAsof
+    val rows = asofRows(sfDir)
     // rowsOut is asserted alongside the map: the map keys by event_id, so a
     // fact emitted through BOTH the inline and joined branches would dedup
     // silently — the count catches duplicate emission (round-16 review)
@@ -1187,21 +1184,16 @@ class StreamingSpec extends SparkSpec {
         (r.getLong(1), r.getString(2), if (r.isNullAt(3)) None else Some(r.getLong(3))))
         .toMap
     }
-    def atThreshold(t: Option[String]) = {
-      t.foreach(spark.conf.set(graft.streaming.EpochAsof.JoinMinGroupConf, _))
-      try canon(withBatchTwsForTest(
-        EpochAsof.latestPurchaseAsofEpoch(rows, widthSec = 60L)))
-      finally if (t.isDefined)
-        spark.conf.unset(graft.streaming.EpochAsof.JoinMinGroupConf)
-    }
-    val (nDefault, viaDefault) = atThreshold(None)
+    val (nDefault, viaDefault) = canon(withBatchTwsForTest(
+      EpochAsof.latestPurchaseAsofEpoch(rows, widthSec = 60L)))
     assert(nDefault == viaDefault.size, "duplicate event_id in default route")
     // threshold 1 = every group through the marker+join path; threshold 2 =
     // MIXED regime (singleton groups inline, multi-fact groups joined) — the
     // production hot-key shape where one user's window holds both markers
     // and inline facts across epochs
-    Seq("1", "2").foreach { t =>
-      val (n, via) = atThreshold(Some(t))
+    Seq(1L, 2L).foreach { t =>
+      val (n, via) = canon(withBatchTwsForTest(
+        EpochAsof.latestPurchaseAsofEpoch(rows, widthSec = 60L, joinMinGroup = t)))
       assert(n == nDefault && via == viaDefault,
         s"hybrid route at threshold $t diverges (rows $n vs $nDefault)")
     }
@@ -1215,8 +1207,8 @@ class StreamingSpec extends SparkSpec {
     withConf(RocksDbProvider) {
       val mem = MemoryStream[graft.streaming.GraftEvent]
       // 150 ms TTL — at 100 TB this is how an unbounded user-id space stops
-      // accumulating state forever (Streams.StateTtlConf plumbs the same
-      // Option into the registered queries)
+      // accumulating state forever (the streaming functions take the same
+      // Option; the registered batch twins keep state forever)
       val q = graft.streaming.Streams.userTotalsTws(mem.toDS(), ttlMs = Some(150L))
         .writeStream.format("memory").queryName("ttl_t")
         .outputMode(OutputMode.Update()).start()

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions.col
   * (session, path) instead of re-running the footer/schema-inference job on
   * every invocation — load-bearing for the whole query registry, so its
   * contract gets its own tripwire: reuse must be plan-identical, distinct
-  * dirs must NOT alias, and the escape hatch must really re-resolve.
+  * dirs must NOT alias. [[Tables.countOf]], the sizing count several
+  * operators read while their query is built, must run no Spark job.
   */
 class TablesMemoSpec extends SparkSpec {
 
@@ -30,16 +31,15 @@ class TablesMemoSpec extends SparkSpec {
     assert(n2.count() == 25)
   }
 
-  test("escape hatch spark.graft.tables.memoizePlans=false re-resolves") {
-    val memoized = Tables.load(spark, sfDir, "region")
-    spark.conf.set("spark.graft.tables.memoizePlans", "false")
-    try {
-      val fresh = Tables.load(spark, sfDir, "region")
-      assert(!(fresh eq memoized))
-      // value-identical either way — the memo is a physical shortcut only
-      assert(fresh.orderBy("r_regionkey").collect()
-        .sameElements(memoized.orderBy("r_regionkey").collect()))
-    } finally spark.conf.unset("spark.graft.tables.memoizePlans")
+  test("countOf sums the parquet footers: equals count() on every sf0.01 table, with no Spark job") {
+    val dir = new java.io.File(sfDir).getParent + "/sf0.01"
+    Tables.names.foreach { n =>
+      val counted = // events through its encoding adapter, as registerViews does
+        (if (n == "events") Tables.events(spark, dir) else Tables.load(spark, dir, n)).count()
+      val (footer, jobs) = jobsDuring(Tables.countOf(spark, dir, n))
+      assert(footer == counted, s"$n: footer rows $footer vs count() $counted")
+      assert(jobs == 0, s"$n: countOf ran $jobs Spark job(s)")
+    }
   }
 
   test("memoized events loader still normalizes ts to TimestampType") {

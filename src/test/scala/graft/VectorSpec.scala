@@ -115,24 +115,39 @@ class VectorSpec extends SparkSpec {
   }
 
   test("blocked kernel results are invariant to the block count conf") {
-    // spark.graft.vector.blocks only sets the parallelism/memory trade —
-    // the kernels are exhaustive over blocks, so any B must produce the
-    // identical result (the 100 TB deployment grows B with the corpus)
+    // the block count only sets the parallelism/memory trade — the kernels
+    // are exhaustive over blocks, so any B must produce the identical result
+    // (the 100 TB deployment grows B with the corpus: vectorBlocksFor)
     // registered sort-free (round 15): impose the compare order in-test
-    val ref = Similarity.simsearchTopk(spark, sfDir).orderBy("q_id", "rk").collect().map(_.toSeq).toSeq
-    val refJoin = Similarity.simjoinThreshold(spark, sfDir).orderBy("a_id", "b_id").collect().map(_.toSeq).toSeq
-    val refQuant = graft.llm.AnnQuantized.queries("llm_simsearch_quantized")(spark, sfDir)
-      .orderBy("q_id", "rk").collect().map(_.toSeq).toSeq
+    def rows(df: org.apache.spark.sql.DataFrame, by: String*) =
+      df.orderBy(by.map(col): _*).collect().map(_.toSeq).toSeq
+    val ref = rows(Similarity.simsearchTopk(spark, sfDir), "q_id", "rk")
+    val refQuant = rows(graft.llm.AnnQuantized.queries("llm_simsearch_quantized")(spark, sfDir),
+      "q_id", "rk")
+    VectorFunctions.register(spark)
+    def normed(sub: org.apache.spark.sql.Column) = Tables.embeddings(spark, sfDir).where(sub)
+      .select(col("vec_id"), col("embedding"),
+              sqrt(VectorFunctions.dot(col("embedding"), col("embedding"))).as("nrm"))
+    // the registered simjoin's %5 subset and the kNN graph's even-id half
+    val joinSub = normed(col("vec_id") % 5 === 0)
+    val knnSub = normed(col("vec_id") % 2 === 0)
+    def pairsAt(b: Int) =
+      rows(Similarity.blockedThresholdPairs(joinSub, Similarity.SimjoinTau, b), "a_id", "b_id")
+    val refJoin = rows(Similarity.simjoinThreshold(spark, sfDir)
+      .select(col("a_id"), col("b_id")), "a_id", "b_id")
+    assert(pairsAt(Similarity.KnnBlocks).map(_.take(2)) == refJoin)
+    // blocked kNN candidates are a superset of the exact top-K edges at any B
+    val exactEdges = Similarity.knnGraphExact(spark, sfDir)
+      .select("src", "dst").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     for (b <- Seq(1, 3, 97)) {
-      spark.conf.set("spark.graft.vector.blocks", b.toString)
-      try {
-        assert(Similarity.simsearchTopk(spark, sfDir)
-          .orderBy("q_id", "rk").collect().map(_.toSeq).toSeq == ref, s"topk B=$b")
-        assert(Similarity.simjoinThreshold(spark, sfDir)
-          .orderBy("a_id", "b_id").collect().map(_.toSeq).toSeq == refJoin, s"simjoin B=$b")
-        assert(graft.llm.AnnQuantized.queries("llm_simsearch_quantized")(spark, sfDir)
-          .orderBy("q_id", "rk").collect().map(_.toSeq).toSeq == refQuant, s"quantized B=$b")
-      } finally spark.conf.unset("spark.graft.vector.blocks")
+      assert(rows(Similarity.simsearchTopkAt(spark, sfDir, b), "q_id", "rk") == ref, s"topk B=$b")
+      assert(pairsAt(b) == pairsAt(Similarity.KnnBlocks), s"simjoin B=$b")
+      assert(rows(graft.llm.AnnQuantized.simsearchQuantizedAt(spark, sfDir, b), "q_id", "rk") ==
+        refQuant, s"quantized B=$b")
+      val cands = Similarity.blockedCandidates(knnSub, b)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(exactEdges.subsetOf(cands),
+        s"kNN candidates B=$b miss ${(exactEdges -- cands).take(3)}")
     }
   }
 
@@ -161,12 +176,9 @@ class VectorSpec extends SparkSpec {
     val exact = Similarity.simsearchTopk(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     def recallAt(m: Int): Double = {
-      spark.conf.set("spark.graft.lsh.multiProbe", m.toString)
-      try {
-        val ann = AnnLsh.annTopk(spark, sfDir)
-          .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-        ann.intersect(exact).size.toDouble / exact.size
-      } finally spark.conf.unset("spark.graft.lsh.multiProbe")
+      val ann = AnnLsh.annTopkAt(spark, sfDir, m)
+        .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+      ann.intersect(exact).size.toDouble / exact.size
     }
     val r0 = recallAt(0); val r2 = recallAt(2); val r4 = recallAt(4)
     // probes for m are a prefix of probes for m' > m (margin-sorted flip
@@ -250,10 +262,6 @@ class VectorSpec extends SparkSpec {
     }
     // clamp: a one-cell codebook probes exactly one cell
     assert(derivedAt(n * 2) == 1)
-    // conf still overrides the derived default in both directions
-    spark.conf.set("spark.graft.ivf.numProbe", "7")
-    try assert(derivedAt(strides.last) == 7)
-    finally spark.conf.unset("spark.graft.ivf.numProbe")
   }
 
   test("IVF recall is monotone non-decreasing in the probed-cell count") {
@@ -262,13 +270,13 @@ class VectorSpec extends SparkSpec {
     // cosine, so a displaced top-k member is displaced by a truer neighbor
     val exact = Similarity.simsearchTopk(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    val stride = AnnIvf.strideFor(spark, sfDir)
+    val cells = AnnIvf.cellAssignments(spark, sfDir)
     def recallAt(np: Int): Double = {
-      spark.conf.set("spark.graft.ivf.numProbe", np.toString)
-      try {
-        val ann = AnnIvf.ivfTopk(spark, sfDir)
-          .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-        ann.intersect(exact).size.toDouble / exact.size
-      } finally spark.conf.unset("spark.graft.ivf.numProbe")
+      val ann = AnnIvf.probeTopk(spark, sfDir, stride, cells,
+          AnnIvf.probeSet(spark, sfDir, cells), np, 5)
+        .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+      ann.intersect(exact).size.toDouble / exact.size
     }
     val r1 = recallAt(1); val r2 = recallAt(2); val r8 = recallAt(8)
     assert(r2 >= r1, s"recall np=2 ($r2) < np=1 ($r1)")
@@ -276,31 +284,14 @@ class VectorSpec extends SparkSpec {
     assert(r8 > r1, s"7 extra probed cells found nothing new (r1=$r1 r8=$r8)")
   }
 
-  test("IVF locality advisory decision is pure and gated") {
-    // round 17 (r16 verdict #3 / open edge (b)): advisory only when the
-    // derived np is at the floor or above, the sample is enabled, and the
-    // sampled np=2 agreement clears the threshold
-    import AnnIvf.{localityAdvisory, LocalityMinNp, LocalityAgreeThreshold}
-    assert(localityAdvisory(1.0, LocalityMinNp - 1, 24).isEmpty,
-      "below the np floor there is nothing worth escaping")
-    assert(localityAdvisory(LocalityAgreeThreshold - 0.01, 17, 24).isEmpty,
-      "sub-threshold agreement is the structureless regime the derived default exists for")
-    assert(localityAdvisory(1.0, 17, 0).isEmpty, "sample 0 disables")
-    val m = localityAdvisory(0.96, 17, 24)
-    assert(m.isDefined && m.get.contains("np=17") &&
-           m.get.contains(AnnIvf.NumProbeConf),
-      s"advisory must name the derived np and the escape conf: $m")
-  }
-
-  test("IVF locality advisory fires on a cluster-local corpus and stays silent on a structureless one") {
-    // Round 17 (r16 verdict #3): the end-to-end regime detection. Two
-    // synthetic 4800-vector corpora sized so strideFor derives a 70-cell
-    // codebook and np=4 (= LocalityMinNp — the advisory regime):
+  test("IVF at np >= 4: no Spark job to build; probe agreement 1.0 local, < 0.95 random") {
+    // Two synthetic 4800-vector corpora sized so strideFor derives a
+    // 70-cell codebook and np=4:
     // STRUCTURED = 70 tight clusters aligned with the seedless stride
     // codebook (each cluster holds its own centroid, so np=2 already sees
-    // every true neighbor → sampled agreement 1.0 → advisory fires);
+    // every true neighbor → sampled agreement 1.0);
     // RANDOM = per-id seeded noise (candidates from 2 of the 4 probed
-    // cells can't reproduce the 4-cell top-k → agreement ~0.5 → silent).
+    // cells can't reproduce the 4-cell top-k → agreement ~0.5).
     import spark.implicits._
     VectorFunctions.register(spark)
     val n = 4800
@@ -331,45 +322,25 @@ class VectorSpec extends SparkSpec {
                   col("label").cast("int").as("label"))
           .coalesce(1).write.parquet(s"$d/embeddings.parquet")
         assert(AnnIvf.strideFor(spark, d) == stride)
-        assert(AnnIvf.numProbeFor(spark, d, stride) >= AnnIvf.LocalityMinNp,
-          "both corpora must sit in the advisory regime")
+        assert(AnnIvf.numProbeFor(spark, d, stride) >= 4,
+          "both corpora must derive np >= 4")
       }
       val sDir = s"$tmp/structured"; val rDir = s"$tmp/random"
-      val fired = AnnIvf.adviseLocality(spark, sDir)
-      assert(fired.isDefined && fired.get.contains(AnnIvf.NumProbeConf),
-        s"cluster-local corpus must fire the advisory: $fired")
-      assert(AnnIvf.adviseLocality(spark, rDir).isEmpty,
-        "structureless corpus must stay silent — the derived np is earning its cost")
-      // round-18 apply-mode (r17 verdict #7): the advisory's opt-in last
-      // mile. Default mode never changes the plan...
-      val derivedNp = AnnIvf.numProbeFor(spark, sDir, stride)
-      assert(AnnIvf.effectiveNumProbe(spark, sDir, stride, 5) === derivedNp,
-        "advise (default) mode must keep the derived np")
-      spark.conf.set(AnnIvf.AutoProbeConf, "apply")
-      try {
-        // ...apply adopts np=NumProbe on the agreement-1.0 clustered corpus...
-        assert(AnnIvf.effectiveNumProbe(spark, sDir, stride, 5) === AnnIvf.NumProbe,
-          "apply-mode must adopt np=2 when the sampled agreement is 1.0")
-        // ...is a no-op on the structureless corpus (agreement ~0.5)...
-        assert(AnnIvf.effectiveNumProbe(spark, rDir, stride, 5) ===
-               AnnIvf.numProbeFor(spark, rDir, stride),
-          "apply-mode must not engage where the extra probes earn recall")
-        // ...and an explicit numProbe conf beats apply-mode
-        spark.conf.set(AnnIvf.NumProbeConf, "7")
-        try assert(AnnIvf.effectiveNumProbe(spark, sDir, stride, 5) === 7,
-          "explicit numProbe conf must take precedence over apply-mode")
-        finally spark.conf.unset(AnnIvf.NumProbeConf)
-      } finally spark.conf.unset(AnnIvf.AutoProbeConf)
-      // an explicit numProbe conf is the user's decision — no advisory
-      spark.conf.set(AnnIvf.NumProbeConf, "2")
-      try assert(AnnIvf.adviseLocality(spark, sDir).isEmpty)
-      finally spark.conf.unset(AnnIvf.NumProbeConf)
-      // localitySample=0 disables the probe entirely
-      spark.conf.set(AnnIvf.LocalitySampleConf, "0")
-      try assert(AnnIvf.adviseLocality(spark, sDir).isEmpty)
-      finally spark.conf.unset(AnnIvf.LocalitySampleConf)
-      // the sf fixtures derive np=2 — below the floor, silent and free
-      assert(AnnIvf.adviseLocality(spark, sfDir).isEmpty)
+      // the scan resolves first (its schema inference is a job of its own);
+      // sizing then reads parquet footers and the index is only marked for
+      // caching, so the first build of the query executes nothing
+      Tables.load(spark, sDir, "embeddings")
+      val (_, jobs) = jobsDuring(AnnIvf.ivfTopk(spark, sDir))
+      assert(jobs == 0, s"building ivfTopk ran $jobs Spark job(s)")
+      def agreement(d: String): Double = {
+        val stride = AnnIvf.strideFor(spark, d)
+        AnnIvf.sampledProbeAgreement(spark, d, stride, AnnIvf.cellAssignments(spark, d),
+          AnnIvf.numProbeFor(spark, d, stride), 5, 24)
+      }
+      val local = agreement(sDir)
+      assert(local == 1.0, s"cluster-local corpus: np=2 must reproduce the derived top-k, got $local")
+      val noise = agreement(rDir)
+      assert(noise < 0.95, s"structureless corpus: the extra probes must earn recall, got $noise")
     } finally deleteDir(tmp)
   }
 

@@ -16,7 +16,7 @@
 # graft.Dev subcommands (arguments and env in Dev.scala's header):
 #   scale [k] [names]            recall [ks] [names]
 #   ivf <dir>... | --k K [--time]
-#   stream asof [k] [configs] [widthSec]      stream neardup [k]
+#   stream asof [k] [configs] [widthSec] [hybridMinGroup]   stream neardup [k]
 #   stream neardup-hot [c] [cap] [off,cap]    stream semdedup [k] [exact,default]
 #   plans <sfDir> | plans <sfDir> <outDir> <suffix> [names|ALL]
 #   profile <name> [passes]      bytes [ks]
