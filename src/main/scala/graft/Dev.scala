@@ -5,7 +5,7 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
-import graft.streaming.{AsofStreamRow, EpochAsof, StreamNeardup, StreamSemdedup, Streams}
+import graft.streaming.{AsofStreamRow, StreamNeardup, StreamSemdedup, Streams}
 
 /** The dev harness: one main for the measurement tools behind BASELINE.md's
   * probe cells. NOT part of the shipped library surface.
@@ -14,7 +14,7 @@ import graft.streaming.{AsofStreamRow, EpochAsof, StreamNeardup, StreamSemdedup,
   * scale   [k] [name,...]             t(k×)/t(1×) per registered query, spill, peak task memory
   * recall  [k,...] [name,...]         ANN recall_at_k over the full k× query set (audit ON)
   * ivf     <dir>... | --k K [--time]  IVF sampled probe agreement per corpus; --time: derived np vs np=2
-  * stream  asof [k] [config,...] [widthSec] [hybridMinGroup]
+  * stream  asof [k] [config,...]
   * stream  neardup [k]
   * stream  neardup-hot [c] [cap] [off,cap]
   * stream  semdedup [k] [exact,default]
@@ -29,12 +29,11 @@ import graft.streaming.{AsofStreamRow, EpochAsof, StreamNeardup, StreamSemdedup,
   * selectors of [[ScaleProbe.buildCorpus]] (SPARK_GRAFT_SCALE_TABLES,
   * SPARK_GRAFT_SCALE_TRANSFORM, SPARK_GRAFT_SCALE_REUSE),
   * SPARK_GRAFT_SCALE_PASSES (scale, default 3), SPARK_GRAFT_STREAM_SLICES
-  * (default 8; asof 16), SPARK_GRAFT_STREAM_SPARSEDIMS and
-  * SPARK_GRAFT_STREAM_WM_DELAY (asof). The session is [[Sessions.builder]]'s,
-  * so SPARK_GRAFT_CPUS and SPARK_GRAFT_EXTRA_CONF apply (e.g.
-  * `spark.graft.neardup.maxPairsPerDoc=m` for the mega-cluster containment
-  * run). `scale` times each query at its shipped derived sizing (vector
-  * block counts, IVF stride and probes, LSH planes). */
+  * (default 8; asof 16) and SPARK_GRAFT_STREAM_WM_DELAY (asof). The session
+  * is [[Sessions.builder]]'s, so SPARK_GRAFT_CPUS and SPARK_GRAFT_EXTRA_CONF
+  * apply (e.g. `spark.graft.neardup.maxPairsPerDoc=m` for the mega-cluster
+  * containment run). `scale` times each query at its shipped derived
+  * sizing (vector block counts, IVF stride and probes, LSH planes). */
 object Dev {
   def main(args: Array[String]): Unit = {
     val spark = Sessions.builder().getOrCreate()
@@ -219,10 +218,9 @@ object Dev {
         "building every table k× for an embeddings-only probe wastes minutes")
     // an inherited audit-off switch would otherwise surface as an opaque
     // missing-column AnalysisException deep in the first query
-    if (sys.props.get("graft.ann.recall").orElse(
-          ctx.env.get("SPARK_GRAFT_ANN_RECALL")).contains("0"))
-      sys.error("the recall audit is disabled (graft.ann.recall=0 / " +
-        "SPARK_GRAFT_ANN_RECALL=0) — unset it: `Dev recall` reads recall_at_k")
+    if (sys.props.get("graft.ann.recall").contains("0"))
+      sys.error("the recall audit is disabled (graft.ann.recall=0) — " +
+        "unset it: `Dev recall` reads recall_at_k")
     println(f"== Dev recall base=${ctx.base} ==")
     println(f"${"query"}%-22s ${"k"}%5s ${"n"}%9s ${"queries"}%8s ${"lost"}%5s " +
       f"${"mean"}%7s ${"p10"}%7s ${"min"}%7s ${"secs"}%7s")
@@ -328,8 +326,7 @@ object Dev {
     def arg(i: Int, default: Int): Int = args.lift(i).map(_.toInt).getOrElse(default)
     val slices = ctx.int("SPARK_GRAFT_STREAM_SLICES", if (args.headOption.contains("asof")) 16 else 8)
     val probe = args.headOption match {
-      case Some("asof") => asofProbe(ctx, arg(1, 64), args.lift(2).map(csv), arg(3, 3600),
-        arg(4, 0), slices)
+      case Some("asof") => asofProbe(ctx, arg(1, 64), args.lift(2).map(csv), slices)
       case Some("neardup") => neardupProbe(ctx, arg(1, 64), slices)
       case Some("neardup-hot") => hotProbe(ctx, arg(1, 2000), arg(2, 16),
         args.lift(3).map(csv).getOrElse(Seq("off", "cap")), slices)
@@ -524,50 +521,35 @@ object Dev {
   /** The stateful as-of family as real streams: the k× events corpus (the
     * skewed regime via SPARK_GRAFT_SCALE_TABLES=events
     * SPARK_GRAFT_SCALE_TRANSFORM=hotkey) in event-time-range slices, plus a
-    * far-future one-row mover slice that drains the buffered spellings'
-    * tails — a valid instance of BOTH family contracts (in-order for the
-    * state spellings, within-horizon for the buffered ones). The twin is the
+    * far-future one-row mover slice that drains the buffered spelling's
+    * tail — a valid instance of BOTH family contracts (in-order for
+    * `state_single`, within-horizon for `buf_single`). The twin is the
     * buffered exact as-of over the same input, mover excluded on both sides.
-    * SPARK_GRAFT_STREAM_SPARSEDIMS=N keeps only every N-th of the hot user's
-    * dims, the regime where the epoch escape's win shrinks;
     * SPARK_GRAFT_STREAM_WM_DELAY (default 60 seconds) is the buffered
-    * spellings' watermark delay — longer than the corpus span, it is the
-    * catch-up regime. `hybridMinGroup` > 0 routes the epoch spellings'
-    * big per-batch unresolved groups through the streaming hybrid
-    * ([[EpochAsof.latestPurchaseAsofEpoch]]'s `streamJoinMinGroup`). */
-  private def asofProbe(ctx: Ctx, k: Int, configs: Option[Seq[String]], widthSec: Int,
-                        hybridMinGroup: Int, slices: Int): Probe = {
+    * spelling's watermark delay — longer than the corpus span, it is the
+    * catch-up regime. */
+  private def asofProbe(ctx: Ctx, k: Int, configs: Option[Seq[String]], slices: Int): Probe = {
     val spark = ctx.spark
     import spark.implicits._
-    val sparseDims = ctx.env.get("SPARK_GRAFT_STREAM_SPARSEDIMS").map(_.toLong).getOrElse(0L)
     val wmDelay = ctx.env.getOrElse("SPARK_GRAFT_STREAM_WM_DELAY", "60 seconds")
     val (_, kDir) = ctx.corpus(k)
-    val dir = s"${ctx.scratch}/asof_x${k}_sp$sparseDims"
+    val dir = s"${ctx.scratch}/asof_x$k"
     val rows = Tables.events(spark, kDir)
       .select(col("ts"), col("user_id"), col("event_id"),
               (col("event_type") === "purchase").as("is_dim"), col("event_type"))
-    val filtered =
-      if (sparseDims > 0)
-        rows.where(!(col("user_id") === 0L && col("is_dim") &&
-                     pmod(col("event_id"), lit(sparseDims)) =!= 0))
-      else rows
-    val (loUs, hiUs) = filtered
+    val (loUs, hiUs) = rows
       .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
       .as[(Long, Long)].head()
     val mover = Seq((new java.sql.Timestamp(hiUs / 1000L + 90L * 24 * 3600 * 1000),
                      MoverUser, -1L, false, "view"))
       .toDF("ts", "user_id", "event_id", "is_dim", "event_type")
-    writeSlices(filtered, unix_micros(col("ts")), loUs, hiUs + 1, slices,
+    writeSlices(rows, unix_micros(col("ts")), loUs, hiUs + 1, slices,
       s"$dir/stream_s$slices", Some(mover))
     def rowsOf(df: DataFrame) = df.as[AsofStreamRow]
     val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
       "state_single" -> (src => Streams.latestPurchaseAsof(rowsOf(src))),
-      "state_epoch" -> (src => EpochAsof.latestPurchaseAsofEpoch(rowsOf(src), widthSec,
-        streaming = true, streamJoinMinGroup = hybridMinGroup)),
       "buf_single" -> (src => Streams.latestPurchaseAsofBuffered(
-        rowsOf(src).withWatermark("ts", wmDelay), streaming = true)),
-      "buf_epoch" -> (src => EpochAsof.latestPurchaseAsofBufferedEpoch(
-        rowsOf(src).withWatermark("ts", wmDelay), widthSec, hybridMinGroup)))
+        rowsOf(src).withWatermark("ts", wmDelay), streaming = true)))
     val picked = configs.fold(ops)(cs => cs.map(c => c -> ops.toMap.getOrElse(c,
       sys.error(s"unknown asof config $c: expected ${ops.map(_._1).mkString(",")}"))))
     Probe("asof", dir,

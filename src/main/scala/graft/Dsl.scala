@@ -73,11 +73,6 @@ object Dsl {
   val chargeSumSql: String =
     s"cast(sum($chargeNanoSql) as double) / 1000000.0"
 
-  /** Deterministic mean: exact double sum (cents-backed) / count. Double
-    * division of identical operands is identical in both engines. */
-  def moneyAvg(c: Column): Column = moneySum(c) / count(lit(1))
-  def moneyAvgSql(col: String): String = s"${moneySumSql(col)} / count(*)"
-
   /** Engine-identical 6dp canonicalization for reported double columns.
     *
     * Why not native `round(x, 6)`: the two engines round DIFFERENT values.

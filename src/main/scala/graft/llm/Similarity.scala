@@ -526,17 +526,14 @@ object Similarity {
     * query SAMPLE (here the fixture's whole query set), never the corpus:
     * the exact pass costs what one brute-force scan costs, amortized over
     * every index rebuild. */
-  /** [[withRecall]] unless disabled (`graft.ann.recall=0` system property,
-    * or `SPARK_GRAFT_ANN_RECALL=0`): the audit runs by default (it is the
-    * §2 contract for the ANN rows and what the driver's row dump sees), but
-    * a timing run disables it so the ANN operators' measured cost is the
-    * ANN path alone, not ANN + the brute-force scan the index exists to
-    * avoid. Bench sets the system property in-process; Verify never does. */
-  def maybeWithRecall(ann: DataFrame, s: SparkSession, d: String, k: Int = 5): DataFrame = {
-    val off = sys.props.get("graft.ann.recall").orElse(
-      sys.env.get("SPARK_GRAFT_ANN_RECALL")).contains("0")
-    if (off) ann else withRecall(ann, s, d, k)
-  }
+  /** [[withRecall]] unless disabled (`graft.ann.recall=0` system property):
+    * the audit runs by default (it is the §2 contract for the ANN rows and
+    * what Verify's row dump holds), but a timing run disables it so the
+    * ANN operators' measured cost is the ANN path alone, not ANN + the
+    * brute-force scan the index exists to avoid. Bench sets the system
+    * property in-process; Verify never does. */
+  def maybeWithRecall(ann: DataFrame, s: SparkSession, d: String, k: Int = 5): DataFrame =
+    if (sys.props.get("graft.ann.recall").contains("0")) ann else withRecall(ann, s, d, k)
 
   def withRecall(ann: DataFrame, s: SparkSession, d: String, k: Int = 5): DataFrame = {
     val exact = simsearchTopk(s, d)

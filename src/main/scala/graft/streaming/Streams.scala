@@ -39,11 +39,9 @@ case class AsofStreamRow(ts: java.sql.Timestamp, user_id: Long, event_id: Long,
   * the dim row id (tiebreak). Monotone — see [[LatestDimAsofProcessor]]. */
 case class LastDimState(ts_us: Long, pid: Long)
 
-/** The two primitives every as-of state site shares, in ONE place (round-16
-  * review: three verbatim copies of each had crept in across the
-  * single-level, buffered, and epoch-keyed processors — a future fix to
-  * either would have had to land in lockstep at every site or the
-  * spellings' equality contract silently diverges). */
+/** The two primitives both as-of state sites share, in ONE place (the
+  * in-order and buffered processors must order and advance state
+  * identically, or the spellings' equality contract silently diverges). */
 object LastDimState {
   /** µs since epoch. getTime already includes the millisecond part of
     * nanos; add back the sub-millisecond microseconds so µs-precision
@@ -144,7 +142,7 @@ class LatestDimAsofProcessor(ttlMs: Option[Long] = None)
   * mode, and Spark forbids TTL outside ProcessingTime mode, so the state
   * here is TTL-less; horizon-bounded buffering is the expiry story. */
 /** Dev-only master switch for the streaming flush diagnostics (the per-run
-  * rewrite/read/cleanup counters below and in [[EpochBufferedAsofProcessor]]).
+  * rewrite/read counters below).
   * OFF by default (round-17 ADVICE: the production flush path should not pay
   * a shared-map access per key per batch, and the per-run entries are never
   * evicted) — StreamingSpec flips it on for its delta-asserts; a deployment
@@ -640,11 +638,12 @@ object Streams {
       .as[AsofStreamRow]
   }
 
-  /** The two-level-key skew escape of [[EpochAsof]] has the same contract
-    * and oracle, but a hot user's stream processes in parallel across epochs
-    * (the round-15 hot-key probe measured this single-level spelling at 2.6×
-    * on a 50%-hot key; BASELINE.md). A caller whose key histogram needs it
-    * calls [[EpochAsof.latestPurchaseAsofEpoch]] directly. */
+  /** A hot key serializes its rows through one task per micro-batch. On a
+    * live stream with a 50%-hot key this single-level spelling measured
+    * 1.15× wall (in-order) and [[latestPurchaseAsofBuffered]] 1.88×, at
+    * 1.6M hot rows per batch; the hot task's peak memory grows with the
+    * per-batch hot volume (184.5 MB there, against a 21.0 MB uniform
+    * floor). BASELINE.md, round 17. */
   val streamAsofState: Q = (s, d) =>
     withBatchTws(s)(latestPurchaseAsof(asofStreamRows(s, d)))
 

@@ -26,9 +26,10 @@ class StreamingSpec extends SparkSpec {
   private val RocksDbProvider = "spark.sql.streaming.stateStore.providerClass" ->
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  // the per-run flush counters this suite delta-asserts are OFF by default
-  // (round-18: production flush paths no longer touch the shared maps) —
-  // opt in for the whole suite; harmless to leave on for the JVM's lifetime
+  // BufferedAsofProcessor's per-run rewrite/read counters, which this suite
+  // delta-asserts, are OFF by default (production flush paths do not touch
+  // the shared maps) — opt in for the whole suite; harmless to leave on for
+  // the JVM's lifetime
   graft.streaming.StreamDiag.enabled = true
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
@@ -480,72 +481,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("epoch-buffered as-of: out-of-order rows across micro-batches resolve in-epoch AND via the boundary prefix") {
-    // The streaming spelling of the epoch escape for the OUT-OF-ORDER
-    // family (SURVEY open edge (a)): EpochBufferedAsofProcessor buffers per
-    // (user, epoch) until the watermark passes, then chains into the same
-    // BoundaryResolveProcessor. Width 600 s splits the fixture below into
-    // epoch A (10:00-10:10, holds dim 100) and epoch B (10:10-10:20):
-    // fact 2 @10:10:30 precedes epoch B's first dim → must resolve via the
-    // cross-epoch PREFIX (dim 100); fact 1 @10:15 follows the OUT-OF-ORDER
-    // dim 101 @10:11 → must resolve in-epoch — the in-order epoch spelling
-    // would have answered 100 for it.
-    implicit val sq = spark.sqlContext
-    import graft.streaming.{AsofStreamRow, EpochAsof}
-    withConf(RocksDbProvider) {
-      val mem = MemoryStream[AsofStreamRow]
-      val q = EpochAsof.latestPurchaseAsofBufferedEpoch(
-          mem.toDS().withWatermark("ts", "30 minutes"), widthSec = 600L)
-        .writeStream.format("memory").queryName("asof_buf_epoch_t")
-        .outputMode(OutputMode.Append()).start()
-      def dim(t: String, u: Long, id: Long) =
-        AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
-      def fact(t: String, u: Long, id: Long) =
-        AsofStreamRow(ts(t), u, id, is_dim = false, "view")
-      def table() = spark.table("asof_buf_epoch_t").collect()
-        .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-        .toMap
-      try {
-        // batch 1: epoch-A dim + a LATER epoch-B fact; user 9 moves the
-        // watermark. wm after batch 1 = 09:50 → nothing finalizes.
-        mem.addData(
-          dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:15:00", 1, 1),
-          fact("2024-01-01 10:20:00", 9, 90))
-        q.processAllAvailable()
-        assert(!table().contains(1L), s"fact 1 must still be buffered: ${table()}")
-        // batch 2: the OUT-OF-ORDER epoch-B dim (10:11) and the pre-dim
-        // epoch-B fact (10:10:30), plus the mover. Eviction wm reaches 10:20.
-        mem.addData(
-          dim("2024-01-01 10:11:00", 1, 101), fact("2024-01-01 10:10:30", 1, 2),
-          fact("2024-01-01 10:50:00", 9, 91))
-        q.processAllAvailable()
-        // batch 3: mover only — remaining epoch-B rows drain on timers.
-        mem.addData(fact("2024-01-01 11:30:00", 9, 92))
-        q.processAllAvailable()
-        val got = table()
-        assert(got.get(1L) === Some(Some(101L)),
-          s"fact 1 must see the out-of-order in-epoch dim 101: $got")
-        assert(got.get(2L) === Some(Some(100L)),
-          s"fact 2 precedes epoch B's dims — boundary prefix must answer 100: $got")
-        mem.addData(fact("2024-01-01 12:00:00", 9, 93))
-        q.processAllAvailable()
-        assert(table().get(90L) === Some(None), s"fact 90 has no dim: ${table()}")
-      } finally q.stop()
-    }
-  }
-
-  test("epoch-buffered as-of: EpochAsof batch twin equals the registered operator") {
-    // the epoch escape's batch twin is the same exact as-of for both family
-    // members — batch mode flushes everything — so a caller reaching for
-    // the epoch spelling gets the registered buffered operator's rows
-    val base = Streams.streamAsofBuffered(spark, sfDir).collect().toSeq
-      .sortBy(_.getLong(0))
-    val epoch = withBatchTwsForTest(graft.streaming.EpochAsof.latestPurchaseAsofEpoch(
-        asofRows(sfDir), 3600L))
-      .collect().toSeq.sortBy(_.getLong(0))
-    assert(base.nonEmpty && base == epoch)
-  }
-
   test("buffered as-of: a batch that flushes nothing performs NO buffer rewrite (write amplification)") {
     // Round-15 fix (r14 verdict finding #1): flush() used to re-put the
     // whole ListState buffer every micro-batch even when the watermark
@@ -653,137 +588,6 @@ class StreamingSpec extends SparkSpec {
         assert(BufferedAsofProcessor.stateRewrites(qA.runId) === 0L,
           "query A never flushed — B's concurrent rewrites must not bleed into A")
       } finally { qA.stop(); qB.stop() }
-    }
-  }
-
-  test("epoch-buffered as-of: a watermark past the epoch end CLEARS the epochDim state (cleanup timer)") {
-    // Round-17 (r16 ADVICE, medium): the (user, epoch) key space grows with
-    // elapsed time and TTL is structurally unavailable under EventTime, so
-    // each key arms a cleanup timer at its epoch's end + 1 ms that drains
-    // the buffer and drops the epochDim cell. Pin mechanically (per-run
-    // cleanup counter) AND behaviorally (output still exact).
-    implicit val sq = spark.sqlContext
-    import graft.streaming.{AsofStreamRow, EpochAsof, EpochBufferedAsofProcessor}
-    withConf(RocksDbProvider) {
-      val mem = MemoryStream[AsofStreamRow]
-      val q = EpochAsof.latestPurchaseAsofBufferedEpoch(
-          mem.toDS().withWatermark("ts", "10 minutes"), widthSec = 600L)
-        .writeStream.format("memory").queryName("asof_buf_epoch_gc")
-        .outputMode(OutputMode.Append()).start()
-      def dim(t: String, u: Long, id: Long) =
-        AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
-      def fact(t: String, u: Long, id: Long) =
-        AsofStreamRow(ts(t), u, id, is_dim = false, "view")
-      def table() = spark.table("asof_buf_epoch_gc").collect()
-        .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-        .toMap
-      try {
-        // epoch A (10:00-10:10) gets a dim + a fact; user 9 keeps moving the
-        // watermark. Cleanup for (1, epochA) is armed at 10:10:00.001.
-        mem.addData(
-          dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:05:00", 1, 1),
-          fact("2024-01-01 10:15:00", 9, 90))
-        q.processAllAvailable()
-        assert(EpochBufferedAsofProcessor.stateCleanups(q.runId) === 0L,
-          "watermark has not reached epoch A's end yet")
-        // movers push the eviction watermark past 10:10:00.001 → epoch A's
-        // rows drain and its epochDim cell is CLEARED by the fired timer
-        mem.addData(fact("2024-01-01 10:25:00", 9, 91))
-        q.processAllAvailable()
-        mem.addData(fact("2024-01-01 10:40:00", 9, 92))
-        q.processAllAvailable()
-        assert(EpochBufferedAsofProcessor.stateCleanups(q.runId) >= 1L,
-          "epoch A's epochDim cell must be cleared once the watermark passes its end")
-        val got = table()
-        assert(got.get(1L) === Some(Some(100L)),
-          s"fact 1 must have drained with its in-epoch dim before cleanup: $got")
-        // a LATER epoch for the same user still works after the cleanup: the
-        // boundary prefix lives in pass 2 (per-user), untouched by pass-1 GC
-        mem.addData(fact("2024-01-01 10:31:00", 1, 2))
-        q.processAllAvailable()
-        mem.addData(fact("2024-01-01 11:30:00", 9, 93))
-        q.processAllAvailable()
-        mem.addData(fact("2024-01-01 12:30:00", 9, 94))
-        q.processAllAvailable()
-        assert(table().get(2L) === Some(Some(100L)),
-          s"epoch-C fact must still resolve via the per-user boundary prefix: ${table()}")
-      } finally q.stop()
-    }
-  }
-
-  test("epoch-buffered as-of: restart recovery — BOTH chained state stores resume from the checkpoint") {
-    // Round-17 (r16 verdict #5): the single-operator buffered as-of has
-    // restart coverage; the epoch escape is TWO chained transformWithState
-    // operators whose stores must recover together — pass 1's per-(user,
-    // epoch) buffer/epochDim/timers AND pass 2's per-user boundary prefix.
-    // The pin: a fact that arrives AFTER the restart and precedes its
-    // epoch's dims must resolve via a prefix value written to pass-2 state
-    // BEFORE the restart.
-    implicit val sq = spark.sqlContext
-    import graft.streaming.{AsofStreamRow, EpochAsof}
-    withConf(RocksDbProvider) {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_epochasof").toString
-      val mem = MemoryStream[AsofStreamRow]
-      def dim(t: String, u: Long, id: Long) =
-        AsofStreamRow(ts(t), u, id, is_dim = true, "purchase")
-      def fact(t: String, u: Long, id: Long) =
-        AsofStreamRow(ts(t), u, id, is_dim = false, "view")
-      val seen = new scala.collection.mutable.ArrayBuffer[(Long, Option[Long])]
-      def start() = EpochAsof.latestPurchaseAsofBufferedEpoch(
-          mem.toDS().withWatermark("ts", "30 minutes"), widthSec = 600L)
-        .writeStream
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-          seen.synchronized {
-            seen ++= df.collect().map(r =>
-              (r.getLong(0), if (r.isNullAt(3)) None else Some(r.getLong(3))))
-          }; ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append()).start()
-      val q1 = start()
-      try {
-        // epoch A (10:00-10:10) fully drains BEFORE the restart: the mover
-        // lifts the eviction watermark to 10:15 > epoch A's end, so fact 11
-        // emits (dim 100), epoch A's summary merges into the PASS-2 prefix —
-        // the state the post-restart assert depends on — its cleanup timer
-        // fires (the round-17 GC path runs pre-checkpoint too), and the
-        // epoch-B fact 12 drains via the prefix; the epoch-C fact 13 stays
-        // BUFFERED in pass-1 state across the restart
-        mem.addData(
-          dim("2024-01-01 10:00:00", 1, 100), fact("2024-01-01 10:05:00", 1, 11),
-          fact("2024-01-01 10:12:00", 1, 12), fact("2024-01-01 10:25:00", 1, 13),
-          fact("2024-01-01 10:45:00", 9, 90))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      q1.awaitTermination()
-      val pre = seen.synchronized(seen.toMap)
-      assert(pre.get(11L) === Some(Some(100L)), s"epoch-A fact pre-restart: $pre")
-      assert(pre.get(12L) === Some(Some(100L)), s"epoch-B prefix fact pre-restart: $pre")
-      assert(!pre.contains(13L), s"epoch-C fact must still be buffered: $pre")
-      // while the query is DOWN: an out-of-order epoch-C dim OLDER than the
-      // buffered fact 13, a pre-dim epoch-C fact 15, and a watermark mover
-      mem.addData(
-        dim("2024-01-01 10:21:00", 1, 102), fact("2024-01-01 10:20:30", 1, 15),
-        fact("2024-01-01 11:30:00", 9, 91))
-      val q2 = start()
-      try {
-        q2.processAllAvailable()
-        mem.addData(fact("2024-01-01 12:30:00", 9, 92))
-        q2.processAllAvailable()
-        val got = seen.synchronized(seen.toMap)
-        // recovered pass-1 buffer + post-restart dim: fact 13 (ts 10:25) must
-        // see dim 102 (ts 10:21) that arrived across the restart
-        assert(got.get(13L) === Some(Some(102L)),
-          s"buffered fact must see the post-restart in-epoch dim: $got")
-        // THE recovery pin: fact 15 precedes every epoch-C dim, so it resolves
-        // from the per-user boundary prefix — dim 100, written to pass-2
-        // state before the restart and recovered from the checkpoint
-        assert(got.get(15L) === Some(Some(100L)),
-          s"pre-dim fact must resolve via the RECOVERED boundary prefix: $got")
-      } finally {
-        q2.stop()
-        deleteDir(ckpt)
-      }
     }
   }
 
@@ -902,43 +706,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("epoch-buffered as-of: randomized fully-shuffled stream equals the exact as-of") {
-    // the same fully-shuffled torture fixture, through the EPOCH-keyed
-    // buffered spelling with hourly epochs (24 epochs/user over the one-day
-    // span — both the in-epoch and the boundary-prefix path carry real
-    // rows under arbitrary arrival order). A different seed than the
-    // single-level test so the two pins don't share a fixture.
-    implicit val sq = spark.sqlContext
-    import graft.streaming.{AsofStreamRow, EpochAsof}
-    withConf(RocksDbProvider) {
-      val rows = randomAsofRows(20260816L)
-      val expected = exactAsof(rows)
-      assert(expected.values.exists(_.isDefined) && expected.values.exists(_.isEmpty),
-        "fixture must exercise both matched and before-first-dim facts")
-      val rnd = new scala.util.Random(20260816L)
-      val shuffled = rnd.shuffle(rows)
-      val mover = AsofStreamRow(new Timestamp(
-        ts("2024-01-01 00:00:00").getTime + 6L * 24 * 3600 * 1000L),
-        999L, 999999L, is_dim = false, "view")
-      val mem = MemoryStream[AsofStreamRow]
-      val q = EpochAsof.latestPurchaseAsofBufferedEpoch(
-          mem.toDS().withWatermark("ts", "2 days"), widthSec = 3600L)
-        .writeStream.format("memory").queryName("asof_rand_epoch_t")
-        .outputMode(OutputMode.Append()).start()
-      try {
-        shuffled.grouped(45).foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-        mem.addData(mover)
-        q.processAllAvailable()
-        val got = spark.table("asof_rand_epoch_t").where(col("user_id") =!= 999L)
-          .collect()
-          .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-          .toMap
-        assert(got == expected,
-          s"diff: ${(got.toSet diff expected.toSet) ++ (expected.toSet diff got.toSet)}")
-      } finally q.stop()
-    }
-  }
-
   test("buffered as-of batch twin equals the in-order batch twin (same oracle)") {
     // both registrations compute the exact event-time as-of in batch mode;
     // row-for-row equality here plus stream_asof_state's DuckDB hash pass
@@ -948,13 +715,29 @@ class StreamingSpec extends SparkSpec {
     assert(a.nonEmpty && a == b)
   }
 
-  test("epoch-keyed as-of: skewed in-order stream equals the single-level spelling and the exact as-of") {
-    // round 16 (verdict item 1): the two-level-key skew escape must compute
-    // EXACTLY the single-level as-of on the workload it exists for — one hot
-    // key owning ~50% of the stream — across micro-batch boundaries that cut
-    // through epochs mid-flight
+  /** Replays `chunks` as micro-batches through `mkQuery` into a memory sink
+    * named `name` and reads back event_id -> last_purchase_id. */
+  private def replayAsof(name: String, chunks: Seq[Seq[graft.streaming.AsofStreamRow]])(
+      mkQuery: org.apache.spark.sql.Dataset[graft.streaming.AsofStreamRow] => org.apache.spark.sql.DataFrame)
+      : Map[Long, Option[Long]] = {
     implicit val sq = spark.sqlContext
-    import graft.streaming.{AsofStreamRow, EpochAsof}
+    val mem = MemoryStream[graft.streaming.AsofStreamRow]
+    val q = mkQuery(mem.toDS())
+      .writeStream.format("memory").queryName(name)
+      .outputMode(OutputMode.Append()).start()
+    try {
+      chunks.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+      spark.table(name).collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
+        .toMap
+    } finally q.stop()
+  }
+
+  test("in-order as-of: a skewed (67%-hot) stream across micro-batches equals the exact as-of") {
+    // one hot key owns most of the stream, so its rows go through one task
+    // per micro-batch; the state it carries across batches must still give
+    // the exact as-of
+    import graft.streaming.AsofStreamRow
     withConf(RocksDbProvider) {
       val rnd = new scala.util.Random(20260816L)
       val base = ts("2024-01-01 00:00:00").getTime
@@ -966,58 +749,28 @@ class StreamingSpec extends SparkSpec {
       // hot user 1 = 300 of 450 rows (~67%); five cold users share the rest
       val rows = ((1 to 300).map(mk(1L, _)) ++
         (for (u <- 2L to 6L; i <- 1 to 30) yield mk(u, i))).toVector
-      def exactAsof(rs: Seq[AsofStreamRow]): Map[Long, Option[Long]] =
-        rs.groupBy(_.user_id).values.flatMap { users =>
-          var cur: Option[(Long, Long)] = None
-          users.sortBy(r => (r.ts.getTime, if (r.is_dim) 0 else 1, r.event_id))
-            .flatMap { r =>
-              if (r.is_dim) {
-                if (cur.forall(c => c._1 < r.ts.getTime ||
-                                    (c._1 == r.ts.getTime && c._2 < r.event_id)))
-                  cur = Some((r.ts.getTime, r.event_id))
-                None
-              } else Some(r.event_id -> cur.map(_._2))
-            }
-        }.toMap
       val expected = exactAsof(rows)
       assert(expected.values.exists(_.isDefined) && expected.values.exists(_.isEmpty),
         "fixture must exercise both matched and before-first-dim facts")
-      // the in-order contract both spellings share: arrival order = event-time
-      // order; batches of 60 cut through the hourly epochs mid-flight, so
-      // cross-batch epoch state AND cross-epoch boundary state both carry
+      // the in-order contract: arrival order = event-time order; batches of
+      // 60 rows make the hot key's state carry across micro-batches
       val inOrder = rows.sortBy(r => (r.ts.getTime, if (r.is_dim) 0 else 1, r.event_id))
-      def run(name: String)(mkQuery: org.apache.spark.sql.Dataset[AsofStreamRow] => org.apache.spark.sql.DataFrame): Map[Long, Option[Long]] = {
-        val mem = MemoryStream[AsofStreamRow]
-        val q = mkQuery(mem.toDS())
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append()).start()
-        try {
-          inOrder.grouped(60).foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-          spark.table(name).collect()
-            .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-            .toMap
-        } finally q.stop()
-      }
-      val single = run("asof_skew_single")(ds => Streams.latestPurchaseAsof(ds))
-      val epoch = run("asof_skew_epoch")(ds =>
-        EpochAsof.latestPurchaseAsofEpoch(ds, widthSec = 3600L, streaming = true))
-      assert(single == expected, "single-level spelling must be the exact as-of")
-      assert(epoch == expected,
-        s"epoch spelling diverged: ${(epoch.toSet diff expected.toSet) ++ (expected.toSet diff epoch.toSet)}")
+      val got = replayAsof("asof_skew_single", inOrder.grouped(60).toSeq)(ds =>
+        Streams.latestPurchaseAsof(ds))
+      assert(got == expected,
+        s"diff: ${(got.toSet diff expected.toSet) ++ (expected.toSet diff got.toSet)}")
     }
   }
 
-  test("epoch-keyed as-of: boundary resolution, inclusive ties, and late dims match the single-level spelling") {
-    implicit val sq = spark.sqlContext
-    import graft.streaming.{AsofStreamRow, EpochAsof}
+  test("in-order as-of: a dim-free gap, inclusive ties, and late dims across micro-batches") {
+    import graft.streaming.AsofStreamRow
     withConf(RocksDbProvider) {
       def dim(t: String, id: Long) = AsofStreamRow(ts(t), 1, id, is_dim = true, "purchase")
       def fact(t: String, id: Long) = AsofStreamRow(ts(t), 1, id, is_dim = false, "view")
-      // batch 1: fact before any dim (null); a dim; batch 2: a fact two
-      // epochs later (60 s epochs — crosses empty epochs, pure boundary
-      // resolve); same-ts dim+fact (inclusive); batch 3: a LATE dim that
-      // advances the monotone state and one that doesn't, then facts reading
-      // the result — the monotone-ignore contract both spellings share
+      // batch 1: fact before any dim (null); a dim; batch 2: a fact 90
+      // minutes later with no dim between (the state carries); same-ts
+      // dim+fact (inclusive); batch 3: a LATE dim that advances the monotone
+      // state and one that doesn't, then facts reading the result
       val batches = Vector(
         Vector(fact("2024-01-01 09:00:00", 1), dim("2024-01-01 10:00:00", 100)),
         Vector(fact("2024-01-01 11:30:05", 2),
@@ -1026,78 +779,30 @@ class StreamingSpec extends SparkSpec {
                dim("2024-01-01 12:30:00", 105), fact("2024-01-01 14:00:00", 5)),
         Vector(dim("2024-01-01 11:00:00", 90), fact("2024-01-01 15:00:00", 6)))
       // fact 4 (13:00) sees 105: the dim(12:30) arrives in the SAME batch and
-      // both spellings sort a batch by event time before applying it
+      // the processor sorts a batch by event time before applying it
       val expected = Map(1L -> None, 2L -> Some(100L), 3L -> Some(110L),
         4L -> Some(105L), 5L -> Some(105L), 6L -> Some(105L))
-      def run(name: String)(mkQuery: org.apache.spark.sql.Dataset[AsofStreamRow] => org.apache.spark.sql.DataFrame): Map[Long, Option[Long]] = {
-        val mem = MemoryStream[AsofStreamRow]
-        val q = mkQuery(mem.toDS())
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append()).start()
-        try {
-          batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-          spark.table(name).collect()
-            .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-            .toMap
-        } finally q.stop()
-      }
-      val single = run("asof_edge_single")(ds => Streams.latestPurchaseAsof(ds))
-      val epoch = run("asof_edge_epoch")(ds =>
-        EpochAsof.latestPurchaseAsofEpoch(ds, widthSec = 60L, streaming = true))
-      assert(single == expected, s"single: $single")
-      assert(epoch == expected, s"epoch: $epoch")
+      val got = replayAsof("asof_edge_single", batches)(ds => Streams.latestPurchaseAsof(ds))
+      assert(got == expected, s"single: $got")
     }
   }
 
-  test("epoch-keyed as-of: relational batch boundary equals the chained-tws spelling") {
-    // the batch twin resolves boundaries with a window over summaries
-    // (resolved facts bypass the second pass); the streaming spelling keeps
-    // the chained stateful processors — both must compute identical rows
-    // from the same pass-1 output (run here in batch, where both work)
-    import graft.streaming.EpochAsof
-    val rows = asofRows(sfDir)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) ->
-        (r.getLong(1), r.getString(2), if (r.isNullAt(3)) None else Some(r.getLong(3))))
-        .toMap
-    val viaWindow = canon(withBatchTwsForTest(
-      EpochAsof.latestPurchaseAsofEpoch(rows, widthSec = 3600L)))
-    val viaTws = canon(withBatchTwsForTest(
-      EpochAsof.latestPurchaseAsofEpoch(rows, widthSec = 3600L, streaming = true)))
-    assert(viaWindow.nonEmpty && viaWindow == viaTws)
-  }
-
-  /** Batch tws needs the RocksDB provider + state-store coordinator — reuse
-    * the registrations' scoped bootstrap (round-16 review: this was the
-    * third verbatim copy of the save/bootstrap/restore block). */
-  private def withBatchTwsForTest(body: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    Streams.scopedBatchTws(spark)(body.localCheckpoint())
-
-  /** The as-of family's input rows over a fixture's events: purchases are
-    * the dims, every other event a fact. */
-  private def asofRows(d: String) = {
-    import spark.implicits._
-    graft.Tables.events(spark, d)
-      .select(col("ts"), col("user_id"), col("event_id"),
-              (col("event_type") === "purchase").as("is_dim"), col("event_type"))
-      .as[graft.streaming.AsofStreamRow]
-  }
-
-  test("epoch as-of STREAMING spellings over the fixture equal the batch twin (probe protocol in miniature)") {
-    // Round-17 (r16 verdict #1): `graft.Dev stream asof` measures the chained
-    // streaming spellings at 64× as ts-ordered micro-batch replays whose
-    // output checksum must equal the batch-twin exact as-of; this is the
-    // same protocol at spec scale on the REAL fixture — sf0.001 events
-    // replayed in ts-ordered chunks through both chained spellings,
-    // equality-pinned against the relational batch twin the registrations
-    // ship (itself oracle-checked at sf0.01).
-    implicit val sq = spark.sqlContext
-    import graft.streaming.{AsofStreamRow, EpochAsof}
+  test("as-of streaming spellings over the fixture equal the registered batch twin (probe protocol in miniature)") {
+    // `graft.Dev stream asof` replays the k× events through `state_single`
+    // and `buf_single` as ts-ordered micro-batches whose output must equal
+    // the batch-twin exact as-of; this is the same protocol at spec scale
+    // on the REAL fixture — sf0.001 events replayed in ts-ordered chunks,
+    // pinned against the registered `stream_asof_state` (itself
+    // oracle-checked at sf0.01)
+    import graft.streaming.AsofStreamRow
+    val expected = Streams.streamAsofState(spark, sfDir).collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
+      .toMap
     withConf(RocksDbProvider) {
-      // ORDER BY MICROSECONDS (round-17 review): the fixture carries sub-ms
-      // timestamps and the processors' state ordering is µs-precision — a
-      // ms-granular sort could place a same-ms dim before an earlier-by-µs
-      // fact across a chunk boundary, a replay-order artifact
+      // ORDER BY MICROSECONDS: the fixture carries sub-ms timestamps and the
+      // processors' state ordering is µs-precision — a ms-granular sort
+      // could place a same-ms dim before an earlier-by-µs fact across a
+      // chunk boundary, a replay-order artifact
       val rows = Tables.events(spark, sfDir)
         .select(col("ts"), col("user_id"), col("event_id"),
                 (col("event_type") === "purchase").as("is_dim"), col("event_type"))
@@ -1105,101 +810,19 @@ class StreamingSpec extends SparkSpec {
         .sortBy(r => (graft.streaming.LastDimState.micros(r.ts),
                       if (r.is_dim) 0 else 1, r.event_id))
       assert(rows.size >= 500, "fixture must be non-trivial")
-      val expected = withBatchTwsForTest(
-          EpochAsof.latestPurchaseAsofEpoch(spark.createDataset(rows), 3600L))
-        .collect()
-        .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-        .toMap
-      def run(name: String, chunks: Seq[Seq[AsofStreamRow]])(
-          mkQuery: org.apache.spark.sql.Dataset[AsofStreamRow] => org.apache.spark.sql.DataFrame)
-          : Map[Long, Option[Long]] = {
-        val mem = MemoryStream[AsofStreamRow]
-        val q = mkQuery(mem.toDS())
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append()).start()
-        try {
-          chunks.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-          spark.table(name).collect()
-            .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-            .toMap
-        } finally q.stop()
-      }
-      val chunks = rows.grouped(200).map(_.toSeq).toSeq
+      val chunks = rows.grouped(200).toSeq
       // far-future mover fact drains the buffered spelling's watermark tail
       val mover = AsofStreamRow(
         new Timestamp(rows.last.ts.getTime + 90L * 24 * 3600 * 1000),
         -424242L, -1L, is_dim = false, "view")
-      val inOrder = run("fix_epoch_state", chunks)(ds =>
-        EpochAsof.latestPurchaseAsofEpoch(ds, widthSec = 3600L, streaming = true))
+      val inOrder = replayAsof("fix_asof_state", chunks)(ds => Streams.latestPurchaseAsof(ds))
       assert(inOrder == expected,
-        s"chained in-order spelling diverged on ${(inOrder.toSet diff expected.toSet).take(3)}")
-      val buffered = run("fix_epoch_buf", chunks :+ Seq(mover))(ds =>
-        EpochAsof.latestPurchaseAsofBufferedEpoch(
-          ds.withWatermark("ts", "60 seconds"), widthSec = 3600L))
+        s"in-order spelling diverged on ${(inOrder.toSet diff expected.toSet).take(3)}")
+      val buffered = replayAsof("fix_asof_buf", chunks :+ Vector(mover))(ds =>
+        Streams.latestPurchaseAsofBuffered(ds.withWatermark("ts", "60 seconds"), streaming = true))
       assert((buffered - mover.event_id) == expected,
-        s"chained buffered spelling diverged on ${((buffered - mover.event_id).toSet diff expected.toSet).take(3)}")
-      // round-18 STREAMING hybrid (r17 verdict #2): threshold 1 forces every
-      // unresolved fact through the marker + pass-2b join path — the
-      // three-operator chain must still equal the batch twin for BOTH
-      // spellings
-      val inOrderH = run("fix_epoch_state_h", chunks)(ds =>
-        EpochAsof.latestPurchaseAsofEpoch(ds, widthSec = 3600L, streaming = true,
-          streamJoinMinGroup = 1L))
-      assert(inOrderH == expected,
-        s"hybrid in-order spelling diverged on ${(inOrderH.toSet diff expected.toSet).take(3)}")
-      val bufferedH = run("fix_epoch_buf_h", chunks :+ Seq(mover))(ds =>
-        EpochAsof.latestPurchaseAsofBufferedEpoch(
-          ds.withWatermark("ts", "60 seconds"), widthSec = 3600L, streamJoinMinGroup = 1L))
-      assert((bufferedH - mover.event_id) == expected,
-        s"hybrid buffered spelling diverged on ${((bufferedH - mover.event_id).toSet diff expected.toSet).take(3)}")
+        s"buffered spelling diverged on ${((buffered - mover.event_id).toSet diff expected.toSet).take(3)}")
     }
-  }
-
-  test("epoch-keyed as-of: EpochAsof batch twin equals the registered operator") {
-    // the two-level spelling is a library a skewed caller invokes directly;
-    // it must compute the registered single-level operator's oracle rows
-    val base = Streams.streamAsofState(spark, sfDir).collect().toSeq
-      .sortBy(_.getLong(0))
-    val epoch = withBatchTwsForTest(graft.streaming.EpochAsof.latestPurchaseAsofEpoch(
-        asofRows(sfDir), 3600L))
-      .collect().toSeq.sortBy(_.getLong(0))
-    assert(base.nonEmpty && base == epoch)
-  }
-
-  test("epoch-keyed as-of batch twin: both hybrid boundary routes compute the same rows") {
-    // the hybrid resolve routes unresolved (user, epoch) groups by size —
-    // inline-window below the threshold, marker+join at or above it. The
-    // threshold is cost-only: forcing EVERYTHING through the join path
-    // (threshold 1) must produce exactly the default's rows. A narrow epoch
-    // width (60 s) maximizes unresolved groups so both routes carry real
-    // rows.
-    import graft.streaming.EpochAsof
-    val rows = asofRows(sfDir)
-    // rowsOut is asserted alongside the map: the map keys by event_id, so a
-    // fact emitted through BOTH the inline and joined branches would dedup
-    // silently — the count catches duplicate emission (round-16 review)
-    def canon(df: org.apache.spark.sql.DataFrame) = {
-      val rows = df.collect()
-      rows.length -> rows.map(r => r.getLong(0) ->
-        (r.getLong(1), r.getString(2), if (r.isNullAt(3)) None else Some(r.getLong(3))))
-        .toMap
-    }
-    val (nDefault, viaDefault) = canon(withBatchTwsForTest(
-      EpochAsof.latestPurchaseAsofEpoch(rows, widthSec = 60L)))
-    assert(nDefault == viaDefault.size, "duplicate event_id in default route")
-    // threshold 1 = every group through the marker+join path; threshold 2 =
-    // MIXED regime (singleton groups inline, multi-fact groups joined) — the
-    // production hot-key shape where one user's window holds both markers
-    // and inline facts across epochs
-    Seq(1L, 2L).foreach { t =>
-      val (n, via) = canon(withBatchTwsForTest(
-        EpochAsof.latestPurchaseAsofEpoch(rows, widthSec = 60L, joinMinGroup = t)))
-      assert(n == nDefault && via == viaDefault,
-        s"hybrid route at threshold $t diverges (rows $n vs $nDefault)")
-    }
-    // and all match the single-level exact as-of
-    val (nExact, exact) = canon(withBatchTwsForTest(Streams.latestPurchaseAsof(rows)))
-    assert(nExact == nDefault && viaDefault == exact)
   }
 
   test("state TTL: a conf-driven TTL expires idle per-user state (processing time)") {

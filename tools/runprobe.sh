@@ -16,15 +16,15 @@
 # graft.Dev subcommands (arguments and env in Dev.scala's header):
 #   scale [k] [names]            recall [ks] [names]
 #   ivf <dir>... | --k K [--time]
-#   stream asof [k] [configs] [widthSec] [hybridMinGroup]   stream neardup [k]
+#   stream asof [k] [configs]    stream neardup [k]
 #   stream neardup-hot [c] [cap] [off,cap]    stream semdedup [k] [exact,default]
 #   plans <sfDir> | plans <sfDir> <outDir> <suffix> [names|ALL]
 #   profile <name> [passes]      bytes [ks]
 #
 # Usage:
-#   tools/runprobe.sh graft.Dev stream asof 64 state_epoch,buf_epoch
+#   tools/runprobe.sh graft.Dev stream asof 64 state_single,buf_single
 #   SPARK_GRAFT_SCALE_DIR=/tmp/gsp_evh SPARK_GRAFT_STREAM_SLICES=2 \
-#     tools/runprobe.sh graft.Dev stream asof 64 state_epoch
+#     tools/runprobe.sh graft.Dev stream asof 64 state_single
 #   GRAFT_CLASSES=/tmp/old/target/scala-2.13/classes \
 #     tools/runprobe.sh graft.Dev scale 64 llm_tfidf   # OLD binary of an A/B pair
 #
