@@ -24,7 +24,7 @@ object Bench {
     "join_inner_hash",   // shuffled equi join
     "join_broadcast",    // map-side dim join
     "join_multiway",     // 6-table Q5 shape: broadcast chain + fact joins
-    "join_asof",         // union+window as-of rewrite
+    "join_asof",         // merge as-of exec (custom Catalyst operator)
     "window_ranking",    // partitioned ranking window
     "topk_per_group",    // window + filter
     "sort_global",       // range-partitioned total order (TeraSort lineage)

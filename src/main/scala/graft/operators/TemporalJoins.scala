@@ -2,17 +2,18 @@ package graft.operators
 
 import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.AsofJoin
 
 /** §2.3 time-series joins Spark has no built-in for (SURVEY.md §4.3, §7.4).
   *
   * `join_asof` — each click matched to the latest view of the same user at or
-  * before its timestamp. Spark rewrite: union-tag both sides, one window pass
-  * per user ordered by time carrying `last(view_id, ignoreNulls)` forward,
-  * keep the click rows. This is a single sort-partitioned exchange (SMJ-class
-  * cost), NOT a range self-join — the shape that survives 100 TB. DuckDB
+  * before its timestamp, planned as the custom merge-as-of operator
+  * ([[graft.plans.AsofJoin.join]] → [[graft.plans.MergeAsofExec]]): each
+  * side hash-shuffles with its own columns, sorts by (user, ts), and one
+  * two-pointer merge holds one buffered view row per partition. No window
+  * buffer and no range self-join — the shape that survives 100 TB. DuckDB
   * validates it against its native ASOF JOIN.
   *
   * `join_interval` — events against an interval table. The tiny side is
@@ -23,31 +24,22 @@ import graft.Tables
 object TemporalJoins {
   type Q = (SparkSession, String) => DataFrame
 
-  val joinAsof: Q = (s, d) => {
+  /** Clicks LEFT as-of views on (user_id, ts), optionally nulling matches
+    * older than `toleranceUs`. The right side aliases every column: both
+    * sides scan the same events relation. */
+  private def clickViewAsof(s: SparkSession, d: String,
+                            toleranceUs: Option[Long]): DataFrame = {
     val ev = Tables.events(s, d)
-    val views = ev.where(col("event_type") === "view")
-      .select(col("user_id"), col("ts"),
-              lit(0).as("is_click"),
-              col("event_id").as("view_id"),
-              lit(null).cast("long").as("event_id"),
-              lit(null).cast("double").as("value"))
     val clicks = ev.where(col("event_type") === "click")
-      .select(col("user_id"), col("ts"),
-              lit(1).as("is_click"),
-              lit(null).cast("long").as("view_id"),
-              col("event_id"), col("value"))
-    // At equal ts the view sorts first (is_click 0 < 1), matching ASOF's
-    // inclusive `>=` bound; view_id breaks (impossible-here) exact ts ties.
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("is_click"),
-               coalesce(col("view_id"), lit(Long.MaxValue)))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    views.unionByName(clicks)
-      .withColumn("matched_view", last(col("view_id"), ignoreNulls = true).over(w))
-      .where(col("is_click") === 1)
-      .select(col("event_id"), col("user_id"), col("ts"),
-              col("matched_view").as("view_id"))
+      .select(col("event_id"), col("user_id"), col("ts"))
+    val views = ev.where(col("event_type") === "view")
+      .select(col("user_id").as("v_user_id"), col("ts").as("v_ts"),
+              col("event_id").as("view_id"))
+    AsofJoin.join(clicks, views, "user_id", "v_user_id", "ts", "v_ts", toleranceUs)
+      .select(col("event_id"), col("user_id"), col("ts"), col("view_id"))
   }
+
+  val joinAsof: Q = (s, d) => clickViewAsof(s, d, None)
 
   val joinAsofSql: String =
     """SELECT c.event_id, c.user_id, c.ts, v.event_id AS view_id
@@ -58,37 +50,11 @@ object TemporalJoins {
 
   /** As-of with a max-staleness tolerance: the latest view still counts
     * only within 1 hour of the click; older matches null out (LEFT
-    * semantics preserved). Same single union-tag window pass as
-    * [[joinAsof]] — the window additionally carries the matched view's
-    * timestamp forward, and the tolerance applies as one map-side
-    * conditional afterward. Because the as-of match is the LATEST
-    * candidate, post-filtering it equals "latest within the window" —
-    * no second window, no range join, same 100 TB shape. */
-  val joinAsofTolerance: Q = (s, d) => {
-    val ev = Tables.events(s, d)
-    val views = ev.where(col("event_type") === "view")
-      .select(col("user_id"), col("ts"),
-              lit(0).as("is_click"),
-              col("event_id").as("view_id"),
-              lit(null).cast("long").as("event_id"))
-    val clicks = ev.where(col("event_type") === "click")
-      .select(col("user_id"), col("ts"),
-              lit(1).as("is_click"),
-              lit(null).cast("long").as("view_id"),
-              col("event_id"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("is_click"),
-               coalesce(col("view_id"), lit(Long.MaxValue)))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    views.unionByName(clicks)
-      .withColumn("matched_view", last(col("view_id"), ignoreNulls = true).over(w))
-      .withColumn("matched_ts",
-        last(when(col("is_click") === 0, col("ts")), ignoreNulls = true).over(w))
-      .where(col("is_click") === 1)
-      .select(col("event_id"), col("user_id"), col("ts"),
-        when(unix_micros(col("ts")) - unix_micros(col("matched_ts")) <= 3600L * 1000000L,
-             col("matched_view")).as("view_id"))
-  }
+    * semantics preserved). The same merge as [[joinAsof]] applies the
+    * tolerance to its one current match: because the as-of match is the
+    * LATEST candidate, nulling a stale one equals "latest within the
+    * window". */
+  val joinAsofTolerance: Q = (s, d) => clickViewAsof(s, d, Some(3600L * 1000000L))
 
   val joinAsofToleranceSql: String =
     """SELECT c.event_id, c.user_id, c.ts,
@@ -97,39 +63,6 @@ object TemporalJoins {
       |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') v
       |  ON c.user_id = v.user_id AND c.ts >= v.ts
       |ORDER BY c.event_id""".stripMargin
-
-  /** [[joinAsof]] re-planned through the custom merge-as-of operator
-    * (SURVEY §4.3 option (b), added round 11): logical
-    * [[graft.plans.AsofJoin]] node → [[graft.plans.AsofJoinStrategy]]
-    * (via `spark.experimental.extraStrategies`, the public planner
-    * extension point) → [[graft.plans.MergeAsofExec]], a streaming
-    * two-pointer merge whose per-partition state beyond the sort is ONE
-    * buffered right row. Same DuckDB ASOF oracle and output columns as
-    * `join_asof`, so the driver hash-verifies the custom exec end to end;
-    * AsofJoinSpec additionally pins row-for-row equality with the window
-    * rewrite and the planned shape (MergeAsofExec + two sort exchanges,
-    * no window, no range join). */
-  val joinAsofMerge: Q = (s, d) => {
-    graft.plans.AsofJoinStrategy.register(s)
-    val ev = Tables.events(s, d)
-    val clicks = ev.where(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    // fresh aliases on EVERY right column: both sides scan the same events
-    // relation, and a custom binary node gets no analyzer self-join dedup,
-    // so the right side must carry its own attribute ids
-    val views = ev.where(col("event_type") === "view")
-      .select(col("user_id").as("v_user_id"), col("ts").as("v_ts"),
-              col("event_id").as("view_id"))
-    val lp = org.apache.spark.sql.graft.GraftSql.analyzed(clicks)
-    val rp = org.apache.spark.sql.graft.GraftSql.analyzed(views)
-    def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-             n: String) = p.output.find(_.name == n).get
-    org.apache.spark.sql.graft.GraftSql.ofRows(s,
-        graft.plans.AsofJoin(lp, rp,
-          attr(lp, "user_id"), attr(rp, "v_user_id"),
-          attr(lp, "ts"), attr(rp, "v_ts"), toleranceUs = None))
-      .select(col("event_id"), col("user_id"), col("ts"), col("view_id"))
-  }
 
   private val weekStarts: Seq[(String, LocalDate)] = {
     val origin = LocalDate.parse("2024-01-01")
@@ -215,7 +148,8 @@ object TemporalJoins {
 
   val queries: Map[String, Q] = Map(
     "join_asof" -> joinAsof,
-    "join_asof_merge" -> joinAsofMerge,
+    // the round-11 name of the merge-as-of operator, now the same kernel
+    "join_asof_merge" -> joinAsof,
     "join_asof_tolerance" -> joinAsofTolerance,
     "join_interval" -> joinInterval,
     "join_interval_bucketed" -> joinIntervalBucketed,

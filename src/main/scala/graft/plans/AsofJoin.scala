@@ -5,10 +5,13 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.graft.GraftSql
 
 /** As-of join as a first-class Catalyst operator — SURVEY §4.3 option (b),
-  * the "plan you'd want at 100×" spelling deferred since round 1.
+  * the one batch as-of kernel behind `join_asof`, `join_asof_tolerance`
+  * and `join_asof_merge`.
   *
   * Semantics (LEFT ASOF): every left row joins the LATEST right row with an
   * equal (non-null) key and `rightTime <= leftTime`, within an optional
@@ -16,22 +19,17 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * exactly DuckDB's `ASOF LEFT JOIN ... ON l.k = r.k AND l.t >= r.t`, which
   * is the oracle that validates the operator.
   *
-  * Why a custom node when the union+window rewrite (TemporalJoins.joinAsof)
-  * is already correct and oracle-green: the rewrite's one exchange carries
-  * BOTH sides' payload columns null-padded through the union, sort-buffers
-  * every view row inside the window frame, and evaluates a window function
-  * per row. The merge exec shuffles each side with only ITS OWN columns,
-  * then streams both sorted sides through a two-pointer merge holding
-  * exactly ONE buffered right row per partition — the textbook
-  * merge-as-of every time-series system implements, and the minimal-state
-  * shape at 100 TB (no window buffer, no null-padding amplification).
+  * Each side shuffles with only ITS OWN columns, then both sorted sides
+  * stream through a two-pointer merge holding exactly ONE buffered right
+  * row per partition — the textbook merge-as-of every time-series system
+  * implements: no window frame buffer, no null-padded union.
   *
   * Planner integration is the standard pair: a logical [[AsofJoin]] node
-  * built directly into the DataFrame (via the org.apache.spark.sql.graft
-  * bridge) and [[AsofJoinStrategy]] (registered through
-  * `spark.experimental.extraStrategies` — the public extension point)
-  * planning it as [[MergeAsofExec]]. EnsureRequirements then inserts the
-  * hash exchanges + per-partition sorts from the exec's declared
+  * built directly into the DataFrame by [[AsofJoin.join]] (via the
+  * org.apache.spark.sql.graft bridge) and [[AsofJoinStrategy]] (registered
+  * through `spark.experimental.extraStrategies` — the public extension
+  * point) planning it as [[MergeAsofExec]]. EnsureRequirements then inserts
+  * the hash exchanges + per-partition sorts from the exec's declared
   * distribution/ordering requirements — co-partitioning, AQE coalescing
   * and reuse all compose exactly as they do for SortMergeJoin, which
   * declares the same requirement shape.
@@ -53,6 +51,37 @@ case class AsofJoin(
     copy(left = newLeft, right = newRight)
 }
 
+object AsofJoin {
+  /** LEFT as-of join of two DataFrames on `leftKey = rightKey AND
+    * rightTime <= leftTime`, optionally nulling matches older than
+    * `toleranceUs` microseconds; the output is every left column then every
+    * right column. Time columns are TimestampType or LongType (both
+    * physical longs).
+    *
+    * Among right rows with an equal (key, time) the winner is
+    * engine-arbitrary, as it is for DuckDB's ASOF: callers that need a
+    * deterministic result supply right sides unique on (key, time).
+    *
+    * The two sides must carry distinct attribute ids. When both derive from
+    * one relation, alias every right column: a custom binary node gets no
+    * analyzer self-join dedup. */
+  def join(left: DataFrame, right: DataFrame,
+           leftKey: String, rightKey: String,
+           leftTime: String, rightTime: String,
+           toleranceUs: Option[Long]): DataFrame = {
+    val spark = left.sparkSession
+    AsofJoinStrategy.register(spark)
+    val lp = GraftSql.analyzed(left)
+    val rp = GraftSql.analyzed(right)
+    require(lp.outputSet.intersect(rp.outputSet).isEmpty,
+      "as-of sides share attribute ids; alias the right side's columns")
+    def attr(p: LogicalPlan, n: String) = p.output.find(_.name == n).getOrElse(
+      throw new IllegalArgumentException(s"no column $n in ${p.output.map(_.name)}"))
+    GraftSql.ofRows(spark, AsofJoin(lp, rp, attr(lp, leftKey), attr(rp, rightKey),
+      attr(lp, leftTime), attr(rp, rightTime), toleranceUs))
+  }
+}
+
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsofJoin(l, r, lk, rk, lt, rt, tol) =>
@@ -63,8 +92,7 @@ object AsofJoinStrategy extends SparkStrategy {
   /** Idempotent registration through the PUBLIC planner extension point
     * (`spark.experimental.extraStrategies`) — the same per-operator
     * self-registration discipline as [[VectorFunctions.register]], so the
-    * operator works in any session without a builder-time extensions
-    * config (and composes with one: `GraftExtensions` also injects it). */
+    * operator works in any session with no builder-time config. */
   def register(s: org.apache.spark.sql.SparkSession): Unit = {
     val cs = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     if (!cs.experimental.extraStrategies.contains(AsofJoinStrategy))
@@ -78,11 +106,10 @@ object AsofJoinStrategy extends SparkStrategy {
   * Requirements: both children hash-clustered on their key and sorted by
   * (key, time) — declared, not hand-built, so the planner owns the
   * exchanges and can elide them when an upstream operator already
-  * satisfies the clustering (the same free-ride TemporalJoins' window
-  * rewrite gets from a pre-partitioned source).
+  * satisfies the clustering.
   *
   * Per-partition state is ONE buffered right row + the current match —
-  * O(1) beyond the sort, vs the window rewrite's per-key frame buffer.
+  * O(1) beyond the sort.
   * Null keys never match (ASOF/equi-join convention); null timestamps on
   * the right are skipped, on the left they yield an unmatched row.
   */

@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions.call_function
   *  - unequal lengths: NULL (zip_with pads the shorter side with nulls, the
   *    null product poisons the whole fold);
   *  - a null element anywhere: NULL (same poisoning).
-  * This equivalence is what makes [[DotProductRewrite]] safe to inject
-  * globally. The null-element scan is only emitted when the input type says
+  * The bit-identity tests pin it against [[graft.llm.Similarity]]'s
+  * `dotHof`. The null-element scan is only emitted when the input type says
   * containsNull — null-free schemas keep the pure primitive loop.
   *
   * At 100 TB this is the kernel of every similarity scan — whole-stage
@@ -444,8 +444,8 @@ object VectorFunctions {
     "_FUNC_(ablock, bblock, tau) - ordered (a_id < b_id) cross pairs of " +
       "two vector blocks with cosine >= tau", "")
 
-  /** Idempotent session-level registration (for sessions built without the
-    * [[GraftExtensions]] config). */
+  /** Idempotent session-level registration; every operator that calls a
+    * kernel calls this first, so the kernels work in any session. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     val id = FunctionIdentifier(dotName)
@@ -458,7 +458,7 @@ object VectorFunctions {
       reg.registerFunction(cid, cosThreshInfo, cosThreshBuilder)
   }
 
-  /** Column-API handle; requires [[register]] (or the extension) first. */
+  /** Column-API handle; requires [[register]] first. */
   def dot(a: Column, b: Column): Column = call_function(dotName, a, b)
 
   /** Column-API handle for the blocked kNN candidate kernel. */
@@ -468,77 +468,4 @@ object VectorFunctions {
   /** Column-API handle for the blocked threshold-pair kernel. */
   def cosThreshPairs(a: Column, b: Column, tau: Column): Column =
     call_function(cosThreshName, a, b, tau)
-}
-
-/** Optimizer rule (§4.3 extension layer (c)): rewrite the declarative
-  * higher-order dot product — `aggregate(zip_with(a, b, (x,y) -> double(x) *
-  * double(y)), 0.0d, (acc,v) -> acc + v)` — into the codegen'd
-  * [[DotProduct]] kernel. The HOF chain evaluates through a lambda
-  * interpreter per element; the kernel is one inline loop in whole-stage
-  * codegen. Semantics are identical by construction for EVERY input — same
-  * sequential fold and float→double widening, and [[DotProduct]] reproduces
-  * the HOF's null behavior (null on length mismatch or null element; pinned
-  * by a spec) — so the rewrite is safe anywhere the pattern appears. The
-  * match is deliberately conservative: exact shape, double accumulator
-  * literal 0.0, identity finish — anything else passes through untouched. */
-object DotProductRewrite
-  extends org.apache.spark.sql.catalyst.rules.Rule[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.{Add, Cast, LambdaFunction, Literal, Multiply, NamedLambdaVariable}
-  import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ZipWith}
-  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-
-  private def isFloatArray(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  private object DoubleCastOf {
-    def unapply(e: Expression): Option[NamedLambdaVariable] = e match {
-      case Cast(v: NamedLambdaVariable, DoubleType, _, _) => Some(v)
-      case _ => None
-    }
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
-      case ArrayAggregate(
-            ZipWith(a, b,
-              LambdaFunction(Multiply(DoubleCastOf(x), DoubleCastOf(y), _),
-                             Seq(ex1: NamedLambdaVariable, ex2: NamedLambdaVariable), _)),
-            Literal(0.0, DoubleType),
-            LambdaFunction(Add(acc1: NamedLambdaVariable, v1: NamedLambdaVariable, _),
-                           Seq(acc2: NamedLambdaVariable, v2: NamedLambdaVariable), _),
-            LambdaFunction(fin: NamedLambdaVariable, Seq(fin2: NamedLambdaVariable), _))
-          if isFloatArray(a) && isFloatArray(b) &&
-             x.exprId == ex1.exprId && y.exprId == ex2.exprId &&
-             acc1.exprId == acc2.exprId && v1.exprId == v2.exprId &&
-             fin.exprId == fin2.exprId =>
-        DotProduct(a, b)
-    }
-}
-
-/** `spark.sql.extensions=graft.plans.GraftExtensions` wires the vector
-  * kernel into every session at startup — the idiomatic deployment path:
-  * the function for explicit calls, and the optimizer rule that upgrades
-  * the declarative HOF spelling to the same kernel automatically. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (FunctionIdentifier(VectorFunctions.dotName),
-        new ExpressionInfo(classOf[DotProduct].getName, VectorFunctions.dotName),
-        { case Seq(a, b) => DotProduct(a, b) }))
-    ext.injectFunction(
-      (FunctionIdentifier(VectorFunctions.knnBlockName),
-        new ExpressionInfo(classOf[KnnBlockCandidates].getName,
-                           VectorFunctions.knnBlockName),
-        { case Seq(q, c, k) => KnnBlockCandidates(q, c, k) }))
-    ext.injectFunction(
-      (FunctionIdentifier(VectorFunctions.cosThreshName),
-        new ExpressionInfo(classOf[CosineThresholdPairs].getName,
-                           VectorFunctions.cosThreshName),
-        { case Seq(a, b, t) => CosineThresholdPairs(a, b, t) }))
-    ext.injectOptimizerRule(_ => DotProductRewrite)
-    ext.injectPlannerStrategy(_ => AsofJoinStrategy)
-  }
 }

@@ -217,92 +217,17 @@ object Sources {
       .toDF("p_partkey", "p_brand", "p_size")
   }
 
-  /** Hadoop ARchive (HAR) round-trip — the reference's small-files packing
-    * container (`hadoop archive` → `_masterindex`/`_index`/`part-N`, read
-    * through `HarFileSystem`). The MR creator tool isn't on Spark's
-    * classpath, so the WRITE half emits the public v3 layout directly:
-    * version-3 master index + one store line, an `_index` with URL-encoded
-    * entry names and `modtime+perm+owner+group` props, and the `part-0`
-    * payload concatenation. The READ half is the proof the bytes are right:
-    * Spark lists and reads the files back THROUGH THE REAL `har://`
-    * HarFileSystem (service-registered in hadoop-client-api) — any format
-    * deviation fails the open/list, and any payload corruption fails the
-    * oracle hash. Packing here is driver-side metadata work over a 25-row
-    * dim; at 100 TB the same layout shards embarrassingly: each task packs
-    * its file set into `part-N` plus an index fragment, then the fragments
-    * concatenate — exactly the reference's MR archive job shape. */
-  /** Emit the public HAR v3 layout for `files` (entry name → payload) under
-    * `harDir`: `part-0` payload concatenation, `_index` with URL-encoded
-    * names and `mtime perm owner group` props, version-3 `_masterindex`.
-    * Exposed so SourcesSpec can drive encoding-hostile entry names (spaces,
-    * '+', '%', unicode) through the REAL HarFileSystem decoder. */
-  def writeHarArchive(f: org.apache.hadoop.fs.FileSystem,
-                      harDir: org.apache.hadoop.fs.Path,
-                      files: Seq[(String, Array[Byte])],
-                      numParts: Int = 1): Unit = {
-    import java.net.URLEncoder
-    import org.apache.hadoop.fs.Path
-    f.mkdirs(harDir)
-    // force strictness BEFORE writing: a lazy Seq (view/LazyList) mapped
-    // with a side-effecting write would defer the payload past close()
-    val strict = files.toVector
-    // Flat entry names only (round-12 advisor): a '/' in a name would be
-    // URL-encoded into the index as a child of '/' with no intermediate
-    // dir entry — an archive HarFileSystem can't list or resolve. Fail at
-    // write time instead of producing a silently corrupt archive.
-    require(strict.forall(!_._1.contains("/")),
-      s"writeHarArchive packs flat entry names only; nested paths need " +
-      s"intermediate dir index entries: " +
-      strict.collect { case (n, _) if n.contains("/") => n }.mkString(", "))
-    // Multi-part: files round-robin into part-0..part-(numParts-1), each
-    // with its own offset space — the index line carries the owning part
-    // name, so the parts are INDEPENDENT byte streams. This is exactly why
-    // the layout shards embarrassingly at 100 TB: each distributed task
-    // packs its file set into its own part-N plus index-line fragment, and
-    // the driver only concatenates index fragments (metadata, not data).
-    val entries = (0 until math.max(1, numParts)).flatMap { p =>
-      val mine = strict.zipWithIndex.collect {
-        case ((name, content), i) if i % math.max(1, numParts) == p => (name, content)
-      }
-      val partName = s"part-$p"
-      val partOut = f.create(new Path(harDir, partName))
-      var off = 0L
-      val es = mine.map { case (name, content) =>
-        partOut.write(content)
-        val e = (name, partName, off, content.length.toLong)
-        off += content.length
-        e
-      }
-      partOut.close()
-      es
-    }
-    writeHarIndex(f, harDir, entries)
-  }
-
-  /** Write the v3 `_index` + `_masterindex` for already-packed `entries`
-    * of (name, partName, startOffset, length) — the driver-side metadata
-    * concatenation both packers share. */
-  private def writeHarIndex(f: org.apache.hadoop.fs.FileSystem,
-                            harDir: org.apache.hadoop.fs.Path,
-                            entries: Seq[(String, String, Long, Long)]): Unit = {
-    import java.net.URLEncoder
-    import org.apache.hadoop.fs.Path
-    def enc(x: String) = URLEncoder.encode(x, "UTF-8")
-    // only modtime is read back (v3 props = "mtime perm owner group")
-    val props = enc("1700000000000 420 root root")
-    val dirLine = enc("/") + " dir " + props + " 0 0 " +
-      entries.map(e => enc(e._1)).mkString(" ")
-    val fileLines = entries.map { case (name, part, start, len) =>
-      enc("/" + name) + s" file $part $start $len " + props
-    }
-    val indexBytes = (dirLine +: fileLines).mkString("", "\n", "\n").getBytes("UTF-8")
-    val idx = f.create(new Path(harDir, "_index")); idx.write(indexBytes); idx.close()
-    val master = f.create(new Path(harDir, "_masterindex"))
-    master.write(s"3\n0 ${Int.MaxValue} 0 ${indexBytes.length}\n".getBytes("UTF-8"))
-    master.close()
-  }
-
-  /** Executor-side HAR packing (round-12 verdict #6) — the 100 TB shape of
+  /** Hadoop ARchive (HAR) packer — the reference's small-files container
+    * (`hadoop archive` → `_masterindex`/`_index`/`part-N`, read through
+    * `HarFileSystem`). The MR creator tool isn't on Spark's classpath, so
+    * this emits the public v3 layout directly: `part-N` payload
+    * concatenations, an `_index` with URL-encoded entry names and
+    * `mtime perm owner group` props, and a version-3 `_masterindex`. The
+    * proof the bytes are right is the read: Spark lists and reads them back
+    * THROUGH THE REAL `har://` HarFileSystem, so any format deviation fails
+    * the open/list and any payload corruption fails the oracle hash.
+    *
+    * Packing is executor-side (round-12 verdict #6) — the 100 TB shape of
     * the archive job. `files` is a (name STRING, payload BINARY) frame;
     * EACH TASK packs its partition's entries into its own `part-<pid>`
     * (parts are independent byte streams — offsets are part-local in the
@@ -344,7 +269,21 @@ object Sources {
       }.collect().toSeq
     require(entries.map(_._1).distinct.size == entries.size,
       "duplicate HAR entry names across partitions")
-    writeHarIndex(f, harDir, entries.sortBy(_._1))
+    // the driver concatenates the fragments into the v3 `_index` and
+    // `_masterindex`; only modtime is read back from the props
+    def enc(x: String) = java.net.URLEncoder.encode(x, "UTF-8")
+    val props = enc("1700000000000 420 root root")
+    val sorted = entries.sortBy(_._1)
+    val dirLine = enc("/") + " dir " + props + " 0 0 " +
+      sorted.map(e => enc(e._1)).mkString(" ")
+    val fileLines = sorted.map { case (name, part, start, len) =>
+      enc("/" + name) + s" file $part $start $len " + props
+    }
+    val indexBytes = (dirLine +: fileLines).mkString("", "\n", "\n").getBytes("UTF-8")
+    val idx = f.create(new Path(harDir, "_index")); idx.write(indexBytes); idx.close()
+    val master = f.create(new Path(harDir, "_masterindex"))
+    master.write(s"3\n0 ${Int.MaxValue} 0 ${indexBytes.length}\n".getBytes("UTF-8"))
+    master.close()
   }
 
   val scanHar: Q = (s, d) => {

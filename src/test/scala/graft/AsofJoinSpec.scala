@@ -1,42 +1,40 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.TemporalJoins
 
-/** The custom merge-as-of operator (SURVEY §4.3 option (b), round 11):
-  * `graft.plans.AsofJoin` → `AsofJoinStrategy` → `MergeAsofExec`.
+/** The merge-as-of operator (SURVEY §4.3 option (b), round 11):
+  * `graft.plans.AsofJoin.join` → `AsofJoinStrategy` → `MergeAsofExec`, the
+  * one batch as-of kernel.
   *
-  * The driver oracle already validates `join_asof_merge` against DuckDB's
-  * native ASOF JOIN; this spec pins what the oracle can't see — equality
-  * with the union+window spelling row for row, the planned PHYSICAL shape
-  * (the custom exec, planner-inserted exchanges/sorts, no window, no range
+  * The DuckDB oracle already validates `join_asof`, `join_asof_tolerance`
+  * and `join_asof_merge` against DuckDB's native ASOF JOIN; this spec pins
+  * what the oracle can't see — the planned PHYSICAL shape of all three (the
+  * custom exec, planner-inserted exchanges/sorts, no window, no range
   * join), and the tolerance + null edge semantics of the exec itself.
   */
 /** Top-level for the MemoryStream product encoder. */
 case class AsofClick(lid: Long, k: Long, lt: Long)
 
 class AsofJoinSpec extends SparkSpec {
-
-  test("merge-asof equals the union+window rewrite row for row") {
-    val viaMerge = TemporalJoins.joinAsofMerge(spark, sfDir)
-    val viaWindow = TemporalJoins.joinAsof(spark, sfDir)
-    assert(viaMerge.schema.fieldNames.toSeq == viaWindow.schema.fieldNames.toSeq)
-    assert(viaMerge.exceptAll(viaWindow).isEmpty &&
-           viaWindow.exceptAll(viaMerge).isEmpty,
-      "custom exec and window rewrite must return identical rows")
-    assert(viaMerge.count() > 0)
-  }
+  import graft.plans.AsofJoin
 
   test("plan: MergeAsofExec with planner-owned exchanges, no window, no range join") {
-    val df = TemporalJoins.joinAsofMerge(spark, sfDir)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("MergeAsof"), p.take(2000))
-    // the planner must satisfy the declared requirements itself
-    assert(p.contains("Sort ["), "children must be sorted by (key, time)")
-    assert(!p.contains("Window"), "no window buffer — that's the point")
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      "no range-join fallback")
+    // exact (user_id, ts) ties among views would make the as-of winner
+    // engine-arbitrary and the oracle comparison flaky: the fixture has none
+    val views = graft.Tables.events(spark, sfDir).where(col("event_type") === "view")
+    assert(views.groupBy("user_id", "ts").count().where(col("count") > 1).isEmpty,
+      "fixture views must be unique on (user_id, ts)")
+    Seq("join_asof", "join_asof_tolerance", "join_asof_merge").foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      assert(df.collect().nonEmpty, name)
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("MergeAsof"), s"$name:\n${p.take(2000)}")
+      // the planner must satisfy the declared requirements itself
+      assert(p.contains("Sort ["), s"$name: children must be sorted by (key, time)")
+      assert(!p.contains("Window"), s"$name: no window buffer")
+      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+        s"$name: no range-join fallback")
+    }
   }
 
   test("merge exec == driver-side brute force on 20 seeded random corpora") {
@@ -45,7 +43,6 @@ class AsofJoinSpec extends SparkSpec {
     // as-of implementation, DuckDB's included, so ties are out of spec)
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    graft.plans.AsofJoinStrategy.register(spark)
     val lSchema = StructType(Seq(StructField("lid", LongType),
       StructField("k", LongType), StructField("lt", LongType)))
     val rSchema = StructType(Seq(StructField("rk", LongType),
@@ -59,15 +56,9 @@ class AsofJoinSpec extends SparkSpec {
       val rRows = uniq(80).zipWithIndex.map { case ((k, t), i) => Row(k, t, 1000L + i) }
       val l = spark.createDataFrame(spark.sparkContext.parallelize(lRows, 3), lSchema)
       val r = spark.createDataFrame(spark.sparkContext.parallelize(rRows, 2), rSchema)
-      val lp = org.apache.spark.sql.graft.GraftSql.analyzed(l)
-      val rp = org.apache.spark.sql.graft.GraftSql.analyzed(r)
-      def a(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, n: String) =
-        p.output.find(_.name == n).get
       // LongType time works through the same SortOrder/eval path as
       // TimestampType (both are physical longs)
-      val got = org.apache.spark.sql.graft.GraftSql.ofRows(spark,
-          graft.plans.AsofJoin(lp, rp, a(lp, "k"), a(rp, "rk"),
-            a(lp, "lt"), a(rp, "rt"), toleranceUs = Some(100L)))
+      val got = AsofJoin.join(l, r, "k", "rk", "lt", "rt", toleranceUs = Some(100L))
         .select(col("lid"), col("rid")).collect()
         .map(row => row.getLong(0) ->
           (if (row.isNullAt(1)) -1L else row.getLong(1))).toMap
@@ -88,7 +79,6 @@ class AsofJoinSpec extends SparkSpec {
   test("exec semantics: latest-at-or-before, tolerance, and null-key/ts edges") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    graft.plans.AsofJoinStrategy.register(spark)
     val ts = (s: String) => java.sql.Timestamp.valueOf(s)
     val lSchema = StructType(Seq(
       StructField("lid", LongType), StructField("k", LongType),
@@ -115,24 +105,20 @@ class AsofJoinSpec extends SparkSpec {
       spark.sparkContext.parallelize(lRows, 3), lSchema)
     val r = spark.createDataFrame(
       spark.sparkContext.parallelize(rRows, 2), rSchema)
-    def run(tolUs: Option[Long]): Map[Long, Option[Long]] = {
-      val lp = org.apache.spark.sql.graft.GraftSql.analyzed(l)
-      val rp = org.apache.spark.sql.graft.GraftSql.analyzed(r)
-      def a(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, n: String) =
-        p.output.find(_.name == n).get
-      org.apache.spark.sql.graft.GraftSql.ofRows(spark,
-          graft.plans.AsofJoin(lp, rp, a(lp, "k"), a(rp, "rk"),
-            a(lp, "lt"), a(rp, "rt"), tolUs))
+    def run(tolUs: Option[Long]): Map[Long, Option[Long]] =
+      AsofJoin.join(l, r, "k", "rk", "lt", "rt", tolUs)
         .select(col("lid"), col("rid")).collect()
         .map(row => row.getLong(0) ->
           (if (row.isNullAt(1)) None else Some(row.getLong(1)))).toMap
-    }
     assert(run(None) == Map(1L -> Some(101L), 2L -> Some(102L), 3L -> None,
                             4L -> Some(301L), 5L -> None, 6L -> None))
     // 1h staleness: click 4's 8h-old match nulls out; fresh ones survive
     assert(run(Some(3600L * 1000000L)) ==
       Map(1L -> Some(101L), 2L -> Some(102L), 3L -> None,
           4L -> None, 5L -> None, 6L -> None))
+    // a self-join without fresh right-side attribute ids is rejected, not
+    // silently resolved against the wrong side
+    intercept[IllegalArgumentException](AsofJoin.join(l, l, "k", "k", "lt", "lt", None))
   }
 
   test("streaming micro-batches drive the merge exec: stream-static as-of equals batch") {
@@ -146,25 +132,17 @@ class AsofJoinSpec extends SparkSpec {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.graft.GraftSql
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    graft.plans.AsofJoinStrategy.register(spark)
     val rSchema = StructType(Seq(StructField("rk", LongType),
       StructField("rt", LongType), StructField("rid", LongType)))
     val rRows = Seq(Row(10L, 100L, 101L), Row(10L, 200L, 102L),
       Row(20L, 50L, 201L), Row(30L, 999L, 301L))
     val statics = spark.createDataFrame(
       spark.sparkContext.parallelize(rRows, 2), rSchema)
-    def a(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, n: String) =
-      p.output.find(_.name == n).get
-    def asof(left: org.apache.spark.sql.DataFrame) = {
-      val lp = GraftSql.analyzed(left)
-      val rp = GraftSql.analyzed(statics)
-      GraftSql.ofRows(spark, graft.plans.AsofJoin(lp, rp,
-          a(lp, "k"), a(rp, "rk"), a(lp, "lt"), a(rp, "rt"), None))
+    def asof(left: org.apache.spark.sql.DataFrame) =
+      AsofJoin.join(left, statics, "k", "rk", "lt", "rt", None)
         .select(col("lid"), col("rid"))
-    }
     val batch1 = Seq(AsofClick(1L, 10L, 150L), AsofClick(2L, 10L, 250L),
       AsofClick(3L, 20L, 40L))
     val batch2 = Seq(AsofClick(4L, 10L, 90L),  // earlier ts than batch 1

@@ -45,36 +45,6 @@ class SourcesSpec extends SparkSpec {
     assert(got.length === 5 && got.map(_.getAs[Long]("n_nations")).sum === 25L)
   }
 
-  test("multi-part har archive: entries across part-0..2 read back exactly") {
-    import org.apache.hadoop.fs.Path
-    // 7 entries over 3 parts (uneven round-robin: 3/2/2) — the sharded
-    // write path the 100 TB packing claim rests on: independent part byte
-    // streams, index lines carrying the owning part name
-    val files = (0 until 7).map(i => (s"e$i.txt", s"payload-$i-${"x" * i}".getBytes("UTF-8")))
-    val dir = java.nio.file.Files.createTempDirectory("graft_harmulti").toString
-    val harDir = new Path(dir, "multi.har")
-    val f = harDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      Sources.writeHarArchive(f, harDir, files, numParts = 3)
-      (0 until 3).foreach { p =>
-        assert(f.getFileStatus(new Path(harDir, s"part-$p")).getLen > 0,
-          s"part-$p must hold payload bytes")
-      }
-      val harRoot = new Path(s"har://${harDir.toUri.getPath}")
-      val harFs = harRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      files.foreach { case (name, bytes) =>
-        val in = harFs.open(new Path(harRoot, name))
-        val buf = new Array[Byte](bytes.length)
-        try in.readFully(0L, buf) finally in.close()
-        assert(java.util.Arrays.equals(buf, bytes), s"payload mismatch for '$name'")
-      }
-      // Spark reads the whole sharded archive as one relation
-      val all = spark.read.text(
-        harFs.globStatus(new Path(harRoot, "e*.txt")).map(_.getPath.toString).sorted: _*)
-      assert(all.count() === 7L)
-    } finally deleteDir(dir)
-  }
-
   test("distributed har packer: executor tasks write their own parts, driver only the index") {
     import org.apache.spark.sql.functions._
     import org.apache.hadoop.fs.Path
@@ -102,11 +72,16 @@ class SourcesSpec extends SparkSpec {
         try in.readFully(0L, buf) finally in.close()
         assert(java.util.Arrays.equals(buf, want), s"payload mismatch for doc$i.bin")
       }
+      // Spark reads the whole sharded archive as one relation
+      val all = spark.read.text(
+        harFs.globStatus(new Path(harRoot, "doc*.bin")).map(_.getPath.toString).sorted: _*)
+      assert(all.count() === 11L)
     } finally deleteDir(dir)
   }
 
   test("har index URL-encoding round-trips hostile entry names through the real decoder") {
     import org.apache.hadoop.fs.Path
+    import spark.implicits._
     // names that break naive index writers: space (encodes to '+'), literal
     // '+' (must become %2B or it decodes to a space), literal '%', unicode
     val files = Seq(
@@ -118,9 +93,8 @@ class SourcesSpec extends SparkSpec {
       .map { case (n, v) => (n, v.getBytes("UTF-8")) }
     val dir = java.nio.file.Files.createTempDirectory("graft_harenc").toString
     val harDir = new Path(dir, "enc.har")
-    val f = harDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
-      Sources.writeHarArchive(f, harDir, files)
+      Sources.writeHarArchiveDistributed(spark, harDir, files.toDF("name", "payload"))
       val harRoot = new Path(s"har://${harDir.toUri.getPath}")
       val harFs = harRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
       // list through the archive's root dir entry (decoder must report the

@@ -43,25 +43,6 @@ class VectorSpec extends SparkSpec {
     assert(!both(3).isNullAt(1) && both(3).getDouble(1) == 0.0)
   }
 
-  test("DotProductRewrite upgrades the HOF fold to the codegen kernel, same values") {
-    import graft.plans.{DotProduct, DotProductRewrite}
-    val e = Tables.embeddings(spark, sfDir)
-    val hof = e.select(col("vec_id"),
-      Similarity.dotHof(col("embedding"), col("embedding")).as("dp"))
-    val analyzed = hof.queryExecution.analyzed
-    val rewritten = DotProductRewrite(analyzed)
-    assert(rewritten.expressions.exists(_.exists(_.isInstanceOf[DotProduct])),
-      s"rule did not fire on:\n$analyzed")
-    // value safety of the swap is pinned by the bit-identity test above
-    // (DotProduct == dotHof on every fixture vector)
-    // conservative: an int-array fold (different shape) must NOT match
-    val ints = e.select(transform(col("embedding"), x => x.cast("int")).as("iv"))
-      .select(aggregate(zip_with(col("iv"), col("iv"),
-        (x, y) => x.cast("double") * y.cast("double")), lit(0.0), (acc, v) => acc + v).as("d"))
-    val untouched = DotProductRewrite(ints.queryExecution.analyzed)
-    assert(!untouched.expressions.exists(_.exists(_.isInstanceOf[DotProduct])))
-  }
-
   test("blocked simsearch topk == broadcast theta spelling, row for row") {
     // the registered blocked-kernel path must reproduce the declared
     // broadcast |Q|·n spelling exactly: per-block exact top-5 is a superset
