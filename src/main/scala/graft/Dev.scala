@@ -11,7 +11,7 @@ import graft.streaming.{AsofStreamRow, StreamNeardup, StreamSemdedup, Streams}
   * probe cells. NOT part of the shipped library surface.
   *
   * {{{
-  * scale   [k] [name,...]             t(k×)/t(1×) per registered query, spill, peak task memory
+  * scale   [k] [name,...]             t(1×), t(k×) (min/median/max over the passes), spill, peak task memory
   * recall  [k,...] [name,...]         ANN recall_at_k over the full k× query set (audit ON)
   * ivf     <dir>... | --k K [--time]  IVF sampled probe agreement per corpus; --time: derived np vs np=2
   * stream  asof [k] [config,...]
@@ -158,8 +158,12 @@ object Dev {
     // SPARK_GRAFT_SCALE_PASSES trims the per-query sample count for probes
     // whose single run is minutes long (k=512 simhash crossover).
     val passes = ctx.int("SPARK_GRAFT_SCALE_PASSES", 3)
-    def bestOf(body: => Unit): Double =
-      (1 to passes).map { _ => val t0 = System.nanoTime(); body; secs(t0) }.min
+    // (min, median, max) pass time: one best-of-N hid how far identical
+    // code moves from pass to pass
+    def spreadOf(body: => Unit): (Double, Double, Double) = {
+      val ts = (1 to passes).map { _ => val t0 = System.nanoTime(); body; secs(t0) }.sorted
+      (ts.head, ts(ts.length / 2), ts.last)
+    }
     // Shuffle-file reclamation BETWEEN timing phases (round 15): a probe JVM
     // with a 48-80 GiB heap almost never GCs, so the weak-ref ContextCleaner
     // never releases finished-pass shuffle files — at k=512 they filled the
@@ -168,30 +172,31 @@ object Dev {
     // The sleep lets the cleaner's async deletion drain.
     def reclaimShuffles(): Unit = { System.gc(); Thread.sleep(2000) }
     println(f"== Dev scale k=$k base=${ctx.base} ==")
-    println(f"${"query"}%-22s ${"t(1x)"}%8s ${"t(kx)"}%8s ${"ratio"}%7s  (linear = $k.0)")
+    println(f"${"query"}%-22s ${"t(1x) min/med/max"}%23s ${"t(kx) min/med/max"}%23s " +
+      f"${"ratio"}%7s  (median ratio, linear = $k.0)")
     names.filter(SparkEntry.queries.contains).foreach { name =>
       val fn = SparkEntry.queries(name)
-      // rounds-at-depth for the iterative CC variants (the star variant's
-      // reason to exist is its O(log n) round bound)
-      def ccRounds(): Option[Int] = name match {
-        case "llm_dedup_clusters" => Some(graft.llm.Curation.lastPropagationRounds)
-        case "llm_dedup_clusters_star" => Some(graft.llm.Curation.lastStarRounds)
-        case _ => None
-      }
-      def timeAt(dir: String): Double = {
+      // rounds-at-depth for the star finish (its reason to exist is its
+      // O(log n) round bound)
+      def ccRounds(): Option[Int] =
+        if (name == "llm_dedup_clusters_star") Some(graft.llm.Curation.lastStarRounds)
+        else None
+      def timeAt(dir: String): (Double, Double, Double) = {
         try noop(fn(spark, dir)) catch { case _: Throwable => () } // warmup
         reclaimShuffles()
         ctx.tally.reset() // tally the timed passes only
-        val t = bestOf(noop(fn(spark, dir)))
+        val t = spreadOf(noop(fn(spark, dir)))
         reclaimShuffles()
         t
       }
+      def fmt(t: (Double, Double, Double)): String = f"${t._1}%.3f/${t._2}%.3f/${t._3}%.3f"
       val t1 = timeAt(oneDir)
       val rounds1 = ccRounds()
       val tk = timeAt(kDir)
       // row printed immediately: a later crash (an OOM on a heavier query)
       // must not lose the measurements already taken
-      println(f"$name%-22s $t1%8.3f $tk%8.3f ${tk / t1}%7.2f  ${k}x ${ctx.tally.memReport}")
+      println(f"$name%-22s ${fmt(t1)}%23s ${fmt(tk)}%23s ${tk._2 / t1._2}%7.2f  " +
+        s"${k}x ${ctx.tally.memReport}")
       for (r1 <- rounds1; rk <- ccRounds())
         println(s"  $name rounds: $r1 at 1x -> $rk at ${k}x")
       // cachedOnce entries hold strong refs to their full shuffle lineage via

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -22,11 +22,9 @@ import graft.Tables
 object Curation {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Dev diagnostic: iteration count of the most recent CC invocation in
-    * this JVM (propagation / alternating-star), read by `graft.Dev scale`
-    * to report rounds-at-depth alongside wall time. Not part of the library
-    * surface; -1 = not yet run. */
-  @volatile var lastPropagationRounds: Int = -1
+  /** Dev diagnostic: round count of the most recent star finish in this
+    * JVM, read by `graft.Dev scale` to report rounds-at-depth alongside
+    * wall time. Not part of the library surface; -1 = not yet run. */
   @volatile var lastStarRounds: Int = -1
 
   // ---- near-dup cluster resolution (connected components) -----------------
@@ -37,80 +35,89 @@ object Curation {
     * Pairs alone under-delete: if A~B and B~C, keeping "one per pair" keeps
     * two of {A,B,C}; the component view keeps exactly one.
     *
-    * Physical strategy: iterative min-label propagation — each round is one
-    * hash-partitioned join+aggregation, and the round count is the graph
-    * diameter. Near-dup graphs are dense little cliques (diameter 2-3), so
-    * this converges in a handful of shuffles even at corpus scale; a
-    * pathological long-chain graph would call for the alternating
-    * large-star/small-star variant (O(log n) rounds) — same per-round plan,
-    * different edge rewrite. Lineage is truncated per round with
-    * localCheckpoint so the plan does not grow with the iteration count.
+    * Physical strategy: [[connectedComponents]] — a per-partition
+    * union-find contraction, then a one-task union-find finish. Building the
+    * plan starts no Spark job: the graph's nodes are documents, so the
+    * `documents` Parquet footer row count ([[Tables.countOf]]) bounds the
+    * node count at plan time.
     */
-  val dedupClusters: Q = (s, d) => propagationClusters(Dedup.neardupPairs(s, d))
+  val dedupClusters: Q = (s, d) =>
+    connectedComponents(Dedup.neardupPairs(s, d), Tables.countOf(s, d, "documents"))
 
-  /** Round limit of both connected-components loops. A loop that reaches it
+  /** Round limit of the star finish. A star finish that reaches it
     * unconverged throws rather than return partial labels. */
   val MaxCcRounds = 64
 
-  /** [[dedupClusters]] over any (d1, d2) pair frame. Throws if some
-    * component's diameter needs more than [[MaxCcRounds]] rounds. */
-  def propagationClusters(edgePairs: DataFrame): DataFrame = {
-    val pairs = edgePairs.select("d1", "d2")
-    // The edge cache is clustered on dst — the per-round join's probe key —
-    // so every propagation round shuffles ONLY the (small, shrinking) label
-    // table; the edge set stays put for the whole loop. (Unpartitioned, the
-    // union's 2x-partition-count cache re-shuffled per round AND doubled the
-    // scheduling footprint of every edge scan.) This is the co-located
-    // iterative-join layout a cluster deployment would bucket for.
-    val edges = pairs.union(pairs.select(col("d2"), col("d1")))
-      .toDF("src", "dst").repartition(col("dst"))
-      .transform(graft.Caching.cachedOnce)
-    // Identity-label init + the first propagation round fold into ONE
-    // aggregation: with identity labels, round 1's "min neighbor label" is
-    // just min(dst), so label₀ = least(id, min(dst)) — computed by the same
-    // groupBy that enumerates the node set (the old .distinct() was an agg
-    // of identical cost that bought nothing). On the near-dup graphs this
-    // operator targets (dense little cliques, diameter 2-3) this removes a
-    // whole join+agg round; the checkpoint is LAZY so init materializes
-    // inside round 1's count — one fewer scheduled job on top.
-    var labels = edges.groupBy(col("src").as("id"))
-      .agg(min("dst").as("m"))
-      .select(col("id"), least(col("id"), col("m")).as("lbl"))
-      .localCheckpoint(false)
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < MaxCcRounds) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("lbl").as("nbr_lbl")), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min("nbr_lbl").as("nbr_min"))
-      // one joined frame serves both the label update and the convergence
-      // check (a label shrinks iff some neighbor's label is smaller), so each
-      // round is exactly one join + one count — no second old-vs-new join.
-      // localCheckpoint is LAZY: it truncates lineage but materializes inside
-      // the count() action, so each round schedules exactly ONE Spark job
-      // (the eager default ran a separate checkpoint job per round, doubling
-      // the loop's scheduling overhead — which dominates when per-round data
-      // is label-table-sized).
-      val joined = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-                least(col("lbl"), coalesce(col("nbr_min"), col("lbl"))).as("lbl"),
-                (col("nbr_min") < col("lbl")).as("shrank"))
-        .localCheckpoint(false)
-      changed = joined.where(col("shrank")).count()
-      labels = joined.select("id", "lbl")
-      rounds += 1
-    }
-    lastPropagationRounds = rounds
-    if (changed > 0) throw new IllegalStateException(
-      s"min-label propagation did not converge in $MaxCcRounds rounds: a " +
-      "component's diameter is too large; llm_dedup_clusters_star " +
-      "(alternating star, O(log n) rounds) handles long chains")
-    clusterRows(labels)
+  /** Node bound of the one-task finish. That task holds two primitive maps
+    * ([[LongLongMap]], 17-byte slots, grown by doubling at half load, so at
+    * least a quarter full): the union-find parent map, one entry per
+    * node, ≤ 68 bytes per node (≤ 102 while it doubles), and the
+    * component-size map, one entry per component — at most one per two
+    * nodes when, as in a near-dup pair graph, there are no self-loops — ≤ 34 bytes
+    * per node. 1,000,000 nodes is ≤ 136 MB at the peak: inside the user
+    * memory region (40% of the heap above Spark's 300 MB reserve, ~290 MB)
+    * of a 1 GB executor heap, the smallest heap this repository runs. */
+  val OneTaskCcMaxNodes = 1000000L
+
+  /** (d1, d2) pair frame → (doc_id, cluster_id, cluster_size, is_survivor),
+    * the component minimum as label. `maxNodes` is an upper bound on the
+    * graph's node count, known at plan time; at or below
+    * [[OneTaskCcMaxNodes]] the plan is lazy end to end:
+    *  - contract: each partition runs a union-find whose roots are set
+    *    minima and emits (node, root) for every node that is not its own
+    *    root — a c-member clique shrinks to ≤ c − 1 rows per partition, and
+    *    connectivity is kept;
+    *  - finish: one task (`repartition(1)`) unions the contracted rows and,
+    *    holding every node, emits the final rows itself — no size
+    *    aggregate, no join.
+    * Above the bound the contracted edges go through the alternating
+    * large-star/small-star rounds instead (Kiveris et al., SoCC 2014),
+    * which run Spark jobs while the plan is built and throw after
+    * [[MaxCcRounds]] unconverged rounds. */
+  def connectedComponents(edgePairs: DataFrame, maxNodes: Long): DataFrame = {
+    // The cache goes on the INPUT pairs: a repeated call in one session
+    // then reuses them instead of re-running the pair pipeline, and the
+    // star finish reads them twice (node set and edge set, each
+    // checkpointed). A mapPartitions plan would never match a cached plan
+    // (its function compares by reference); the pair frame's plan does.
+    val pairs = edgePairs.select(col("d1").as("_1"), col("d2").as("_2"))
+      .transform(graft.Caching.cachedOnce).as(LongPair)
+    if (maxNodes <= OneTaskCcMaxNodes) oneTaskFinish(contract(pairs))
+    else starFinish(contract(pairs).toDF("a", "b"))
   }
 
+  private val LongPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+  /** Boxed ids keep the id columns nullable, like the pair columns they come
+    * from, so the output's Parquet schema is the one the operators had. */
+  private type Id = java.lang.Long
+  private val IdPair = Encoders.tuple(Encoders.LONG, Encoders.LONG)
+
+  private def contract(pairs: Dataset[(Long, Long)]): Dataset[(Id, Id)] =
+    pairs.mapPartitions { rows =>
+      val uf = new LongUnionFind
+      // a self-loop row passes through as is, so a node seen only in
+      // self-loops keeps its row
+      val loops = Array.newBuilder[Long]
+      rows.foreach { case (a, b) => if (a == b) loops += a else uf.union(a, b) }
+      (uf.nodes.map(n => (n, uf.find(n))).filter { case (n, r) => n != r } ++
+        loops.result().iterator.map(a => (a, a))).map { case (n, r) => (n: Id, r: Id) }
+    }(IdPair)
+
+  private def oneTaskFinish(forest: Dataset[(Id, Id)]): DataFrame =
+    forest.repartition(1).mapPartitions { rows =>
+      val uf = new LongUnionFind
+      rows.foreach { case (n, r) => uf.union(n, r) }
+      val sizes = new LongLongMap
+      uf.nodes.foreach { n => val r = uf.find(n); sizes(r) = sizes.getOrElse(r, 0L) + 1 }
+      uf.nodes.map { n =>
+        val r = uf.find(n)
+        (n: Id, r: Id, sizes.getOrElse(r, 0L), if (n == r) 1 else 0)
+      }
+    }(Encoders.tuple(Encoders.LONG, Encoders.LONG, Encoders.scalaLong, Encoders.scalaInt))
+      .toDF("doc_id", "cluster_id", "cluster_size", "is_survivor")
+
   /** (id, lbl) component labels → the registered rows (doc_id, cluster_id,
-    * cluster_size, is_survivor) of both CC operators. */
+    * cluster_size, is_survivor) of the star finish. */
   private def clusterRows(labels: DataFrame): DataFrame = {
     val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "lbl")
@@ -152,28 +159,21 @@ object Curation {
       .union(mins.select(col("src").as("a"), col("m").as("b")))
   }
 
-  /** Same semantics as [[dedupClusters]], different physical algorithm:
-    * alternating large-star/small-star edge rewrites (the public
-    * MapReduce-connected-components formulation) converge in O(log n)
-    * rounds on ANY graph shape — the escalation min-label propagation
-    * needs when component diameter is large. Each round is two
-    * join+aggregate passes over the edge set, which only shrinks toward
-    * one star per component. Registered with the SAME oracle as the
-    * propagation operator: both must produce the identical clustering. */
-  val dedupClustersStar: Q = (s, d) => starClusters(Dedup.neardupPairs(s, d))
+  /** Same semantics as [[dedupClusters]], different finish: the contracted
+    * edges always take the alternating large-star/small-star rewrites (the
+    * public MapReduce-connected-components formulation), which converge in
+    * O(log n) rounds on ANY graph shape — the scale path of
+    * [[connectedComponents]], registered so the oracle exercises it at
+    * fixture size. Each round is two join+aggregate passes over the edge
+    * set, which only shrinks toward one star per component. Registered
+    * with the SAME oracle as [[dedupClusters]]: both must produce the
+    * identical clustering. */
+  val dedupClustersStar: Q = (s, d) =>
+    connectedComponents(Dedup.neardupPairs(s, d), maxNodes = Long.MaxValue)
 
-  /** [[dedupClustersStar]] over any (d1, d2) pair frame. Throws if it has
-    * not converged after [[MaxCcRounds]] rounds. */
-  def starClusters(edgePairs: DataFrame): DataFrame = {
-    // materialize the pair generation FIRST: both `nodes` and the initial
-    // edge set read it, and without this the whole PPJoin pipeline ran
-    // twice (once per downstream localCheckpoint). cachedOnce (not
-    // localCheckpoint) so repeated invocations in one session also reuse
-    // it — a checkpoint is private to its DataFrame and re-ran the full
-    // PPJoin pipeline on every warm pass.
-    val pairs = edgePairs
-      .select(col("d1").as("a"), col("d2").as("b"))
-      .transform(graft.Caching.cachedOnce)
+  /** Star finish over (a, b) edges; throws if it has not converged after
+    * [[MaxCcRounds]] rounds. */
+  private def starFinish(pairs: DataFrame): DataFrame = {
     val nodes = pairs.select(col("a").as("id"))
       .union(pairs.select(col("b").as("id"))).distinct()
       .localCheckpoint()
@@ -722,8 +722,9 @@ object Curation {
     * slice.
     *
     * Scale: each stage keeps its own operator's shape — hash-partitioned
-    * aggregations, the bounded CC iteration, map-side HOF gates, map-side
-    * sharding — and between stages only (doc_id)-sized keys flow; Catalyst
+    * aggregations, the contract-then-finish connected components of
+    * [[dedupClusters]], map-side HOF gates, map-side sharding — and
+    * between stages only (doc_id)-sized keys flow; Catalyst
     * fuses the final joins into one pipelined plan. Docs too short to
     * assess (<2 tokens) fail the gate by definition on both engines.
     */
@@ -852,4 +853,84 @@ object Curation {
     "llm_curation_e2e" -> Seq("shard"),
     "llm_mix_rebalance" -> Seq("doc_id", "copy"),
   )
+}
+
+/** Open-addressing long → long hash map on three primitive arrays (keys,
+  * values, occupancy): 17 bytes per slot, linear probing, doubled at half
+  * load — so 34 to 68 bytes per entry at rest. No removal. */
+private[llm] final class LongLongMap {
+  private var keys = new Array[Long](16)
+  private var vals = new Array[Long](16)
+  private var used = new Array[Boolean](16)
+  private var n = 0
+
+  private def slot(k: Long): Int = {
+    val mask = keys.length - 1
+    val h = k * 0x9E3779B97F4A7C15L
+    var i = (h ^ (h >>> 29)).toInt & mask
+    while (used(i) && keys(i) != k) i = (i + 1) & mask
+    i
+  }
+
+  def getOrElse(k: Long, default: Long): Long = {
+    val i = slot(k)
+    if (used(i)) vals(i) else default
+  }
+
+  /** The value of `k`, inserting `v` first when `k` is absent. */
+  def getOrInsert(k: Long, v: Long): Long = {
+    val i = slot(k)
+    if (used(i)) vals(i) else { update(k, v); v }
+  }
+
+  def update(k: Long, v: Long): Unit = {
+    val i = slot(k)
+    if (!used(i)) {
+      if (2 * (n + 1) > keys.length) { grow(); update(k, v); return }
+      used(i) = true; keys(i) = k; n += 1
+    }
+    vals(i) = v
+  }
+
+  private def grow(): Unit = {
+    val (ok, ov, ou) = (keys, vals, used)
+    keys = new Array[Long](ok.length * 2)
+    vals = new Array[Long](ok.length * 2)
+    used = new Array[Boolean](ok.length * 2)
+    n = 0
+    for (i <- ok.indices if ou(i)) update(ok(i), ov(i))
+  }
+
+  /** The keys, in slot order; values may change while this is consumed. */
+  def keysIterator: Iterator[Long] = {
+    val (ks, us) = (keys, used)
+    ks.indices.iterator.filter(us(_)).map(ks(_))
+  }
+}
+
+/** Union-find over long ids whose root is always the minimum id of its set,
+  * on one [[LongLongMap]] of parents (path halving, no ranks: attaching the
+  * larger root under the smaller keeps the minimum invariant). */
+private[llm] final class LongUnionFind {
+  private val parent = new LongLongMap
+
+  /** The minimum id of `x`'s set; an unseen `x` joins as a singleton. */
+  def find(x0: Long): Long = {
+    var x = x0
+    var p = parent.getOrInsert(x, x)
+    while (p != x) {
+      val gp = parent.getOrElse(p, p)
+      parent(x) = gp
+      x = gp
+      p = parent.getOrElse(x, x)
+    }
+    x
+  }
+
+  def union(a: Long, b: Long): Unit = {
+    val (ra, rb) = (find(a), find(b))
+    if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+  }
+
+  def nodes: Iterator[Long] = parent.keysIterator
 }

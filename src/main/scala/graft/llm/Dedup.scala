@@ -323,7 +323,7 @@ object Dedup {
   /** Size-adaptive switch: below this many (doc, shingle) rows the naive
     * shared-shingle candidate join is cheaper than the prefix machinery's
     * extra global-frequency agg + two window passes (measured: at the
-    * sf0.1 fixture — ~0.5M shingle rows — the naive join beats the PPJoin
+    * sf0.1 fixture — ~0.25M shingle rows — the naive join beats the PPJoin
     * path ~2×, while the prefix filter's candidate-volume savings only
     * amortize once the shingle self-join volume Σf² dominates those fixed
     * passes). The prefix path re-counts intersections ([[exactInter]]);
@@ -332,6 +332,23 @@ object Dedup {
     * (LlmSpec pins prefix == naive explicitly, at every scale). */
   val NeardupPrefixMinShingles = 2000000L
 
+  /** Text bytes per (doc, shingle) row assumed by [[estimatedShingleRows]].
+    * A word 5-gram starts at every token but a document's last four, so
+    * shingle rows track tokens and tokens track text bytes. Measured text
+    * bytes per shingle row: 6.0 on sf0.001, sf0.01, sf0.1 and the perfbench
+    * fixture; 7.9, 9.0 and 9.4 on the `graft.Dev scale` 8×, 64× and 128×
+    * copies of sf0.01, whose tokens carry a copy tag. At 8 the estimate
+    * falls on the same side of [[NeardupPrefixMinShingles]] as the exact
+    * count on every one of them (64×: 1.82M estimated, 1.61M exact). */
+  val TextBytesPerShingle = 8L
+
+  /** Plan-time estimate of the (doc, shingle) rows of `documents`: the
+    * `text` column's uncompressed Parquet footer bytes over
+    * [[TextBytesPerShingle]] — no Spark job. It only picks the candidate
+    * plan (prefix or naive), and both give the same pairs. */
+  def estimatedShingleRows(s: SparkSession, d: String): Long =
+    Tables.uncompressedBytesOf(s, d, "documents", "text") / TextBytesPerShingle
+
   /** Mega-clique regime guardrail (round-12 verdict #3). The k=128/k=256
     * probes measured the one way the EXACT pair operator dies at scale:
     * inside a duplicate clique of size c every pair genuinely collides, so
@@ -339,7 +356,7 @@ object Dedup {
     * output too — grows as c²/2, and the failure mode on a real cluster is
     * executor-disk exhaustion hours in, fixable by a conf the user never
     * saw. This converts that measured boundary into a runtime diagnostic:
-    * one aggregation over the (already materialized) shingle table upper-
+    * one aggregation over the cached shingle table upper-
     * bounds the candidate enumeration as Σ_sh f·(f-1)/2 and compares it to
     * a per-doc budget. Over `warnPairsPerDoc` (default 1,000) it logs an
     * actionable warning naming [[NeardupCapConf]] and the representative-
@@ -396,15 +413,15 @@ object Dedup {
   /** The exact pair operator with a per-document candidate budget `cap`
     * (0 = off, the declared exact semantics). Shingling (regex split +
     * 5-gram transform + distinct + digest) is the expensive narrow stage and
-    * feeds every plan branch, so it is the cached frame; the count reads the
-    * just-materialized cache — one cheap short job, the price of choosing
-    * the right candidate plan for the corpus actually present. Naive-path
+    * feeds every plan branch, so it is the cached frame; the candidate
+    * plan is chosen from [[estimatedShingleRows]] (Parquet footers, no
+    * Spark job), so building the query runs nothing. Naive-path
     * pairs carry their exact intersection count out of the candidate
     * aggregation and finish directly (round 20); prefix-path candidates
     * carry prefix-overlap lower bounds and re-count exactly. */
   private def neardupPairsAt(s: SparkSession, d: String, cap: Int): DataFrame = {
     val sh = cachedShingleHashes(s, d)
-    val prefixPath = sh.count() >= NeardupPrefixMinShingles
+    val prefixPath = estimatedShingleRows(s, d) >= NeardupPrefixMinShingles
     // exact path on a big corpus: check the measured mega-clique boundary
     // BEFORE the verify join can exhaust executor disk (capped runs are
     // volume-bounded by construction and skip the diagnostic)
@@ -559,7 +576,7 @@ object Dedup {
     val cap = graft.Confs.intConf(s, NeardupCapConf).getOrElse(0)
     // same mega-clique guardrail as the prefix path: exact (cap-off) runs
     // on big corpora check the enumeration bound before the verify join
-    if (cap == 0 && sh.count() >= NeardupPrefixMinShingles)
+    if (cap == 0 && estimatedShingleRows(s, d) >= NeardupPrefixMinShingles)
       guardCandidateVolume(s, d, sh)
     val candidates =
       if (cap > 0) capPairs(pairBands.groupBy("d1", "d2").agg(count(lit(1)).as("w")), cap)

@@ -1551,7 +1551,7 @@ object TextAnalysis {
 
   /** Diagnostic: merges accepted by the speculation guard in the most
     * recent chain build (rest ran sequential jobs) — same pattern as
-    * [[graft.llm.Curation.lastPropagationRounds]]. */
+    * [[graft.llm.Curation.lastStarRounds]]. */
   @volatile var lastSpeculatedMerges: Int = -1
 
   private def bpeChainFrom(wc0: DataFrame): (Seq[((String, String, Long), DataFrame)], DataFrame) = {

@@ -29,27 +29,118 @@ class CurationSpec extends SparkSpec {
     }
   }
 
-  test("alternating-star CC equals min-label propagation clustering") {
-    val prop = Curation.dedupClusters(spark, sfDir).collect()
+  test("alternating-star CC equals the one-task union-find clustering") {
+    val oneTask = Curation.dedupClusters(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
     val star = Curation.dedupClustersStar(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-    assert(star == prop)
+    assert(star == oneTask)
   }
 
-  test("connected components on a 100-node path: propagation throws, star labels every node 0") {
-    // diameter 99: min-label propagation moves the minimum one hop per round
-    // and cannot finish in MaxCcRounds; it must fail, not return the labels
-    // it holds at the limit. The alternating star needs O(log n) rounds.
+  /** (doc_id, cluster_id, cluster_size, is_survivor) rows of a finish, one per doc_id. */
+  private def ccRows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Int)] = {
+    val rows = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
+    assert(rows.map(_._1).distinct.length == rows.length, "a doc_id has two rows")
+    rows.toSet
+  }
+
+  test("connected components on a 100-node path: both finishes label every node 0") {
+    // diameter 99: a per-round label propagation would need 99 rounds; the
+    // one-task union-find needs none and the alternating star O(log n)
     import spark.implicits._
     val path = (0L until 99L).map(i => (i, i + 1)).toDF("d1", "d2")
-    val e = intercept[IllegalStateException](Curation.propagationClusters(path))
-    assert(e.getMessage.contains("llm_dedup_clusters_star"), e.getMessage)
-    val rows = Curation.starClusters(path).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
-    assert(rows.map(_._1).sorted.toSeq == (0L until 100L))
-    assert(rows.forall { case (id, lbl, n, surv) =>
-      lbl == 0L && n == 100L && surv == (if (id == 0L) 1 else 0) })
+    val want = (0L until 100L).map(id => (id, 0L, 100L, if (id == 0L) 1 else 0)).toSet
+    assert(ccRows(Curation.connectedComponents(path, 100L)) == want)
+    assert(ccRows(Curation.connectedComponents(path, Long.MaxValue)) == want)
+  }
+
+  test("connected components: one-task == star == driver closure on 240 generated frames") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import spark.implicits._
+    // component shapes over local node indices 0..n-1
+    val clique = Gen.choose(2, 8).map(c => for (i <- 0 until c; j <- i + 1 until c) yield (i, j))
+    val path100 = Gen.const((0 until 99).map(i => (i, i + 1)))
+    val bothWays = Gen.const(Seq((0, 1), (1, 0)))
+    val isolated = Gen.const(Seq((0, 1)))
+    val sparse = Gen.choose(3, 20).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(Gen.choose(0, n - 1), Gen.choose(0, n - 1)))) // self-loops too
+    val component = Gen.frequency(3 -> clique, 1 -> path100, 2 -> bothWays,
+                                  2 -> isolated, 2 -> sparse)
+    // a frame: a few components on disjoint random ids (so a component's
+    // minimum sits anywhere in it), each edge in a random orientation, some
+    // edges repeated, rows shuffled
+    val frame: Gen[Seq[(Long, Long)]] = for {
+      comps <- Gen.choose(1, 5).flatMap(Gen.listOfN(_, component))
+      shuffleSeed <- Gen.long
+    } yield {
+      val rnd = new scala.util.Random(shuffleSeed)
+      val sizes = comps.map(_.flatMap { case (a, b) => Seq(a, b) }.max + 1)
+      val ids = rnd.shuffle(Vector.range(0L, 1000L)).take(sizes.sum)
+      val edges = comps.zip(sizes.scanLeft(0)(_ + _)).flatMap { case (c, o) =>
+        c.map { case (a, b) =>
+          if (rnd.nextBoolean()) (ids(o + a), ids(o + b)) else (ids(o + b), ids(o + a)) }
+      }
+      rnd.shuffle(edges ++ edges.filter(_ => rnd.nextInt(4) == 0))
+    }
+    // the driver closure: label = component minimum, by graph search
+    def closure(edges: Seq[(Long, Long)]): Set[(Long, Long, Long, Int)] = {
+      val adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }.groupMap(_._1)(_._2)
+      val label = scala.collection.mutable.Map.empty[Long, Long]
+      adj.keys.foreach { start =>
+        if (!label.contains(start)) {
+          val seen = scala.collection.mutable.Set(start)
+          var frontier = List(start)
+          while (frontier.nonEmpty) {
+            frontier = frontier.flatMap(adj(_)).filter(seen.add)
+          }
+          seen.foreach(label(_) = seen.min)
+        }
+      }
+      val size = label.values.groupBy(identity).view.mapValues(_.size.toLong).toMap
+      label.map { case (id, l) => (id, l, size(l), if (id == l) 1 else 0) }.toSet
+    }
+    // 12 batches of 20 frames, each batch one Spark frame: frame f of a
+    // batch sits on ids f·1000 + [0, 1000), so no component spans two
+    // frames, the batch closure is the union of the frame closures, and a
+    // differing row names its frame. Every batch runs the one-task finish
+    // under three partitionings and the star finish under one.
+    val frames = (1 to 240).map(seed => frame.pureApply(Gen.Parameters.default, Seed(seed.toLong)))
+    frames.grouped(20).zipWithIndex.foreach { case (batch, b) =>
+      val edges = batch.zipWithIndex.flatMap { case (fr, f) =>
+        fr.map { case (x, y) => (x + f * 1000L, y + f * 1000L) } }
+      val want = closure(edges)
+      def check(got: Set[(Long, Long, Long, Int)], what: String): Unit = {
+        val seeds = ((got diff want) ++ (want diff got)).map(r => b * 20 + r._1 / 1000 + 1)
+        assert(seeds.isEmpty, s"$what differs from the closure on seeds ${seeds.toSeq.sorted}")
+      }
+      val df = edges.toDF("d1", "d2")
+      Seq(1, 3, 7).foreach { parts =>
+        check(ccRows(Curation.connectedComponents(df.repartition(parts), want.size.toLong)),
+              s"one-task finish over $parts partitions")
+      }
+      check(ccRows(Curation.connectedComponents(df.repartition(1 + b % 5), Long.MaxValue)),
+            s"star finish over ${1 + b % 5} partitions")
+    }
+    spark.catalog.clearCache() // the star finish caches each batch's pairs
+  }
+
+  test("building llm_dedup_clusters starts no more Spark jobs than building its pair frame") {
+    spark.catalog.clearCache()
+    val (_, pairJobs) = jobsDuring(Dedup.neardupPairs(spark, sfDir))
+    spark.catalog.clearCache()
+    val (_, ccJobs) = jobsDuring(Curation.dedupClusters(spark, sfDir))
+    assert(ccJobs <= pairJobs, s"connected components added ${ccJobs - pairJobs} job(s)")
+  }
+
+  test("llm_dedup_clusters under the one-task bound executes no localCheckpoint scan") {
+    assert(Tables.countOf(spark, sfDir, "documents") <= Curation.OneTaskCcMaxNodes)
+    val df = Curation.dedupClusters(spark, sfDir)
+    df.collect()
+    // a localCheckpoint'ed frame plans as a scan of its checkpointed RDD
+    val rddScans = flattenPlan(df.queryExecution.executedPlan)
+      .collect { case r: org.apache.spark.sql.execution.RDDScanExec => r.nodeName }
+    assert(rddScans.isEmpty, rddScans.mkString(", "))
   }
 
   test("corpus shuffle is a deterministic partition into dense shards") {
