@@ -159,9 +159,14 @@ object Dev {
     // whose single run is minutes long (k=512 simhash crossover).
     val passes = ctx.int("SPARK_GRAFT_SCALE_PASSES", 3)
     // (min, median, max) pass time: one best-of-N hid how far identical
-    // code moves from pass to pass
+    // code moves from pass to pass. Every pass starts with an empty session
+    // cache, cleared outside the clock, so a pass pays its own cachedOnce
+    // builds instead of reading the frames an earlier pass left behind.
     def spreadOf(body: => Unit): (Double, Double, Double) = {
-      val ts = (1 to passes).map { _ => val t0 = System.nanoTime(); body; secs(t0) }.sorted
+      val ts = (1 to passes).map { _ =>
+        spark.catalog.clearCache()
+        val t0 = System.nanoTime(); body; secs(t0)
+      }.sorted
       (ts.head, ts(ts.length / 2), ts.last)
     }
     // Shuffle-file reclamation BETWEEN timing phases (round 15): a probe JVM
@@ -172,6 +177,7 @@ object Dev {
     // The sleep lets the cleaner's async deletion drain.
     def reclaimShuffles(): Unit = { System.gc(); Thread.sleep(2000) }
     println(f"== Dev scale k=$k base=${ctx.base} ==")
+    println("cache: cleared before the warm-up and before each timed pass, outside the clock")
     println(f"${"query"}%-22s ${"t(1x) min/med/max"}%23s ${"t(kx) min/med/max"}%23s " +
       f"${"ratio"}%7s  (median ratio, linear = $k.0)")
     names.filter(SparkEntry.queries.contains).foreach { name =>
@@ -182,6 +188,7 @@ object Dev {
         if (name == "llm_dedup_clusters_star") Some(graft.llm.Curation.lastStarRounds)
         else None
       def timeAt(dir: String): (Double, Double, Double) = {
+        spark.catalog.clearCache()
         try noop(fn(spark, dir)) catch { case _: Throwable => () } // warmup
         reclaimShuffles()
         ctx.tally.reset() // tally the timed passes only

@@ -9,12 +9,25 @@ import graft.multimodal.Multimodal
 import graft.sources.{FsOps, Sources}
 import graft.streaming.Streams
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §0 and §7): [[queries]], [[oracleSql]] and
+  * [[dumpSort]], all three projections of one list, [[ops]].
   *
-  * Aggregates the per-module query maps. Every SQL-expressible operator has a
-  * matching DuckDB oracle in [[oracleSql]]; unit-only operators (approx
-  * aggregates, format round-trips, streaming semantics) are registered in
-  * [[queries]] alone and verified in ScalaTest.
+  * Registering an operator: add one [[Op]] to its module's `ops` (declared
+  * below every val it names, or the forward reference reads null and
+  * construction fails). `Op(name, build, oracle, sort)`:
+  *  - `build` is the plan over a fixture directory;
+  *  - `oracle` is `Sql(body)`, the DuckDB text over the same parquet
+  *    tables, or `NoOracle(verifiedBy, why)` for a rows-only operator: no
+  *    DuckDB twin computes the same rows, so the named ScalaTest suite bounds
+  *    its output instead and the correctness gate checks rows only;
+  *  - a non-empty `sort` registers the operator sort-free: graft.Verify
+  *    sorts the dump by those columns (ascending) and the oracle text is
+  *    the body plus `ORDER BY <sort>`, so the body carries no trailing
+  *    ORDER BY of its own. A key may name the oracle's table alias too
+  *    (`d.doc_id`); the dump sorts by the column part.
+  *  - `Op.shared(name, sql)` runs the same text in both engines and keeps
+  *    any ORDER BY inside it.
+  * Names are unique across modules; construction checks it.
   */
 object SparkEntry {
   import Dsl._
@@ -23,7 +36,7 @@ object SparkEntry {
     * fact join, partial+final agg, top-k sort — one query per P1 subsystem.
     * Driver smoke-checks rows>0 on sf0.001.
     */
-  val flagship: (SparkSession, String) => DataFrame = (s, d) => {
+  val flagship: Q = (s, d) => {
     val cust = Tables.customer(s, d).where(col("c_mktsegment") === "BUILDING")
     val ord = Tables.orders(s, d)
       .where(col("o_orderdate") < lit("1998-07-01").cast("timestamp"))
@@ -52,96 +65,31 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     flagship(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++
-    Aggregates.queries ++
-    Windows.queries ++
-    SetOps.queries ++
-    Scalar.queries ++
-    Classics.queries ++
-    TypedUdaf.queries ++
-    TemporalJoins.queries ++
-    Streams.queries ++
-    Sources.queries ++
-    FsOps.queries ++
-    Dedup.queries ++
-    Curation.queries ++
-    Similarity.queries ++
-    TextAnalysis.queries ++
-    AnnLsh.queries ++
-    AnnIvf.queries ++
-    AnnQuantized.queries ++
-    Clustering.queries ++
-    Sketches.queries ++
-    Multimodal.queries ++
-    ScaleTechniques.queries ++
-    SqlSurface.queries ++
-    Quantize.queries ++
-    Behavioral.queries ++
-    DataQuality.queries ++
-    Map("flagship" -> flagship)
+  /** Every registered operator, in module order. */
+  val ops: Seq[Op] =
+    Relational.ops ++ Aggregates.ops ++ Windows.ops ++ SetOps.ops ++ Scalar.ops ++
+    Classics.ops ++ TypedUdaf.ops ++ TemporalJoins.ops ++ Streams.ops ++ Sources.ops ++
+    FsOps.ops ++ Dedup.ops ++ Curation.ops ++ Similarity.ops ++ TextAnalysis.ops ++
+    AnnLsh.ops ++ AnnIvf.ops ++ AnnQuantized.ops ++ Clustering.ops ++ Sketches.ops ++
+    Multimodal.ops ++ ScaleTechniques.ops ++ SqlSurface.ops ++ Quantize.ops ++
+    Behavioral.ops ++ DataQuality.ops :+ Op("flagship", flagship, Sql(flagshipSql))
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    Relational.oracle ++
-    Aggregates.oracle ++
-    Windows.oracle ++
-    SetOps.oracle ++
-    Scalar.oracle ++
-    Classics.oracle ++
-    TypedUdaf.oracle ++
-    TemporalJoins.oracle ++
-    Streams.oracle ++
-    Sources.oracle ++
-    FsOps.oracle ++
-    Dedup.oracle ++
-    Curation.oracle ++
-    Similarity.oracle ++
-    TextAnalysis.oracle ++
-    ScaleTechniques.oracle ++
-    SqlSurface.oracle ++
-    Quantize.oracle ++
-    Behavioral.oracle ++
-    DataQuality.oracle ++
-    AnnQuantized.oracle ++
-    Clustering.oracle ++
-    Sketches.oracle ++
-    Multimodal.oracle ++
-    Map("flagship" -> flagshipSql)
+  {
+    val dup = ops.groupBy(_.name).collect { case (n, os) if os.size > 1 => n }
+    require(dup.isEmpty, s"operator names registered twice: ${dup.mkString(", ")}")
+    val unset = ops.filter(o => o.build == null || (o.oracle match {
+      case null | Sql(null) => true
+      case _ => false
+    })).map(_.name)
+    require(unset.isEmpty, s"operators with a null build or oracle " +
+      s"(is a module's ops declared above the vals it names?): ${unset.mkString(", ")}")
+  }
 
-  /** Comparator-side dump order (round-12 verdict #1a): queries listed here
-    * are registered WITHOUT their deterministic-compare global sort — the
-    * sort is harness scaffolding for the hash compare, not operator
-    * semantics — and graft.Verify applies this ORDER BY to the dump
-    * instead, matching the oracle SQL's ORDER BY exactly. The benchmark
-    * then times the operator, not the comparator. */
-  def dumpSort: Map[String, Seq[String]] = Map(
-    "project_select" -> Relational.projectSelectDumpSort,
-    "scan_parquet" -> Relational.scanParquetDumpSort,
-    "join_inner_hash" -> Relational.joinInnerHashDumpSort,
-    "join_broadcast" -> Relational.joinBroadcastDumpSort) ++
-    Windows.dumpSort ++
-    Scalar.dumpSort ++
-    Streams.dumpSort ++
-    SetOps.dumpSort ++
-    Behavioral.dumpSort ++
-    Classics.dumpSort ++
-    Sources.dumpSort ++
-    Multimodal.dumpSort ++
-    Curation.dumpSort ++
-    TextAnalysis.dumpSort ++
-    Aggregates.dumpSort ++
-    Relational.dumpSort ++
-    ScaleTechniques.dumpSort ++
-    TemporalJoins.dumpSort ++
-    DataQuality.dumpSort ++
-    Dedup.dumpSort ++
-    Similarity.dumpSort ++
-    Clustering.dumpSort ++
-    Quantize.dumpSort ++
-    AnnQuantized.dumpSort ++
-    TypedUdaf.dumpSort ++
-    FsOps.dumpSort
+  lazy val queries: Map[String, Q] = ops.map(o => o.name -> o.build).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    ops.flatMap(o => o.oracleSql.map(o.name -> _)).toMap
+
+  lazy val dumpSort: Map[String, Seq[String]] =
+    ops.filter(_.sort.nonEmpty).map(o => o.name -> o.dumpSort).toMap
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{NoOracle, Op, Q, Sql, Tables}
 
 /** §2.9 MapReduce classics — the examples-jar conformance suite re-expressed
   * (SURVEY.md). WordCount/Grep/etc. are the de-facto capability proofs of a
@@ -14,8 +14,6 @@ import graft.Tables
   * before the single shuffle, which is what keeps this viable at 100 TB.
   */
 object Classics {
-  type Q = (SparkSession, String) => DataFrame
-
   private def tokens(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
@@ -102,8 +100,7 @@ object Classics {
     s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
       |  ${graft.Dsl.round6Sql("l_extendedprice * 2 + 1")} AS v2
       |FROM lineitem
-      |WHERE l_quantity > 5 AND l_extendedprice * 2 + 1 > 100
-      |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin
+      |WHERE l_quantity > 5 AND l_extendedprice * 2 + 1 > 100""".stripMargin
 
   /** Hadoop Streaming analog: user code as Scala UDF + typed Dataset.map —
     * same-process, codegen-adjacent, no per-record pipe boundary. */
@@ -121,7 +118,7 @@ object Classics {
     """SELECT doc_id,
       |  cast(len(list_filter(string_split_regex(text, '\s+'), t -> t <> '')) as int) AS n_toks,
       |  cast(length(text) as int) AS n_chars2
-      |FROM documents ORDER BY doc_id""".stripMargin
+      |FROM documents""".stripMargin
 
   /** TeraValidate analog: verify a claimed sort order and emit a content
     * checksum. The "claimed order" here is lineitem by (l_shipdate,
@@ -197,24 +194,6 @@ object Classics {
       |  min(l_orderkey) AS min_key, max(l_orderkey) AS max_key
       |FROM seq""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    // §2.9 alias rows: the reference's example JARs by their own names —
-    // TeraSort IS the range-partitioned global sort, SecondarySort IS the
-    // composite-key window sort, the join example IS the shuffled equi
-    // join. Registered under both names so the inventory row keys resolve.
-    "mr_terasort" -> ((s, d) => graft.operators.Windows.sortGlobal(s, d)),
-    "mr_secondarysort" -> ((s, d) => graft.operators.Windows.sortSecondary(s, d)),
-    "mr_join" -> ((s, d) => graft.operators.Relational.joinInnerHash(s, d)),
-    "mr_teravalidate" -> mrTeravalidate,
-    "mr_wordcount" -> mrWordcount,
-    "mr_multifilewc" -> mrMultifilewc,
-    "mr_grep" -> mrGrep,
-    "mr_randomwriter" -> mrRandomwriter,
-    "mr_counters" -> mrCounters,
-    "mr_chain" -> mrChain,
-    "mr_streaming_udf" -> mrStreamingUdf,
-  )
-
   // mr_counters' Observation travels a side channel, but the metric VALUES
   // are plain aggregates of lineitem — oracle-checkable (l_quantity is
   // integer-valued, so the double sum is order-independent and exact).
@@ -222,31 +201,34 @@ object Classics {
     """SELECT count(*) AS rows_seen, cast(sum(l_quantity) as double) AS qty_seen
       |FROM lineitem""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "mr_terasort" -> graft.operators.Windows.sortGlobalSql,
-    "mr_secondarysort" -> graft.operators.Windows.sortSecondarySql,
-    "mr_join" -> graft.operators.Relational.joinInnerHashSql,
-    "mr_teravalidate" -> mrTeravalidateSql,
-    "mr_counters" -> mrCountersSql,
-    "mr_wordcount" -> mrWordcountSql,
-    "mr_multifilewc" -> mrMultifilewcSql,
-    "mr_grep" -> mrGrepSql,
-    "mr_chain" -> mrChainSql,
-    "mr_streaming_udf" -> mrStreamingUdfSql,
-  )
-
   /** Registered SORT-FREE (round 15). mr_chain: the job-chain's value is
     * the filter→derive pipeline, not an output order; the lineitem PK
     * quadruple is the compare order. mr_join: this row DELEGATES to the
-    * (round-14 sort-free) joinInnerHash, so it needs its own dump entry —
+    * (round-14 sort-free) joinInnerHash, so it needs its own sort keys —
     * without one its compare passed only because AQE's broadcast plan
     * happens to preserve the orders-scan order (latent fragility, fixed
-    * here). */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "mr_chain" -> Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
-    "mr_join" -> Seq("o_orderkey"),
-    // tranche 3 (round 15); mr_secondarysort/terasort keep their sorts —
-    // the global order IS those operators' semantics
-    "mr_streaming_udf" -> Seq("doc_id"),
+    * here). mr_secondarysort/terasort keep their sorts: the global order IS
+    * those operators' semantics. */
+  val ops: Seq[Op] = Seq(
+    // §2.9 alias rows: the reference's example JARs by their own names —
+    // TeraSort IS the range-partitioned global sort, SecondarySort IS the
+    // composite-key window sort, the join example IS the shuffled equi
+    // join. Registered under both names so the inventory row keys resolve.
+    Op("mr_terasort", (s, d) => graft.operators.Windows.sortGlobal(s, d),
+      Sql(graft.operators.Windows.sortGlobalSql)),
+    Op("mr_secondarysort", (s, d) => graft.operators.Windows.sortSecondary(s, d),
+      Sql(graft.operators.Windows.sortSecondarySql)),
+    Op("mr_join", (s, d) => graft.operators.Relational.joinInnerHash(s, d),
+      Sql(graft.operators.Relational.joinInnerHashSql), Seq("o_orderkey")),
+    Op("mr_teravalidate", mrTeravalidate, Sql(mrTeravalidateSql)),
+    Op("mr_wordcount", mrWordcount, Sql(mrWordcountSql)),
+    Op("mr_multifilewc", mrMultifilewc, Sql(mrMultifilewcSql)),
+    Op("mr_grep", mrGrep, Sql(mrGrepSql)),
+    Op("mr_randomwriter", mrRandomwriter,
+      NoOracle("graft.SqlSurfaceSpec", "rand/randn streams are Spark-specific")),
+    Op("mr_counters", mrCounters, Sql(mrCountersSql)),
+    Op("mr_chain", mrChain,
+      Sql(mrChainSql), graft.operators.Relational.LineitemKey),
+    Op("mr_streaming_udf", mrStreamingUdf, Sql(mrStreamingUdfSql), Seq("doc_id")),
   )
 }

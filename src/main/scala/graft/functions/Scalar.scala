@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Op, Q, Sql, Tables}
 
 /** §2.8 scalar function surface (SURVEY.md) — one themed query per family.
   *
@@ -12,8 +11,6 @@ import graft.Tables
   * whole-stage codegen (no UDF boundary, no per-record interpreter).
   */
 object Scalar {
-  type Q = (SparkSession, String) => DataFrame
-
   /** String family: lower/upper/trim/substring/concat/length/replace/lpad/split. */
   val fnString: Q = (s, d) =>
     Tables.customer(s, d)
@@ -41,7 +38,7 @@ object Scalar {
       |  replace(c_name, 'Customer', 'Cust') AS repl,
       |  lpad(cast(c_custkey as varchar), 8, '0') AS padded,
       |  array_to_string(string_split(c_name, '#'), '|') AS parts
-      |FROM customer ORDER BY c_custkey""".stripMargin
+      |FROM customer""".stripMargin
 
   /** Regex family: extract / replace-all / rlike. */
   val fnRegex: Q = (s, d) =>
@@ -56,7 +53,7 @@ object Scalar {
       |  regexp_extract(p_name, '^(\w+)', 1) AS first_word,
       |  regexp_replace(p_name, '[aeiou]', '_', 'g') AS devoweled,
       |  regexp_matches(p_type, '^ECO') AS is_eco
-      |FROM part ORDER BY p_partkey""".stripMargin
+      |FROM part""".stripMargin
 
   /** Date/time family (UTC both sides). */
   val fnDate: Q = (s, d) =>
@@ -82,7 +79,7 @@ object Scalar {
       |  cast(o_orderdate + INTERVAL 3 MONTH as date) AS plus3m,
       |  cast(epoch(o_orderdate) as bigint) AS epoch_s,
       |  cast(o_orderdate as date) AS as_date
-      |FROM orders ORDER BY o_orderkey""".stripMargin
+      |FROM orders""".stripMargin
 
   /** Math family. ln/exp are libm-computed in both engines; operands are
     * identical doubles and results are rounded to 6dp to absorb any last-ulp
@@ -113,7 +110,7 @@ object Scalar {
       |  cast(sign(p_retailprice - 1000) as int) AS sgn,
       |  greatest(p_size, 25) AS gr,
       |  least(p_size, 25) AS le
-      |FROM part ORDER BY p_partkey""".stripMargin
+      |FROM part""".stripMargin
 
   /** Conditional family: CASE / coalesce / nullif / nvl-style defaults. */
   val fnConditional: Q = (s, d) =>
@@ -132,7 +129,7 @@ object Scalar {
       |       ELSE 'rich' END AS band,
       |  coalesce(nullif(c_mktsegment, 'BUILDING'), 'NONE') AS seg_or_none,
       |  CASE WHEN c_acctbal > 0 THEN c_acctbal ELSE 0.0 END AS pos_bal
-      |FROM customer ORDER BY c_custkey""".stripMargin
+      |FROM customer""".stripMargin
 
   /** Array family incl. higher-order functions over tokenized text. */
   val fnArray: Q = (s, d) =>
@@ -154,8 +151,7 @@ object Scalar {
       |  array_to_string(list_slice(list_sort(toks), 1, 5), '|') AS first5_sorted,
       |  array_to_string(list_transform(toks, t -> upper(t)), '|') AS upper_toks,
       |  coalesce(array_to_string(list_filter(toks, t -> length(t) > 5), '|'), '') AS long_toks
-      |FROM (SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents)
-      |ORDER BY doc_id""".stripMargin
+      |FROM (SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents)""".stripMargin
 
   /** Struct family: nested-record construction and surgery — `struct`,
     * `withField` (add a computed member), `dropFields` (remove one),
@@ -187,8 +183,7 @@ object Scalar {
       |    ',"prio":"' || o_orderpriority ||
       |    '","cents":' || cast(round(o_totalprice * 100) as bigint) || '}' AS js
       |FROM orders
-      |WHERE cast(round(o_totalprice * 100) as bigint) > 20000000
-      |ORDER BY o_orderkey""".stripMargin
+      |WHERE cast(round(o_totalprice * 100) as bigint) > 20000000""".stripMargin
 
   /** Map family over parsed JSON event properties. */
   val fnMap: Q = (s, d) =>
@@ -210,7 +205,7 @@ object Scalar {
       |  array_to_string(json_keys(props), '|') AS ks,
       |  cast(cast(json_extract(props, '$.k') as int) as varchar) AS vs,
       |  cast(json_extract(props, '$.k') as int) AS k_val
-      |FROM events ORDER BY event_id""".stripMargin
+      |FROM events""".stripMargin
 
   /** JSON family: path extraction both as string and typed struct. */
   val fnJson: Q = (s, d) =>
@@ -232,7 +227,7 @@ object Scalar {
     """SELECT event_id,
       |  json_extract_string(props, '$.k') AS k_str,
       |  cast(json_extract(props, '$.k') as int) AS k_int
-      |FROM events ORDER BY event_id""".stripMargin
+      |FROM events""".stripMargin
 
   /** Content-hash family (dedup substrate; HDFS checksum analog). xxhash64 /
     * crc32 have no DuckDB twin → covered by a unit test instead. */
@@ -244,7 +239,7 @@ object Scalar {
 
   val fnHashSql: String =
     """SELECT doc_id, sha256(text) AS sha, md5(text) AS md5h
-      |FROM documents ORDER BY doc_id""".stripMargin
+      |FROM documents""".stripMargin
 
   /** URL function family: synthesize a deterministic URL per document from
     * fixture columns, then parse it back — scheme/host/path/query and a
@@ -274,8 +269,7 @@ object Scalar {
       |  SELECT doc_id,
       |    'https://' || source || '.example.com/d/' || cast(doc_id as varchar)
       |      || '?lang=' || lang || '&n=' || cast(n_chars as varchar) AS url
-      |  FROM documents)
-      |ORDER BY doc_id""".stripMargin
+      |  FROM documents)""".stripMargin
 
   /** Bitwise scalar family: and/or/xor/not, shifts, popcount — the bit-mask
     * manipulation a Writable-packing Hadoop job does by hand. Spark spells
@@ -302,7 +296,7 @@ object Scalar {
       |  o_orderkey << 3 AS shl,
       |  o_orderkey >> 2 AS shr,
       |  cast(bit_count(o_orderkey) as int) AS popcount
-      |FROM orders ORDER BY o_orderkey""".stripMargin
+      |FROM orders""".stripMargin
 
   /** Spark 4 VARIANT type: parse the JSON props column once into the binary
     * semi-structured VARIANT encoding, then extract typed fields with
@@ -328,8 +322,7 @@ object Scalar {
       |  cast(json_extract(props, '$.k') as int) AS k_int,
       |  cast(cast(json_extract(props, '$.k') as int) as varchar) AS k_str,
       |  cast(1 as int) AS missing_is_null
-      |FROM events
-      |ORDER BY event_id""".stripMargin
+      |FROM events""".stripMargin
 
   /** XML parsing (Spark 4 built-in from_xml): render each row as an XML
     * fragment, parse it back with an explicit schema, and project the typed
@@ -348,63 +341,28 @@ object Scalar {
 
   val fnXmlSql: String =
     """SELECT n_nationkey, cast(n_nationkey as int) AS k, n_name AS name
-      |FROM nation ORDER BY n_nationkey""".stripMargin
-
-  val queries: Map[String, Q] = Map(
-    "fn_variant" -> fnVariant,
-    "fn_xml" -> fnXml,
-    "fn_bitwise" -> fnBitwise,
-    "fn_string" -> fnString,
-    "fn_regex" -> fnRegex,
-    "fn_date" -> fnDate,
-    "fn_math" -> fnMath,
-    "fn_conditional" -> fnConditional,
-    "fn_array" -> fnArray,
-    "fn_struct" -> fnStruct,
-    "fn_map" -> fnMap,
-    "fn_json" -> fnJson,
-    "fn_hash" -> fnHash,
-    "fn_url" -> fnUrl,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "fn_variant" -> fnVariantSql,
-    "fn_xml" -> fnXmlSql,
-    "fn_bitwise" -> fnBitwiseSql,
-    "fn_string" -> fnStringSql,
-    "fn_regex" -> fnRegexSql,
-    "fn_date" -> fnDateSql,
-    "fn_math" -> fnMathSql,
-    "fn_conditional" -> fnConditionalSql,
-    "fn_array" -> fnArraySql,
-    "fn_struct" -> fnStructSql,
-    "fn_map" -> fnMapSql,
-    "fn_json" -> fnJsonSql,
-    "fn_hash" -> fnHashSql,
-    "fn_url" -> fnUrlSql,
-  )
+      |FROM nation""".stripMargin
 
   /** Registered SORT-FREE (round 15): map-only per-row function families
     * whose trailing ORDER BY existed only for the hash compare — on the
     * ~100-150k-row sf0.1 outputs each was a full range exchange over rows
-    * the operator itself never needed ordered. Compare order: graft.Verify
-    * applies these (each equals its oracle's trailing ORDER BY; the key is
-    * the source table's PK — a total order). */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "fn_date" -> Seq("o_orderkey"),
-    "fn_struct" -> Seq("o_orderkey"),
-    "fn_json" -> Seq("event_id"),
-    "fn_map" -> Seq("event_id"),
-    "fn_bitwise" -> Seq("o_orderkey"),
-    "fn_variant" -> Seq("event_id"),
-    "fn_array" -> Seq("doc_id"),
-    // tranche 3 (round 15)
-    "fn_string" -> Seq("c_custkey"),
-    "fn_regex" -> Seq("p_partkey"),
-    "fn_url" -> Seq("doc_id"),
-    "fn_math" -> Seq("p_partkey"),
-    "fn_conditional" -> Seq("c_custkey"),
-    "fn_hash" -> Seq("doc_id"),
-    "fn_xml" -> Seq("n_nationkey"),
+    * the operator itself never needed ordered. The sort key is the source
+    * table's PK — a total order; Verify sorts the dump by it and the
+    * oracle's ORDER BY is derived from it. */
+  val ops: Seq[Op] = Seq(
+    Op("fn_variant", fnVariant, Sql(fnVariantSql), Seq("event_id")),
+    Op("fn_xml", fnXml, Sql(fnXmlSql), Seq("n_nationkey")),
+    Op("fn_bitwise", fnBitwise, Sql(fnBitwiseSql), Seq("o_orderkey")),
+    Op("fn_string", fnString, Sql(fnStringSql), Seq("c_custkey")),
+    Op("fn_regex", fnRegex, Sql(fnRegexSql), Seq("p_partkey")),
+    Op("fn_date", fnDate, Sql(fnDateSql), Seq("o_orderkey")),
+    Op("fn_math", fnMath, Sql(fnMathSql), Seq("p_partkey")),
+    Op("fn_conditional", fnConditional, Sql(fnConditionalSql), Seq("c_custkey")),
+    Op("fn_array", fnArray, Sql(fnArraySql), Seq("doc_id")),
+    Op("fn_struct", fnStruct, Sql(fnStructSql), Seq("o_orderkey")),
+    Op("fn_map", fnMap, Sql(fnMapSql), Seq("event_id")),
+    Op("fn_json", fnJson, Sql(fnJsonSql), Seq("event_id")),
+    Op("fn_hash", fnHash, Sql(fnHashSql), Seq("doc_id")),
+    Op("fn_url", fnUrl, Sql(fnUrlSql), Seq("doc_id")),
   )
 }

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Op, Q, Sql, Tables}
 
 /** §2.9 `mr_streaming_udf` mapping, UDAF leg: user-defined aggregation as a
   * typed `Aggregator[IN, BUF, OUT]` — the reduce-side analog of a Hadoop
@@ -15,8 +15,6 @@ import graft.Tables
   * result, exactly like the decimal strategy in graft.Dsl.
   */
 object TypedUdaf {
-  type Q = (SparkSession, String) => DataFrame
-
   case class PriceQty(price: Double, qty: Double)
   case class WAvgBuf(centsQty: Long, qty: Long)
 
@@ -52,19 +50,10 @@ object TypedUdaf {
              "cast(sum(cast(round(l_extendedprice * 100) as bigint) * cast(l_quantity as bigint)) as double)" +
              " / 100.0 / sum(cast(l_quantity as bigint))")} AS wavg_price
        |FROM lineitem
-       |GROUP BY l_returnflag
-       |ORDER BY l_returnflag""".stripMargin
-
-  val queries: Map[String, Q] = Map(
-    "udaf_weighted_avg" -> udafWeightedAvg,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "udaf_weighted_avg" -> udafWeightedAvgSql,
-  )
+       |GROUP BY l_returnflag""".stripMargin
 
   /** Registered SORT-FREE (round 15, tranche 3): three group rows. */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "udaf_weighted_avg" -> Seq("l_returnflag"),
+  val ops: Seq[Op] = Seq(
+    Op("udaf_weighted_avg", udafWeightedAvg, Sql(udafWeightedAvgSql), Seq("l_returnflag")),
   )
 }

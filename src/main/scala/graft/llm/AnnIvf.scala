@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{NoOracle, Op, Tables}
 
 /** Approximate nearest neighbor via an IVF (inverted-file) coarse quantizer —
   * the second scale path for §2.11 similarity search, complementing the
@@ -207,7 +207,8 @@ object AnnIvf {
       .orderBy("q_id", "rk")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_simsearch_ivf" -> ((s, d) => Similarity.maybeWithRecall(ivfTopk(s, d), s, d)),
+  val ops: Seq[Op] = Seq(
+    Op("llm_simsearch_ivf", (s, d) => Similarity.maybeWithRecall(ivfTopk(s, d), s, d),
+      NoOracle("graft.VectorSpec", "approximate top-k, bounded by recall, not equality")),
   )
 }

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{NoOracle, Op, Tables}
 
 /** Approximate nearest neighbor via random-hyperplane LSH (SURVEY.md §2.11
   * scale path; brute force in [[Similarity]] is the declared baseline).
@@ -137,7 +137,8 @@ object AnnLsh {
     * a column ([[Similarity.withRecall]]) so the driver's row dump sees a
     * recall regression; the hard bound is additionally asserted in
     * ScalaTest. */
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_simsearch_lsh" -> ((s, d) => Similarity.maybeWithRecall(annTopk(s, d), s, d)),
+  val ops: Seq[Op] = Seq(
+    Op("llm_simsearch_lsh", (s, d) => Similarity.maybeWithRecall(annTopk(s, d), s, d),
+      NoOracle("graft.VectorSpec", "approximate top-k, bounded by recall, not equality")),
   )
 }

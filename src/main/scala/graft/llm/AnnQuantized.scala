@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Op, Q, Sql, Tables}
 
 /** §2.11 quantized-scan similarity search: score candidates with int8
   * codes first (4× less data to scan, integer arithmetic), keep a top-R
@@ -23,8 +23,6 @@ import graft.Tables
   * query set and parallelize over candidate splits.
   */
 object AnnQuantized {
-  type Q = (SparkSession, String) => DataFrame
-
   val RerankK = 20 // quantized shortlist size
   val TopK = 5     // final answers per query
 
@@ -203,21 +201,13 @@ object AnnQuantized {
        |    row_number() OVER (PARTITION BY q_id ORDER BY score DESC, c_id) AS rk
        |  FROM reranked)
        |SELECT q_id, cast(rk as int) AS rk, c_id, round(score, 6) AS score6
-       |FROM final WHERE rk <= $TopK
-       |ORDER BY q_id, rk""".stripMargin
+       |FROM final WHERE rk <= $TopK""".stripMargin
   }
-
-  val queries: Map[String, Q] = Map(
-    "llm_simsearch_quantized" -> simsearchQuantized,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "llm_simsearch_quantized" -> simsearchQuantizedSql,
-  )
 
   /** Registered SORT-FREE (round 15, tranche 3): (q_id, rk) is the rank
     * PK; the theta spelling keeps its sort (spec-only, not timed). */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "llm_simsearch_quantized" -> Seq("q_id", "rk"),
+  val ops: Seq[Op] = Seq(
+    Op("llm_simsearch_quantized", simsearchQuantized,
+      Sql(simsearchQuantizedSql), Seq("q_id", "rk")),
   )
 }

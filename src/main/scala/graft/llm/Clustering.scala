@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Op, Q, Sql, Tables}
 
 /** §2.11 embedding clustering: deterministic Lloyd's k-means over the
   * embedding table — the centroid machinery behind IVF index build
@@ -25,8 +25,6 @@ import graft.Tables
   * so the shuffle volume per iteration is O(K·dim), not O(n). That is the
   * plan shape that survives 100 TB; only K and the iteration count grow. */
 object Clustering {
-  type Q = (SparkSession, String) => DataFrame
-
   val K = 4
   val Iters = 2
 
@@ -129,7 +127,7 @@ object Clustering {
        |  cast(sum(cast(round(d2 * 1e6, 0) as bigint)) as bigint) AS inertia_micro,
        |  ${graft.Dsl.round6Sql(
             "cast(sum(cast(round(d2 * 1e6, 0) as bigint)) as double) / count(*) / 1e6")} AS mean_d2
-       |FROM a2 GROUP BY cid ORDER BY cid""".stripMargin
+       |FROM a2 GROUP BY cid""".stripMargin
 
   /** PageRank over the k-NN graph ([[Similarity.knnGraph]]'s edge set) —
     * the classic iterative-dataflow workload of the MapReduce era, pinned
@@ -248,24 +246,13 @@ object Clustering {
        |  WHERE ${Similarity.cosineSql("a.embedding", "b.embedding")}
        |          >= ${Similarity.NeardupEmbeddingTau})
        |SELECT a.vec_id, a.cid, (d.vec_id IS NOT NULL) AS is_dup
-       |FROM a2 a LEFT JOIN drops d ON a.vec_id = d.vec_id
-       |ORDER BY a.vec_id""".stripMargin
-
-  val queries: Map[String, Q] = Map(
-    "llm_kmeans" -> kmeans,
-    "llm_pagerank" -> pagerank,
-    "llm_semdedup" -> semdedup,
-  )
-  val oracle: Map[String, String] = Map(
-    "llm_kmeans" -> kmeansSql,
-    "llm_pagerank" -> pagerankSql,
-    "llm_semdedup" -> semdedupSql,
-  )
+       |FROM a2 a LEFT JOIN drops d ON a.vec_id = d.vec_id""".stripMargin
 
   /** Registered SORT-FREE (round 15, tranche 3): per-cluster / per-vector
     * outputs with unique keys — trailing ORDER BY was comparator-only. */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "llm_kmeans" -> Seq("cid"),
-    "llm_semdedup" -> Seq("vec_id"),
+  val ops: Seq[Op] = Seq(
+    Op("llm_kmeans", kmeans, Sql(kmeansSql), Seq("cid")),
+    Op("llm_pagerank", pagerank, Sql(pagerankSql)),
+    Op("llm_semdedup", semdedup, Sql(semdedupSql), Seq("a.vec_id")),
   )
 }

@@ -1,8 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Op, Q, Sql, Tables}
 
 /** §2.11 corpus curation — the operators between "deduped documents" and
   * "training shards" in a large-scale training-data pipeline: near-dup
@@ -20,8 +20,6 @@ import graft.Tables
   * no driver-side materialization of data rows anywhere.
   */
 object Curation {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Dev diagnostic: round count of the most recent star finish in this
     * JVM, read by `graft.Dev scale` to report rounds-at-depth alongside
     * wall time. Not part of the library surface; -1 = not yet run. */
@@ -252,7 +250,7 @@ object Curation {
        |SELECT doc_id, cluster_id,
        |  cast(count(*) OVER (PARTITION BY cluster_id) as bigint) AS cluster_size,
        |  CASE WHEN doc_id = cluster_id THEN 1 ELSE 0 END AS is_survivor
-       |FROM lbl ORDER BY doc_id""".stripMargin
+       |FROM lbl""".stripMargin
 
   // ---- benchmark decontamination ------------------------------------------
 
@@ -308,8 +306,7 @@ object Curation {
        |FROM inter
        |JOIN sizes s1 ON s1.doc_id = train_id
        |JOIN sizes s2 ON s2.doc_id = bench_id
-       |WHERE cast(inter as double) / (s1.n_sh + s2.n_sh - inter) >= ${Dedup.JaccardThreshold}
-       |ORDER BY train_id, bench_id""".stripMargin
+       |WHERE cast(inter as double) / (s1.n_sh + s2.n_sh - inter) >= ${Dedup.JaccardThreshold}""".stripMargin
 
   /** Word-level n-gram size for the collision decontamination protocol: the
     * published eval-contamination sweeps (GPT-3 appendix C / PaLM) flag a
@@ -432,8 +429,7 @@ object Curation {
        |  GROUP BY 1)
        |SELECT train_id, n_hit, n_grams,
        |  round(cast(n_hit as double) / n_grams, 6) AS frac6, first_bench_id
-       |FROM hits JOIN sizes USING (train_id)
-       |ORDER BY train_id""".stripMargin
+       |FROM hits JOIN sizes USING (train_id)""".stripMargin
   }
 
   /** Incremental-ingest dedup: the production daily-batch admission check.
@@ -509,8 +505,7 @@ object Curation {
        |FROM documents d
        |LEFT JOIN exact e ON d.doc_id = e.doc_id
        |LEFT JOIN near n ON d.doc_id = n.doc_id
-       |WHERE d.doc_id % 10 = 7
-       |ORDER BY d.doc_id""".stripMargin
+       |WHERE d.doc_id % 10 = 7""".stripMargin
 
   // ---- deterministic corpus shuffle + sharding ----------------------------
 
@@ -554,7 +549,7 @@ object Curation {
        |SELECT shard,
        |  cast(row_number() OVER (PARTITION BY shard ORDER BY h, doc_id) as bigint) AS pos,
        |  doc_id, lang
-       |FROM sharded ORDER BY shard, pos""".stripMargin
+       |FROM sharded""".stripMargin
 
   // ---- token-budget sequence packing --------------------------------------
 
@@ -599,7 +594,7 @@ object Curation {
        |SELECT lang, cast(cum_before // $ChunkTokens as bigint) AS chunk_id,
        |  count(*) AS n_docs, cast(sum(n_toks) as bigint) AS chunk_toks,
        |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
-       |FROM pos GROUP BY lang, chunk_id ORDER BY lang, chunk_id""".stripMargin
+       |FROM pos GROUP BY lang, chunk_id""".stripMargin
 
   // ---- quality-weighted mixture rebalancing -------------------------------
 
@@ -655,8 +650,7 @@ object Curation {
        |  round(cast(pw9 as double) / z9, 6) AS weight6,
        |  round((cast(pw9 as double) / z9) / share, 6) AS upsample6,
        |  round((cast(pw9 as double) / z9) * n_total, 1) AS docs_per_epoch
-       |FROM powed CROSS JOIN z
-       |ORDER BY source""".stripMargin
+       |FROM powed CROSS JOIN z""".stripMargin
 
   val mixRebalance: Q = (s, d) =>
     Tables.documents(s, d)
@@ -667,15 +661,13 @@ object Curation {
       .select(col("doc_id"), col("lang"), col("tier"),
               explode(sequence(lit(1), col("tier"))).as("copy"))
 
-
   val mixRebalanceSql: String =
     """WITH tiered AS (
       |  SELECT doc_id, lang,
       |    CASE WHEN n_chars >= 300 THEN 3 WHEN n_chars >= 150 THEN 2 ELSE 1 END AS tier
       |  FROM documents)
       |SELECT doc_id, lang, tier, cast(copy as int) AS copy
-      |FROM tiered, unnest(generate_series(1, tier)) AS g(copy)
-      |ORDER BY doc_id, copy""".stripMargin
+      |FROM tiered, unnest(generate_series(1, tier)) AS g(copy)""".stripMargin
 
   // ---- inverted index -----------------------------------------------------
 
@@ -707,7 +699,7 @@ object Curation {
       |  FROM documents)
       |SELECT w AS term, count(*) AS df,
       |  array_to_string(list_sort(list(doc_id)), '|') AS postings
-      |FROM toks GROUP BY w ORDER BY term""".stripMargin
+      |FROM toks GROUP BY w""".stripMargin
 
   // ---- end-to-end curation composite --------------------------------------
 
@@ -803,55 +795,26 @@ object Curation {
        |  WHERE nd.doc_id IS NULL)
        |SELECT shard, count(*) AS n_docs, cast(sum(n_toks) as bigint) AS sum_toks,
        |  min(doc_id) AS min_doc, max(doc_id) AS max_doc
-       |FROM kept GROUP BY shard ORDER BY shard""".stripMargin
-
-  val queries: Map[String, Q] = Map(
-    "llm_curation_e2e" -> curationE2e,
-    "llm_ingest_dedup" -> ingestDedup,
-    "llm_mix_temperature" -> mixTemperature,
-    "llm_decontaminate" -> decontaminate,
-    "llm_decontaminate_ngram" -> decontaminateNgram,
-    "llm_dedup_clusters" -> dedupClusters,
-    "llm_dedup_clusters_star" -> dedupClustersStar,
-    "llm_corpus_shuffle" -> corpusShuffle,
-    "llm_seq_pack" -> seqPack,
-    "llm_mix_rebalance" -> mixRebalance,
-    "llm_inverted_index" -> invertedIndex,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "llm_curation_e2e" -> curationE2eSql,
-    "llm_ingest_dedup" -> ingestDedupSql,
-    "llm_mix_temperature" -> mixTemperatureSql,
-    "llm_decontaminate" -> decontaminateSql,
-    "llm_decontaminate_ngram" -> decontaminateNgramSql,
-    "llm_dedup_clusters" -> dedupClustersSql,
-    // the star formulation declares identical semantics — one oracle text
-    // pins both physical algorithms to the same clustering
-    "llm_dedup_clusters_star" -> dedupClustersSql,
-    "llm_corpus_shuffle" -> corpusShuffleSql,
-    "llm_seq_pack" -> seqPackSql,
-    "llm_mix_rebalance" -> mixRebalanceSql,
-    "llm_inverted_index" -> invertedIndexSql,
-  )
+       |FROM kept GROUP BY shard""".stripMargin
 
   /** Registered SORT-FREE (round 15): cluster labels have no semantic
     * order — downstream dedup consumes them as a keyed lookup (see
     * curationE2e) — and the trailing sort ran in every pass of the suite's
     * slowest query. doc_id is unique (one label row per doc). */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "llm_dedup_clusters" -> Seq("doc_id"),
-    "llm_dedup_clusters_star" -> Seq("doc_id"),
-    // tranche 3 (round 15): comparator-only trailing sorts over unique keys
-    "llm_decontaminate" -> Seq("train_id", "bench_id"),
-    "llm_decontaminate_ngram" -> Seq("train_id"),
-    "llm_ingest_dedup" -> Seq("doc_id"),
-    "llm_corpus_shuffle" -> Seq("shard", "pos"),
-    "llm_seq_pack" -> Seq("lang", "chunk_id"),
-    "llm_mix_temperature" -> Seq("source"),
-    "llm_inverted_index" -> Seq("term"),
-    "llm_curation_e2e" -> Seq("shard"),
-    "llm_mix_rebalance" -> Seq("doc_id", "copy"),
+  val ops: Seq[Op] = Seq(
+    Op("llm_curation_e2e", curationE2e, Sql(curationE2eSql), Seq("shard")),
+    Op("llm_ingest_dedup", ingestDedup, Sql(ingestDedupSql), Seq("d.doc_id")),
+    Op("llm_mix_temperature", mixTemperature, Sql(mixTemperatureSql), Seq("source")),
+    Op("llm_decontaminate", decontaminate, Sql(decontaminateSql), Seq("train_id", "bench_id")),
+    Op("llm_decontaminate_ngram", decontaminateNgram, Sql(decontaminateNgramSql), Seq("train_id")),
+    Op("llm_dedup_clusters", dedupClusters, Sql(dedupClustersSql), Seq("doc_id")),
+    // the star formulation declares identical semantics — one oracle text
+    // pins both physical algorithms to the same clustering
+    Op("llm_dedup_clusters_star", dedupClustersStar, Sql(dedupClustersSql), Seq("doc_id")),
+    Op("llm_corpus_shuffle", corpusShuffle, Sql(corpusShuffleSql), Seq("shard", "pos")),
+    Op("llm_seq_pack", seqPack, Sql(seqPackSql), Seq("lang", "chunk_id")),
+    Op("llm_mix_rebalance", mixRebalance, Sql(mixRebalanceSql), Seq("doc_id", "copy")),
+    Op("llm_inverted_index", invertedIndex, Sql(invertedIndexSql), Seq("term")),
   )
 }
 

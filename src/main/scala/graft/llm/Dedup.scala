@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{NoOracle, Op, Q, Sql, Tables}
 
 /** §2.11 document deduplication suite (SURVEY.md): exact hash dedup,
   * exact shingle-Jaccard near-dup (the declared semantics), MinHash-LSH
@@ -18,8 +18,6 @@ import graft.Tables
   * the output identical to the exact operator.
   */
 object Dedup {
-  type Q = (SparkSession, String) => DataFrame
-
   /** doc_id + the [[Text.words]] tokens of each document.
     *
     * Conditionally hash-scattered across the shuffle width before
@@ -133,8 +131,7 @@ object Dedup {
   val exactDedupSql: String =
     """SELECT sha256(text) AS h, min(doc_id) AS keep_id, count(*) AS n_copies
       |FROM documents
-      |GROUP BY h
-      |ORDER BY keep_id""".stripMargin
+      |GROUP BY h""".stripMargin
 
   val JaccardThreshold = 0.8
 
@@ -489,8 +486,7 @@ object Dedup {
        |FROM ix i
        |JOIN sizes s1 ON s1.doc_id = i.d1
        |JOIN sizes s2 ON s2.doc_id = i.d2
-       |WHERE cast(i.inter as double) / (s1.n_sh + s2.n_sh - i.inter) >= 0.8
-       |ORDER BY d1, d2""".stripMargin
+       |WHERE cast(i.inter as double) / (s1.n_sh + s2.n_sh - i.inter) >= 0.8""".stripMargin
 
   /** Prefix-filter path, forced (the 100 TB plan; adaptively chosen by
     * [[neardupPairs]] above the shingle threshold). Kept callable so the
@@ -521,8 +517,7 @@ object Dedup {
        |FROM inter
        |JOIN sizes s1 ON s1.doc_id = d1
        |JOIN sizes s2 ON s2.doc_id = d2
-       |WHERE cast(inter as double) / (s1.n_sh + s2.n_sh - inter) >= 0.8
-       |ORDER BY d1, d2""".stripMargin
+       |WHERE cast(inter as double) / (s1.n_sh + s2.n_sh - inter) >= 0.8""".stripMargin
 
   // ---- MinHash-LSH scale path --------------------------------------------
 
@@ -793,8 +788,7 @@ object Dedup {
        |  SELECT b.doc_id, b.n_spans,
        |    cast(coalesce(dup_spans, 0) as bigint) AS dup_spans,
        |    ${graft.Dsl.round6Sql("cast(coalesce(dup_spans, 0) as double) / n_spans")} AS dup_frac
-       |  FROM base b LEFT JOIN dup USING (doc_id))
-       |ORDER BY doc_id""".stripMargin
+       |  FROM base b LEFT JOIN dup USING (doc_id))""".stripMargin
 
   val substringDedupSql: String = substringDedupSqlAt(SpanTokens)
 
@@ -854,8 +848,7 @@ object Dedup {
        |  cast(len(fps) as bigint) AS n_fps,
        |  ${graft.Dsl.round6Sql("cast(len(fps) as double) / n_shingles")} AS density,
        |  list_min(fps) AS fp_min, list_max(fps) AS fp_max
-       |FROM sel
-       |ORDER BY doc_id""".stripMargin
+       |FROM sel""".stripMargin
 
   /** Min-hash content fingerprint per doc (winnowing-style: min of shingle
     * digests) — md5-based so DuckDB can reproduce it. */
@@ -869,8 +862,7 @@ object Dedup {
     s"""WITH $shinglesSqlCte
        |SELECT doc_id, substring(min(md5(sh)), 1, 16) AS fp16, count(*) AS n_sh
        |FROM shingles
-       |GROUP BY doc_id
-       |ORDER BY doc_id""".stripMargin
+       |GROUP BY doc_id""".stripMargin
 
   val MinhashEstK = 32
 
@@ -960,20 +952,7 @@ object Dedup {
        |  GROUP BY p.d1, p.d2, p.jac6)
        |SELECT d1, d2, jac6, round(est, 6) AS est6,
        |  round(est - jac6, 6) AS err6
-       |FROM est ORDER BY d1, d2""".stripMargin
-
-  val queries: Map[String, Q] = Map(
-    "llm_minhash_estimate" -> minhashEstimate,
-    "llm_exact_dedup" -> exactDedup,
-    "llm_neardup_pairs" -> neardupPairs,
-    "llm_neardup_capped" -> neardupCapped,
-    "llm_neardup_minhash" -> neardupMinhashLsh,
-    "llm_simhash" -> simhash,
-    "llm_substring_dedup" -> substringDedup,
-    "llm_substring_dedup_w16" -> substringDedupAt(SpanTokensWide),
-    "llm_winnow_fingerprint" -> winnowFingerprint,
-    "llm_fingerprint" -> fingerprint,
-  )
+       |FROM est""".stripMargin
 
   /** MinHash-LSH declares the same SEMANTICS as the exact operator (pairs at
     * Jaccard >= 0.8) — banding is only the physical candidate-generation
@@ -992,36 +971,26 @@ object Dedup {
        |FROM inter
        |JOIN sizes s1 ON s1.doc_id = d1
        |JOIN sizes s2 ON s2.doc_id = d2
-       |WHERE cast(inter as double) / (s1.n_sh + s2.n_sh - inter) >= 0.8
-       |ORDER BY d1, d2""".stripMargin
-
-  val oracle: Map[String, String] = Map(
-    "llm_minhash_estimate" -> minhashEstimateSql,
-    "llm_exact_dedup" -> exactDedupSql,
-    "llm_neardup_pairs" -> neardupPairsSql,
-    "llm_neardup_capped" -> neardupCappedSql,
-    "llm_neardup_minhash" -> neardupMinhashSql,
-    "llm_substring_dedup" -> substringDedupSql,
-    "llm_substring_dedup_w16" -> substringDedupSqlAt(SpanTokensWide),
-    "llm_winnow_fingerprint" -> winnowFingerprintSql,
-    "llm_fingerprint" -> fingerprintSql,
-  )
+       |WHERE cast(inter as double) / (s1.n_sh + s2.n_sh - inter) >= 0.8""".stripMargin
 
   /** Registered SORT-FREE (round 15, tranche 3): dedup outputs are keyed
     * verdicts — the trailing ORDER BY was comparator-only. Keys unique:
-    * keep_id = min doc per sha256 group; (d1, d2) canonical pairs;
-    * doc_id per-document rollups. llm_simhash keeps its sort: it is
-    * unit-only (no oracle), so the dumpSort↔oracle coupling cannot apply.
-    * Verify applies these; each equals its oracle's trailing ORDER BY. */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "llm_exact_dedup" -> Seq("keep_id"),
-    "llm_neardup_pairs" -> Seq("d1", "d2"),
-    "llm_neardup_capped" -> Seq("d1", "d2"),
-    "llm_neardup_minhash" -> Seq("d1", "d2"),
-    "llm_minhash_estimate" -> Seq("d1", "d2"),
-    "llm_substring_dedup" -> Seq("doc_id"),
-    "llm_substring_dedup_w16" -> Seq("doc_id"),
-    "llm_winnow_fingerprint" -> Seq("doc_id"),
-    "llm_fingerprint" -> Seq("doc_id"),
+    * keep_id = min doc per sha256 group; (d1, d2) canonical pairs; doc_id
+    * per-document rollups. llm_simhash keeps its sort: it has no oracle to
+    * derive an ORDER BY for. Verify sorts the dump by these keys and the
+    * oracle's ORDER BY is derived from them. */
+  val ops: Seq[Op] = Seq(
+    Op("llm_minhash_estimate", minhashEstimate, Sql(minhashEstimateSql), Seq("d1", "d2")),
+    Op("llm_exact_dedup", exactDedup, Sql(exactDedupSql), Seq("keep_id")),
+    Op("llm_neardup_pairs", neardupPairs, Sql(neardupPairsSql), Seq("d1", "d2")),
+    Op("llm_neardup_capped", neardupCapped, Sql(neardupCappedSql), Seq("d1", "d2")),
+    Op("llm_neardup_minhash", neardupMinhashLsh, Sql(neardupMinhashSql), Seq("d1", "d2")),
+    Op("llm_simhash", simhash,
+      NoOracle("graft.LlmSpec", "the signatures hash with xxhash64, which DuckDB lacks")),
+    Op("llm_substring_dedup", substringDedup, Sql(substringDedupSql), Seq("doc_id")),
+    Op("llm_substring_dedup_w16", substringDedupAt(SpanTokensWide),
+      Sql(substringDedupSqlAt(SpanTokensWide)), Seq("doc_id")),
+    Op("llm_winnow_fingerprint", winnowFingerprint, Sql(winnowFingerprintSql), Seq("doc_id")),
+    Op("llm_fingerprint", fingerprint, Sql(fingerprintSql), Seq("doc_id")),
   )
 }

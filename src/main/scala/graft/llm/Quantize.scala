@@ -1,8 +1,7 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Op, Q, Sql, Tables}
 
 /** §2.11 embedding quantization — the storage-side companion to similarity
   * search: symmetric per-vector int8 quantization (q = round(x·127/scale),
@@ -21,8 +20,6 @@ import graft.Tables
   * survive the driver's hash canonicalization even when bit-identical.
   */
 object Quantize {
-  type Q = (SparkSession, String) => DataFrame
-
   val embeddingQuantize: Q = (s, d) => {
     val scale = array_max(transform(col("embedding"), x => abs(x.cast("double"))))
     // the raw scale is named scale_raw, NOT reused as the output alias: a
@@ -57,18 +54,10 @@ object Quantize {
             """list_reduce(list_transform(range(1, len(embedding) + 1),
               |    i -> abs(cast(embedding[i] as double) - qv[i] * scale_raw / 127.0)), (x, y) -> x + y)
               |    / len(embedding)""".stripMargin)} AS mae
-       |FROM q ORDER BY vec_id""".stripMargin
-
-  val queries: Map[String, Q] = Map(
-    "llm_embedding_quantize" -> embeddingQuantize,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "llm_embedding_quantize" -> embeddingQuantizeSql,
-  )
+       |FROM q""".stripMargin
 
   /** Registered SORT-FREE (round 15, tranche 3): one row per vec_id. */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "llm_embedding_quantize" -> Seq("vec_id"),
+  val ops: Seq[Op] = Seq(
+    Op("llm_embedding_quantize", embeddingQuantize, Sql(embeddingQuantizeSql), Seq("vec_id")),
   )
 }

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Op, Q, Sql, Tables}
 
 /** §2.11 similarity search over embedding vectors (SURVEY.md; distributed
   * top-k similarity search per the public literature in PAPERS.md:5-6).
@@ -17,8 +17,6 @@ import graft.Tables
   * and no rounding is load-bearing.
   */
 object Similarity {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Sequential-fold dot product via built-in higher-order functions — the
     * pure-DataFrame reference formulation. [[graft.plans.DotProduct]] is the
     * codegen'd twin used in the hot paths; a unit test pins them bit-equal. */
@@ -158,8 +156,7 @@ object Similarity {
        |    row_number() OVER (PARTITION BY q_id ORDER BY score DESC, c_id) AS rk
        |  FROM scored)
        |SELECT q_id, rk, c_id, round(score, 6) AS score6
-       |FROM ranked WHERE rk <= 5
-       |ORDER BY q_id, rk""".stripMargin
+       |FROM ranked WHERE rk <= 5""".stripMargin
 
   /** Auto block-size bound: ~4096 members × (64 floats + id + norm) ≈ 1.1 MB
     * per collected block — comfortably inside a task even with B² block
@@ -247,8 +244,7 @@ object Similarity {
        |    ${cosineSql("a.embedding", "b.embedding")} AS score
        |  FROM sub a JOIN sub b ON a.vec_id < b.vec_id)
        |SELECT a_id, b_id, round(score, 6) AS score6
-       |FROM pairs WHERE score >= 0.35
-       |ORDER BY a_id, b_id""".stripMargin
+       |FROM pairs WHERE score >= 0.35""".stripMargin
 
   /** Embedding-cosine near-duplicate dedup (SemDeDup-style leader rule,
     * min-id variant): drop a vector when ANY smaller-id vector lies within
@@ -307,8 +303,7 @@ object Similarity {
        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
        |  WHERE ${cosineSql("a.embedding", "b.embedding")} >= $NeardupEmbeddingTau)
        |SELECT e.vec_id, e.label, (d.vec_id IS NOT NULL) AS is_dup
-       |FROM embeddings e LEFT JOIN drops d ON e.vec_id = d.vec_id
-       |ORDER BY e.vec_id""".stripMargin
+       |FROM embeddings e LEFT JOIN drops d ON e.vec_id = d.vec_id""".stripMargin
 
   /** k-NN graph (K=3) with mutuality flags — the clustering / SemDeDup
     * primitive: every vector's 3 nearest neighbors by cosine, and whether
@@ -439,8 +434,7 @@ object Similarity {
        |  FROM scored QUALIFY rk <= $KnnGraphK)
        |SELECT e.src, e.rk, e.dst, round(e.score, 6) AS score6,
        |  (r.src IS NOT NULL) AS mutual
-       |FROM edges e LEFT JOIN edges r ON r.src = e.dst AND r.dst = e.src
-       |ORDER BY e.src, e.rk""".stripMargin
+       |FROM edges e LEFT JOIN edges r ON r.src = e.dst AND r.dst = e.src""".stripMargin
 
   /** Triangle counting + clustering coefficient over the MUTUAL kNN edges —
     * the classic MapReduce-era graph analytic (Cohen's MR triangles), the
@@ -516,8 +510,7 @@ object Similarity {
             """CASE WHEN d.degree < 2 THEN 0.0
               |       ELSE cast(coalesce(t.triangles, 0) as double) * 2
               |            / (d.degree * (d.degree - 1)) END""".stripMargin)} AS clustering_coeff
-       |FROM deg d LEFT JOIN per_node t ON d.node = t.node
-       |ORDER BY d.node""".stripMargin
+       |FROM deg d LEFT JOIN per_node t ON d.node = t.node""".stripMargin
 
   /** Recall audit for the ANN paths: per-query recall@k vs the exact
     * brute-force top-k, emitted as a COLUMN of the registered ANN rows so a
@@ -545,32 +538,17 @@ object Similarity {
     ann.join(perQuery, "q_id").orderBy("q_id", "rk")
   }
 
-  val queries: Map[String, Q] = Map(
-    "llm_simsearch_topk" -> simsearchTopk,
-    "llm_simjoin_threshold" -> simjoinThreshold,
-    "llm_neardup_embedding" -> neardupEmbedding,
-    "llm_knn_graph" -> knnGraph,
-    "llm_knn_triangles" -> knnTriangles,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "llm_simsearch_topk" -> simsearchTopkSql,
-    "llm_knn_triangles" -> knnTrianglesSql,
-    "llm_simjoin_threshold" -> simjoinThresholdSql,
-    "llm_neardup_embedding" -> neardupEmbeddingSql,
-    "llm_knn_graph" -> knnGraphSql,
-  )
-
-  /** Registered SORT-FREE (round 15, tranche 3): similarity outputs are
-    * keyed (q_id, rk) ranks / (a_id, b_id) canonical pairs / per-node or
-    * per-vector rollups — the trailing ORDER BY was comparator-only. The
-    * declared theta/all-pairs spellings keep their sorts (spec-only, not
-    * timed). Verify applies these; each equals its oracle's ORDER BY. */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "llm_simsearch_topk" -> Seq("q_id", "rk"),
-    "llm_simjoin_threshold" -> Seq("a_id", "b_id"),
-    "llm_neardup_embedding" -> Seq("vec_id"),
-    "llm_knn_graph" -> Seq("src", "rk"),
-    "llm_knn_triangles" -> Seq("node"),
+  /** Registered SORT-FREE (round 15, tranche 3): similarity outputs are keyed
+    * (q_id, rk) ranks / (a_id, b_id) canonical pairs / per-node or per-vector
+    * rollups — the trailing ORDER BY was comparator-only. The declared
+    * theta/all-pairs spellings keep their sorts (spec-only, not timed).
+    * Verify sorts the dump by these keys and the oracle's ORDER BY is derived
+    * from them. */
+  val ops: Seq[Op] = Seq(
+    Op("llm_simsearch_topk", simsearchTopk, Sql(simsearchTopkSql), Seq("q_id", "rk")),
+    Op("llm_simjoin_threshold", simjoinThreshold, Sql(simjoinThresholdSql), Seq("a_id", "b_id")),
+    Op("llm_neardup_embedding", neardupEmbedding, Sql(neardupEmbeddingSql), Seq("e.vec_id")),
+    Op("llm_knn_graph", knnGraph, Sql(knnGraphSql), Seq("e.src", "e.rk")),
+    Op("llm_knn_triangles", knnTriangles, Sql(knnTrianglesSql), Seq("d.node")),
   )
 }

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Op, Q, Sql, Tables}
 
 /** §2.11 sketch structures for corpus statistics at scale.
   *
@@ -20,8 +20,6 @@ import graft.Tables
   * DuckDB-oracle-checkable bit-for-bit.
   */
 object Sketches {
-  type Q = (SparkSession, String) => DataFrame
-
   val CmsDepth = 4   // hash rows
   val CmsWidth = 251 // buckets per row (prime, so the %-fold spreads)
 
@@ -123,6 +121,7 @@ object Sketches {
        |FROM est ORDER BY exact_cnt DESC, w""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map("llm_heavy_hitters_cms" -> heavyHittersCms)
-  val oracle: Map[String, String] = Map("llm_heavy_hitters_cms" -> heavyHittersCmsSql)
+  val ops: Seq[Op] = Seq(
+    Op("llm_heavy_hitters_cms", heavyHittersCms, Sql(heavyHittersCmsSql)),
+  )
 }

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Op, Q, Sql, Tables}
 import graft.Dsl.{round6, round6Sql}
 
 /** §2.11 text analysis for a training-data pipeline (SURVEY.md; sentiment
@@ -20,8 +20,6 @@ import graft.Dsl.{round6, round6Sql}
   * switch instead of a hard broadcast hint.
   */
 object TextAnalysis {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Default row ceiling for broadcasting a vocabulary table: 5e6 rows of
     * (term, count) is low hundreds of MB serialized — comfortably a
     * broadcast on a real cluster, far above every fixture vocabulary. */
@@ -155,8 +153,7 @@ object TextAnalysis {
        |         min(n_chars) AS min_chars, max(n_chars) AS max_chars
        |  FROM documents GROUP BY lang)
        |SELECT lang, docs, total_toks, vocab, sources, sum_chars, min_chars, max_chars
-       |FROM t JOIN c USING (lang)
-       |ORDER BY lang""".stripMargin
+       |FROM t JOIN c USING (lang)""".stripMargin
 
   /** Language/quality filter: english docs in a size band with enough tokens. */
   val langFilter: Q = (s, d) =>
@@ -171,8 +168,7 @@ object TextAnalysis {
       |  cast(len(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')) as int) AS n_toks
       |FROM documents
       |WHERE lang = 'en' AND n_chars BETWEEN 100 AND 400
-      |  AND len(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')) >= 20
-      |ORDER BY doc_id""".stripMargin
+      |  AND len(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')) >= 20""".stripMargin
 
   /** Heuristic language-ID: score each doc against per-language keyword
     * profiles (n-gram-frequency heuristic), predict the argmax. Integer
@@ -213,8 +209,7 @@ object TextAnalysis {
        |    row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, plang) AS rk
        |  FROM scored)
        |SELECT doc_id, plang AS pred_lang, score
-       |FROM ranked WHERE rk = 1
-       |ORDER BY doc_id""".stripMargin
+       |FROM ranked WHERE rk = 1""".stripMargin
   }
 
   /** Quality scoring: token count, mean token length, stopword ratio, and a
@@ -245,8 +240,7 @@ object TextAnalysis {
        |  ${round6Sql("cast(sum_len as double) / n_toks")} AS mean_tok_len,
        |  ${round6Sql("cast(n_stop as double) / n_toks")} AS stop_ratio,
        |  ${round6Sql("cast(n_chars as double) / n_toks")} AS chars_per_tok
-       |FROM documents d JOIN t ON d.doc_id = t.doc_id
-       |ORDER BY d.doc_id""".stripMargin
+       |FROM documents d JOIN t ON d.doc_id = t.doc_id""".stripMargin
 
   /** TF-IDF: top-5 terms per doc by tf * (ln(N/df) + 1), ranked on the
     * 6dp-rounded weight (absorbs any libm last-ulp delta in ln). */
@@ -300,8 +294,7 @@ object TextAnalysis {
        |    row_number() OVER (PARTITION BY doc_id ORDER BY weight6 DESC, w) AS rk
        |  FROM weighted)
        |SELECT doc_id, rk, w AS term, tf, df, weight6
-       |FROM ranked WHERE rk <= 5
-       |ORDER BY doc_id, rk""".stripMargin
+       |FROM ranked WHERE rk <= 5""".stripMargin
 
   /** Gopher quality rules (Rae et al. 2021, "Scaling Language Models:
     * Methods, Analysis & Insights from Training Gopher", §A1.1): per-doc
@@ -361,8 +354,7 @@ object TextAnalysis {
        |        AND cast(n_alpha as double) / n_words >= 0.8
        |        AND n_stop >= 2
        |       THEN 1 ELSE 0 END AS passes
-       |FROM documents d JOIN t ON d.doc_id = t.doc_id
-       |ORDER BY d.doc_id""".stripMargin
+       |FROM documents d JOIN t ON d.doc_id = t.doc_id""".stripMargin
 
   /** Character-entropy filter: per-doc Shannon entropy (nats) of the
     * lowercase character distribution — the standard gibberish /
@@ -414,7 +406,7 @@ object TextAnalysis {
       |    list_transform(cs, x -> (cast(x.cnt as double) / n) *
       |                            ln(cast(x.cnt as double) / n)),
       |    (a, b) -> a + b), 6) < 2.8 THEN 1 ELSE 0 END AS low_entropy
-      |FROM g ORDER BY doc_id""".stripMargin
+      |FROM g""".stripMargin
 
   /** Corpus distribution shift: KL(en‖rest), KL(rest‖en), and
     * Jensen-Shannon divergence between the English slice's unigram
@@ -523,8 +515,7 @@ object TextAnalysis {
        |  cast(sum(CASE WHEN polarity IS NOT NULL THEN 1 ELSE 0 END) as bigint) AS n_matched,
        |  count(*) AS n_toks
        |FROM toks LEFT JOIN lex ON w = word
-       |GROUP BY doc_id
-       |ORDER BY doc_id""".stripMargin
+       |GROUP BY doc_id""".stripMargin
   }
 
   /** Multimodal record: text metadata + embedding stats in one row. */
@@ -543,8 +534,7 @@ object TextAnalysis {
        |  cast(len(embedding) as int) AS dim,
        |  ${round6Sql(s"sqrt(${Similarity.dotSql("embedding", "embedding")})")} AS l2_norm,
        |  cast(len(list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')) as int) AS n_toks
-       |FROM documents JOIN embeddings ON doc_id = vec_id
-       |ORDER BY doc_id""".stripMargin
+       |FROM documents JOIN embeddings ON doc_id = vec_id""".stripMargin
 
   /** Token counting two ways: whitespace tokens and a BPE-ish subword count
     * (greedy 1-4 char word chunks via regex — the cheap proxy for a learned
@@ -561,7 +551,7 @@ object TextAnalysis {
       |  cast(len(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')) as int) AS ws_toks,
       |  cast(len(regexp_extract_all(lower(text), '([a-z]{1,4})', 1)) as int) AS bpeish_toks,
       |  cast(length(text) as int) AS n_chars2
-      |FROM documents ORDER BY doc_id""".stripMargin
+      |FROM documents""".stripMargin
 
   /** Polynomial rolling hash over the token stream (content fingerprint that
     * is order-sensitive, unlike the min-shingle fingerprint): a left fold of
@@ -584,7 +574,7 @@ object TextAnalysis {
       |      list_transform(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> ''),
       |                     t -> cast(ascii(t) * 131 + length(t) as bigint))),
       |    (acc, c) -> ((acc * 31 + c) % 2147483647 + 2147483647) % 2147483647) AS rhash
-      |FROM documents ORDER BY doc_id""".stripMargin
+      |FROM documents""".stripMargin
 
   /** End-to-end training-data pipeline composite: exact dedup (min-id
     * survivor per content hash) → quality gate (char band + minimum token
@@ -631,8 +621,7 @@ object TextAnalysis {
       |  cast(sum(n_chars) as bigint) AS sum_chars
       |FROM docs
       |WHERE n_chars BETWEEN 100 AND 2000 AND n_toks >= 10
-      |GROUP BY lang, source
-      |ORDER BY lang, source""".stripMargin
+      |GROUP BY lang, source""".stripMargin
 
   /** Intra-document repetition filter (the Gopher/C4-style quality rule the
     * inter-document dedup family cannot express): fraction of DUPLICATED
@@ -699,8 +688,7 @@ object TextAnalysis {
        |  SELECT doc_id, lang, n_toks, n_bigrams, n_distinct_bigrams, top_tok_n,
        |    ${round6Sql("1.0 - cast(n_distinct_bigrams as double) / n_bigrams")} AS dup_bigram_frac,
        |    ${round6Sql("cast(top_tok_n as double) / n_toks")} AS top_tok_share
-       |  FROM bi JOIN tt USING (doc_id))
-       |ORDER BY doc_id""".stripMargin
+       |  FROM bi JOIN tt USING (doc_id))""".stripMargin
 
   /** Unigram-LM self-scoring (the CCNet-style perplexity quality signal,
     * with the corpus's own unigram distribution standing in for the external
@@ -759,8 +747,7 @@ object TextAnalysis {
        |FROM (
        |  SELECT doc_id, n_toks, nll_micro,
        |    ${round6Sql("cast(nll_micro as double) / n_toks")} AS mean_nll
-       |  FROM per)
-       |ORDER BY doc_id""".stripMargin
+       |  FROM per)""".stripMargin
 
   val ZipfTopTerms = 500
 
@@ -824,8 +811,7 @@ object TextAnalysis {
        |  SELECT lang, n_terms, sx, sy,
        |    cast(n_terms * sxy - sx * sy as double) /
        |      cast(n_terms * sxx - sx * sx as double) AS slope_raw
-       |  FROM sums)
-       |ORDER BY lang""".stripMargin
+       |  FROM sums)""".stripMargin
 
   /** One round of BPE vocabulary training as a dataflow: count every
     * adjacent character pair across the corpus vocabulary, weighted by word
@@ -927,7 +913,7 @@ object TextAnalysis {
        |  FROM scored GROUP BY doc_id)
        |SELECT doc_id, n_toks, dsir_micro,
        |  ${round6Sql("cast(dsir_micro as double) / n_toks")} AS avg_logratio
-       |FROM per ORDER BY doc_id""".stripMargin
+       |FROM per""".stripMargin
 
   /** CCNet-style perplexity bucketing: rank every document inside its
     * language by unigram-LM mean NLL ([[unigramLogprob]]'s signal) and cut
@@ -993,8 +979,7 @@ object TextAnalysis {
        |  cast(sum(n_toks) as bigint) AS toks,
        |  cast(sum(nll_micro) as bigint) AS nll_micro_sum,
        |  ${round6Sql("cast(sum(nll_micro) as double) / sum(n_toks)")} AS weighted_mean_nll
-       |FROM ranked GROUP BY lang, bucket
-       |ORDER BY lang, bucket""".stripMargin
+       |FROM ranked GROUP BY lang, bucket""".stripMargin
 
   /** PII scrubbing: count and redact emails / IPv4 addresses / phone
     * numbers with the standard regex pass. The synthetic fixture carries no
@@ -1044,7 +1029,7 @@ object TextAnalysis {
       |SELECT doc_id, n_emails, n_phones,
       |  cast(len(regexp_extract_all(scrubbed, '<IP>')) as int) AS n_ips,
       |  md5(scrubbed) AS scrubbed_md5
-      |FROM scrub ORDER BY doc_id""".stripMargin
+      |FROM scrub""".stripMargin
 
   val ChunkSize = 64
   val ChunkStride = 48
@@ -1088,8 +1073,7 @@ object TextAnalysis {
        |SELECT c.doc_id, c.chunk_idx, cast(c.start as bigint) AS start_tok,
        |  cast(least($ChunkSize, c.n_toks - c.start + 1) as bigint) AS chunk_len,
        |  md5(array_to_string(b.t[c.start:c.start + ${ChunkSize - 1}], ' ')) AS chunk_md5
-       |FROM chunks c JOIN base b USING (doc_id)
-       |ORDER BY doc_id, chunk_idx""".stripMargin
+       |FROM chunks c JOIN base b USING (doc_id)""".stripMargin
 
   /** Model-based quality scoring (the DCLM / FineWeb-Edu curation step): a
     * DEPLOYED linear classifier over hashed bag-of-words — 64 md5-derived
@@ -1142,8 +1126,7 @@ object TextAnalysis {
        |FROM (
        |  SELECT doc_id, n_toks, dot_milli,
        |    cast(dot_milli as double) / (n_toks * 1000) AS logit_raw
-       |  FROM scored)
-       |ORDER BY doc_id""".stripMargin
+       |  FROM scored)""".stripMargin
 
   /** Span-corruption preprocessing (T5/UL2 denoising objective): positions
     * are span STARTS when an md5-keyed draw hits 1-in-20 (≈5%), each span
@@ -1230,8 +1213,7 @@ object TextAnalysis {
        |  coalesce(p.masked_md5, '') AS masked_md5
        |FROM n
        |LEFT JOIN spans s ON n.doc_id = s.doc_id
-       |LEFT JOIN per_doc p ON n.doc_id = p.doc_id
-       |ORDER BY n.doc_id""".stripMargin
+       |LEFT JOIN per_doc p ON n.doc_id = p.doc_id""".stripMargin
 
   // ---- retrieval: BM25 ranking + boolean keyword search -------------------
 
@@ -1266,11 +1248,14 @@ object TextAnalysis {
     // Round 20: docstats derives from the SHARED docWordCounts cache (the
     // same materialization tfidf/bpeEncode/unigramLogprob/repetitionFilter
     // use) instead of maintaining its own per-doc cached aggregate — one
-    // session-wide tokenize serves five operators, and the derivation is a
-    // no-exchange aggregation over the in-memory frame (docWordCounts is
-    // clustered on doc_id), cheap enough per consumer that the second
-    // cache level is gone. dl = Σc and per-term tf = Σc·[w = t] are the
-    // same integers the direct tokenize counted; oracle unchanged.
+    // session-wide tokenize serves five operators. The derivation is NOT
+    // exchange-free: the planner does not see the cache's doc_id
+    // clustering, so `graft.Dev plans` (sf0.01) shows a partial aggregate,
+    // a hashpartitioning(doc_id) Exchange and a final aggregate over the
+    // InMemoryTableScan — three times, once per docstats consumer (tf, the
+    // df counts under tf, the corpus stats), each pruned to different
+    // columns so no exchange is reused. dl = Σc and per-term tf = Σc·[w = t]
+    // are the same integers the direct tokenize counted; oracle unchanged.
     val perTerm = QueryTerms.map(t =>
       sum(when(col("w") === t, col("c")).otherwise(0L)).as(s"tf_$t"))
     val docstats = docWordCounts(s, d).groupBy("doc_id")
@@ -1371,8 +1356,7 @@ object TextAnalysis {
        |excluded AS (SELECT DISTINCT doc_id FROM toks WHERE w = 'slow')
        |SELECT d.doc_id, d.source, d.n_chars
        |FROM hits h JOIN documents d ON h.doc_id = d.doc_id
-       |WHERE h.doc_id NOT IN (SELECT doc_id FROM excluded)
-       |ORDER BY d.doc_id""".stripMargin
+       |WHERE h.doc_id NOT IN (SELECT doc_id FROM excluded)""".stripMargin
   }
 
   /** Dataset card: the per-source corpus report a curation pipeline
@@ -1478,8 +1462,7 @@ object TextAnalysis {
        |JOIN tok_cnt k ON b.source = k.source
        |JOIN med m ON b.source = m.source
        |JOIN p90 p ON b.source = p.source
-       |JOIN top_lang t ON b.source = t.source
-       |ORDER BY b.source""".stripMargin
+       |JOIN top_lang t ON b.source = t.source""".stripMargin
 
   // ---- BPE tokenizer training ---------------------------------------------
 
@@ -1752,8 +1735,7 @@ object TextAnalysis {
        |${sumCte(3, "p3", "r3")}
        |SELECT round, s1, s2, pair_cnt, total_syms, vocab FROM sum1
        |UNION ALL SELECT round, s1, s2, pair_cnt, total_syms, vocab FROM sum2
-       |UNION ALL SELECT round, s1, s2, pair_cnt, total_syms, vocab FROM sum3
-       |ORDER BY round""".stripMargin
+       |UNION ALL SELECT round, s1, s2, pair_cnt, total_syms, vocab FROM sum3""".stripMargin
   }
 
   val bpeEncodeSql: String =
@@ -1766,105 +1748,43 @@ object TextAnalysis {
        |  FROM toks JOIN syms USING (w) GROUP BY doc_id)
        |SELECT d.doc_id, p.n_words, p.n_bpe_toks,
        |  ${round6Sql("cast(d.n_chars as double) / p.n_bpe_toks")} AS chars_per_tok
-       |FROM per_doc p JOIN documents d ON p.doc_id = d.doc_id
-       |ORDER BY d.doc_id""".stripMargin
+       |FROM per_doc p JOIN documents d ON p.doc_id = d.doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "llm_bm25" -> bm25,
-    "llm_bpe_train" -> bpeTrain,
-    "llm_bpe_encode" -> bpeEncode,
-    "llm_dataset_card" -> datasetCard,
-    "llm_keyword_search" -> keywordSearch,
-    "llm_pii_scrub" -> piiScrub,
-    "llm_doc_chunks" -> docChunks,
-    "llm_dsir_weights" -> dsirWeights,
-    "llm_perplexity_bucket" -> perplexityBucket,
-    "llm_repetition_filter" -> repetitionFilter,
-    "llm_unigram_logprob" -> unigramLogprob,
-    "llm_zipf_curve" -> zipfCurve,
-    "llm_bpe_pair_counts" -> bpePairCounts,
-    "llm_pipeline_e2e" -> pipelineE2e,
-    "llm_token_count" -> tokenCount,
-    "llm_rolling_hash" -> rollingHash,
-    "llm_text_stats" -> textStats,
-    "llm_lang_filter" -> langFilter,
-    "llm_lang_id" -> langId,
-    "llm_quality_score" -> qualityScore,
-    "llm_quality_classifier" -> qualityClassifier,
-    "llm_gopher_rules" -> gopherRules,
-    "llm_entropy_filter" -> entropyFilter,
-    "llm_dist_shift" -> distShift,
-    "llm_span_corruption" -> spanCorruption,
-    "llm_tfidf" -> tfidf,
-    "llm_ngrams" -> ngrams,
-    "llm_sentiment_lexicon" -> sentiment,
-    "llm_multimodal_struct" -> multimodalStruct,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "llm_bm25" -> bm25Sql,
-    "llm_bpe_train" -> bpeTrainSql,
-    "llm_bpe_encode" -> bpeEncodeSql,
-    "llm_dataset_card" -> datasetCardSql,
-    "llm_keyword_search" -> keywordSearchSql,
-    "llm_pii_scrub" -> piiScrubSql,
-    "llm_doc_chunks" -> docChunksSql,
-    "llm_dsir_weights" -> dsirWeightsSql,
-    "llm_perplexity_bucket" -> perplexityBucketSql,
-    "llm_repetition_filter" -> repetitionFilterSql,
-    "llm_unigram_logprob" -> unigramLogprobSql,
-    "llm_zipf_curve" -> zipfCurveSql,
-    "llm_bpe_pair_counts" -> bpePairCountsSql,
-    "llm_pipeline_e2e" -> pipelineE2eSql,
-    "llm_token_count" -> tokenCountSql,
-    "llm_rolling_hash" -> rollingHashSql,
-    "llm_text_stats" -> textStatsSql,
-    "llm_lang_filter" -> langFilterSql,
-    "llm_lang_id" -> langIdSql,
-    "llm_quality_score" -> qualityScoreSql,
-    "llm_quality_classifier" -> qualityClassifierSql,
-    "llm_gopher_rules" -> gopherRulesSql,
-    "llm_entropy_filter" -> entropyFilterSql,
-    "llm_dist_shift" -> distShiftSql,
-    "llm_span_corruption" -> spanCorruptionSql,
-    "llm_tfidf" -> tfidfSql,
-    "llm_ngrams" -> ngramsSql,
-    "llm_sentiment_lexicon" -> sentimentSql,
-    "llm_multimodal_struct" -> multimodalStructSql,
-  )
-
-  /** Registered SORT-FREE (round 15, second tranche): per-document scores
-    * and per-group rollups are keyed lookups downstream — the trailing
-    * ORDER BY was comparator-only. Keys are unique (one row per doc /
-    * lang / (lang, bucket)). Verify applies these; each equals its
-    * oracle's trailing ORDER BY (ExplainInvariantsSpec pins it). */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "llm_dsir_weights" -> Seq("doc_id"),
-    "llm_perplexity_bucket" -> Seq("lang", "bucket"),
-    "llm_token_count" -> Seq("doc_id"),
-    "llm_rolling_hash" -> Seq("doc_id"),
-    "llm_text_stats" -> Seq("lang"),
-    "llm_quality_score" -> Seq("doc_id"),
-    "llm_entropy_filter" -> Seq("doc_id"),
-    "llm_span_corruption" -> Seq("doc_id"),
-    // tranche 3 (round 15): comparator-only trailing sorts over unique keys
-    // (llm_bm25 keeps its sort: ORDER BY ... LIMIT 20 is semantic top-k)
-    "llm_lang_filter" -> Seq("doc_id"),
-    "llm_lang_id" -> Seq("doc_id"),
-    "llm_tfidf" -> Seq("doc_id", "rk"),
-    "llm_gopher_rules" -> Seq("doc_id"),
-    "llm_sentiment_lexicon" -> Seq("doc_id"),
-    "llm_multimodal_struct" -> Seq("doc_id"),
-    "llm_pipeline_e2e" -> Seq("lang", "source"),
-    "llm_repetition_filter" -> Seq("doc_id"),
-    "llm_unigram_logprob" -> Seq("doc_id"),
-    "llm_pii_scrub" -> Seq("doc_id"),
-    "llm_doc_chunks" -> Seq("doc_id", "chunk_idx"),
-    "llm_quality_classifier" -> Seq("doc_id"),
-    "llm_keyword_search" -> Seq("doc_id"),
-    "llm_dataset_card" -> Seq("source"),
-    "llm_bpe_train" -> Seq("round"),
-    "llm_bpe_encode" -> Seq("doc_id"),
-    "llm_zipf_curve" -> Seq("lang"),
+  /** Registered SORT-FREE (round 15, second tranche): per-document scores and
+    * per-group rollups are keyed lookups downstream — the trailing ORDER BY
+    * was comparator-only. Keys are unique (one row per doc / lang / (lang,
+    * bucket)). llm_bm25 keeps its sort: ORDER BY ... LIMIT 20 is semantic
+    * top-k. Verify sorts the dump by these keys and the oracle's ORDER BY is
+    * derived from them. */
+  val ops: Seq[Op] = Seq(
+    Op("llm_bm25", bm25, Sql(bm25Sql)),
+    Op("llm_bpe_train", bpeTrain, Sql(bpeTrainSql), Seq("round")),
+    Op("llm_bpe_encode", bpeEncode, Sql(bpeEncodeSql), Seq("d.doc_id")),
+    Op("llm_dataset_card", datasetCard, Sql(datasetCardSql), Seq("b.source")),
+    Op("llm_keyword_search", keywordSearch, Sql(keywordSearchSql), Seq("d.doc_id")),
+    Op("llm_pii_scrub", piiScrub, Sql(piiScrubSql), Seq("doc_id")),
+    Op("llm_doc_chunks", docChunks, Sql(docChunksSql), Seq("doc_id", "chunk_idx")),
+    Op("llm_dsir_weights", dsirWeights, Sql(dsirWeightsSql), Seq("doc_id")),
+    Op("llm_perplexity_bucket", perplexityBucket, Sql(perplexityBucketSql), Seq("lang", "bucket")),
+    Op("llm_repetition_filter", repetitionFilter, Sql(repetitionFilterSql), Seq("doc_id")),
+    Op("llm_unigram_logprob", unigramLogprob, Sql(unigramLogprobSql), Seq("doc_id")),
+    Op("llm_zipf_curve", zipfCurve, Sql(zipfCurveSql), Seq("lang")),
+    Op("llm_bpe_pair_counts", bpePairCounts, Sql(bpePairCountsSql)),
+    Op("llm_pipeline_e2e", pipelineE2e, Sql(pipelineE2eSql), Seq("lang", "source")),
+    Op("llm_token_count", tokenCount, Sql(tokenCountSql), Seq("doc_id")),
+    Op("llm_rolling_hash", rollingHash, Sql(rollingHashSql), Seq("doc_id")),
+    Op("llm_text_stats", textStats, Sql(textStatsSql), Seq("lang")),
+    Op("llm_lang_filter", langFilter, Sql(langFilterSql), Seq("doc_id")),
+    Op("llm_lang_id", langId, Sql(langIdSql), Seq("doc_id")),
+    Op("llm_quality_score", qualityScore, Sql(qualityScoreSql), Seq("d.doc_id")),
+    Op("llm_quality_classifier", qualityClassifier, Sql(qualityClassifierSql), Seq("doc_id")),
+    Op("llm_gopher_rules", gopherRules, Sql(gopherRulesSql), Seq("d.doc_id")),
+    Op("llm_entropy_filter", entropyFilter, Sql(entropyFilterSql), Seq("doc_id")),
+    Op("llm_dist_shift", distShift, Sql(distShiftSql)),
+    Op("llm_span_corruption", spanCorruption, Sql(spanCorruptionSql), Seq("n.doc_id")),
+    Op("llm_tfidf", tfidf, Sql(tfidfSql), Seq("doc_id", "rk")),
+    Op("llm_ngrams", ngrams, Sql(ngramsSql)),
+    Op("llm_sentiment_lexicon", sentiment, Sql(sentimentSql), Seq("doc_id")),
+    Op("llm_multimodal_struct", multimodalStruct, Sql(multimodalStructSql), Seq("doc_id")),
   )
 }

@@ -1,8 +1,8 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Op, Sql, Tables}
 
 /** Multimodal columns as opaque binary + typed metadata (SURVEY.md §2.11 /
   * builder prompt): image/audio/video payloads ride through the engine as
@@ -180,28 +180,13 @@ object Multimodal {
   /** All stages registered with full DuckDB oracles: md5 exists in both
     * engines and the payload is ASCII text bytes, so the fake features are
     * cross-checkable end-to-end — schema, metadata derivation, resize
-    * clamping, chunking and striding all verified, not just row counts. */
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_resize_stub" -> ((s, d) => {
-      resizePayloads(mediaTable(s, d)).toDF()
-    }),
-    // sort-free (round 15): (doc_id, win_idx) is the window PK; the global
-    // sort was comparator-only — Verify applies it (see dumpSort below)
-    "mm_audio_window" -> ((s, d) => {
-      audioWindows(mediaTable(s, d)).toDF()
-    }),
-    "mm_decode_stub" -> ((s, d) => {
-      decodeFeatures(mediaTable(s, d)).toDF()
-        .select("doc_id", "n_bytes", "format", "out_width", "out_height", "checksum")
-    }),
-    "mm_frame_sample" -> ((s, d) => {
-      sampleFrames(mediaTable(s, d)).toDF()
-    }),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "mm_resize_stub" ->
-      s"""WITH dims AS (
+    * clamping, chunking and striding all verified, not just row counts.
+    * Registered SORT-FREE (round 15): per-row outputs of mapPartitions
+    * kernels have no semantic global order, so the dump sorts by the row
+    * key — doc_id, plus the window or frame index where a doc has many. */
+  val ops: Seq[Op] = Seq(
+    Op("mm_resize_stub", (s, d) => resizePayloads(mediaTable(s, d)).toDF(),
+      Sql(s"""WITH dims AS (
          |  SELECT doc_id, strlen(text) AS n, text,
          |    cast(least(n_chars % 1000 + 32, ${StubDecoder.TargetSize}) as int) AS out_width,
          |    cast(least(n_chars % 500 + 32, ${StubDecoder.TargetSize}) as int) AS out_height
@@ -210,9 +195,9 @@ object Multimodal {
          |  cast(least(n, (out_width * out_height) // 64) as int) AS out_bytes,
          |  md5(substr(text, 1, cast(least(n, (out_width * out_height) // 64) as int)))
          |    AS out_checksum
-         |FROM dims ORDER BY doc_id""".stripMargin,
-    "mm_audio_window" ->
-      s"""WITH wav AS (
+         |FROM dims""".stripMargin), Seq("doc_id")),
+    Op("mm_audio_window", (s, d) => audioWindows(mediaTable(s, d)).toDF(),
+      Sql(s"""WITH wav AS (
          |  SELECT doc_id, text, strlen(text) AS n FROM documents
          |  WHERE doc_id % 3 = 2),
          |win AS (
@@ -224,34 +209,24 @@ object Multimodal {
          |  cast(coalesce(list_sum(list_transform(range(1, win_bytes + 1),
          |    i -> ord(substr(text, cast(lo + i as int), 1)))), 0) as bigint) AS energy,
          |  md5(substr(text, cast(lo + 1 as int), $AudioWinBytes)) AS win_checksum
-         |FROM win ORDER BY doc_id, win_idx""".stripMargin,
-    "mm_decode_stub" ->
-      s"""SELECT doc_id, cast(strlen(text) as int) AS n_bytes,
+         |FROM win""".stripMargin), Seq("doc_id", "win_idx")),
+    Op("mm_decode_stub", (s, d) => decodeFeatures(mediaTable(s, d)).toDF()
+        .select("doc_id", "n_bytes", "format", "out_width", "out_height", "checksum"),
+      Sql(s"""SELECT doc_id, cast(strlen(text) as int) AS n_bytes,
          |  CASE WHEN doc_id % 3 = 0 THEN 'png'
          |       WHEN doc_id % 3 = 1 THEN 'jpeg' ELSE 'wav' END AS format,
          |  cast(least(n_chars % 1000 + 32, ${StubDecoder.TargetSize}) as int) AS out_width,
          |  cast(least(n_chars % 500 + 32, ${StubDecoder.TargetSize}) as int) AS out_height,
          |  md5(text) AS checksum
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "mm_frame_sample" ->
-      s"""WITH f AS (
+         |FROM documents""".stripMargin), Seq("doc_id")),
+    Op("mm_frame_sample", (s, d) => sampleFrames(mediaTable(s, d)).toDF(),
+      Sql(s"""WITH f AS (
          |  SELECT doc_id, text, strlen(text) AS n,
          |    unnest(range(0, cast(ceil(strlen(text) / ${FrameBytes}.0) as bigint), $FrameStride)) AS fi
          |  FROM documents)
          |SELECT doc_id, cast(fi as int) AS frame_idx,
          |  cast(least($FrameBytes, n - fi * $FrameBytes) as int) AS frame_bytes,
          |  md5(substr(text, cast(fi * $FrameBytes + 1 as int), $FrameBytes)) AS frame_checksum
-         |FROM f ORDER BY doc_id, frame_idx""".stripMargin,
-  )
-
-  /** Registered SORT-FREE (round 15): per-window rows out of a
-    * mapPartitions kernel have no semantic global order; the trailing sort
-    * was comparator-only. (doc_id, win_idx) is the window PK. */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "mm_audio_window" -> Seq("doc_id", "win_idx"),
-    // tranche 3 (round 15): comparator-only trailing sorts over unique keys
-    "mm_resize_stub" -> Seq("doc_id"),
-    "mm_decode_stub" -> Seq("doc_id"),
-    "mm_frame_sample" -> Seq("doc_id", "frame_idx"),
+         |FROM f""".stripMargin), Seq("doc_id", "frame_idx")),
   )
 }

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.{Dsl, Tables}
+import graft.{Dsl, NoOracle, Op, Q, Sql, Tables}
 
 /** §2.4 aggregations (SURVEY.md).
   *
@@ -17,14 +17,6 @@ import graft.{Dsl, Tables}
   */
 object Aggregates {
   import Dsl._
-
-  type Q = (SparkSession, String) => DataFrame
-
-  /** Operators whose Spark plan is declared in SQL share the exact query text
-    * with the DuckDB oracle (both engines speak the same ANSI subset here). */
-  private def sharedSql(sql: String): Q = (s, d) => {
-    Tables.registerViews(s, d); s.sql(sql)
-  }
 
   /** TPC-H Q1 shape: partial+final hash aggregation with combiner semantics. */
   val aggHashGroup: Q = (s, d) =>
@@ -51,8 +43,7 @@ object Aggregates {
        |  count(*) AS count_order
        |FROM lineitem
        |WHERE l_shipdate <= TIMESTAMP '2001-09-01'
-       |GROUP BY l_returnflag, l_linestatus
-       |ORDER BY l_returnflag, l_linestatus""".stripMargin
+       |GROUP BY l_returnflag, l_linestatus""".stripMargin
 
   /** Exact distinct customers per order priority (Expand + 2-phase agg). */
   val aggCountDistinct: Q = (s, d) =>
@@ -63,7 +54,7 @@ object Aggregates {
 
   val aggCountDistinctSql: String =
     """SELECT o_orderpriority, count(DISTINCT o_custkey) AS uniq_custs, count(*) AS orders
-      |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
+      |FROM orders GROUP BY o_orderpriority""".stripMargin
 
   /** HLL approximate distinct — error bound asserted in ScalaTest (no SQL
     * oracle: HLL implementations differ across engines by design). */
@@ -120,16 +111,13 @@ object Aggregates {
        |GROUP BY ROLLUP (r_name, n_name)
        |ORDER BY g_r, g_n, r_name2, n_name2""".stripMargin
 
-  val aggRollup: Q = sharedSql(aggRollupSql)
-
   /** All grouping combinations over (segment, priority). */
   val aggCubeSql: String =
     s"""SELECT grouping(c_mktsegment) AS g_s, grouping(o_orderpriority) AS g_p,
        |  coalesce(c_mktsegment, 'ALL') AS seg, coalesce(o_orderpriority, 'ALL') AS prio,
        |  count(*) AS n, ${moneySumSql("o_totalprice")} AS sum_price
        |FROM customer JOIN orders ON c_custkey = o_custkey
-       |GROUP BY CUBE (c_mktsegment, o_orderpriority)
-       |ORDER BY g_s, g_p, seg, prio""".stripMargin
+       |GROUP BY CUBE (c_mktsegment, o_orderpriority)""".stripMargin
 
   /** Same result as the shared SQL text, but pre-aggregated: the join output
     * is first reduced to one partial (count, long cents sum) per (seg, prio)
@@ -161,8 +149,6 @@ object Aggregates {
       |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
       |ORDER BY g_st, g_pr, st, pr""".stripMargin
 
-  val aggGroupingSets: Q = sharedSql(aggGroupingSetsSql)
-
   /** Per-group collected values, sorted for determinism (reducer Iterable). */
   val aggCollect: Q = (s, d) =>
     Tables.customer(s, d).where(col("c_acctbal") > 9500)
@@ -181,8 +167,7 @@ object Aggregates {
       |  count(*) AS n
       |FROM customer JOIN orders ON c_custkey = o_custkey
       |WHERE c_acctbal > 9500
-      |GROUP BY c_custkey
-      |ORDER BY c_custkey""".stripMargin
+      |GROUP BY c_custkey""".stripMargin
 
   /** Exact interpolated percentiles per group (integer-valued input, so the
     * linear interpolation lands on exact .0/.25/.5/.75 doubles). */
@@ -198,7 +183,7 @@ object Aggregates {
       |  quantile_cont(l_quantity, 0.25) AS p25,
       |  quantile_cont(l_quantity, 0.5) AS p50,
       |  quantile_cont(l_quantity, 0.75) AS p75
-      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
+      |FROM lineitem GROUP BY l_returnflag""".stripMargin
 
   /** Value-distribution histogram (aggregatewordhist idiom). */
   val aggHistogram: Q = (s, d) =>
@@ -209,7 +194,7 @@ object Aggregates {
 
   val aggHistogramSql: String =
     """SELECT cast(floor(value / 5) as bigint) AS bucket, count(*) AS n
-      |FROM events GROUP BY bucket ORDER BY bucket""".stripMargin
+      |FROM events GROUP BY bucket""".stripMargin
 
   /** Statistical moments via exact integer/decimal sums → closed-form double.
     * Avoids engine-native stddev/corr whose partial-merge order is
@@ -248,7 +233,7 @@ object Aggregates {
       |  round((cast(spq as double) - cast(sp as double) * cast(sq as double) / n) /
       |   (sqrt(sqq - sq * sq / n) *
       |    sqrt(cast(spp as double) - cast(sp as double) * cast(sp as double) / n)), 6) AS corr_qty_price
-      |FROM m ORDER BY l_returnflag""".stripMargin
+      |FROM m""".stripMargin
 
   /** Pivot: order counts per market segment × priority, one column per
     * priority. Spark's groupBy().pivot() with an explicit value list keeps
@@ -275,8 +260,7 @@ object Aggregates {
       |  count(*) FILTER (WHERE o_orderpriority = '4-NOT SPECIFIED') AS unspec,
       |  count(*) FILTER (WHERE o_orderpriority = '5-LOW') AS low
       |FROM customer JOIN orders ON c_custkey = o_custkey
-      |GROUP BY c_mktsegment
-      |ORDER BY c_mktsegment""".stripMargin
+      |GROUP BY c_mktsegment""".stripMargin
 
   /** Deterministic hash-based sampling — the reproducible alternative to
     * rand()-based TABLESAMPLE for pipeline reruns: membership depends only
@@ -298,8 +282,7 @@ object Aggregates {
 
   val sampleModSql: String =
     """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-      |WHERE ((o_orderkey % 10) + 10) % 10 = 3
-      |ORDER BY o_orderkey""".stripMargin
+      |WHERE ((o_orderkey % 10) + 10) % 10 = 3""".stripMargin
 
   /** Stratified deterministic sampling: a fixed-size sample per stratum
     * (order priority), chosen by ranking on md5 of the key — every stratum
@@ -325,8 +308,7 @@ object Aggregates {
       |      ORDER BY md5('strat:' || cast(o_orderkey as varchar)), o_orderkey) AS rk
       |  FROM orders)
       |SELECT o_orderpriority, cast(rk as int) AS rk, o_orderkey, o_totalprice
-      |FROM ranked WHERE rk <= 50
-      |ORDER BY o_orderpriority, rk""".stripMargin
+      |FROM ranked WHERE rk <= 50""".stripMargin
 
   /** Approximate quantiles (KLL-style sketch under percentile_approx) —
     * error bound vs exact asserted in ScalaTest (sketches differ by engine,
@@ -351,7 +333,7 @@ object Aggregates {
       |  bit_and(o_custkey) AS k_and,
       |  bit_or(o_custkey) AS k_or,
       |  bit_xor(o_custkey) AS k_xor
-      |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
+      |FROM orders GROUP BY o_orderpriority""".stripMargin
 
   /** UNPIVOT / melt — wide metric columns to long (metric, value) rows, the
     * inverse of agg_pivot. `Dataset.unpivot` plans as a map-side Expand (one
@@ -380,8 +362,7 @@ object Aggregates {
       |  UNION ALL
       |  SELECT l_returnflag, 'n_rows', n_rows FROM wide
       |  UNION ALL
-      |  SELECT l_returnflag, 'n_parts', n_parts FROM wide)
-      |ORDER BY l_returnflag, metric""".stripMargin
+      |  SELECT l_returnflag, 'n_parts', n_parts FROM wide)""".stripMargin
 
   /** LISTAGG (SQL:2016, Spark 4) — ordered string concatenation per group,
     * the reducer-side "join the values" idiom; WITHIN GROUP fixes the element
@@ -398,8 +379,7 @@ object Aggregates {
   val aggListaggSql: String =
     """SELECT r_name, string_agg(n_name, ',' ORDER BY n_name) AS members
       |FROM nation JOIN region ON n_regionkey = r_regionkey
-      |GROUP BY r_name
-      |ORDER BY r_name""".stripMargin
+      |GROUP BY r_name""".stripMargin
 
   /** Statistical mode per group (most frequent value, ties → smallest):
     * count + rank, the two-aggregation idiom — DuckDB's mode() aggregate
@@ -427,82 +407,49 @@ object Aggregates {
       |                       ORDER BY cnt DESC, o_orderpriority) AS rk
       |  FROM cnt)
       |SELECT o_orderstatus, o_orderpriority AS mode_priority, cnt
-      |FROM ranked WHERE rk = 1 ORDER BY o_orderstatus""".stripMargin
-
-  val queries: Map[String, Q] = Map(
-    "agg_mode" -> aggMode,
-    "agg_unpivot" -> aggUnpivot,
-    "agg_listagg" -> aggListagg,
-    "agg_bitwise" -> aggBitwise,
-    "agg_pivot" -> aggPivot,
-    "sample_hash" -> sampleHash,
-    "sample_mod" -> sampleMod,
-    "sample_stratified" -> sampleStratified,
-    "agg_approx_quantile" -> aggApproxQuantile,
-    "agg_hash_group" -> aggHashGroup,
-    "agg_count_distinct" -> aggCountDistinct,
-    "agg_approx_distinct" -> aggApproxDistinct,
-    "agg_hll_merge" -> aggHllMerge,
-    "agg_sort_fallback" -> aggSortFallback,
-    "agg_rollup" -> aggRollup,
-    "agg_cube" -> aggCube,
-    "agg_grouping_sets" -> aggGroupingSets,
-    "agg_collect" -> aggCollect,
-    "agg_percentile" -> aggPercentile,
-    "agg_histogram" -> aggHistogram,
-    "agg_stddev_corr" -> aggStddevCorr,
-  )
-
-  /** Registered SORT-FREE (round 15, tranche 3): grouped/sampled outputs
-    * are keyed lookups downstream — the trailing ORDER BY was
-    * comparator-only (even a tiny sorted output pays an extra AQE stage +
-    * range exchange per suite pass). Keys are the group-by keys (unique by
-    * construction). Verify applies these; each equals its oracle's trailing
-    * ORDER BY (ExplainInvariantsSpec pins the coupling). agg_rollup /
-    * agg_grouping_sets stay sorted: their query text is sharedSql with the
-    * oracle, so the comparator sort cannot be stripped one-sided. */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "agg_hash_group" -> Seq("l_returnflag", "l_linestatus"),
-    "agg_count_distinct" -> Seq("o_orderpriority"),
-    "agg_sort_fallback" -> Seq("l_returnflag"),
-    "agg_cube" -> Seq("g_s", "g_p", "seg", "prio"),
-    "agg_collect" -> Seq("c_custkey"),
-    "agg_percentile" -> Seq("l_returnflag"),
-    "agg_stddev_corr" -> Seq("l_returnflag"),
-    "agg_pivot" -> Seq("c_mktsegment"),
-    "sample_stratified" -> Seq("o_orderpriority", "rk"),
-    "agg_unpivot" -> Seq("l_returnflag", "metric"),
-    "agg_mode" -> Seq("o_orderstatus"),
-    "agg_listagg" -> Seq("r_name"),
-    "agg_bitwise" -> Seq("o_orderpriority"),
-    "agg_histogram" -> Seq("bucket"),
-    "sample_mod" -> Seq("o_orderkey"),
-  )
+      |FROM ranked WHERE rk = 1""".stripMargin
 
   // agg_sort_fallback's VALUES are oracle-checkable even though the sort-agg
   // PHYSICAL path it exists to exercise is asserted in ExplainInvariantsSpec:
   // size(sort_array(collect_list(k))) is just the group count.
   val aggSortFallbackSql: String =
     """SELECT l_returnflag, cast(count(*) as int) AS n_keys, count(*) AS n
-      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
+      |FROM lineitem GROUP BY l_returnflag""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "agg_mode" -> aggModeSql,
-    "agg_unpivot" -> aggUnpivotSql,
-    "agg_listagg" -> aggListaggSql,
-    "agg_sort_fallback" -> aggSortFallbackSql,
-    "agg_bitwise" -> aggBitwiseSql,
-    "agg_pivot" -> aggPivotSql,
-    "sample_mod" -> sampleModSql,
-    "sample_stratified" -> sampleStratifiedSql,
-    "agg_hash_group" -> aggHashGroupSql,
-    "agg_count_distinct" -> aggCountDistinctSql,
-    "agg_rollup" -> aggRollupSql,
-    "agg_cube" -> aggCubeSql,
-    "agg_grouping_sets" -> aggGroupingSetsSql,
-    "agg_collect" -> aggCollectSql,
-    "agg_percentile" -> aggPercentileSql,
-    "agg_histogram" -> aggHistogramSql,
-    "agg_stddev_corr" -> aggStddevCorrSql,
+  /** Registered SORT-FREE (round 15, tranche 3): grouped/sampled outputs are
+    * keyed lookups downstream — the trailing ORDER BY was comparator-only
+    * (even a tiny sorted output pays an extra AQE stage + range exchange per
+    * suite pass). Keys are the group-by keys (unique by construction). Verify
+    * sorts the dump by these keys and the oracle's ORDER BY is derived from
+    * them. agg_rollup / agg_grouping_sets stay sorted: their query text is
+    * shared with the oracle, so the comparator sort cannot be stripped one-
+    * sided. */
+  val ops: Seq[Op] = Seq(
+    Op("agg_mode", aggMode, Sql(aggModeSql), Seq("o_orderstatus")),
+    Op("agg_unpivot", aggUnpivot, Sql(aggUnpivotSql), Seq("l_returnflag", "metric")),
+    Op("agg_listagg", aggListagg, Sql(aggListaggSql), Seq("r_name")),
+    Op("agg_bitwise", aggBitwise, Sql(aggBitwiseSql), Seq("o_orderpriority")),
+    Op("agg_pivot", aggPivot, Sql(aggPivotSql), Seq("c_mktsegment")),
+    Op("sample_hash", sampleHash,
+      NoOracle("graft.LlmSpec", "membership hashes with xxhash64, which DuckDB lacks")),
+    Op("sample_mod", sampleMod, Sql(sampleModSql), Seq("o_orderkey")),
+    Op("sample_stratified", sampleStratified,
+      Sql(sampleStratifiedSql), Seq("o_orderpriority", "rk")),
+    Op("agg_approx_quantile", aggApproxQuantile,
+      NoOracle("graft.LlmSpec", "Spark's GK-sketch quantiles have no bit-equal DuckDB twin")),
+    Op("agg_hash_group", aggHashGroup, Sql(aggHashGroupSql), Seq("l_returnflag", "l_linestatus")),
+    Op("agg_count_distinct", aggCountDistinct, Sql(aggCountDistinctSql), Seq("o_orderpriority")),
+    Op("agg_approx_distinct", aggApproxDistinct,
+      NoOracle("graft.LlmSpec", "Spark's HLL++ estimate has no bit-equal DuckDB twin")),
+    Op("agg_hll_merge", aggHllMerge,
+      NoOracle("graft.LlmSpec", "HLL sketch estimates have no bit-equal DuckDB twin")),
+    Op("agg_sort_fallback", aggSortFallback, Sql(aggSortFallbackSql), Seq("l_returnflag")),
+    Op.shared("agg_rollup", aggRollupSql),
+    Op("agg_cube", aggCube, Sql(aggCubeSql), Seq("g_s", "g_p", "seg", "prio")),
+    Op.shared("agg_grouping_sets", aggGroupingSetsSql),
+    Op("agg_collect", aggCollect, Sql(aggCollectSql), Seq("c_custkey")),
+    Op("agg_percentile", aggPercentile, Sql(aggPercentileSql), Seq("l_returnflag")),
+    Op("agg_histogram", aggHistogram, Sql(aggHistogramSql), Seq("bucket")),
+    Op("agg_stddev_corr", aggStddevCorr, Sql(aggStddevCorrSql), Seq("l_returnflag")),
   )
 }

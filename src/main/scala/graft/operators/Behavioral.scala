@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Op, Q, Sql, Tables}
 import graft.Dsl.{round6, round6Sql}
 
 /** Behavioral / product-analytics operators over the `events` stream table
@@ -19,8 +18,6 @@ import graft.Dsl.{round6, round6Sql}
   * reuse, and broadcast demotion of the shrinking funnel stages.
   */
 object Behavioral {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Ordered funnel view → click → purchase within 7 days of the user's
     * first view. Step timestamps are the MINIMUM qualifying instants
     * (t1 = first view; t2 = first click strictly after t1; t3 = first
@@ -74,8 +71,7 @@ object Behavioral {
       |  GROUP BY f.user_id)
       |SELECT 1 AS step, count(*) AS n_users FROM s1
       |UNION ALL SELECT 2, count(*) FROM s2
-      |UNION ALL SELECT 3, count(*) FROM s3
-      |ORDER BY step""".stripMargin
+      |UNION ALL SELECT 3, count(*) FROM s3""".stripMargin
 
   /** Weekly cohort retention: users are cohorted by the Monday-start week
     * of their FIRST event; a cohort's week-k retention is the fraction of
@@ -123,8 +119,7 @@ object Behavioral {
       |FROM active a
       |JOIN first_seen f ON a.user_id = f.user_id
       |JOIN sizes s ON f.cohort_week = s.cohort_week
-      |GROUP BY f.cohort_week, a.active_week
-      |ORDER BY f.cohort_week, week_offset""".stripMargin
+      |GROUP BY f.cohort_week, a.active_week""".stripMargin
 
   /** Top event-type paths: per user, every run of 3 consecutive events
     * ordered by (ts, event_id) forms a path "a>b>c"; report the 10 most
@@ -201,8 +196,7 @@ object Behavioral {
       |  CASE WHEN abs(round((c - cast(sc as double) / n) /
       |        sqrt((scc - sc * sc / n) / (n - 1)), 6)) >= 2.0
       |       THEN 1 ELSE 0 END AS is_anomaly
-      |FROM hourly h JOIN stats s ON h.event_type = s.event_type
-      |ORDER BY h.event_type, hour""".stripMargin
+      |FROM hourly h JOIN stats s ON h.event_type = s.event_type""".stripMargin
 
   /** First-order Markov transition matrix over event types: per user,
     * consecutive event pairs (ordered by ts, event_id) count transitions;
@@ -238,8 +232,7 @@ object Behavioral {
       |  WHERE dst IS NOT NULL GROUP BY src, dst)
       |SELECT src, dst, cnt,
       |  round(cast(cnt as double) / sum(cnt) OVER (PARTITION BY src), 6) AS p6
-      |FROM trans
-      |ORDER BY src, dst""".stripMargin
+      |FROM trans""".stripMargin
 
   /** Experiment readout: users deterministically split by `user_id % 2`,
     * conversion = the user's FIRST logged event (min event_id) is a
@@ -367,36 +360,21 @@ object Behavioral {
       |  CASE WHEN n_views > 0
       |       THEN round(cast(purchase_cents as double) / 100.0 / n_views, 6)
       |  END AS per_view6
-      |FROM rolled
-      |ORDER BY user_id, session_idx""".stripMargin
-
-  val queries: Map[String, Q] = Map(
-    "events_funnel" -> eventsFunnel,
-    "events_retention" -> eventsRetention,
-    "events_top_paths" -> eventsTopPaths,
-    "events_anomaly" -> eventsAnomaly,
-    "events_markov" -> eventsMarkov,
-    "events_ab_test" -> eventsAbTest,
-    "events_attribution" -> eventsAttribution)
-
-  val oracle: Map[String, String] = Map(
-    "events_funnel" -> eventsFunnelSql,
-    "events_retention" -> eventsRetentionSql,
-    "events_top_paths" -> eventsTopPathsSql,
-    "events_anomaly" -> eventsAnomalySql,
-    "events_markov" -> eventsMarkovSql,
-    "events_ab_test" -> eventsAbTestSql,
-    "events_attribution" -> eventsAttributionSql)
+      |FROM rolled""".stripMargin
 
   /** Registered SORT-FREE (round 15): per-session attribution rows are a
     * keyed result, not a report; (user_id, session_idx) is the session PK.
-    * Verify applies this; equals the oracle's trailing ORDER BY. */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "events_attribution" -> Seq("user_id", "session_idx"),
-    // tranche 3 (round 15): comparator-only trailing sorts over unique keys
-    "events_funnel" -> Seq("step"),
-    "events_retention" -> Seq("cohort_week", "week_offset"),
-    "events_anomaly" -> Seq("event_type", "hour"),
-    "events_markov" -> Seq("src", "dst"),
+    * Verify sorts the dump by these keys and the oracle's ORDER BY is derived
+    * from them. */
+  val ops: Seq[Op] = Seq(
+    Op("events_funnel", eventsFunnel, Sql(eventsFunnelSql), Seq("step")),
+    Op("events_retention", eventsRetention,
+      Sql(eventsRetentionSql), Seq("f.cohort_week", "week_offset")),
+    Op("events_top_paths", eventsTopPaths, Sql(eventsTopPathsSql)),
+    Op("events_anomaly", eventsAnomaly, Sql(eventsAnomalySql), Seq("h.event_type", "hour")),
+    Op("events_markov", eventsMarkov, Sql(eventsMarkovSql), Seq("src", "dst")),
+    Op("events_ab_test", eventsAbTest, Sql(eventsAbTestSql)),
+    Op("events_attribution", eventsAttribution,
+      Sql(eventsAttributionSql), Seq("user_id", "session_idx")),
   )
 }

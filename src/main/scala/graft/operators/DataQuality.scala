@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{NoOracle, Op, Q, Sql, Tables}
 
 /** Data-quality operators (SURVEY.md §2.14): column profiling and
   * declarative constraint validation — the Deequ/Great-Expectations
@@ -15,8 +15,6 @@ import graft.Tables
   * as the dependency structure allows.
   */
 object DataQuality {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Column profile of `orders`: per column — row count, null count, exact
     * distinct count, and min/max (numeric columns as exact doubles,
     * timestamps as epoch microseconds, strings as strings).
@@ -237,21 +235,14 @@ object DataQuality {
       |UNION ALL SELECT 'orders_custkey_fk', cast(fk_viol as bigint),
       |  CASE WHEN fk_viol = 0 THEN 1 ELSE 0 END FROM fk
       |UNION ALL SELECT 'customer_acctbal_nonnull', cast(bal_viol as bigint),
-      |  CASE WHEN bal_viol = 0 THEN 1 ELSE 0 END FROM cust
-      |ORDER BY check_name""".stripMargin
-
-  val queries: Map[String, Q] = Map(
-    "dq_profile" -> dqProfile,
-    "dq_profile_approx" -> dqProfileApprox,
-    "dq_constraints" -> dqConstraints)
-
-  val oracle: Map[String, String] = Map(
-    "dq_profile" -> dqProfileSql,
-    "dq_constraints" -> dqConstraintsSql)
+      |  CASE WHEN bal_viol = 0 THEN 1 ELSE 0 END FROM cust""".stripMargin
 
   /** Registered SORT-FREE (round 15, tranche 3): five named checks, unique
     * check_name key — the trailing ORDER BY was comparator-only. */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "dq_constraints" -> Seq("check_name"),
+  val ops: Seq[Op] = Seq(
+    Op("dq_profile", dqProfile, Sql(dqProfileSql)),
+    Op("dq_profile_approx", dqProfileApprox,
+      NoOracle("graft.DataQualitySpec", "approx distinct counts have no bit-equal DuckDB twin")),
+    Op("dq_constraints", dqConstraints, Sql(dqConstraintsSql), Seq("check_name")),
   )
 }

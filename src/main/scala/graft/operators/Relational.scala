@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.{Dsl, Tables}
+import graft.{Dsl, Op, Q, Sql, Tables}
 
 /** §2.2 projection/filter/predicates + §2.3 joins (SURVEY.md).
   *
@@ -20,7 +20,9 @@ import graft.{Dsl, Tables}
 object Relational {
   import Dsl._
 
-  type Q = (SparkSession, String) => DataFrame
+  /** lineitem's unique key: (l_orderkey, l_linenumber) alone has duplicates
+    * in these fixtures, so every row-level lineitem dump sorts by all four. */
+  val LineitemKey: Seq[String] = Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
 
   // ---- §2.2 projection / filter ------------------------------------------
 
@@ -30,8 +32,8 @@ object Relational {
     * has duplicates, so every row-level lineitem query orders by all four. */
   /** Registered SORT-FREE (round 14, same move as project_select round 13):
     * the pruned pushdown scan is a pure map task — no exchange at all; the
-    * deterministic compare order lives in the Verify dump
-    * ([[scanParquetDumpSort]]) and the oracle's ORDER BY, not the operator. */
+    * deterministic compare order lives in the Verify dump (its [[ops]]
+    * sort keys, the full lineitem key), not the operator. */
   val scanParquet: Q = (s, d) =>
     Tables.lineitem(s, d)
       .where(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
@@ -40,23 +42,18 @@ object Relational {
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
               "l_quantity", "l_shipdate")
 
-  /** (l_orderkey, l_linenumber) is the lineitem PK — a total order. */
-  val scanParquetDumpSort: Seq[String] =
-    Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-
   val scanParquetSql: String =
     """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity, l_shipdate
       |FROM lineitem
       |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-07-01'
-      |  AND l_quantity < 10
-      |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin
+      |  AND l_quantity < 10""".stripMargin
 
   /** The REGISTERED map-only projection (round-12 verdict #1a): disc price
     * and charge as exact scaled-long arithmetic divided once to double, the
     * pure operator a pipeline would run. The deterministic total order the
     * oracle hash compare needs is applied by the COMPARATOR side —
-    * graft.Verify sorts the dump by [[projectSelectDumpSort]] before
-    * writing, matching the oracle SQL's ORDER BY — instead of riding the
+    * graft.Verify sorts the dump by the op's sort keys before writing,
+    * matching the oracle SQL's derived ORDER BY — instead of riding the
     * operator, where its range exchange re-executed the whole single-row-
     * group scan+derive for sampling and dominated the benchmark's largest
     * line (1.13 s of which ~0.8 s was the sort harness, not the operator). */
@@ -67,16 +64,11 @@ object Relational {
               discPrice.as("disc_price"),
               charge.as("charge"))
 
-  /** Comparator-side dump order for the sort-free registered form. */
-  val projectSelectDumpSort: Seq[String] =
-    Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-
   val projectSelectSql: String =
     s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
        |  $discPriceSql AS disc_price,
        |  $chargeSql AS charge
-       |FROM lineitem
-       |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin
+       |FROM lineitem""".stripMargin
 
   /** Compound predicate (TPC-H Q6 shape) → one exact revenue scalar. */
   val filterPredicate: Q = (s, d) =>
@@ -104,8 +96,7 @@ object Relational {
 
   val filterRegexGrepSql: String =
     """SELECT doc_id, lang FROM documents
-      |WHERE regexp_matches(text, 'hash\s+join')
-      |ORDER BY doc_id""".stripMargin
+      |WHERE regexp_matches(text, 'hash\s+join')""".stripMargin
 
   /** NULL semantics: IS NULL / null-safe equality on a derived nullable col. */
   val filterNullSemantics: Q = (s, d) =>
@@ -119,8 +110,7 @@ object Relational {
   val filterNullSemanticsSql: String =
     """SELECT c_custkey, seg, seg IS NULL AS seg_is_null,
       |       seg IS NOT DISTINCT FROM 'MACHINERY' AS is_machinery
-      |FROM (SELECT c_custkey, nullif(c_mktsegment, 'BUILDING') AS seg FROM customer)
-      |ORDER BY c_custkey""".stripMargin
+      |FROM (SELECT c_custkey, nullif(c_mktsegment, 'BUILDING') AS seg FROM customer)""".stripMargin
 
   // ---- §2.3 joins ---------------------------------------------------------
 
@@ -128,26 +118,22 @@ object Relational {
   /** Registered SORT-FREE (round 14): the shuffled equi join's output is
     * O(|orders|) and the trailing ORDER BY existed only for the hash
     * compare — it was a second full range exchange over the join output.
-    * Compare order: [[joinInnerHashDumpSort]] + the oracle's ORDER BY. */
+    * Compare order: the op's sort key o_orderkey, the orders PK. */
   val joinInnerHash: Q = (s, d) =>
     Tables.orders(s, d)
       .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
       .select("o_orderkey", "c_name", "c_mktsegment")
 
-  /** o_orderkey is the orders PK — a total order. */
-  val joinInnerHashDumpSort: Seq[String] = Seq("o_orderkey")
-
   val joinInnerHashSql: String =
     """SELECT o_orderkey, c_name, c_mktsegment
-      |FROM orders JOIN customer ON o_custkey = c_custkey
-      |ORDER BY o_orderkey""".stripMargin
+      |FROM orders JOIN customer ON o_custkey = c_custkey""".stripMargin
 
   /** Map-side hash join (DistributedCache idiom): broadcast the dimension. */
   /** Registered SORT-FREE (round 14): a broadcast join is map-side — with
     * the comparator ORDER BY gone the whole query is exchange-FREE, which
     * is the point of broadcasting; the old trailing sort range-exchanged
-    * ~30% of lineitem for the hash compare alone. Compare order:
-    * [[joinBroadcastDumpSort]] + the oracle's ORDER BY. */
+    * ~30% of lineitem for the hash compare alone. Compare order: the op's
+    * sort keys, the full lineitem key. */
   val joinBroadcast: Q = (s, d) =>
     Tables.lineitem(s, d)
       .join(broadcast(Tables.part(s, d).where(col("p_size") < 15)),
@@ -155,15 +141,10 @@ object Relational {
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
               "p_brand", "p_size")
 
-  /** (l_orderkey, l_linenumber) is the lineitem PK — a total order. */
-  val joinBroadcastDumpSort: Seq[String] =
-    Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-
   val joinBroadcastSql: String =
     """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, p_brand, p_size
       |FROM lineitem JOIN part ON l_partkey = p_partkey
-      |WHERE p_size < 15
-      |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin
+      |WHERE p_size < 15""".stripMargin
 
   /** Co-sorted merge join (CompositeInputFormat idiom) — force SMJ via hint. */
   val joinSortMerge: Q = (s, d) =>
@@ -175,8 +156,7 @@ object Relational {
   val joinSortMergeSql: String =
     s"""SELECT o_orderpriority, count(*) AS line_cnt, ${moneySumSql("l_extendedprice")} AS sum_price
        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-       |GROUP BY o_orderpriority
-       |ORDER BY o_orderpriority""".stripMargin
+       |GROUP BY o_orderpriority""".stripMargin
 
   /** Left outer join: order count per customer including zero. */
   val joinLeftOuter: Q = (s, d) =>
@@ -188,8 +168,7 @@ object Relational {
   val joinLeftOuterSql: String =
     """SELECT c_custkey, count(o_orderkey) AS order_cnt
       |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-      |GROUP BY c_custkey
-      |ORDER BY c_custkey""".stripMargin
+      |GROUP BY c_custkey""".stripMargin
 
   /** Full outer join with non-matching rows on both sides. */
   val joinFullOuter: Q = (s, d) => {
@@ -208,8 +187,7 @@ object Relational {
       |       c_acctbal, o_totalprice
       |FROM (SELECT c_custkey, c_acctbal FROM customer WHERE c_acctbal > 9000) c
       |FULL JOIN (SELECT o_orderkey, o_custkey, o_totalprice FROM orders WHERE o_totalprice > 280000) o
-      |  ON c_custkey = o_custkey
-      |ORDER BY ck, ok""".stripMargin
+      |  ON c_custkey = o_custkey""".stripMargin
 
   /** Right outer: every big order kept, matching high-balance customer or
     * null — the mirror of left outer (Spark plans it as the flipped left
@@ -230,8 +208,7 @@ object Relational {
       |       c_acctbal, o_totalprice
       |FROM (SELECT c_custkey, c_acctbal FROM customer WHERE c_acctbal > 9000) c
       |RIGHT JOIN (SELECT o_orderkey, o_custkey, o_totalprice FROM orders WHERE o_totalprice > 280000) o
-      |  ON c_custkey = o_custkey
-      |ORDER BY ck, ok""".stripMargin
+      |  ON c_custkey = o_custkey""".stripMargin
 
   /** Semi join: customers having at least one big order (EXISTS). */
   val joinLeftSemi: Q = (s, d) =>
@@ -242,8 +219,7 @@ object Relational {
 
   val joinLeftSemiSql: String =
     """SELECT c_custkey, c_name FROM customer
-      |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 250000)
-      |ORDER BY c_custkey""".stripMargin
+      |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 250000)""".stripMargin
 
   /** Anti join: customers with no big order (NOT EXISTS, non-empty result). */
   val joinLeftAnti: Q = (s, d) =>
@@ -254,8 +230,7 @@ object Relational {
 
   val joinLeftAntiSql: String =
     """SELECT c_custkey, c_name FROM customer
-      |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 250000)
-      |ORDER BY c_custkey""".stripMargin
+      |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 250000)""".stripMargin
 
   /** Bounded cartesian product. */
   val joinCross: Q = (s, d) =>
@@ -263,8 +238,7 @@ object Relational {
       .select("r_name", "n_name")
 
   val joinCrossSql: String =
-    """SELECT r_name, n_name FROM region CROSS JOIN nation
-      |ORDER BY r_name, n_name""".stripMargin
+    """SELECT r_name, n_name FROM region CROSS JOIN nation""".stripMargin
 
   /** Theta/range join: price-band classification of parts.
     * At scale: the band table is tiny → BroadcastNestedLoopJoin, which is the
@@ -286,8 +260,7 @@ object Relational {
     """SELECT p_partkey, band, p_retailprice
       |FROM part JOIN (VALUES ('low', 0.0, 700.0), ('mid', 700.0, 1400.0),
       |                       ('high', 1400.0, 100000.0)) AS b(band, lo, hi)
-      |  ON p_retailprice >= lo AND p_retailprice < hi
-      |ORDER BY p_partkey, band""".stripMargin
+      |  ON p_retailprice >= lo AND p_retailprice < hi""".stripMargin
 
   /** Six-table multiway join (TPC-H Q5 shape: local supplier volume) — the
     * end-to-end join-planning proof. region/nation broadcast, the colocation
@@ -366,68 +339,32 @@ object Relational {
       |  FROM nation WHERE n_nationkey < 5)
       |SELECT dim.k, n_name, count(*) AS n
       |FROM cust JOIN dim ON cust.k IS NOT DISTINCT FROM dim.k
-      |GROUP BY dim.k, n_name
-      |ORDER BY n_name""".stripMargin
-
-  val queries: Map[String, Q] = Map(
-    "join_null_safe" -> joinNullSafe,
-    "join_multiway" -> joinMultiway,
-    "scan_parquet" -> scanParquet,
-    "project_select" -> projectSelectNoSort,
-    "filter_predicate" -> filterPredicate,
-    "filter_regex_grep" -> filterRegexGrep,
-    "filter_null_semantics" -> filterNullSemantics,
-    "join_inner_hash" -> joinInnerHash,
-    "join_broadcast" -> joinBroadcast,
-    "join_sort_merge" -> joinSortMerge,
-    "join_left_outer" -> joinLeftOuter,
-    "join_full_outer" -> joinFullOuter,
-    "join_right_outer" -> joinRightOuter,
-    "join_left_semi" -> joinLeftSemi,
-    "join_left_anti" -> joinLeftAnti,
-    "join_cross" -> joinCross,
-    "join_theta_range" -> joinThetaRange,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "join_null_safe" -> joinNullSafeSql,
-    "join_multiway" -> joinMultiwaySql,
-    "scan_parquet" -> scanParquetSql,
-    "project_select" -> projectSelectSql,
-    "filter_predicate" -> filterPredicateSql,
-    "filter_regex_grep" -> filterRegexGrepSql,
-    "filter_null_semantics" -> filterNullSemanticsSql,
-    "join_inner_hash" -> joinInnerHashSql,
-    "join_broadcast" -> joinBroadcastSql,
-    "join_sort_merge" -> joinSortMergeSql,
-    "join_left_outer" -> joinLeftOuterSql,
-    "join_full_outer" -> joinFullOuterSql,
-    "join_right_outer" -> joinRightOuterSql,
-    "join_left_semi" -> joinLeftSemiSql,
-    "join_left_anti" -> joinLeftAntiSql,
-    "join_cross" -> joinCrossSql,
-    "join_theta_range" -> joinThetaRangeSql,
-  )
+      |GROUP BY dim.k, n_name""".stripMargin
 
   /** Registered SORT-FREE (round 15, tranche 3): join results are keyed
     * lookups downstream — the trailing ORDER BY was comparator-only (each
     * paid an extra AQE stage + range exchange per suite pass). Keys are
-    * unique in every output (c_custkey per-customer; (ck, ok) for the
-    * outer joins since ok = o_orderkey is unique and ck-only rows carry
-    * ok = -1 once each; (p_partkey, band) since bands are disjoint).
-    * Verify applies these; each equals its oracle's trailing ORDER BY
-    * (ExplainInvariantsSpec pins the coupling). */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "join_sort_merge" -> Seq("o_orderpriority"),
-    "join_left_outer" -> Seq("c_custkey"),
-    "join_full_outer" -> Seq("ck", "ok"),
-    "join_right_outer" -> Seq("ck", "ok"),
-    "join_left_semi" -> Seq("c_custkey"),
-    "join_left_anti" -> Seq("c_custkey"),
-    "join_theta_range" -> Seq("p_partkey", "band"),
-    "join_null_safe" -> Seq("n_name"),
-    "join_cross" -> Seq("r_name", "n_name"),
-    "filter_null_semantics" -> Seq("c_custkey"),
-    "filter_regex_grep" -> Seq("doc_id"),
+    * unique in every output (c_custkey per-customer; (ck, ok) for the outer
+    * joins since ok = o_orderkey is unique and ck-only rows carry ok = -1
+    * once each; (p_partkey, band) since bands are disjoint). Verify sorts the
+    * dump by these keys and the oracle's ORDER BY is derived from them. */
+  val ops: Seq[Op] = Seq(
+    Op("join_null_safe", joinNullSafe, Sql(joinNullSafeSql), Seq("n_name")),
+    Op("join_multiway", joinMultiway, Sql(joinMultiwaySql)),
+    Op("scan_parquet", scanParquet, Sql(scanParquetSql), LineitemKey),
+    Op("project_select", projectSelectNoSort, Sql(projectSelectSql), LineitemKey),
+    Op("filter_predicate", filterPredicate, Sql(filterPredicateSql)),
+    Op("filter_regex_grep", filterRegexGrep, Sql(filterRegexGrepSql), Seq("doc_id")),
+    Op("filter_null_semantics", filterNullSemantics, Sql(filterNullSemanticsSql), Seq("c_custkey")),
+    Op("join_inner_hash", joinInnerHash, Sql(joinInnerHashSql), Seq("o_orderkey")),
+    Op("join_broadcast", joinBroadcast, Sql(joinBroadcastSql), LineitemKey),
+    Op("join_sort_merge", joinSortMerge, Sql(joinSortMergeSql), Seq("o_orderpriority")),
+    Op("join_left_outer", joinLeftOuter, Sql(joinLeftOuterSql), Seq("c_custkey")),
+    Op("join_full_outer", joinFullOuter, Sql(joinFullOuterSql), Seq("ck", "ok")),
+    Op("join_right_outer", joinRightOuter, Sql(joinRightOuterSql), Seq("ck", "ok")),
+    Op("join_left_semi", joinLeftSemi, Sql(joinLeftSemiSql), Seq("c_custkey")),
+    Op("join_left_anti", joinLeftAnti, Sql(joinLeftAntiSql), Seq("c_custkey")),
+    Op("join_cross", joinCross, Sql(joinCrossSql), Seq("r_name", "n_name")),
+    Op("join_theta_range", joinThetaRange, Sql(joinThetaRangeSql), Seq("p_partkey", "band")),
   )
 }

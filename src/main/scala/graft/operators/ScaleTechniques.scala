@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Dsl, Tables}
+import graft.{Dsl, Op, Q, Sql, Tables}
 
 /** Explicit scale techniques (SURVEY.md §7.5): manual key-salting for skewed
   * shuffle joins, and bucket-pruned co-located joins.
@@ -20,8 +20,6 @@ import graft.{Dsl, Tables}
   */
 object ScaleTechniques {
   import Dsl._
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Spark ships `bloom_filter_agg` / `might_contain` as catalyst
     * expressions (the machinery behind InjectRuntimeFilter) but does not
@@ -97,8 +95,7 @@ object ScaleTechniques {
     s"""SELECT o_orderpriority, count(*) AS line_cnt,
        |  $discPriceSumSql AS revenue
        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-       |GROUP BY o_orderpriority
-       |ORDER BY o_orderpriority""".stripMargin
+       |GROUP BY o_orderpriority""".stripMargin
 
   /** Bucket-pruned co-located join: both sides written bucketed+sorted on
     * the join key (external tables in a temp dir), then merge-joined with
@@ -127,8 +124,7 @@ object ScaleTechniques {
     s"""SELECT c_mktsegment, count(*) AS n_orders,
        |  ${moneySumSql("o_totalprice")} AS total
        |FROM orders JOIN customer ON o_custkey = c_custkey
-       |GROUP BY c_mktsegment
-       |ORDER BY c_mktsegment""".stripMargin
+       |GROUP BY c_mktsegment""".stripMargin
 
   /** Bloom-filter runtime pre-filter join — the manual form of Spark's
     * InjectRuntimeFilter, and the Hadoop idiom of shipping a membership
@@ -171,27 +167,15 @@ object ScaleTechniques {
        |  ${moneySumSql("o_totalprice")} AS total
        |FROM orders JOIN customer ON o_custkey = c_custkey
        |WHERE c_mktsegment = 'MACHINERY'
-       |GROUP BY c_nationkey
-       |ORDER BY c_nationkey""".stripMargin
+       |GROUP BY c_nationkey""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "skew_salted_join" -> skewSaltedJoin,
-    "join_bucketed_colocated" -> joinBucketedColocated,
-    "join_bloom_prefilter" -> joinBloomPrefilter,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "skew_salted_join" -> skewSaltedJoinSql,
-    "join_bucketed_colocated" -> joinBucketedColocatedSql,
-    "join_bloom_prefilter" -> joinBloomPrefilterSql,
-  )
-
-  /** Registered SORT-FREE (round 15, tranche 3): grouped outputs with
-    * unique group keys — the trailing ORDER BY was comparator-only.
-    * Verify applies these; each equals its oracle's trailing ORDER BY. */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "skew_salted_join" -> Seq("o_orderpriority"),
-    "join_bucketed_colocated" -> Seq("c_mktsegment"),
-    "join_bloom_prefilter" -> Seq("c_nationkey"),
+  /** Registered SORT-FREE (round 15, tranche 3): grouped outputs with unique
+    * group keys — the trailing ORDER BY was comparator-only. Verify sorts the
+    * dump by these keys and the oracle's ORDER BY is derived from them. */
+  val ops: Seq[Op] = Seq(
+    Op("skew_salted_join", skewSaltedJoin, Sql(skewSaltedJoinSql), Seq("o_orderpriority")),
+    Op("join_bucketed_colocated", joinBucketedColocated,
+      Sql(joinBucketedColocatedSql), Seq("c_mktsegment")),
+    Op("join_bloom_prefilter", joinBloomPrefilter, Sql(joinBloomPrefilterSql), Seq("c_nationkey")),
   )
 }

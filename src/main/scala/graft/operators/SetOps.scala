@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Op, Q, Sql, Tables}
 
 /** §2.7 set operations / exact dedup (SURVEY.md).
   *
@@ -13,8 +13,6 @@ import graft.Tables
   * that is the unavoidable exchange, and partial aggregation trims it.
   */
 object SetOps {
-  type Q = (SparkSession, String) => DataFrame
-
   private def urgent(s: SparkSession, d: String): DataFrame =
     Tables.orders(s, d).where(col("o_orderpriority") === "1-URGENT")
   private def high(s: SparkSession, d: String): DataFrame =
@@ -28,8 +26,7 @@ object SetOps {
   val setUnionAllSql: String =
     """SELECT o_orderkey, 'urgent' AS src FROM orders WHERE o_orderpriority = '1-URGENT'
       |UNION ALL
-      |SELECT o_orderkey, 'high' AS src FROM orders WHERE o_orderpriority = '2-HIGH'
-      |ORDER BY o_orderkey, src""".stripMargin
+      |SELECT o_orderkey, 'high' AS src FROM orders WHERE o_orderpriority = '2-HIGH'""".stripMargin
 
   /** Set union: distinct customers having urgent or high orders. */
   val setUnionDistinct: Q = (s, d) =>
@@ -40,8 +37,7 @@ object SetOps {
   val setUnionDistinctSql: String =
     """SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
       |UNION
-      |SELECT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH'
-      |ORDER BY o_custkey""".stripMargin
+      |SELECT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH'""".stripMargin
 
   /** Set intersection: customers with BOTH urgent and high orders. */
   val setIntersect: Q = (s, d) =>
@@ -51,8 +47,7 @@ object SetOps {
   val setIntersectSql: String =
     """SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
       |INTERSECT
-      |SELECT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH'
-      |ORDER BY o_custkey""".stripMargin
+      |SELECT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH'""".stripMargin
 
   /** Set difference: customers with orders but none urgent. */
   val setExcept: Q = (s, d) =>
@@ -62,8 +57,7 @@ object SetOps {
   val setExceptSql: String =
     """SELECT o_custkey FROM orders
       |EXCEPT
-      |SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-      |ORDER BY o_custkey""".stripMargin
+      |SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'""".stripMargin
 
   /** Bag intersection (INTERSECT ALL): per-customer order-count overlap —
     * multiplicity min(urgent_n, high_n), which set-intersect silently
@@ -75,8 +69,7 @@ object SetOps {
   val setIntersectAllSql: String =
     """SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
       |INTERSECT ALL
-      |SELECT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH'
-      |ORDER BY o_custkey""".stripMargin
+      |SELECT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH'""".stripMargin
 
   /** Bag difference (EXCEPT ALL): multiplicity max(all_n - urgent_n, 0) —
     * keeps a customer's remaining non-urgent order slots. */
@@ -87,8 +80,7 @@ object SetOps {
   val setExceptAllSql: String =
     """SELECT o_custkey FROM orders
       |EXCEPT ALL
-      |SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-      |ORDER BY o_custkey""".stripMargin
+      |SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'""".stripMargin
 
   /** Exact whole-row dedup (canonical MR distinct). */
   val distinctRows: Q = (s, d) =>
@@ -97,41 +89,21 @@ object SetOps {
       .distinct()
 
   val distinctRowsSql: String =
-    """SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
-      |ORDER BY o_orderstatus, o_orderpriority""".stripMargin
-
-  val queries: Map[String, Q] = Map(
-    "set_union_all" -> setUnionAll,
-    "set_union_distinct" -> setUnionDistinct,
-    "set_intersect" -> setIntersect,
-    "set_except" -> setExcept,
-    "set_intersect_all" -> setIntersectAll,
-    "set_except_all" -> setExceptAll,
-    "distinct_rows" -> distinctRows,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "set_union_all" -> setUnionAllSql,
-    "set_union_distinct" -> setUnionDistinctSql,
-    "set_intersect" -> setIntersectSql,
-    "set_except" -> setExceptSql,
-    "set_intersect_all" -> setIntersectAllSql,
-    "set_except_all" -> setExceptAllSql,
-    "distinct_rows" -> distinctRowsSql,
-  )
+    """SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders""".stripMargin
 
   /** Registered SORT-FREE (round 15): set results have no semantic order;
     * keys are unique (distinct/intersect/except outputs) or ties are
     * IDENTICAL single-column rows (the ALL variants), so any tie order
-    * compares equal. Verify applies these; each equals the oracle's
-    * trailing ORDER BY. */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "set_except_all" -> Seq("o_custkey"),
-    "set_union_all" -> Seq("o_orderkey", "src"),
-    "set_union_distinct" -> Seq("o_custkey"),
-    "set_intersect" -> Seq("o_custkey"),
-    "set_except" -> Seq("o_custkey"),
-    "set_intersect_all" -> Seq("o_custkey"),
-    "distinct_rows" -> Seq("o_orderstatus", "o_orderpriority"),
+    * compares equal. Verify sorts the dump by these keys and the oracle's
+    * ORDER BY is derived from them. */
+  val ops: Seq[Op] = Seq(
+    Op("set_union_all", setUnionAll, Sql(setUnionAllSql), Seq("o_orderkey", "src")),
+    Op("set_union_distinct", setUnionDistinct, Sql(setUnionDistinctSql), Seq("o_custkey")),
+    Op("set_intersect", setIntersect, Sql(setIntersectSql), Seq("o_custkey")),
+    Op("set_except", setExcept, Sql(setExceptSql), Seq("o_custkey")),
+    Op("set_intersect_all", setIntersectAll, Sql(setIntersectAllSql), Seq("o_custkey")),
+    Op("set_except_all", setExceptAll, Sql(setExceptAllSql), Seq("o_custkey")),
+    Op("distinct_rows", distinctRows,
+      Sql(distinctRowsSql), Seq("o_orderstatus", "o_orderpriority")),
   )
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.Tables
+import graft.{Op, Q, Sql, Tables}
 
 /** §2.12 SQL-dialect surface — the query shapes a Hadoop-stack user writes
   * through Hive-style SQL rather than an API: correlated/uncorrelated
@@ -24,12 +23,6 @@ import graft.Tables
   * same broadcast/shuffle joins the §2.3 operators already scale.
   */
 object SqlSurface {
-  type Q = (SparkSession, String) => DataFrame
-
-  private def sharedSql(sql: String): Q = (s, d) => {
-    Tables.registerViews(s, d); s.sql(sql)
-  }
-
   /** Scalar subqueries (two of them) — orders priced above the corpus
     * average. Stated multiplicatively (price × count > total) so the
     * comparison is exact decimal arithmetic: an avg would divide and both
@@ -318,39 +311,21 @@ object SqlSurface {
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sql_pivot" -> sharedSql(pivotSpark),
-    "sql_create_insert" -> sqlCreateInsert,
-    "sql_lateral_join" -> sharedSql(lateralJoinSql),
-    "sql_group_by_all" -> sharedSql(groupByAllSql),
-    "sql_window_clause" -> sharedSql(windowClauseSql),
-    "agg_filter_clause" -> sharedSql(aggFilterClauseSql),
-    "sql_transform_script" -> sharedSql(transformScriptSpark),
-    "sql_distribute_sort" -> sharedSql(distributeSortSpark),
-    "sql_scalar_subquery" -> sharedSql(scalarSubquerySql),
-    "sql_exists_correlated" -> sharedSql(existsCorrelatedSql),
-    "sql_in_subquery" -> sharedSql(inSubquerySql),
-    "sql_cte_chain" -> sharedSql(cteChainSql),
-    "sql_lateral_explode" -> sharedSql(lateralExplodeSpark),
-    "sql_recursive_cte" -> sharedSql(recursiveCteSql),
-    "mr_pi" -> ((s, _) => s.sql(piSpark)),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "sql_pivot" -> pivotOracleSql,
-    "sql_create_insert" -> sqlCreateInsertOracleSql,
-    "sql_lateral_join" -> lateralJoinSql,
-    "sql_group_by_all" -> groupByAllSql,
-    "sql_window_clause" -> windowClauseSql,
-    "agg_filter_clause" -> aggFilterClauseSql,
-    "sql_transform_script" -> transformScriptSql,
-    "sql_distribute_sort" -> distributeSortSql,
-    "sql_scalar_subquery" -> scalarSubquerySql,
-    "sql_exists_correlated" -> existsCorrelatedSql,
-    "sql_in_subquery" -> inSubquerySql,
-    "sql_cte_chain" -> cteChainSql,
-    "sql_lateral_explode" -> lateralExplodeSql,
-    "sql_recursive_cte" -> recursiveCteSql,
-    "mr_pi" -> piSql,
+  val ops: Seq[Op] = Seq(
+    Op("sql_pivot", Op.sqlQuery(pivotSpark), Sql(pivotOracleSql)),
+    Op("sql_create_insert", sqlCreateInsert, Sql(sqlCreateInsertOracleSql)),
+    Op.shared("sql_lateral_join", lateralJoinSql),
+    Op.shared("sql_group_by_all", groupByAllSql),
+    Op.shared("sql_window_clause", windowClauseSql),
+    Op.shared("agg_filter_clause", aggFilterClauseSql),
+    Op("sql_transform_script", Op.sqlQuery(transformScriptSpark), Sql(transformScriptSql)),
+    Op("sql_distribute_sort", Op.sqlQuery(distributeSortSpark), Sql(distributeSortSql)),
+    Op.shared("sql_scalar_subquery", scalarSubquerySql),
+    Op.shared("sql_exists_correlated", existsCorrelatedSql),
+    Op.shared("sql_in_subquery", inSubquerySql),
+    Op.shared("sql_cte_chain", cteChainSql),
+    Op("sql_lateral_explode", Op.sqlQuery(lateralExplodeSpark), Sql(lateralExplodeSql)),
+    Op.shared("sql_recursive_cte", recursiveCteSql),
+    Op("mr_pi", (s, _) => s.sql(piSpark), Sql(piSql)),
   )
 }

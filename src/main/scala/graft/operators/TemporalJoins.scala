@@ -3,7 +3,7 @@ package graft.operators
 import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Op, Q, Sql, Tables}
 import graft.plans.AsofJoin
 
 /** §2.3 time-series joins Spark has no built-in for (SURVEY.md §4.3, §7.4).
@@ -22,8 +22,6 @@ import graft.plans.AsofJoin
   * and equi-join buckets + residual predicate.
   */
 object TemporalJoins {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Clicks LEFT as-of views on (user_id, ts), optionally nulling matches
     * older than `toleranceUs`. The right side aliases every column: both
     * sides scan the same events relation. */
@@ -45,8 +43,7 @@ object TemporalJoins {
     """SELECT c.event_id, c.user_id, c.ts, v.event_id AS view_id
       |FROM (SELECT * FROM events WHERE event_type = 'click') c
       |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') v
-      |  ON c.user_id = v.user_id AND c.ts >= v.ts
-      |ORDER BY c.event_id""".stripMargin
+      |  ON c.user_id = v.user_id AND c.ts >= v.ts""".stripMargin
 
   /** As-of with a max-staleness tolerance: the latest view still counts
     * only within 1 hour of the click; older matches null out (LEFT
@@ -61,8 +58,7 @@ object TemporalJoins {
       |  CASE WHEN c.ts - v.ts <= INTERVAL '1 hour' THEN v.event_id END AS view_id
       |FROM (SELECT * FROM events WHERE event_type = 'click') c
       |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') v
-      |  ON c.user_id = v.user_id AND c.ts >= v.ts
-      |ORDER BY c.event_id""".stripMargin
+      |  ON c.user_id = v.user_id AND c.ts >= v.ts""".stripMargin
 
   private val weekStarts: Seq[(String, LocalDate)] = {
     val origin = LocalDate.parse("2024-01-01")
@@ -93,8 +89,7 @@ object TemporalJoins {
        |FROM events
        |JOIN (VALUES $values) AS wk(week, w_start, w_end)
        |  ON ts >= w_start AND ts < w_end
-       |GROUP BY week, w_start
-       |ORDER BY week""".stripMargin
+       |GROUP BY week, w_start""".stripMargin
   }
 
   /** Big-big interval join, the bucketed scale path: both sides map to
@@ -143,37 +138,20 @@ object TemporalJoins {
       |  FROM u, unnest(generate_series(0, 4)) AS g(k))
       |SELECT iv.user_id, k, count(*) AS cnt
       |FROM events ev JOIN iv ON ev.user_id = iv.user_id AND ev.ts >= iv.s AND ev.ts < iv.e
-      |GROUP BY iv.user_id, k
-      |ORDER BY iv.user_id, k""".stripMargin
-
-  val queries: Map[String, Q] = Map(
-    "join_asof" -> joinAsof,
-    // the round-11 name of the merge-as-of operator, now the same kernel
-    "join_asof_merge" -> joinAsof,
-    "join_asof_tolerance" -> joinAsofTolerance,
-    "join_interval" -> joinInterval,
-    "join_interval_bucketed" -> joinIntervalBucketed,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "join_asof" -> joinAsofSql,
-    "join_asof_merge" -> joinAsofSql,
-    "join_asof_tolerance" -> joinAsofToleranceSql,
-    "join_interval" -> joinIntervalSql,
-    "join_interval_bucketed" -> joinIntervalBucketedSql,
-  )
+      |GROUP BY iv.user_id, k""".stripMargin
 
   /** Registered SORT-FREE (round 15, tranche 3): as-of/interval outputs are
     * keyed enrichments — the trailing ORDER BY was comparator-only. Keys
-    * unique: event_id per click; week per bucket; (user_id, k) per
-    * interval. Verify applies these; each equals its oracle's trailing
-    * ORDER BY (the spec compares on the unqualified column name, so the
-    * oracle's `c.event_id` matches `event_id`). */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "join_asof" -> Seq("event_id"),
-    "join_asof_tolerance" -> Seq("event_id"),
-    "join_asof_merge" -> Seq("event_id"),
-    "join_interval" -> Seq("week"),
-    "join_interval_bucketed" -> Seq("user_id", "k"),
+    * unique: event_id per click; week per bucket; (user_id, k) per interval.
+    * Verify sorts the dump by these keys and the oracle's ORDER BY is derived
+    * from them. */
+  val ops: Seq[Op] = Seq(
+    Op("join_asof", joinAsof, Sql(joinAsofSql), Seq("c.event_id")),
+    // the round-11 name of the merge-as-of operator, now the same kernel
+    Op("join_asof_merge", joinAsof, Sql(joinAsofSql), Seq("c.event_id")),
+    Op("join_asof_tolerance", joinAsofTolerance, Sql(joinAsofToleranceSql), Seq("c.event_id")),
+    Op("join_interval", joinInterval, Sql(joinIntervalSql), Seq("week")),
+    Op("join_interval_bucketed", joinIntervalBucketed,
+      Sql(joinIntervalBucketedSql), Seq("iv.user_id", "k")),
   )
 }

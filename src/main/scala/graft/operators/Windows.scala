@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Dsl, Tables}
+import graft.{Dsl, Op, Q, Sql, Tables}
 
 /** §2.5 window functions + §2.6 sorts/limits/top-k (SURVEY.md).
   *
@@ -22,8 +21,6 @@ import graft.{Dsl, Tables}
   */
 object Windows {
   import Dsl._
-
-  type Q = (SparkSession, String) => DataFrame
 
   // ---- §2.5 windows -------------------------------------------------------
 
@@ -45,15 +42,12 @@ object Windows {
     * was a second full range exchange over the O(|orders|) output, for the
     * hash compare only. (o_custkey, o_orderkey) with unique o_orderkey is
     * a total order; Verify applies it to the dump. */
-  val windowRankingDumpSort: Seq[String] = Seq("o_custkey", "o_orderkey")
-
   val windowRankingSql: String =
     """SELECT o_custkey, o_orderkey,
       |  row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn,
       |  rank() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC) AS rk,
       |  dense_rank() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC) AS drk
-      |FROM orders
-      |ORDER BY o_custkey, o_orderkey""".stripMargin
+      |FROM orders""".stripMargin
 
   /** ntile bucketing within each market segment. */
   val windowNtile: Q = (s, d) => {
@@ -67,8 +61,7 @@ object Windows {
   val windowNtileSql: String =
     """SELECT c_mktsegment, c_custkey,
       |  ntile(4) OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey) AS quartile
-      |FROM customer
-      |ORDER BY c_mktsegment, c_custkey""".stripMargin
+      |FROM customer""".stripMargin
 
   /** lag/lead time-series deltas per user on the event stream table. */
   val windowLagLead: Q = (s, d) => {
@@ -86,8 +79,7 @@ object Windows {
        |  lead(event_type, 1) OVER w AS next_type,
        |  ${round6Sql("value - lag(value, 1) OVER w")} AS delta
        |FROM events
-       |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-       |ORDER BY user_id, event_id""".stripMargin
+       |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin
 
   /** Running ROWS-frame aggregates (exact long-cents accumulation). */
   val windowRunningRows: Q = (s, d) => {
@@ -106,8 +98,7 @@ object Windows {
        |  count(*) OVER w AS running_orders
        |FROM orders
        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-       |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-       |ORDER BY o_custkey, o_orderkey""".stripMargin
+       |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin
 
   /** RANGE-frame aggregate over a numeric ordering (value-neighborhood sum).
     * Frame membership depends only on the ORDER BY value, so ties are safe.
@@ -128,12 +119,8 @@ object Windows {
     // comparator-only (lineitem's full unique key — see the dtype/order
     // gotchas) and at the 128× probe it re-sorted the 76.8M-row window
     // output through a second range exchange. Dump order lives in
-    // [[windowRangeFrameDumpSort]] / the oracle's ORDER BY.
+    // the op's sort keys (Relational.LineitemKey).
   }
-
-  /** Comparator-side dump order for the sort-free registered form. */
-  val windowRangeFrameDumpSort: Seq[String] =
-    Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
 
   val windowRangeFrameSql: String =
     """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity,
@@ -141,8 +128,7 @@ object Windows {
       |  count(*) OVER w AS nbhd_n
       |FROM lineitem
       |WINDOW w AS (PARTITION BY l_orderkey ORDER BY l_quantity
-      |             RANGE BETWEEN 5 PRECEDING AND CURRENT ROW)
-      |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin
+      |             RANGE BETWEEN 5 PRECEDING AND CURRENT ROW)""".stripMargin
 
   /** first/last value over the full partition frame. */
   val windowFirstLast: Q = (s, d) => {
@@ -160,8 +146,7 @@ object Windows {
       |  last_value(event_type) OVER w AS last_type
       |FROM events
       |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-      |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-      |ORDER BY user_id, event_id""".stripMargin
+      |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin
 
   /** Per-group top-k (secondary-sort + reducer-head idiom). */
   val topkPerGroup: Q = (s, d) => {
@@ -178,8 +163,7 @@ object Windows {
       |  SELECT o_custkey, o_orderkey, o_totalprice,
       |    row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
       |  FROM orders)
-      |WHERE rn <= 3
-      |ORDER BY o_custkey, rn""".stripMargin
+      |WHERE rn <= 3""".stripMargin
 
   /** Distribution analytics: percent_rank / cume_dist / deciles of customer
     * balance within each nation. percent_rank = (rank-1)/(n-1) and
@@ -237,8 +221,7 @@ object Windows {
       |  FROM flagged)
       |SELECT user_id, session_idx, count(*) AS n_events,
       |  min(ts) AS s_start, max(ts) AS s_end
-      |FROM sess GROUP BY user_id, session_idx
-      |ORDER BY user_id, session_idx""".stripMargin
+      |FROM sess GROUP BY user_id, session_idx""".stripMargin
 
   /** Time-series resampling: regularize each user's event stream onto an
     * hourly grid between their first and last event, then forward-fill the
@@ -294,15 +277,12 @@ object Windows {
     // registered SORT-FREE (round 13, the project_select precedent): the
     // trailing orderBy(user_id, hr) existed only so the correctness
     // comparator had a total order — it now lives in graft.Verify's dump
-    // ([[windowGapFillDumpSort]], matching the oracle's ORDER BY). The
+    // (the op's sort keys, from which the oracle's ORDER BY is derived). The
     // operator's OUTPUT is the dense per-user hour grid (linear in users ×
     // span), so at depth the determinism sort was the single largest term:
     // a 13.5M-row global range sort at the 128× probe. Nobody totally
     // orders a 100 TB gap-fill result; downstream consumers key on user.
   }
-
-  /** Comparator-side dump order for the sort-free registered form. */
-  val windowGapFillDumpSort: Seq[String] = Seq("user_id", "hr")
 
   val windowGapFillSql: String =
     """WITH ranked AS (
@@ -326,8 +306,7 @@ object Windows {
       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled_value,
       |  cast(p.n_events IS NULL as int) AS is_gap
       |FROM grid g
-      |LEFT JOIN per_hour p ON g.user_id = p.user_id AND g.hr = p.hr
-      |ORDER BY g.user_id, g.hr""".stripMargin
+      |LEFT JOIN per_hour p ON g.user_id = p.user_id AND g.hr = p.hr""".stripMargin
 
   val windowDistribution: Q = (s, d) => {
     val byBal = Window.partitionBy(col("n_name")).orderBy(col("c_acctbal"))
@@ -347,8 +326,7 @@ object Windows {
        |  ${round6Sql("percent_rank() OVER (PARTITION BY n_name ORDER BY c_acctbal)")} AS pr,
        |  ${round6Sql("cume_dist() OVER (PARTITION BY n_name ORDER BY c_acctbal)")} AS cd,
        |  cast(ntile(10) OVER (PARTITION BY n_name ORDER BY c_acctbal, c_custkey) as int) AS decile
-       |FROM customer JOIN nation ON c_nationkey = n_nationkey
-       |ORDER BY n_name, c_acctbal, c_custkey""".stripMargin
+       |FROM customer JOIN nation ON c_nationkey = n_nationkey""".stripMargin
 
   // ---- §2.6 sorts / limits / top-k ---------------------------------------
 
@@ -440,64 +418,34 @@ object Windows {
       |FROM (
       |  SELECT user_id,
       |    list_sort(list({'ts': ts, 'eid': event_id, 'v': value})) AS seq
-      |  FROM events GROUP BY user_id)
-      |ORDER BY user_id""".stripMargin
-
-  val queries: Map[String, Q] = Map(
-    "window_ranking" -> windowRanking,
-    "window_ntile" -> windowNtile,
-    "window_lag_lead" -> windowLagLead,
-    "window_running_rows" -> windowRunningRows,
-    "window_range_frame" -> windowRangeFrame,
-    "window_first_last" -> windowFirstLast,
-    "window_distribution" -> windowDistribution,
-    "window_session_gap" -> windowSessionGap,
-    "window_gap_fill" -> windowGapFill,
-    "window_ewma" -> windowEwma,
-    "topk_per_group" -> topkPerGroup,
-    "sort_global" -> sortGlobal,
-    "sort_topk" -> sortTopk,
-    "sort_secondary" -> sortSecondary,
-    "limit_offset" -> limitOffset,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "window_ranking" -> windowRankingSql,
-    "window_ntile" -> windowNtileSql,
-    "window_lag_lead" -> windowLagLeadSql,
-    "window_running_rows" -> windowRunningRowsSql,
-    "window_range_frame" -> windowRangeFrameSql,
-    "window_first_last" -> windowFirstLastSql,
-    "window_distribution" -> windowDistributionSql,
-    "window_session_gap" -> windowSessionGapSql,
-    "window_gap_fill" -> windowGapFillSql,
-    "window_ewma" -> windowEwmaSql,
-    "topk_per_group" -> topkPerGroupSql,
-    "sort_global" -> sortGlobalSql,
-    "sort_topk" -> sortTopkSql,
-    "sort_secondary" -> sortSecondarySql,
-    "limit_offset" -> limitOffsetSql,
-  )
+      |  FROM events GROUP BY user_id)""".stripMargin
 
   /** Registered SORT-FREE (round 15, extending the round-12/14 set): a
     * partitioned window's semantics is the PER-PARTITION order its frame
     * declares — the trailing global ORDER BY was comparator-only, a second
     * full range exchange over O(input) output. Keys are total orders (the
-    * source PK, or group key + the dense session index). Verify applies
-    * these; each equals its oracle's trailing ORDER BY. The sort_* family
-    * keeps its sorts: there the total order IS the semantics. */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "window_ranking" -> windowRankingDumpSort,
-    "window_gap_fill" -> windowGapFillDumpSort,
-    "window_range_frame" -> windowRangeFrameDumpSort,
-    "window_lag_lead" -> Seq("user_id", "event_id"),
-    "window_running_rows" -> Seq("o_custkey", "o_orderkey"),
-    "window_first_last" -> Seq("user_id", "event_id"),
-    "window_session_gap" -> Seq("user_id", "session_idx"),
-    // tranche 3 (round 15): comparator-only trailing sorts over unique keys
-    "topk_per_group" -> Seq("o_custkey", "rn"),
-    "window_ntile" -> Seq("c_mktsegment", "c_custkey"),
-    "window_distribution" -> Seq("n_name", "c_acctbal", "c_custkey"),
-    "window_ewma" -> Seq("user_id"),
+    * source PK, or group key + the dense session index). Verify sorts the
+    * dump by these keys and the oracle's ORDER BY is derived from them. The
+    * sort_* family keeps its sorts: there the total order IS the semantics. */
+  val ops: Seq[Op] = Seq(
+    Op("window_ranking", windowRanking, Sql(windowRankingSql), Seq("o_custkey", "o_orderkey")),
+    Op("window_ntile", windowNtile, Sql(windowNtileSql), Seq("c_mktsegment", "c_custkey")),
+    Op("window_lag_lead", windowLagLead, Sql(windowLagLeadSql), Seq("user_id", "event_id")),
+    Op("window_running_rows", windowRunningRows,
+      Sql(windowRunningRowsSql), Seq("o_custkey", "o_orderkey")),
+    Op("window_range_frame", windowRangeFrame,
+      Sql(windowRangeFrameSql), Relational.LineitemKey),
+    Op("window_first_last", windowFirstLast, Sql(windowFirstLastSql), Seq("user_id", "event_id")),
+    Op("window_distribution", windowDistribution,
+      Sql(windowDistributionSql), Seq("n_name", "c_acctbal", "c_custkey")),
+    Op("window_session_gap", windowSessionGap,
+      Sql(windowSessionGapSql), Seq("user_id", "session_idx")),
+    Op("window_gap_fill", windowGapFill, Sql(windowGapFillSql), Seq("g.user_id", "g.hr")),
+    Op("window_ewma", windowEwma, Sql(windowEwmaSql), Seq("user_id")),
+    Op("topk_per_group", topkPerGroup, Sql(topkPerGroupSql), Seq("o_custkey", "rn")),
+    Op("sort_global", sortGlobal, Sql(sortGlobalSql)),
+    Op("sort_topk", sortTopk, Sql(sortTopkSql)),
+    Op("sort_secondary", sortSecondary, Sql(sortSecondarySql)),
+    Op("limit_offset", limitOffset, Sql(limitOffsetSql)),
   )
 }

@@ -4,7 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{NoOracle, Op, Q, Sql, Tables}
 
 /** Storage-lifecycle parity with the reference's `hadoop fs` surface
   * (/root/reference/README.md:4 — a public Hadoop release): ls/du and
@@ -15,8 +15,6 @@ import graft.Tables
   * "directly compatible" claim made concrete in code.
   */
 object FsOps {
-  type Q = (SparkSession, String) => DataFrame
-
   private def fs(s: SparkSession, uri: String): FileSystem =
     new Path(uri).getFileSystem(hadoopConf(s))
 
@@ -76,7 +74,7 @@ object FsOps {
       |  sha256(concat_ws(':', doc_id, text)) AS h FROM documents)
       |SELECT shard, count(*) AS n_docs,
       |  sha256(string_agg(h, '' ORDER BY doc_id)) AS checksum
-      |FROM h GROUP BY shard ORDER BY shard""".stripMargin
+      |FROM h GROUP BY shard""".stripMargin
 
   /** The `hadoop fs` METADATA-MUTATION surface the round-10 verdict listed
     * as the residual gap: `-chmod` (setPermission + stat round-trip),
@@ -127,34 +125,22 @@ object FsOps {
   val fsLifecycleSql: String =
     """SELECT * FROM (VALUES
       |  ('chmod', 1), ('setrep', 1), ('trash_in_trash', 1),
-      |  ('trash_moved', 1), ('trash_src_gone', 1)) t(step, ok)
-      |ORDER BY step""".stripMargin
-
-  val queries: Map[String, Q] = Map(
-    "fs_ls" -> fsLs,
-    "fs_distcp" -> fsDistcp,
-    "fs_checksum" -> fsChecksum,
-    "fs_lifecycle" -> fsLifecycle,
-  )
+      |  ('trash_moved', 1), ('trash_src_gone', 1)) t(step, ok)""".stripMargin
 
   /** fs_ls reports physical file sizes (no DuckDB twin) → rows-only. The
     * distcp proof is content equality of src and copy, and both sides reduce
-    * to the same nation aggregate — which the oracle recomputes directly. */
-  val oracle: Map[String, String] = Map(
-    "fs_lifecycle" -> fsLifecycleSql,
-    "fs_distcp" ->
-      """SELECT count(*) AS "rows", cast(sum(n_nationkey) as bigint) AS key_sum, which
+    * to the same nation aggregate — which the oracle recomputes directly.
+    * Registered SORT-FREE (round 15, tranche 3): tiny keyed outputs — the
+    * trailing ORDER BY was comparator-only. fs_ls keeps its sort (it has no
+    * oracle to derive an ORDER BY for). */
+  val ops: Seq[Op] = Seq(
+    Op("fs_ls", fsLs,
+      NoOracle("graft.SqlSurfaceSpec", "a FileSystem listing is not a table the oracle can read")),
+    Op("fs_distcp", fsDistcp,
+      Sql("""SELECT count(*) AS "rows", cast(sum(n_nationkey) as bigint) AS key_sum, which
         |FROM nation CROSS JOIN (SELECT unnest(['dst','src']) AS which)
-        |GROUP BY which ORDER BY which""".stripMargin,
-    "fs_checksum" -> fsChecksumSql,
-  )
-
-  /** Registered SORT-FREE (round 15, tranche 3): tiny keyed outputs — the
-    * trailing ORDER BY was comparator-only. fs_ls keeps its sort (unit-only,
-    * no oracle to couple to). */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "fs_distcp" -> Seq("which"),
-    "fs_checksum" -> Seq("shard"),
-    "fs_lifecycle" -> Seq("step"),
+        |GROUP BY which""".stripMargin), Seq("which")),
+    Op("fs_checksum", fsChecksum, Sql(fsChecksumSql), Seq("shard")),
+    Op("fs_lifecycle", fsLifecycle, Sql(fsLifecycleSql), Seq("step")),
   )
 }

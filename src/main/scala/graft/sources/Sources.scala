@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Op, Q, Sql, Tables}
 
 /** §2.1 scans / sources / sinks (SURVEY.md).
   *
@@ -20,8 +20,6 @@ import graft.Tables
   * Spark I/O goes through the same Hadoop FileSystem API as the reference.
   */
 object Sources {
-  type Q = (SparkSession, String) => DataFrame
-
   private def tmp(prefix: String): String = {
     val p = Files.createTempDirectory(s"graft_$prefix")
     p.toFile.deleteOnExit()
@@ -336,7 +334,7 @@ object Sources {
     """SELECT n_regionkey AS r_regionkey, count(*) AS n_nations,
       |  cast(sum(n_nationkey) as bigint) AS key_sum,
       |  string_agg(n_name, ',' ORDER BY n_name) AS names
-      |FROM nation GROUP BY 1 ORDER BY r_regionkey""".stripMargin
+      |FROM nation GROUP BY 1""".stripMargin
 
   /** ORC round-trip — the other columnar staple of the Hadoop ecosystem,
     * built into Spark with the same pushdown/pruning machinery as parquet. */
@@ -495,8 +493,7 @@ object Sources {
       |       ELSE 'keep' END AS action,
       |  coalesce(n_custs, 0) AS n_custs,
       |  coalesce(acct_sum, 0.0) AS acct_sum
-      |FROM t FULL OUTER JOIN src ON n_nationkey = c_nationkey
-      |ORDER BY key""".stripMargin
+      |FROM t FULL OUTER JOIN src ON n_nationkey = c_nationkey""".stripMargin
 
   /** Parquet schema evolution: two file generations under one root — an
     * early writer without `p_retailprice` and a later one with it — read
@@ -529,8 +526,7 @@ object Sources {
       |UNION ALL
       |SELECT 2, count(*), count(p_retailprice),
       |  cast(sum(cast(p_retailprice as decimal(12,2))) as double)
-      |FROM part
-      |ORDER BY gen""".stripMargin
+      |FROM part""".stripMargin
 
   /** Slowly-changing-dimension type-2 merge: a deterministic update batch
     * (customers with ≥ 20 orders are promoted to the 'VIP' segment) lands
@@ -579,109 +575,70 @@ object Sources {
       |UNION ALL
       |SELECT *, 1, 0 FROM changed
       |UNION ALL
-      |SELECT c_custkey, c_name, c_nationkey, c_acctbal, 'VIP', 2, 1 FROM changed
-      |ORDER BY c_custkey, version""".stripMargin
-
-  val queries: Map[String, Q] = Map(
-    "scan_merge_schema" -> scanMergeSchema,
-    "sink_scd2" -> sinkScd2,
-    "sink_merge_upsert" -> sinkMergeUpsert,
-    "scan_text" -> scanText,
-    "scan_csv" -> scanCsv,
-    "scan_json" -> scanJson,
-    "scan_sequencefile" -> scanSequencefile,
-    "scan_mapfile" -> scanMapfile,
-    "scan_rcfile" -> scanRcfile,
-    "scan_har" -> scanHar,
-    "scan_orc" -> scanOrc,
-    "scan_avro" -> scanAvro,
-    "sink_parquet" -> sinkParquet,
-    "sink_partitioned" -> sinkPartitioned,
-    "compress_codecs" -> compressCodecs,
-    "split_control" -> splitControl,
-  )
+      |SELECT c_custkey, c_name, c_nationkey, c_acctbal, 'VIP', 2, 1 FROM changed""".stripMargin
 
   /** The round-trip FORMAT behavior has no DuckDB twin, but every round-trip
     * here reduces to a deterministic relation over the fixture tables — so
     * the oracle recomputes that relation straight from the parquet fixtures.
     * A format bug (mangled value, dropped row, codec corruption) changes the
-    * read-back relation and fails the hash-compare. */
-  val oracle: Map[String, String] = Map(
-    "scan_har" -> scanHarSql,
-    "scan_merge_schema" -> scanMergeSchemaSql,
-    "sink_scd2" -> sinkScd2Sql,
-    "sink_merge_upsert" -> sinkMergeUpsertSql,
+    * read-back relation and fails the hash-compare. Registered SORT-FREE
+    * (round 15): a round-trip's content is the format behavior; the sort
+    * keys (each output's PK) are the compare order only. */
+  val ops: Seq[Op] = Seq(
+    Op("scan_merge_schema", scanMergeSchema, Sql(scanMergeSchemaSql), Seq("gen")),
+    Op("sink_scd2", sinkScd2, Sql(sinkScd2Sql), Seq("c_custkey", "version")),
+    Op("sink_merge_upsert", sinkMergeUpsert, Sql(sinkMergeUpsertSql), Seq("key")),
     // one record per line, as scanText declares: a document holding k line
     // terminators (\r\n, \r or \n — the ones Spark's line reader splits
     // on) reads back as k + 1 records
-    "scan_text" ->
-      """SELECT cast(length(line) as int) AS line_len, count(*) AS n
+    Op("scan_text", scanText,
+      Sql("""SELECT cast(length(line) as int) AS line_len, count(*) AS n
         |FROM (SELECT unnest(regexp_split_to_array(text, '\r\n|\r|\n')) AS line
         |      FROM documents)
-        |GROUP BY line_len ORDER BY line_len""".stripMargin,
-    "scan_csv" ->
-      """SELECT c_custkey, c_name, c_mktsegment
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "scan_json" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "scan_sequencefile" ->
-      """SELECT cast(n_nationkey as bigint) AS n_nationkey, n_name
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-    "scan_mapfile" ->
-      """WITH probes AS (
+        |GROUP BY line_len""".stripMargin), Seq("line_len")),
+    Op("scan_csv", scanCsv,
+      Sql("""SELECT c_custkey, c_name, c_mktsegment
+        |FROM customer""".stripMargin), Seq("c_custkey")),
+    Op("scan_json", scanJson,
+      Sql("""SELECT o_orderkey, o_orderstatus, o_totalprice
+        |FROM orders""".stripMargin), Seq("o_orderkey")),
+    Op("scan_sequencefile", scanSequencefile,
+      Sql("""SELECT cast(n_nationkey as bigint) AS n_nationkey, n_name
+        |FROM nation""".stripMargin), Seq("n_nationkey")),
+    Op("scan_mapfile", scanMapfile,
+      Sql("""WITH probes AS (
         |  SELECT c_custkey FROM customer
         |  UNION ALL
         |  SELECT (SELECT max(c_custkey) FROM customer) + g
         |  FROM generate_series(1, 5) t(g))
         |SELECT p.c_custkey, c.c_name
-        |FROM probes p LEFT JOIN customer c ON p.c_custkey = c.c_custkey
-        |ORDER BY p.c_custkey""".stripMargin,
-    "scan_rcfile" ->
-      """SELECT p_partkey, p_brand, p_size
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "scan_orc" ->
-      """SELECT s_suppkey, s_name, s_acctbal
-        |FROM supplier WHERE s_acctbal > 0 ORDER BY s_suppkey""".stripMargin,
-    "scan_avro" ->
-      """SELECT p_partkey, p_name, p_retailprice
-        |FROM part WHERE p_retailprice > 950 ORDER BY p_partkey""".stripMargin,
-    "sink_parquet" ->
-      """SELECT l_returnflag, count(*) AS n
+        |FROM probes p LEFT JOIN customer c ON p.c_custkey = c.c_custkey""".stripMargin),
+      Seq("p.c_custkey")),
+    Op("scan_rcfile", scanRcfile,
+      Sql("""SELECT p_partkey, p_brand, p_size
+        |FROM part""".stripMargin), Seq("p_partkey")),
+    Op("scan_har", scanHar, Sql(scanHarSql), Seq("r_regionkey")),
+    Op("scan_orc", scanOrc,
+      Sql("""SELECT s_suppkey, s_name, s_acctbal
+        |FROM supplier WHERE s_acctbal > 0""".stripMargin), Seq("s_suppkey")),
+    Op("scan_avro", scanAvro,
+      Sql("""SELECT p_partkey, p_name, p_retailprice
+        |FROM part WHERE p_retailprice > 950""".stripMargin), Seq("p_partkey")),
+    Op("sink_parquet", sinkParquet,
+      Sql("""SELECT l_returnflag, count(*) AS n
         |FROM lineitem WHERE l_quantity > 45
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "sink_partitioned" ->
-      """SELECT o_orderpriority, count(*) AS n
+        |GROUP BY l_returnflag""".stripMargin), Seq("l_returnflag")),
+    Op("sink_partitioned", sinkPartitioned,
+      Sql("""SELECT o_orderpriority, count(*) AS n
         |FROM orders WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "compress_codecs" ->
-      """SELECT count(*) AS n, cast(sum(s_suppkey) as bigint) AS key_sum, codec
+        |GROUP BY o_orderpriority""".stripMargin), Seq("o_orderpriority")),
+    Op("compress_codecs", compressCodecs,
+      Sql("""SELECT count(*) AS n, cast(sum(s_suppkey) as bigint) AS key_sum, codec
         |FROM supplier CROSS JOIN (SELECT unnest(['gzip','lz4','snappy','zstd']) AS codec)
-        |GROUP BY codec ORDER BY codec""".stripMargin,
-    "split_control" ->
-      """SELECT count(*) AS "rows", cast(sum(l_orderkey) as bigint) AS key_sum,
+        |GROUP BY codec""".stripMargin), Seq("codec")),
+    Op("split_control", splitControl,
+      Sql("""SELECT count(*) AS "rows", cast(sum(l_orderkey) as bigint) AS key_sum,
         |       true AS split_tasks_gt_1
-        |FROM lineitem""".stripMargin,
-  )
-
-  /** Registered SORT-FREE (round 15): the JSON round-trip's content is the
-    * format behavior; o_orderkey (orders PK) is the compare order only. */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "scan_json" -> Seq("o_orderkey"),
-    // tranche 3 (round 15): comparator-only trailing sorts over unique keys
-    "scan_sequencefile" -> Seq("n_nationkey"),
-    "scan_mapfile" -> Seq("c_custkey"),
-    "scan_rcfile" -> Seq("p_partkey"),
-    "scan_avro" -> Seq("p_partkey"),
-    "sink_merge_upsert" -> Seq("key"),
-    "scan_text" -> Seq("line_len"),
-    "scan_csv" -> Seq("c_custkey"),
-    "scan_orc" -> Seq("s_suppkey"),
-    "scan_har" -> Seq("r_regionkey"),
-    "scan_merge_schema" -> Seq("gen"),
-    "sink_parquet" -> Seq("l_returnflag"),
-    "sink_partitioned" -> Seq("o_orderpriority"),
-    "sink_scd2" -> Seq("c_custkey", "version"),
-    "compress_codecs" -> Seq("codec"),
+        |FROM lineitem""".stripMargin)),
   )
 }

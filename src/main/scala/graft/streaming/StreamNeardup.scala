@@ -526,6 +526,5 @@ object StreamNeardup {
        |  coalesce(e.exact_match, n.near_match, -1) AS match_id
        |FROM documents d
        |LEFT JOIN exact e ON d.doc_id = e.doc_id
-       |LEFT JOIN near n ON d.doc_id = n.doc_id
-       |ORDER BY d.doc_id""".stripMargin
+       |LEFT JOIN near n ON d.doc_id = n.doc_id""".stripMargin
 }

@@ -301,7 +301,6 @@ object StreamSemdedup {
        |SELECT e.vec_id,
        |  CASE WHEN m.m_id IS NOT NULL THEN 'dup' ELSE 'new' END AS verdict,
        |  coalesce(m.m_id, -1) AS match_id
-       |FROM embeddings e LEFT JOIN matches m ON e.vec_id = m.vec_id
-       |ORDER BY e.vec_id""".stripMargin
+       |FROM embeddings e LEFT JOIN matches m ON e.vec_id = m.vec_id""".stripMargin
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Op, Q, Sql, Tables}
 
 /** §2.10 Structured Streaming shapes (SURVEY.md).
   *
@@ -369,8 +369,6 @@ class UserTotalsProcessor(ttlMs: Option[Long] = None)
 }
 
 object Streams {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Arbitrary keyed state (the §2.10 `stream_stateful` stream-side shape):
     * per-user running event counts + last event type, maintained with
     * flatMapGroupsWithState so it runs identically under readStream with
@@ -430,8 +428,7 @@ object Streams {
       |       time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour' AS w_end,
       |       event_type, count(*) AS cnt
       |FROM events
-      |GROUP BY w_start, w_end, event_type
-      |ORDER BY w_start, event_type""".stripMargin
+      |GROUP BY w_start, w_end, event_type""".stripMargin
 
   val streamSliding: Q = (s, d) =>
     slidingCounts(Tables.events(s, d))
@@ -443,8 +440,7 @@ object Streams {
       |       time_bucket(INTERVAL '15 minutes', ts) - k * INTERVAL '15 minutes' + INTERVAL '1 hour' AS w_end,
       |       event_type, count(*) AS cnt
       |FROM events, (SELECT unnest([0, 1, 2, 3]) AS k)
-      |GROUP BY w_start, w_end, event_type
-      |ORDER BY w_start, event_type""".stripMargin
+      |GROUP BY w_start, w_end, event_type""".stripMargin
 
   val streamSession: Q = (s, d) =>
     sessionStats(Tables.events(s, d))
@@ -466,8 +462,7 @@ object Streams {
       |SELECT user_id, min(ts) AS s_start,
       |       max(ts) + INTERVAL '30 minutes' AS s_end, count(*) AS cnt
       |FROM sessions
-      |GROUP BY user_id, sid
-      |ORDER BY user_id, s_start""".stripMargin
+      |GROUP BY user_id, sid""".stripMargin
 
   /** Deterministic batch twin of streaming dropDuplicates: first event id per
     * (user, type). The streaming form (watermark + dropDuplicates) is unit
@@ -480,8 +475,7 @@ object Streams {
   val streamDedupSql: String =
     """SELECT user_id, event_type, min(event_id) AS first_event
       |FROM events
-      |GROUP BY user_id, event_type
-      |ORDER BY user_id, event_type""".stripMargin
+      |GROUP BY user_id, event_type""".stripMargin
 
   /** Watermark shape in batch: hourly counts over the last day relative to
     * the stream's max event time. The actual late-row-drop behavior (rows
@@ -502,8 +496,7 @@ object Streams {
       |       event_type, count(*) AS cnt
       |FROM events
       |WHERE ts >= (SELECT max(ts) - INTERVAL '1 day' FROM events)
-      |GROUP BY w_start, w_end, event_type
-      |ORDER BY w_start, event_type""".stripMargin
+      |GROUP BY w_start, w_end, event_type""".stripMargin
 
   /** Arbitrary-keyed-state shape in batch: per-user lifetime stats a
     * flatMapGroupsWithState pipeline would maintain (count, first/last event
@@ -520,8 +513,7 @@ object Streams {
     """SELECT user_id, count(*) AS n_events, min(ts) AS first_ts, max(ts) AS last_ts,
       |       cast(sum(cast(value as decimal(12,2))) as double) AS total_value
       |FROM events
-      |GROUP BY user_id
-      |ORDER BY user_id""".stripMargin
+      |GROUP BY user_id""".stripMargin
 
   /** One shared body for batch (oracle) and stream (unit test): per-user
     * totals via [[UserTotalsProcessor]]. Batch runs it as a single
@@ -592,8 +584,7 @@ object Streams {
   val streamTransformStateSql: String =
     """SELECT user_id, count(*) AS n_events, max(event_id) AS max_event_id
       |FROM events
-      |GROUP BY user_id
-      |ORDER BY user_id""".stripMargin
+      |GROUP BY user_id""".stripMargin
 
   /** One shared body for batch (oracle) and stream (unit test): the
     * stateful streaming as-of of [[LatestDimAsofProcessor]]. Append mode —
@@ -668,8 +659,7 @@ object Streams {
       |                            ORDER BY p.ts DESC, p.pid DESC) AS rn
       |  FROM f LEFT JOIN p ON f.user_id = p.user_id AND p.ts <= f.ts)
       |SELECT event_id, user_id, event_type, pid AS last_purchase_id
-      |FROM ranked WHERE rn = 1
-      |ORDER BY event_id""".stripMargin
+      |FROM ranked WHERE rn = 1""".stripMargin
 
   /** Sink-mode shape: complete-mode aggregate (memory/append/update modes are
     * exercised in the MemoryStream unit tests). */
@@ -680,7 +670,7 @@ object Streams {
 
   val streamSinkSql: String =
     """SELECT event_type, count(*) AS cnt FROM events
-      |GROUP BY event_type ORDER BY event_type""".stripMargin
+      |GROUP BY event_type""".stripMargin
 
   /** Stream-static join: the unbounded event stream enriched by a broadcast
     * static dimension (customer). Structured Streaming supports this shape
@@ -698,8 +688,7 @@ object Streams {
   val streamJoinStaticSql: String =
     """SELECT c_mktsegment, event_type, count(*) AS cnt
       |FROM events JOIN customer ON user_id = c_custkey
-      |GROUP BY c_mktsegment, event_type
-      |ORDER BY c_mktsegment, event_type""".stripMargin
+      |GROUP BY c_mktsegment, event_type""".stripMargin
 
   /** Stream-stream interval join: per user, each view followed by a purchase
     * within 30 minutes (funnel/attribution shape). Under readStream BOTH
@@ -730,71 +719,42 @@ object Streams {
       |FROM (SELECT * FROM events WHERE event_type = 'view') v
       |JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
       |  ON v.user_id = p.user_id
-      | AND p.ts >= v.ts AND p.ts < v.ts + INTERVAL '30 minutes'
-      |ORDER BY v.user_id, v_id, p_id""".stripMargin
+      | AND p.ts >= v.ts AND p.ts < v.ts + INTERVAL '30 minutes'""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "stream_join_static" -> streamJoinStatic,
-    "stream_join_stream" -> streamJoinStream,
-    "stream_tumbling" -> streamTumbling,
-    "stream_sliding" -> streamSliding,
-    "stream_session" -> streamSession,
-    "stream_dedup" -> streamDedup,
-    "stream_watermark_late" -> streamWatermarkLate,
-    "stream_stateful" -> streamStateful,
-    "stream_transform_state" -> streamTransformState,
-    "stream_asof_state" -> streamAsofState,
-    "stream_asof_buffered" -> streamAsofBuffered,
-    "stream_sink" -> streamSink,
+  /** Registered SORT-FREE (round 15): the trailing ORDER BY on these was
+    * comparator scaffolding over outputs no streaming consumer would ever see
+    * globally ordered (a stream sink is append/update, not sorted) — for the
+    * as-of pair it range-exchanged the full enriched fact stream per bench
+    * pass. Keys are total orders: event_id is the fact PK, (w_start,
+    * event_type) the window-aggregate key, (user_id, s_start) the session
+    * key. Verify sorts the dump by these keys and the oracle's ORDER BY is
+    * derived from them. */
+  val ops: Seq[Op] = Seq(
+    Op("stream_join_static", streamJoinStatic,
+      Sql(streamJoinStaticSql), Seq("c_mktsegment", "event_type")),
+    Op("stream_join_stream", streamJoinStream,
+      Sql(streamJoinStreamSql), Seq("v.user_id", "v_id", "p_id")),
+    Op("stream_tumbling", streamTumbling, Sql(streamTumblingSql), Seq("w_start", "event_type")),
+    Op("stream_sliding", streamSliding, Sql(streamSlidingSql), Seq("w_start", "event_type")),
+    Op("stream_session", streamSession, Sql(streamSessionSql), Seq("user_id", "s_start")),
+    Op("stream_dedup", streamDedup, Sql(streamDedupSql), Seq("user_id", "event_type")),
+    Op("stream_watermark_late", streamWatermarkLate,
+      Sql(streamWatermarkLateSql), Seq("w_start", "event_type")),
+    Op("stream_stateful", streamStateful, Sql(streamStatefulSql), Seq("user_id")),
+    Op("stream_transform_state", streamTransformState,
+      Sql(streamTransformStateSql), Seq("user_id")),
+    Op("stream_asof_state", streamAsofState, Sql(streamAsofStateSql), Seq("event_id")),
+    // same contract as stream_asof_state, different engine
+    Op("stream_asof_buffered", streamAsofBuffered, Sql(streamAsofStateSql), Seq("event_id")),
+    Op("stream_sink", streamSink, Sql(streamSinkSql), Seq("event_type")),
     // round 18: streaming MinHash-LSH near-dup admission (batch twin
     // registered; the streaming spelling is StreamingSpec-pinned equal)
-    "stream_neardup" -> ((s, d) => StreamNeardup.admitNeardupBatch(s, d)),
+    Op("stream_neardup", (s, d) => StreamNeardup.admitNeardupBatch(s, d),
+      Sql(StreamNeardup.streamNeardupSql), Seq("d.doc_id")),
     // round 19: streaming embedding-cosine (SemDeDup) admission (batch twin
     // registered; the streaming IVF-cell spelling is StreamingSpec-pinned
     // equal under exact-mode numProbe)
-    "stream_semdedup" -> ((s, d) => StreamSemdedup.semdedupBatch(s, d)),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "stream_join_static" -> streamJoinStaticSql,
-    "stream_join_stream" -> streamJoinStreamSql,
-    "stream_tumbling" -> streamTumblingSql,
-    "stream_sliding" -> streamSlidingSql,
-    "stream_session" -> streamSessionSql,
-    "stream_dedup" -> streamDedupSql,
-    "stream_watermark_late" -> streamWatermarkLateSql,
-    "stream_stateful" -> streamStatefulSql,
-    "stream_transform_state" -> streamTransformStateSql,
-    "stream_asof_state" -> streamAsofStateSql,
-    "stream_asof_buffered" -> streamAsofStateSql, // same contract, different engine
-    "stream_sink" -> streamSinkSql,
-    "stream_neardup" -> StreamNeardup.streamNeardupSql,
-    "stream_semdedup" -> StreamSemdedup.semdedupSql,
-  )
-
-  /** Registered SORT-FREE (round 15): the trailing ORDER BY on these was
-    * comparator scaffolding over outputs no streaming consumer would ever
-    * see globally ordered (a stream sink is append/update, not sorted) —
-    * for the as-of pair it range-exchanged the full enriched fact stream
-    * per bench pass. Keys are total orders: event_id is the fact PK,
-    * (w_start, event_type) the window-aggregate key, (user_id, s_start)
-    * the session key. Verify applies these; equal to each oracle's
-    * trailing ORDER BY (ExplainInvariantsSpec pins it). */
-  val dumpSort: Map[String, Seq[String]] = Map(
-    "stream_asof_state" -> Seq("event_id"),
-    "stream_asof_buffered" -> Seq("event_id"),
-    "stream_sliding" -> Seq("w_start", "event_type"),
-    "stream_session" -> Seq("user_id", "s_start"),
-    // tranche 3 (round 15): comparator-only trailing sorts over unique keys
-    "stream_tumbling" -> Seq("w_start", "event_type"),
-    "stream_dedup" -> Seq("user_id", "event_type"),
-    "stream_watermark_late" -> Seq("w_start", "event_type"),
-    "stream_stateful" -> Seq("user_id"),
-    "stream_transform_state" -> Seq("user_id"),
-    "stream_join_static" -> Seq("c_mktsegment", "event_type"),
-    "stream_join_stream" -> Seq("user_id", "v_id", "p_id"),
-    "stream_sink" -> Seq("event_type"),
-    "stream_neardup" -> Seq("doc_id"),
-    "stream_semdedup" -> Seq("vec_id"),
+    Op("stream_semdedup", (s, d) => StreamSemdedup.semdedupBatch(s, d),
+      Sql(StreamSemdedup.semdedupSql), Seq("e.vec_id")),
   )
 }

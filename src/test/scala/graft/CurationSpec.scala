@@ -260,7 +260,7 @@ class CurationSpec extends SparkSpec {
 
   test("curation e2e: survivors exclude every doc an upstream stage drops") {
     import org.apache.spark.sql.functions._
-    val shards = Curation.queries("llm_curation_e2e")(spark, sfDir).collect()
+    val shards = SparkEntry.queries("llm_curation_e2e")(spark, sfDir).collect()
     val nTotal = Tables.documents(spark, sfDir).count()
     val nKept = shards.map(_.getLong(1)).sum
     assert(shards.length <= Curation.NumShards)

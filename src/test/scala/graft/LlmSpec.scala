@@ -57,7 +57,7 @@ class LlmSpec extends SparkSpec {
     // counts, BPE symbol table) pick broadcast-vs-shuffle by counted vocab
     // rows; both physical paths must be value-identical, and the shuffled
     // path must actually engage when the threshold is crossed
-    val ops: Seq[(String, TextAnalysis.Q)] = Seq(
+    val ops: Seq[(String, Q)] = Seq(
       "llm_tfidf" -> TextAnalysis.tfidf,
       "llm_unigram_logprob" -> TextAnalysis.unigramLogprob,
       "llm_perplexity_bucket" -> TextAnalysis.perplexityBucket,
@@ -289,6 +289,21 @@ class LlmSpec extends SparkSpec {
     assert(a.sameElements(b))
     val total = Tables.orders(spark, sfDir).count().toDouble
     assert(math.abs(a.length / total - 0.1) < 0.05)
+  }
+
+  test("hash sampling keeps exactly the xxhash64 rule's rows under any layout") {
+    // the rows-only bound of sample_hash: membership is a function of the
+    // key alone, so the same rule over a re-partitioned or single-partition
+    // orders table selects the same rows
+    def rule(orders: DataFrame): Seq[org.apache.spark.sql.Row] =
+      orders.where(pmod(xxhash64(col("o_orderkey")), lit(10)) === 0)
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+        .orderBy("o_orderkey").collect().toSeq
+    val sampled = SparkEntry.queries("sample_hash")(spark, sfDir).collect().toSeq
+    val orders = Tables.orders(spark, sfDir)
+    assert(sampled.nonEmpty)
+    assert(sampled == rule(orders.repartition(7)))
+    assert(sampled == rule(orders.coalesce(1)))
   }
 
   test("xxhash64 and crc32 are deterministic content hashes") {

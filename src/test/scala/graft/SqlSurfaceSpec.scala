@@ -1,9 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.SqlSurface
-import graft.llm.Quantize
-import graft.sources.FsOps
 
 /** §2.12 SQL-dialect surface + the round-4 additions: plan-shape proofs for
   * subquery decorrelation, value pins for the fixture-independent queries,
@@ -15,24 +12,24 @@ class SqlSurfaceSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
 
   test("correlated EXISTS decorrelates to a semi join (no per-row probe)") {
-    val p = plan(SqlSurface.queries("sql_exists_correlated")(spark, sfDir))
+    val p = plan(SparkEntry.queries("sql_exists_correlated")(spark, sfDir))
     assert(p.contains("LeftSemi"), p)
   }
 
   test("nested IN subqueries decorrelate to semi joins") {
-    val p = plan(SqlSurface.queries("sql_in_subquery")(spark, sfDir))
+    val p = plan(SparkEntry.queries("sql_in_subquery")(spark, sfDir))
     assert(p.contains("LeftSemi") && !p.toLowerCase.contains("cartesianproduct"), p)
   }
 
   test("scalar subquery evaluates once as a subquery plan, not a join") {
-    val df = SqlSurface.queries("sql_scalar_subquery")(spark, sfDir)
+    val df = SparkEntry.queries("sql_scalar_subquery")(spark, sfDir)
     assert(plan(df).contains("Subquery"))
     assert(df.count() > 0)
   }
 
   test("catalog DDL round-trip: partition filter prunes the catalog scan") {
     // run the operator once so the table exists in the session catalog
-    val result = SqlSurface.queries("sql_create_insert")(spark, sfDir)
+    val result = SparkEntry.queries("sql_create_insert")(spark, sfDir)
     assert(result.count() == 2)
     // the read-back's partition-column filter must reach the scan as a
     // PartitionFilters entry (pruned directory listing), not a row filter
@@ -48,7 +45,7 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("GROUP BY ALL expands to the explicit grouping") {
-    val viaAll = SqlSurface.queries("sql_group_by_all")(spark, sfDir).collect().toSeq
+    val viaAll = SparkEntry.queries("sql_group_by_all")(spark, sfDir).collect().toSeq
     Tables.registerViews(spark, sfDir)
     val explicit = spark.sql(
       """SELECT l_returnflag, l_linestatus, count(*) AS cnt,
@@ -60,7 +57,7 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("named WINDOW clause: both specs resolve into a single Window node") {
-    val df = SqlSurface.queries("sql_window_clause")(spark, sfDir)
+    val df = SparkEntry.queries("sql_window_clause")(spark, sfDir)
     val p = plan(df)
     val windowNodes = p.linesIterator.count(_.contains(" Window ["))
     assert(windowNodes == 1,
@@ -79,7 +76,7 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("LATERAL join: correlated LIMIT yields the alphabetical top-2 per region") {
-    val rows = SqlSurface.queries("sql_lateral_join")(spark, sfDir).collect()
+    val rows = SparkEntry.queries("sql_lateral_join")(spark, sfDir).collect()
     val perRegion = rows.groupBy(_.getString(0))
     assert(perRegion.values.forall(_.length <= 2))
     Tables.registerViews(spark, sfDir)
@@ -94,13 +91,13 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("recursive CTE computes exact bigint factorials") {
-    val rows = SqlSurface.queries("sql_recursive_cte")(spark, sfDir).collect()
+    val rows = SparkEntry.queries("sql_recursive_cte")(spark, sfDir).collect()
     assert(rows.length == 20)
     assert(rows.last.getInt(0) == 20 && rows.last.getLong(1) == 2432902008176640000L)
   }
 
   test("mr_pi counts the quarter-circle lattice exactly") {
-    val r = SqlSurface.queries("mr_pi")(spark, sfDir).collect()(0)
+    val r = SparkEntry.queries("mr_pi")(spark, sfDir).collect()(0)
     assert(r.getLong(0) == 786380L)
     assert(math.abs(r.getDouble(1) - 3.14552) < 1e-12)
   }
@@ -108,26 +105,26 @@ class SqlSurfaceSpec extends SparkSpec {
   test("lateral view explode equals the API-side wordcount plan family") {
     // both are Generate-based token pipelines; the SQL spelling must parse
     // to a Generate node (the UDTF idiom), not a join
-    val df = SqlSurface.queries("sql_lateral_explode")(spark, sfDir)
+    val df = SparkEntry.queries("sql_lateral_explode")(spark, sfDir)
     assert(df.queryExecution.optimizedPlan.toString.contains("Generate"))
     val top = df.collect()
     assert(top.nonEmpty && top.map(_.getLong(1)).toSeq == top.map(_.getLong(1)).toSeq.sorted.reverse)
   }
 
   test("TRANSFORM USING pipes rows through a real subprocess") {
-    val df = SqlSurface.queries("sql_transform_script")(spark, sfDir)
+    val df = SparkEntry.queries("sql_transform_script")(spark, sfDir)
     assert(plan(df).contains("ScriptTransformation"), plan(df))
     assert(df.count() == 25)
   }
 
   test("DISTRIBUTE BY / SORT BY plans a hash exchange + partition sort") {
-    val df = SqlSurface.queries("sql_distribute_sort")(spark, sfDir)
+    val df = SparkEntry.queries("sql_distribute_sort")(spark, sfDir)
     assert(plan(df).contains("hashpartitioning(user_id"), plan(df))
   }
 
   test("fs_checksum yields one distinct digest per shard and is stable") {
-    val a = FsOps.queries("fs_checksum")(spark, sfDir).collect()
-    val b = FsOps.queries("fs_checksum")(spark, sfDir).collect()
+    val a = SparkEntry.queries("fs_checksum")(spark, sfDir).collect()
+    val b = SparkEntry.queries("fs_checksum")(spark, sfDir).collect()
     assert(a.toSeq == b.toSeq)                       // deterministic
     assert(a.map(_.getString(2)).distinct.length == a.length) // shards differ
     assert(a.forall(_.getString(2).length == 64))    // sha256 hex
@@ -136,7 +133,7 @@ class SqlSurfaceSpec extends SparkSpec {
   test("int8 quantization reconstruction error is bounded by scale/254") {
     // symmetric round-to-nearest: |x - q*scale/127| <= scale/(2*127) per dim,
     // so the per-vector MAE must respect the same bound
-    val rows = Quantize.queries("llm_embedding_quantize")(spark, sfDir)
+    val rows = SparkEntry.queries("llm_embedding_quantize")(spark, sfDir)
       .select(col("scale"), col("mae")).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -146,10 +143,9 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("quantized-scan rerank recovers nearly all of the exact top-5") {
-    import graft.llm.{AnnQuantized, Similarity}
-    val exact = Similarity.queries("llm_simsearch_topk")(spark, sfDir)
+    val exact = SparkEntry.queries("llm_simsearch_topk")(spark, sfDir)
       .select("q_id", "c_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val quant = AnnQuantized.queries("llm_simsearch_quantized")(spark, sfDir)
+    val quant = SparkEntry.queries("llm_simsearch_quantized")(spark, sfDir)
       .select("q_id", "c_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact & quant).size.toDouble / exact.size
     assert(recall >= 0.9, s"recall=$recall")
@@ -162,7 +158,7 @@ class SqlSurfaceSpec extends SparkSpec {
     // same score-desc/id-asc order), same re-rank, same rounding
     import graft.llm.AnnQuantized
     // registered sort-free (round 15): impose the compare order in-test
-    val blocked = AnnQuantized.queries("llm_simsearch_quantized")(spark, sfDir)
+    val blocked = SparkEntry.queries("llm_simsearch_quantized")(spark, sfDir)
       .orderBy("q_id", "rk").collect().map(_.toSeq).toSeq
     val exact = AnnQuantized.simsearchQuantizedExact(spark, sfDir)
       .collect().map(_.toSeq).toSeq
@@ -170,7 +166,7 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("quantized vectors stay in int8 range") {
-    val qs = Quantize.queries("llm_embedding_quantize")(spark, sfDir)
+    val qs = SparkEntry.queries("llm_embedding_quantize")(spark, sfDir)
       .select(col("qstr")).collect()
     qs.foreach { r =>
       val vals = r.getString(0).split("\\|").map(_.toInt)
@@ -217,5 +213,29 @@ class SqlSurfaceSpec extends SparkSpec {
     // and make a STATIC stats-driven broadcast decision (AQE off)
     assert(launch("read").contains(s"[roundtrip] read $urgent rows pruned=true " +
       "statsRowCount=true statsBroadcast=true"))
+  }
+
+  test("fs_ls lists the fixture directory as java.nio sees it") {
+    // the rows-only bound of fs_ls: (name, bytes, is_dir) of every entry,
+    // in name order, straight from the OS
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val listed = SparkEntry.queries("fs_ls")(spark, sfDir).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getBoolean(2))).toSeq
+    val stream = Files.list(Paths.get(sfDir))
+    val expected =
+      try stream.iterator.asScala.map { p =>
+        (p.getFileName.toString, Files.size(p), Files.isDirectory(p))
+      }.toSeq.sortBy(_._1)
+      finally stream.close()
+    assert(expected.nonEmpty)
+    assert(listed == expected)
+  }
+
+  test("mr_randomwriter writes 1000 rows, every uniform draw in [0, 1]") {
+    val r = SparkEntry.queries("mr_randomwriter")(spark, sfDir).collect().toSeq
+    assert(r.length == 1)
+    assert(r.head.getAs[Long]("n") == 1000L)
+    assert(r.head.getAs[Long]("in_range") == r.head.getAs[Long]("n"))
   }
 }

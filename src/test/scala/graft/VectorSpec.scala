@@ -82,7 +82,7 @@ class VectorSpec extends SparkSpec {
         val topkB = Similarity.simsearchTopk(spark, dir).orderBy("q_id", "rk").collect().map(_.toSeq).toSeq
         val topkE = Similarity.simsearchTopkExact(spark, dir).collect().map(_.toSeq).toSeq
         assert(topkB == topkE, s"topk trial $trial n=$n dim=$dim")
-        val qB = graft.llm.AnnQuantized.queries("llm_simsearch_quantized")(spark, dir)
+        val qB = SparkEntry.queries("llm_simsearch_quantized")(spark, dir)
           .orderBy("q_id", "rk").collect().map(_.toSeq).toSeq
         val qE = graft.llm.AnnQuantized.simsearchQuantizedExact(spark, dir)
           .collect().map(_.toSeq).toSeq
@@ -103,7 +103,7 @@ class VectorSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame, by: String*) =
       df.orderBy(by.map(col): _*).collect().map(_.toSeq).toSeq
     val ref = rows(Similarity.simsearchTopk(spark, sfDir), "q_id", "rk")
-    val refQuant = rows(graft.llm.AnnQuantized.queries("llm_simsearch_quantized")(spark, sfDir),
+    val refQuant = rows(SparkEntry.queries("llm_simsearch_quantized")(spark, sfDir),
       "q_id", "rk")
     VectorFunctions.register(spark)
     def normed(sub: org.apache.spark.sql.Column) = Tables.embeddings(spark, sfDir).where(sub)
@@ -144,7 +144,7 @@ class VectorSpec extends SparkSpec {
     ann.foreach { case (q, c) => assert(q != c) }
     // the registered row's surfaced recall_at_k column agrees EXACTLY with
     // the set-computed per-query recall (the driver-visible audit signal)
-    val emitted = AnnLsh.queries("llm_simsearch_lsh")(spark, sfDir)
+    val emitted = SparkEntry.queries("llm_simsearch_lsh")(spark, sfDir)
       .select("q_id", "recall_at_k").distinct().collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     emitted.foreach { case (q, rc) =>
@@ -198,7 +198,7 @@ class VectorSpec extends SparkSpec {
     assert(recall > 0.05, s"recall=$recall")
     // surfaced recall column agrees with the set-computed per-query recall
     val ivfPairs = ivf.map(r => (r.getLong(0), r.getLong(2))).toSet
-    val emitted = AnnIvf.queries("llm_simsearch_ivf")(spark, sfDir)
+    val emitted = SparkEntry.queries("llm_simsearch_ivf")(spark, sfDir)
       .select("q_id", "recall_at_k").distinct().collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     emitted.foreach { case (q, rc) =>
@@ -562,7 +562,7 @@ class VectorSpec extends SparkSpec {
   }
 
   test("frame sampling keeps every FrameStride-th frame of each payload") {
-    val rows = Multimodal.queries("mm_frame_sample")(spark, sfDir).collect()
+    val rows = SparkEntry.queries("mm_frame_sample")(spark, sfDir).collect()
     // expected fan-out computed independently from the UTF-8 payload sizes
     val expected = Tables.documents(spark, sfDir).select("doc_id", "text")
       .collect().map { r =>
@@ -580,8 +580,8 @@ class VectorSpec extends SparkSpec {
   }
 
   test("multimodal decode stub is deterministic and preserves cardinality") {
-    val a = Multimodal.queries("mm_decode_stub")(spark, sfDir).collect()
-    val b = Multimodal.queries("mm_decode_stub")(spark, sfDir).collect()
+    val a = SparkEntry.queries("mm_decode_stub")(spark, sfDir).collect()
+    val b = SparkEntry.queries("mm_decode_stub")(spark, sfDir).collect()
     assert(a.sameElements(b))
     assert(a.length == Tables.documents(spark, sfDir).count())
     // identical payloads → identical checksums (exact-dup docs exist)
