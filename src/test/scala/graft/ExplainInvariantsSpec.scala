@@ -97,6 +97,57 @@ class ExplainInvariantsSpec extends SparkSpec {
     assert(plan(SparkEntry.flagship(spark, sfDir)).contains("BroadcastHashJoin"))
   }
 
+  test("join_broadcast and flagship broadcast by their hints, not by size") {
+    // the fixture dimensions are small enough that the size rule alone picks
+    // broadcast; with it off, only the hint can
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      for (n <- Seq("join_broadcast", "flagship"))
+        assert(plan(SparkEntry.queries(n)(spark, sfDir)).contains("BroadcastHashJoin"), n)
+    }
+  }
+
+  test("sql_star queries keep their Exchange and job counts at sf0.01") {
+    // (shuffle Exchanges in the final adaptive plan, Spark jobs) per noop
+    // write, as perfbench's sql_star workload executes them
+    val expected = Map[String, (Int, Int)](
+      "flagship" -> ((1, 4)),
+      "scan_parquet" -> ((0, 1)),
+      "project_select" -> ((0, 1)),
+      "filter_predicate" -> ((1, 2)),
+      "agg_hash_group" -> ((1, 2)),
+      "agg_count_distinct" -> ((2, 3)),
+      "agg_cube" -> ((2, 4)),
+      "join_inner_hash" -> ((0, 2)),
+      "join_broadcast" -> ((0, 2)),
+      "join_multiway" -> ((4, 10)),
+      "join_asof" -> ((2, 3)),
+      "window_ranking" -> ((1, 2)),
+      "topk_per_group" -> ((1, 2)),
+      "sort_global" -> ((1, 3)),
+      "sort_topk" -> ((0, 1)),
+      "distinct_rows" -> ((1, 2)),
+      "set_union_distinct" -> ((1, 2)),
+      "stream_session" -> ((1, 2)),
+      "skew_salted_join" -> ((3, 4)),
+    )
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val seen = expected.keys.toSeq.sorted.map { n =>
+      val df = SparkEntry.queries(n)(spark, "/root/testdata/sf0.01")
+      val write = new java.util.concurrent.atomic.AtomicReference[SparkPlan]
+      val l = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          write.set(qe.executedPlan)
+        def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      val (_, jobs) = try jobsDuring(df.write.format("noop").mode("overwrite").save())
+        finally spark.listenerManager.unregister(l)
+      val exchanges = helper.collectWithSubqueries(write.get) { case e: ShuffleExchangeLike => e }.size
+      n -> ((exchanges, jobs))
+    }.toMap
+    assert(seen == expected, seen.toSeq.sorted.mkString("\n"))
+  }
+
   test("skew_salted_join takes the SHUFFLED path keyed on (key, salt)") {
     // the salt only demonstrates anything if the join actually shuffles on
     // the widened key — at fixture scale AQE would broadcast the exploded
