@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * nano-units reach ~1.1e11/row, so a SINGLE aggregation group can sum ~8e7
   * rows before overflow — far beyond any per-group cardinality in these
   * fixtures, but a petabyte-scale single-group total should swap decSum-style
-  * `sum(dec2(c))` (kept below for the moment sums) back in: exactness is
+  * `sum(dec2(c))` (kept below) back in: exactness is
   * preserved either way, only speed differs.
   */
 object Dsl {
@@ -53,14 +53,11 @@ object Dsl {
     s"${centsSql("l_extendedprice")} * (100 - ${centsSql("l_discount")})"
 
   /** l_extendedprice * (1 - l_discount) * (1 + l_tax) in exact 1e-6 units. */
-  val chargeNano: Column = discPriceMicro * (lit(100L) + cents(col("l_tax")))
   val chargeNanoSql: String =
     s"($discPriceMicroSql) * (100 + ${centsSql("l_tax")})"
 
   /** Scalar (per-row) double views of the exact scaled-integer products. */
-  val discPrice: Column = discPriceMicro / 10000.0
   val discPriceSql: String = s"cast($discPriceMicroSql as double) / 10000.0"
-  val charge: Column = chargeNano / 1000000.0
   val chargeSql: String = s"cast($chargeNanoSql as double) / 1000000.0"
 
   /** Exact, order-independent aggregate sums of the products: accumulate the
@@ -69,7 +66,6 @@ object Dsl {
   def discPriceSum: Column = sum(discPriceMicro) / 10000.0
   val discPriceSumSql: String =
     s"cast(sum($discPriceMicroSql) as double) / 10000.0"
-  def chargeSum: Column = sum(chargeNano) / 1000000.0
   val chargeSumSql: String =
     s"cast(sum($chargeNanoSql) as double) / 1000000.0"
 

@@ -37,6 +37,9 @@ object Op {
     Tables.registerViews(s, d); s.sql(sql)
   }
 
-  /** An operator whose Spark plan and DuckDB oracle are the same text. */
-  def shared(name: String, sql: String): Op = Op(name, sqlQuery(sql), Sql(sql))
+  /** An operator whose Spark plan and DuckDB oracle are the same text. With
+    * sort keys, Spark runs `sql` sort-free and only the oracle appends the
+    * derived ORDER BY ([[Op.oracleSql]]). */
+  def shared(name: String, sql: String, sort: Seq[String] = Nil): Op =
+    Op(name, sqlQuery(sql), Sql(sql), sort)
 }

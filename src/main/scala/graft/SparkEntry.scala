@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.operators.{Aggregates, Behavioral, DataQuality, Relational, ScaleTechniques, SetOps, SqlSurface, TemporalJoins, Windows}
 import graft.functions.{Classics, Scalar, TypedUdaf}
 import graft.llm.{AnnIvf, AnnLsh, AnnQuantized, Clustering, Curation, Dedup, Quantize, Similarity, Sketches, TextAnalysis}
@@ -25,8 +24,11 @@ import graft.streaming.Streams
   *    the body plus `ORDER BY <sort>`, so the body carries no trailing
   *    ORDER BY of its own. A key may name the oracle's table alias too
   *    (`d.doc_id`); the dump sorts by the column part.
-  *  - `Op.shared(name, sql)` runs the same text in both engines and keeps
-  *    any ORDER BY inside it.
+  *  - `Op.shared(name, sql, sort)` runs the same text in both engines:
+  *    Spark runs `sql` as written and the oracle is `sql` plus the ORDER BY
+  *    the sort keys derive. Prefer it wherever the text plans the same as a
+  *    DataFrame would; a join hint rides the text as a Spark hint comment,
+  *    which DuckDB reads as a plain comment.
   * Names are unique across modules; construction checks it.
   */
 object SparkEntry {
@@ -36,22 +38,8 @@ object SparkEntry {
     * fact join, partial+final agg, top-k sort — one query per P1 subsystem.
     * Driver smoke-checks rows>0 on sf0.001.
     */
-  val flagship: Q = (s, d) => {
-    val cust = Tables.customer(s, d).where(col("c_mktsegment") === "BUILDING")
-    val ord = Tables.orders(s, d)
-      .where(col("o_orderdate") < lit("1998-07-01").cast("timestamp"))
-    val li = Tables.lineitem(s, d)
-      .where(col("l_shipdate") > lit("1998-07-01").cast("timestamp"))
-    li.join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-      .groupBy("l_orderkey", "o_orderdate")
-      .agg(discPriceSum.as("revenue"))
-      .orderBy(col("revenue").desc, col("l_orderkey"))
-      .limit(10)
-  }
-
   val flagshipSql: String =
-    s"""SELECT l_orderkey, o_orderdate, $discPriceSumSql AS revenue
+    s"""SELECT /*+ BROADCAST(customer) */ l_orderkey, o_orderdate, $discPriceSumSql AS revenue
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey
        |JOIN customer ON o_custkey = c_custkey
@@ -63,7 +51,7 @@ object SparkEntry {
        |LIMIT 10""".stripMargin
 
   def entry(spark: SparkSession): DataFrame =
-    flagship(spark, "/root/testdata/sf0.001")
+    queries("flagship")(spark, "/root/testdata/sf0.001")
 
   /** Every registered operator, in module order. */
   val ops: Seq[Op] =
@@ -72,7 +60,7 @@ object SparkEntry {
     FsOps.ops ++ Dedup.ops ++ Curation.ops ++ Similarity.ops ++ TextAnalysis.ops ++
     AnnLsh.ops ++ AnnIvf.ops ++ AnnQuantized.ops ++ Clustering.ops ++ Sketches.ops ++
     Multimodal.ops ++ ScaleTechniques.ops ++ SqlSurface.ops ++ Quantize.ops ++
-    Behavioral.ops ++ DataQuality.ops :+ Op("flagship", flagship, Sql(flagshipSql))
+    Behavioral.ops ++ DataQuality.ops :+ Op.shared("flagship", flagshipSql)
 
   {
     val dup = ops.groupBy(_.name).collect { case (n, os) if os.size > 1 => n }

@@ -87,15 +87,6 @@ object Classics {
     * The REPORTED v2 is 6dp-rounded (price*2+1 lands off the 2dp grid in
     * binary and sf0.1 surfaced >6dp reprs — the round-9 gopher class);
     * the filter keeps the unrounded value on both engines. */
-  val mrChain: Q = (s, d) =>
-    Tables.lineitem(s, d)
-      .where(col("l_quantity") > 5)
-      .withColumn("v1", col("l_extendedprice") * 2)
-      .withColumn("v2raw", col("v1") + 1)
-      .where(col("v2raw") > 100)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-              col("l_suppkey"), graft.Dsl.round6(col("v2raw")).as("v2"))
-
   val mrChainSql: String =
     s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
       |  ${graft.Dsl.round6Sql("l_extendedprice * 2 + 1")} AS v2
@@ -203,8 +194,8 @@ object Classics {
 
   /** Registered SORT-FREE (round 15). mr_chain: the job-chain's value is
     * the filter→derive pipeline, not an output order; the lineitem PK
-    * quadruple is the compare order. mr_join: this row DELEGATES to the
-    * (round-14 sort-free) joinInnerHash, so it needs its own sort keys —
+    * quadruple is the compare order. mr_join: this row SHARES the
+    * (round-14 sort-free) join_inner_hash text, so it needs its own sort keys —
     * without one its compare passed only because AQE's broadcast plan
     * happens to preserve the orders-scan order (latent fragility, fixed
     * here). mr_secondarysort/terasort keep their sorts: the global order IS
@@ -214,12 +205,9 @@ object Classics {
     // TeraSort IS the range-partitioned global sort, SecondarySort IS the
     // composite-key window sort, the join example IS the shuffled equi
     // join. Registered under both names so the inventory row keys resolve.
-    Op("mr_terasort", (s, d) => graft.operators.Windows.sortGlobal(s, d),
-      Sql(graft.operators.Windows.sortGlobalSql)),
-    Op("mr_secondarysort", (s, d) => graft.operators.Windows.sortSecondary(s, d),
-      Sql(graft.operators.Windows.sortSecondarySql)),
-    Op("mr_join", (s, d) => graft.operators.Relational.joinInnerHash(s, d),
-      Sql(graft.operators.Relational.joinInnerHashSql), Seq("o_orderkey")),
+    Op.shared("mr_terasort", graft.operators.Windows.sortGlobalSql),
+    Op.shared("mr_secondarysort", graft.operators.Windows.sortSecondarySql),
+    Op.shared("mr_join", graft.operators.Relational.joinInnerHashSql, Seq("o_orderkey")),
     Op("mr_teravalidate", mrTeravalidate, Sql(mrTeravalidateSql)),
     Op("mr_wordcount", mrWordcount, Sql(mrWordcountSql)),
     Op("mr_multifilewc", mrMultifilewc, Sql(mrMultifilewcSql)),
@@ -227,8 +215,7 @@ object Classics {
     Op("mr_randomwriter", mrRandomwriter,
       NoOracle("graft.SqlSurfaceSpec", "rand/randn streams are Spark-specific")),
     Op("mr_counters", mrCounters, Sql(mrCountersSql)),
-    Op("mr_chain", mrChain,
-      Sql(mrChainSql), graft.operators.Relational.LineitemKey),
+    Op.shared("mr_chain", mrChainSql, graft.operators.Relational.LineitemKey),
     Op("mr_streaming_udf", mrStreamingUdf, Sql(mrStreamingUdfSql), Seq("doc_id")),
   )
 }

@@ -84,20 +84,6 @@ object Scalar {
   /** Math family. ln/exp are libm-computed in both engines; operands are
     * identical doubles and results are rounded to 6dp to absorb any last-ulp
     * library difference. */
-  val fnMath: Q = (s, d) =>
-    Tables.part(s, d)
-      .select(col("p_partkey"),
-        graft.Dsl.round6(abs(col("p_retailprice") - 1000)).as("abs_delta"),
-        ceil(col("p_retailprice") / lit(7)).cast("long").as("ceil7"),
-        floor(col("p_retailprice") / lit(7)).cast("long").as("floor7"),
-        round(log(col("p_retailprice")), 6).as("ln6"),
-        round(exp(col("p_size").cast("double") / 10), 6).as("exp6"),
-        pow(lit(2), col("p_size")).as("pow2"),
-        pmod(col("p_partkey"), lit(7)).as("mod7"),
-        signum(col("p_retailprice") - 1000).cast("int").as("sgn"),
-        greatest(col("p_size"), lit(25)).as("gr"),
-        least(col("p_size"), lit(25)).as("le"))
-
   val fnMathSql: String =
     s"""SELECT p_partkey,
       |  ${graft.Dsl.round6Sql("abs(p_retailprice - 1000)")} AS abs_delta,
@@ -113,15 +99,6 @@ object Scalar {
       |FROM part""".stripMargin
 
   /** Conditional family: CASE / coalesce / nullif / nvl-style defaults. */
-  val fnConditional: Q = (s, d) =>
-    Tables.customer(s, d)
-      .select(col("c_custkey"),
-        when(col("c_acctbal") < 0, "debt")
-          .when(col("c_acctbal") < 5000, "mid")
-          .otherwise("rich").as("band"),
-        coalesce(nullif(col("c_mktsegment"), lit("BUILDING")), lit("NONE")).as("seg_or_none"),
-        when(col("c_acctbal") > 0, col("c_acctbal")).otherwise(lit(0.0)).as("pos_bal"))
-
   val fnConditionalSql: String =
     """SELECT c_custkey,
       |  CASE WHEN c_acctbal < 0 THEN 'debt'
@@ -356,8 +333,8 @@ object Scalar {
     Op("fn_string", fnString, Sql(fnStringSql), Seq("c_custkey")),
     Op("fn_regex", fnRegex, Sql(fnRegexSql), Seq("p_partkey")),
     Op("fn_date", fnDate, Sql(fnDateSql), Seq("o_orderkey")),
-    Op("fn_math", fnMath, Sql(fnMathSql), Seq("p_partkey")),
-    Op("fn_conditional", fnConditional, Sql(fnConditionalSql), Seq("c_custkey")),
+    Op.shared("fn_math", fnMathSql, Seq("p_partkey")),
+    Op.shared("fn_conditional", fnConditionalSql, Seq("c_custkey")),
     Op("fn_array", fnArray, Sql(fnArraySql), Seq("doc_id")),
     Op("fn_struct", fnStruct, Sql(fnStructSql), Seq("o_orderkey")),
     Op("fn_map", fnMap, Sql(fnMapSql), Seq("event_id")),

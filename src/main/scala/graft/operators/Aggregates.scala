@@ -19,19 +19,6 @@ object Aggregates {
   import Dsl._
 
   /** TPC-H Q1 shape: partial+final hash aggregation with combiner semantics. */
-  val aggHashGroup: Q = (s, d) =>
-    Tables.lineitem(s, d)
-      .where(col("l_shipdate") <= lit("2001-09-01").cast("timestamp"))
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(
-        sum(col("l_quantity")).as("sum_qty"), // integer-valued doubles: exact
-        moneySum(col("l_extendedprice")).as("sum_base_price"),
-        discPriceSum.as("sum_disc_price"),
-        chargeSum.as("sum_charge"),
-        round(sum(col("l_quantity")) / count(lit(1)), 6).as("avg_qty"),
-        round(moneySum(col("l_extendedprice")) / count(lit(1)), 6).as("avg_price"),
-        count(lit(1)).as("count_order"))
-
   val aggHashGroupSql: String =
     s"""SELECT l_returnflag, l_linestatus,
        |  sum(l_quantity) AS sum_qty,
@@ -46,12 +33,6 @@ object Aggregates {
        |GROUP BY l_returnflag, l_linestatus""".stripMargin
 
   /** Exact distinct customers per order priority (Expand + 2-phase agg). */
-  val aggCountDistinct: Q = (s, d) =>
-    Tables.orders(s, d)
-      .groupBy("o_orderpriority")
-      .agg(countDistinct(col("o_custkey")).as("uniq_custs"),
-           count(lit(1)).as("orders"))
-
   val aggCountDistinctSql: String =
     """SELECT o_orderpriority, count(DISTINCT o_custkey) AS uniq_custs, count(*) AS orders
       |FROM orders GROUP BY o_orderpriority""".stripMargin
@@ -186,12 +167,6 @@ object Aggregates {
       |FROM lineitem GROUP BY l_returnflag""".stripMargin
 
   /** Value-distribution histogram (aggregatewordhist idiom). */
-  val aggHistogram: Q = (s, d) =>
-    Tables.events(s, d)
-      .select(floor(col("value") / 5).cast("long").as("bucket"))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n"))
-
   val aggHistogramSql: String =
     """SELECT cast(floor(value / 5) as bigint) AS bucket, count(*) AS n
       |FROM events GROUP BY bucket""".stripMargin
@@ -201,24 +176,6 @@ object Aggregates {
     * nondeterministic in floating point; here every intermediate is exact, so
     * the final doubles are bit-identical across engines and runs.
     */
-  val aggStddevCorr: Q = (s, d) => {
-    val q = col("l_quantity").cast("long")
-    val p = dec2(col("l_extendedprice"))
-    Tables.lineitem(s, d)
-      .groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n"),
-           sum(q).as("sq"), sum(q * q).as("sqq"),
-           sum(p).as("sp"), sum(p * p).as("spp"),
-           sum(p * q).as("spq"))
-      .select(col("l_returnflag"), col("n"),
-        round(sqrt((col("sqq") - col("sq") * col("sq") / col("n")) / (col("n") - 1)), 6)
-          .as("stddev_qty"),
-        round((col("spq").cast("double") - col("sp").cast("double") * col("sq").cast("double") / col("n")) /
-         (sqrt(col("sqq") - col("sq") * col("sq") / col("n")) *
-          sqrt(col("spp").cast("double") - col("sp").cast("double") * col("sp").cast("double") / col("n"))), 6)
-          .as("corr_qty_price"))
-  }
-
   val aggStddevCorrSql: String =
     """WITH m AS (
       |  SELECT l_returnflag, count(*) AS n,
@@ -272,14 +229,9 @@ object Aggregates {
       .select("o_orderkey", "o_custkey", "o_totalprice")
       .orderBy("o_orderkey")
 
-  // xxhash64 has no DuckDB twin → the oracle derives the same sample from
-  // the Spark-computed membership rule re-expressed... it cannot; instead
-  // sample on a modulus of the key itself (equally deterministic):
-  val sampleMod: Q = (s, d) =>
-    Tables.orders(s, d)
-      .where(pmod(col("o_orderkey"), lit(10)) === 3)
-      .select("o_orderkey", "o_custkey", "o_totalprice")
-
+  /** Deterministic sampling on a modulus of the key itself: as
+    * reproducible as sample_hash, and DuckDB computes the same membership
+    * (xxhash64 has no DuckDB twin). */
   val sampleModSql: String =
     """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
       |WHERE ((o_orderkey % 10) + 10) % 10 = 3""".stripMargin
@@ -321,13 +273,6 @@ object Aggregates {
       .orderBy("l_returnflag")
 
   /** Bitwise aggregates (flag-mask consolidation shape). */
-  val aggBitwise: Q = (s, d) =>
-    Tables.orders(s, d)
-      .groupBy("o_orderpriority")
-      .agg(expr("bit_and(o_custkey)").as("k_and"),
-           expr("bit_or(o_custkey)").as("k_or"),
-           expr("bit_xor(o_custkey)").as("k_xor"))
-
   val aggBitwiseSql: String =
     """SELECT o_orderpriority,
       |  bit_and(o_custkey) AS k_and,
@@ -384,19 +329,6 @@ object Aggregates {
   /** Statistical mode per group (most frequent value, ties → smallest):
     * count + rank, the two-aggregation idiom — DuckDB's mode() aggregate
     * breaks ties arbitrarily, so the oracle uses the same explicit rank. */
-  val aggMode: Q = (s, d) => {
-    val cnt = Tables.orders(s, d)
-      .groupBy(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(count(lit(1)).as("cnt"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("o_orderstatus"))
-      .orderBy(col("cnt").desc, col("o_orderpriority"))
-    cnt.withColumn("rk", row_number().over(w))
-      .where(col("rk") === 1)
-      .select(col("o_orderstatus"), col("o_orderpriority").as("mode_priority"),
-              col("cnt"))
-  }
-
   val aggModeSql: String =
     """WITH cnt AS (
       |  SELECT o_orderstatus, o_orderpriority, count(*) AS cnt
@@ -421,24 +353,23 @@ object Aggregates {
     * (even a tiny sorted output pays an extra AQE stage + range exchange per
     * suite pass). Keys are the group-by keys (unique by construction). Verify
     * sorts the dump by these keys and the oracle's ORDER BY is derived from
-    * them. agg_rollup / agg_grouping_sets stay sorted: their query text is
-    * shared with the oracle, so the comparator sort cannot be stripped one-
-    * sided. */
+    * them. agg_rollup / agg_grouping_sets keep the ORDER BY inside their
+    * text. */
   val ops: Seq[Op] = Seq(
-    Op("agg_mode", aggMode, Sql(aggModeSql), Seq("o_orderstatus")),
+    Op.shared("agg_mode", aggModeSql, Seq("o_orderstatus")),
     Op("agg_unpivot", aggUnpivot, Sql(aggUnpivotSql), Seq("l_returnflag", "metric")),
     Op("agg_listagg", aggListagg, Sql(aggListaggSql), Seq("r_name")),
-    Op("agg_bitwise", aggBitwise, Sql(aggBitwiseSql), Seq("o_orderpriority")),
+    Op.shared("agg_bitwise", aggBitwiseSql, Seq("o_orderpriority")),
     Op("agg_pivot", aggPivot, Sql(aggPivotSql), Seq("c_mktsegment")),
     Op("sample_hash", sampleHash,
       NoOracle("graft.LlmSpec", "membership hashes with xxhash64, which DuckDB lacks")),
-    Op("sample_mod", sampleMod, Sql(sampleModSql), Seq("o_orderkey")),
+    Op.shared("sample_mod", sampleModSql, Seq("o_orderkey")),
     Op("sample_stratified", sampleStratified,
       Sql(sampleStratifiedSql), Seq("o_orderpriority", "rk")),
     Op("agg_approx_quantile", aggApproxQuantile,
       NoOracle("graft.LlmSpec", "Spark's GK-sketch quantiles have no bit-equal DuckDB twin")),
-    Op("agg_hash_group", aggHashGroup, Sql(aggHashGroupSql), Seq("l_returnflag", "l_linestatus")),
-    Op("agg_count_distinct", aggCountDistinct, Sql(aggCountDistinctSql), Seq("o_orderpriority")),
+    Op.shared("agg_hash_group", aggHashGroupSql, Seq("l_returnflag", "l_linestatus")),
+    Op.shared("agg_count_distinct", aggCountDistinctSql, Seq("o_orderpriority")),
     Op("agg_approx_distinct", aggApproxDistinct,
       NoOracle("graft.LlmSpec", "Spark's HLL++ estimate has no bit-equal DuckDB twin")),
     Op("agg_hll_merge", aggHllMerge,
@@ -449,7 +380,7 @@ object Aggregates {
     Op.shared("agg_grouping_sets", aggGroupingSetsSql),
     Op("agg_collect", aggCollect, Sql(aggCollectSql), Seq("c_custkey")),
     Op("agg_percentile", aggPercentile, Sql(aggPercentileSql), Seq("l_returnflag")),
-    Op("agg_histogram", aggHistogram, Sql(aggHistogramSql), Seq("bucket")),
-    Op("agg_stddev_corr", aggStddevCorr, Sql(aggStddevCorrSql), Seq("l_returnflag")),
+    Op.shared("agg_histogram", aggHistogramSql, Seq("bucket")),
+    Op.shared("agg_stddev_corr", aggStddevCorrSql, Seq("l_returnflag")),
   )
 }

@@ -31,25 +31,6 @@ object Behavioral {
     * (step-k users ⊆ step-(k-1) users), AQE's runtime size estimate
     * flips the stage tables to broadcast on a 100 TB event log, where
     * step-3 survivors are ~millions against billions of raw events. */
-  val eventsFunnel: Q = (s, d) => {
-    val f = Tables.events(s, d)
-      .where(col("event_type").isin("view", "click", "purchase"))
-      .select("user_id", "event_type", "ts")
-    val s1 = f.where(col("event_type") === "view")
-      .groupBy("user_id").agg(min(col("ts")).as("t1"))
-    val s2 = f.join(s1, "user_id")
-      .where(col("event_type") === "click" && col("ts") > col("t1") &&
-             col("ts") <= col("t1") + expr("INTERVAL 7 DAYS"))
-      .groupBy("user_id").agg(min(col("ts")).as("t2"), max(col("t1")).as("t1"))
-    val s3 = f.join(s2, "user_id")
-      .where(col("event_type") === "purchase" && col("ts") > col("t2") &&
-             col("ts") <= col("t1") + expr("INTERVAL 7 DAYS"))
-      .groupBy("user_id").agg(min(col("ts")).as("t3"))
-    s1.agg(lit(1).as("step"), count(lit(1)).as("n_users"))
-      .unionAll(s2.agg(lit(2).as("step"), count(lit(1)).as("n_users")))
-      .unionAll(s3.agg(lit(3).as("step"), count(lit(1)).as("n_users")))
-  }
-
   val eventsFunnelSql: String =
     """WITH f AS (
       |  SELECT user_id, event_type, ts FROM events
@@ -209,19 +190,6 @@ object Behavioral {
     * 25-key space with map-side partials, and the per-source totals come
     * from a window over those 25 rows — nothing after the first exchange
     * is data-sized. */
-  val eventsMarkov: Q = (s, d) => {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val trans = Tables.events(s, d)
-      .select(col("user_id"), col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .where(col("dst").isNotNull)
-      .groupBy("src", "dst").agg(count(lit(1)).as("cnt"))
-    val bySrc = Window.partitionBy(col("src"))
-    trans
-      .withColumn("p6",
-        round(col("cnt").cast("double") / sum(col("cnt")).over(bySrc), 6))
-  }
-
   val eventsMarkovSql: String =
     """WITH seq AS (
       |  SELECT event_type AS src, lead(event_type, 1) OVER w AS dst
@@ -312,29 +280,6 @@ object Behavioral {
     * window; the per-session rollup re-aggregates on (user, session) —
     * co-partitioned with the window output, no second data-sized
     * exchange. Output is one row per session, bounded far below the log. */
-  val eventsAttribution: Q = (s, d) => {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val running = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.events(s, d)
-      .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
-      .withColumn("is_new",
-        when(col("prev_ts").isNull ||
-             unix_micros(col("ts")) - unix_micros(col("prev_ts")) > 1800L * 1000000, 1L)
-          .otherwise(0L))
-      .withColumn("session_idx", sum(col("is_new")).over(running))
-      .groupBy("user_id", "session_idx")
-      .agg(
-        sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("n_views"),
-        sum(when(col("event_type") === "purchase",
-          round(col("value") * 100).cast("long")).otherwise(0L)).as("purchase_cents"))
-      .select(col("user_id"), col("session_idx"), col("n_views"),
-        (col("purchase_cents").cast("double") / 100.0).as("purchase_total"),
-        when(col("n_views") > 0,
-          round(col("purchase_cents").cast("double") / 100.0 / col("n_views"), 6))
-          .as("per_view6"))
-  }
-
   val eventsAttributionSql: String =
     """WITH flagged AS (
       |  SELECT user_id, event_id, ts, event_type, value,
@@ -367,14 +312,13 @@ object Behavioral {
     * Verify sorts the dump by these keys and the oracle's ORDER BY is derived
     * from them. */
   val ops: Seq[Op] = Seq(
-    Op("events_funnel", eventsFunnel, Sql(eventsFunnelSql), Seq("step")),
+    Op.shared("events_funnel", eventsFunnelSql, Seq("step")),
     Op("events_retention", eventsRetention,
       Sql(eventsRetentionSql), Seq("f.cohort_week", "week_offset")),
     Op("events_top_paths", eventsTopPaths, Sql(eventsTopPathsSql)),
     Op("events_anomaly", eventsAnomaly, Sql(eventsAnomalySql), Seq("h.event_type", "hour")),
-    Op("events_markov", eventsMarkov, Sql(eventsMarkovSql), Seq("src", "dst")),
+    Op.shared("events_markov", eventsMarkovSql, Seq("src", "dst")),
     Op("events_ab_test", eventsAbTest, Sql(eventsAbTestSql)),
-    Op("events_attribution", eventsAttribution,
-      Sql(eventsAttributionSql), Seq("user_id", "session_idx")),
+    Op.shared("events_attribution", eventsAttributionSql, Seq("user_id", "session_idx")),
   )
 }

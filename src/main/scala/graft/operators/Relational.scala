@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.{Dsl, Op, Q, Sql, Tables}
 
@@ -27,21 +26,10 @@ object Relational {
   // ---- §2.2 projection / filter ------------------------------------------
 
   /** Columnar scan with projection + predicate pushdown reaching parquet.
-    * NOTE: lineitem's unique key in these fixtures is the full
-    * (l_orderkey, l_linenumber, l_partkey, l_suppkey) — (okey, lineno) alone
-    * has duplicates, so every row-level lineitem query orders by all four. */
-  /** Registered SORT-FREE (round 14, same move as project_select round 13):
+    * Registered SORT-FREE (round 14, same move as project_select round 13):
     * the pruned pushdown scan is a pure map task — no exchange at all; the
     * deterministic compare order lives in the Verify dump (its [[ops]]
     * sort keys, the full lineitem key), not the operator. */
-  val scanParquet: Q = (s, d) =>
-    Tables.lineitem(s, d)
-      .where(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-             col("l_shipdate") <  lit("1996-07-01").cast("timestamp") &&
-             col("l_quantity") < 10)
-      .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
-              "l_quantity", "l_shipdate")
-
   val scanParquetSql: String =
     """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity, l_shipdate
       |FROM lineitem
@@ -57,13 +45,6 @@ object Relational {
     * operator, where its range exchange re-executed the whole single-row-
     * group scan+derive for sampling and dominated the benchmark's largest
     * line (1.13 s of which ~0.8 s was the sort harness, not the operator). */
-  val projectSelectNoSort: Q = (s, d) =>
-    Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_linenumber"),
-              col("l_partkey"), col("l_suppkey"),
-              discPrice.as("disc_price"),
-              charge.as("charge"))
-
   val projectSelectSql: String =
     s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
        |  $discPriceSql AS disc_price,
@@ -71,15 +52,6 @@ object Relational {
        |FROM lineitem""".stripMargin
 
   /** Compound predicate (TPC-H Q6 shape) → one exact revenue scalar. */
-  val filterPredicate: Q = (s, d) =>
-    Tables.lineitem(s, d)
-      .where(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-             col("l_shipdate") <  lit("1997-01-01").cast("timestamp") &&
-             col("l_discount").between(0.05, 0.07) &&
-             col("l_quantity") < 24)
-      .agg((sum(cents(col("l_extendedprice")) * cents(col("l_discount"))) / 10000.0).as("revenue"),
-           count(lit(1)).as("n"))
-
   val filterPredicateSql: String =
     s"""SELECT
        |  cast(sum(${centsSql("l_extendedprice")} * ${centsSql("l_discount")}) as double) / 10000.0 AS revenue,
@@ -99,14 +71,6 @@ object Relational {
       |WHERE regexp_matches(text, 'hash\s+join')""".stripMargin
 
   /** NULL semantics: IS NULL / null-safe equality on a derived nullable col. */
-  val filterNullSemantics: Q = (s, d) =>
-    Tables.customer(s, d)
-      .select(col("c_custkey"),
-              nullif(col("c_mktsegment"), lit("BUILDING")).as("seg"))
-      .select(col("c_custkey"), col("seg"),
-              col("seg").isNull.as("seg_is_null"),
-              (col("seg") <=> "MACHINERY").as("is_machinery"))
-
   val filterNullSemanticsSql: String =
     """SELECT c_custkey, seg, seg IS NULL AS seg_is_null,
       |       seg IS NOT DISTINCT FROM 'MACHINERY' AS is_machinery
@@ -114,74 +78,39 @@ object Relational {
 
   // ---- §2.3 joins ---------------------------------------------------------
 
-  /** Equi inner join (reduce-side join idiom) — row level. */
-  /** Registered SORT-FREE (round 14): the shuffled equi join's output is
+  /** Equi inner join (reduce-side join idiom) — row level.
+    * Registered SORT-FREE (round 14): the shuffled equi join's output is
     * O(|orders|) and the trailing ORDER BY existed only for the hash
     * compare — it was a second full range exchange over the join output.
     * Compare order: the op's sort key o_orderkey, the orders PK. */
-  val joinInnerHash: Q = (s, d) =>
-    Tables.orders(s, d)
-      .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-      .select("o_orderkey", "c_name", "c_mktsegment")
-
   val joinInnerHashSql: String =
     """SELECT o_orderkey, c_name, c_mktsegment
       |FROM orders JOIN customer ON o_custkey = c_custkey""".stripMargin
 
-  /** Map-side hash join (DistributedCache idiom): broadcast the dimension. */
-  /** Registered SORT-FREE (round 14): a broadcast join is map-side — with
-    * the comparator ORDER BY gone the whole query is exchange-FREE, which
-    * is the point of broadcasting; the old trailing sort range-exchanged
-    * ~30% of lineitem for the hash compare alone. Compare order: the op's
-    * sort keys, the full lineitem key. */
-  val joinBroadcast: Q = (s, d) =>
-    Tables.lineitem(s, d)
-      .join(broadcast(Tables.part(s, d).where(col("p_size") < 15)),
-            col("l_partkey") === col("p_partkey"))
-      .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
-              "p_brand", "p_size")
-
+  /** Map-side hash join (DistributedCache idiom): broadcast the dimension.
+    * The hint is a comment to DuckDB. Registered SORT-FREE (round 14): a
+    * broadcast join is map-side — with the comparator ORDER BY gone the
+    * whole query is exchange-FREE, which is the point of broadcasting; the
+    * old trailing sort range-exchanged ~30% of lineitem for the hash compare
+    * alone. Compare order: the op's sort keys, the full lineitem key. */
   val joinBroadcastSql: String =
-    """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, p_brand, p_size
+    """SELECT /*+ BROADCAST(part) */ l_orderkey, l_linenumber, l_partkey, l_suppkey, p_brand, p_size
       |FROM lineitem JOIN part ON l_partkey = p_partkey
       |WHERE p_size < 15""".stripMargin
 
   /** Co-sorted merge join (CompositeInputFormat idiom) — force SMJ via hint. */
-  val joinSortMerge: Q = (s, d) =>
-    Tables.lineitem(s, d).hint("merge")
-      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("line_cnt"), moneySum(col("l_extendedprice")).as("sum_price"))
-
   val joinSortMergeSql: String =
-    s"""SELECT o_orderpriority, count(*) AS line_cnt, ${moneySumSql("l_extendedprice")} AS sum_price
+    s"""SELECT /*+ MERGE(lineitem) */ o_orderpriority, count(*) AS line_cnt, ${moneySumSql("l_extendedprice")} AS sum_price
        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
        |GROUP BY o_orderpriority""".stripMargin
 
   /** Left outer join: order count per customer including zero. */
-  val joinLeftOuter: Q = (s, d) =>
-    Tables.customer(s, d)
-      .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"), "left")
-      .groupBy("c_custkey")
-      .agg(count(col("o_orderkey")).as("order_cnt"))
-
   val joinLeftOuterSql: String =
     """SELECT c_custkey, count(o_orderkey) AS order_cnt
       |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
       |GROUP BY c_custkey""".stripMargin
 
   /** Full outer join with non-matching rows on both sides. */
-  val joinFullOuter: Q = (s, d) => {
-    val hiCust = Tables.customer(s, d).where(col("c_acctbal") > 9000)
-      .select("c_custkey", "c_acctbal")
-    val hiOrd = Tables.orders(s, d).where(col("o_totalprice") > 280000)
-      .select("o_orderkey", "o_custkey", "o_totalprice")
-    hiCust.join(hiOrd, col("c_custkey") === col("o_custkey"), "full")
-      .select(coalesce(col("c_custkey"), lit(-1)).as("ck"),
-              coalesce(col("o_orderkey"), lit(-1)).as("ok"),
-              col("c_acctbal"), col("o_totalprice"))
-  }
-
   val joinFullOuterSql: String =
     """SELECT coalesce(c_custkey, -1) AS ck, coalesce(o_orderkey, -1) AS ok,
       |       c_acctbal, o_totalprice
@@ -192,17 +121,6 @@ object Relational {
   /** Right outer: every big order kept, matching high-balance customer or
     * null — the mirror of left outer (Spark plans it as the flipped left
     * outer; registered so every ANSI join type runs by name). */
-  val joinRightOuter: Q = (s, d) => {
-    val hiCust = Tables.customer(s, d).where(col("c_acctbal") > 9000)
-      .select("c_custkey", "c_acctbal")
-    val hiOrd = Tables.orders(s, d).where(col("o_totalprice") > 280000)
-      .select("o_orderkey", "o_custkey", "o_totalprice")
-    hiCust.join(hiOrd, col("c_custkey") === col("o_custkey"), "right")
-      .select(coalesce(col("c_custkey"), lit(-1)).as("ck"),
-              col("o_orderkey").as("ok"),
-              col("c_acctbal"), col("o_totalprice"))
-  }
-
   val joinRightOuterSql: String =
     """SELECT coalesce(c_custkey, -1) AS ck, o_orderkey AS ok,
       |       c_acctbal, o_totalprice
@@ -222,21 +140,11 @@ object Relational {
       |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 250000)""".stripMargin
 
   /** Anti join: customers with no big order (NOT EXISTS, non-empty result). */
-  val joinLeftAnti: Q = (s, d) =>
-    Tables.customer(s, d)
-      .join(Tables.orders(s, d).where(col("o_totalprice") > 250000),
-            col("c_custkey") === col("o_custkey"), "left_anti")
-      .select("c_custkey", "c_name")
-
   val joinLeftAntiSql: String =
     """SELECT c_custkey, c_name FROM customer
       |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 250000)""".stripMargin
 
   /** Bounded cartesian product. */
-  val joinCross: Q = (s, d) =>
-    Tables.region(s, d).crossJoin(Tables.nation(s, d))
-      .select("r_name", "n_name")
-
   val joinCrossSql: String =
     """SELECT r_name, n_name FROM region CROSS JOIN nation""".stripMargin
 
@@ -319,18 +227,6 @@ object Relational {
     * behavior. Plans as an ordinary shuffled hash join: the null-safe
     * comparison is still an equi-key (EqualNullSafe), NOT a theta join —
     * NULL keys hash to one partition like any other value. */
-  val joinNullSafe: Q = (s, d) => {
-    val cust = Tables.customer(s, d)
-      .select(col("c_custkey"),
-              nullif(col("c_nationkey") % 5, lit(0)).as("k"))
-    val dim = Tables.nation(s, d).where(col("n_nationkey") < 5)
-      .select(nullif(col("n_nationkey") % 5, lit(0)).as("k"),
-              col("n_name"))
-    cust.join(dim, cust("k") <=> dim("k"))
-      .groupBy(dim("k").as("k"), col("n_name"))
-      .agg(count(lit(1)).as("n"))
-  }
-
   val joinNullSafeSql: String =
     """WITH cust AS (
       |  SELECT c_custkey, nullif(c_nationkey % 5, 0) AS k FROM customer),
@@ -349,22 +245,22 @@ object Relational {
     * once each; (p_partkey, band) since bands are disjoint). Verify sorts the
     * dump by these keys and the oracle's ORDER BY is derived from them. */
   val ops: Seq[Op] = Seq(
-    Op("join_null_safe", joinNullSafe, Sql(joinNullSafeSql), Seq("n_name")),
+    Op.shared("join_null_safe", joinNullSafeSql, Seq("n_name")),
     Op("join_multiway", joinMultiway, Sql(joinMultiwaySql)),
-    Op("scan_parquet", scanParquet, Sql(scanParquetSql), LineitemKey),
-    Op("project_select", projectSelectNoSort, Sql(projectSelectSql), LineitemKey),
-    Op("filter_predicate", filterPredicate, Sql(filterPredicateSql)),
+    Op.shared("scan_parquet", scanParquetSql, LineitemKey),
+    Op.shared("project_select", projectSelectSql, LineitemKey),
+    Op.shared("filter_predicate", filterPredicateSql),
     Op("filter_regex_grep", filterRegexGrep, Sql(filterRegexGrepSql), Seq("doc_id")),
-    Op("filter_null_semantics", filterNullSemantics, Sql(filterNullSemanticsSql), Seq("c_custkey")),
-    Op("join_inner_hash", joinInnerHash, Sql(joinInnerHashSql), Seq("o_orderkey")),
-    Op("join_broadcast", joinBroadcast, Sql(joinBroadcastSql), LineitemKey),
-    Op("join_sort_merge", joinSortMerge, Sql(joinSortMergeSql), Seq("o_orderpriority")),
-    Op("join_left_outer", joinLeftOuter, Sql(joinLeftOuterSql), Seq("c_custkey")),
-    Op("join_full_outer", joinFullOuter, Sql(joinFullOuterSql), Seq("ck", "ok")),
-    Op("join_right_outer", joinRightOuter, Sql(joinRightOuterSql), Seq("ck", "ok")),
+    Op.shared("filter_null_semantics", filterNullSemanticsSql, Seq("c_custkey")),
+    Op.shared("join_inner_hash", joinInnerHashSql, Seq("o_orderkey")),
+    Op.shared("join_broadcast", joinBroadcastSql, LineitemKey),
+    Op.shared("join_sort_merge", joinSortMergeSql, Seq("o_orderpriority")),
+    Op.shared("join_left_outer", joinLeftOuterSql, Seq("c_custkey")),
+    Op.shared("join_full_outer", joinFullOuterSql, Seq("ck", "ok")),
+    Op.shared("join_right_outer", joinRightOuterSql, Seq("ck", "ok")),
     Op("join_left_semi", joinLeftSemi, Sql(joinLeftSemiSql), Seq("c_custkey")),
-    Op("join_left_anti", joinLeftAnti, Sql(joinLeftAntiSql), Seq("c_custkey")),
-    Op("join_cross", joinCross, Sql(joinCrossSql), Seq("r_name", "n_name")),
+    Op.shared("join_left_anti", joinLeftAntiSql, Seq("c_custkey")),
+    Op.shared("join_cross", joinCrossSql, Seq("r_name", "n_name")),
     Op("join_theta_range", joinThetaRange, Sql(joinThetaRangeSql), Seq("p_partkey", "band")),
   )
 }

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.{Op, Q, Sql, Tables}
 
 /** §2.7 set operations / exact dedup (SURVEY.md).
@@ -13,47 +11,25 @@ import graft.{Op, Q, Sql, Tables}
   * that is the unavoidable exchange, and partial aggregation trims it.
   */
 object SetOps {
-  private def urgent(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d).where(col("o_orderpriority") === "1-URGENT")
-  private def high(s: SparkSession, d: String): DataFrame =
-    Tables.orders(s, d).where(col("o_orderpriority") === "2-HIGH")
-
   /** Bag union of conformant inputs, tagged by source. */
-  val setUnionAll: Q = (s, d) =>
-    urgent(s, d).select(col("o_orderkey"), lit("urgent").as("src"))
-      .unionByName(high(s, d).select(col("o_orderkey"), lit("high").as("src")))
-
   val setUnionAllSql: String =
     """SELECT o_orderkey, 'urgent' AS src FROM orders WHERE o_orderpriority = '1-URGENT'
       |UNION ALL
       |SELECT o_orderkey, 'high' AS src FROM orders WHERE o_orderpriority = '2-HIGH'""".stripMargin
 
   /** Set union: distinct customers having urgent or high orders. */
-  val setUnionDistinct: Q = (s, d) =>
-    urgent(s, d).select("o_custkey")
-      .union(high(s, d).select("o_custkey"))
-      .distinct()
-
   val setUnionDistinctSql: String =
     """SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
       |UNION
       |SELECT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH'""".stripMargin
 
   /** Set intersection: customers with BOTH urgent and high orders. */
-  val setIntersect: Q = (s, d) =>
-    urgent(s, d).select("o_custkey")
-      .intersect(high(s, d).select("o_custkey"))
-
   val setIntersectSql: String =
     """SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
       |INTERSECT
       |SELECT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH'""".stripMargin
 
   /** Set difference: customers with orders but none urgent. */
-  val setExcept: Q = (s, d) =>
-    Tables.orders(s, d).select("o_custkey")
-      .except(urgent(s, d).select("o_custkey"))
-
   val setExceptSql: String =
     """SELECT o_custkey FROM orders
       |EXCEPT
@@ -62,10 +38,6 @@ object SetOps {
   /** Bag intersection (INTERSECT ALL): per-customer order-count overlap —
     * multiplicity min(urgent_n, high_n), which set-intersect silently
     * collapses to 1. Spark plans a count-tagged join, no row explosion. */
-  val setIntersectAll: Q = (s, d) =>
-    urgent(s, d).select("o_custkey")
-      .intersectAll(high(s, d).select("o_custkey"))
-
   val setIntersectAllSql: String =
     """SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
       |INTERSECT ALL
@@ -73,10 +45,6 @@ object SetOps {
 
   /** Bag difference (EXCEPT ALL): multiplicity max(all_n - urgent_n, 0) —
     * keeps a customer's remaining non-urgent order slots. */
-  val setExceptAll: Q = (s, d) =>
-    Tables.orders(s, d).select("o_custkey")
-      .exceptAll(urgent(s, d).select("o_custkey"))
-
   val setExceptAllSql: String =
     """SELECT o_custkey FROM orders
       |EXCEPT ALL
@@ -97,12 +65,12 @@ object SetOps {
     * compares equal. Verify sorts the dump by these keys and the oracle's
     * ORDER BY is derived from them. */
   val ops: Seq[Op] = Seq(
-    Op("set_union_all", setUnionAll, Sql(setUnionAllSql), Seq("o_orderkey", "src")),
-    Op("set_union_distinct", setUnionDistinct, Sql(setUnionDistinctSql), Seq("o_custkey")),
-    Op("set_intersect", setIntersect, Sql(setIntersectSql), Seq("o_custkey")),
-    Op("set_except", setExcept, Sql(setExceptSql), Seq("o_custkey")),
-    Op("set_intersect_all", setIntersectAll, Sql(setIntersectAllSql), Seq("o_custkey")),
-    Op("set_except_all", setExceptAll, Sql(setExceptAllSql), Seq("o_custkey")),
+    Op.shared("set_union_all", setUnionAllSql, Seq("o_orderkey", "src")),
+    Op.shared("set_union_distinct", setUnionDistinctSql, Seq("o_custkey")),
+    Op.shared("set_intersect", setIntersectSql, Seq("o_custkey")),
+    Op.shared("set_except", setExceptSql, Seq("o_custkey")),
+    Op.shared("set_intersect_all", setIntersectAllSql, Seq("o_custkey")),
+    Op.shared("set_except_all", setExceptAllSql, Seq("o_custkey")),
     Op("distinct_rows", distinctRows,
       Sql(distinctRowsSql), Seq("o_orderstatus", "o_orderpriority")),
   )

@@ -24,20 +24,8 @@ object Windows {
 
   // ---- §2.5 windows -------------------------------------------------------
 
-  /** row_number (unique tiebreak) + rank/dense_rank (deterministic on ties). */
-  val windowRanking: Q = (s, d) => {
-    val byPrice = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    val byPriceTies = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_totalprice").desc)
-    Tables.orders(s, d)
-      .select(col("o_custkey"), col("o_orderkey"),
-              row_number().over(byPrice).as("rn"),
-              rank().over(byPriceTies).as("rk"),
-              dense_rank().over(byPriceTies).as("drk"))
-  }
-
-  /** Registered SORT-FREE (round 14): the window already hash-partitions by
+  /** row_number (unique tiebreak) + rank/dense_rank (deterministic on ties).
+    * Registered SORT-FREE (round 14): the window already hash-partitions by
     * o_custkey and sorts WITHIN partitions — the trailing global ORDER BY
     * was a second full range exchange over the O(|orders|) output, for the
     * hash compare only. (o_custkey, o_orderkey) with unique o_orderkey is
@@ -50,29 +38,12 @@ object Windows {
       |FROM orders""".stripMargin
 
   /** ntile bucketing within each market segment. */
-  val windowNtile: Q = (s, d) => {
-    val w = Window.partitionBy(col("c_mktsegment"))
-      .orderBy(col("c_acctbal"), col("c_custkey"))
-    Tables.customer(s, d)
-      .select(col("c_mktsegment"), col("c_custkey"),
-              ntile(4).over(w).as("quartile"))
-  }
-
   val windowNtileSql: String =
     """SELECT c_mktsegment, c_custkey,
       |  ntile(4) OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey) AS quartile
       |FROM customer""".stripMargin
 
   /** lag/lead time-series deltas per user on the event stream table. */
-  val windowLagLead: Q = (s, d) => {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    Tables.events(s, d)
-      .select(col("user_id"), col("event_id"), col("value"),
-              lag(col("value"), 1).over(w).as("prev_value"),
-              lead(col("event_type"), 1).over(w).as("next_type"),
-              round6(col("value") - lag(col("value"), 1).over(w)).as("delta"))
-  }
-
   val windowLagLeadSql: String =
     s"""SELECT user_id, event_id, value,
        |  lag(value, 1) OVER w AS prev_value,
@@ -82,16 +53,6 @@ object Windows {
        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin
 
   /** Running ROWS-frame aggregates (exact long-cents accumulation). */
-  val windowRunningRows: Q = (s, d) => {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_orderdate"), col("o_orderkey"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.orders(s, d)
-      .select(col("o_custkey"), col("o_orderkey"),
-              (sum(cents(col("o_totalprice"))).over(w) / 100.0).as("running_spend"),
-              count(lit(1)).over(w).as("running_orders"))
-  }
-
   val windowRunningRowsSql: String =
     s"""SELECT o_custkey, o_orderkey,
        |  cast(sum(${centsSql("o_totalprice")}) OVER w as double) / 100.0 AS running_spend,
@@ -106,22 +67,9 @@ object Windows {
     * l_returnflag (3 values): correct, but 3 window partitions means 3 tasks
     * own the whole table however many executors exist — the canonical
     * low-cardinality window-key anti-pattern (4.8s → ~1s at sf0.1, and the
-    * gap only widens with scale). */
-  val windowRangeFrame: Q = (s, d) => {
-    val w = Window.partitionBy(col("l_orderkey")).orderBy(col("l_quantity"))
-      .rangeBetween(-5, Window.currentRow)
-    Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-              col("l_suppkey"), col("l_quantity"),
-              sum(col("l_quantity")).over(w).as("nbhd_qty"),
-              count(lit(1)).over(w).as("nbhd_n"))
-    // registered SORT-FREE (round 13): the trailing 4-key orderBy was
-    // comparator-only (lineitem's full unique key — see the dtype/order
-    // gotchas) and at the 128× probe it re-sorted the 76.8M-row window
-    // output through a second range exchange. Dump order lives in
-    // the op's sort keys (Relational.LineitemKey).
-  }
-
+    * gap only widens with scale). Registered SORT-FREE (round 13): the
+    * trailing 4-key ORDER BY was comparator-only, and at the 128× probe it
+    * re-sorted the 76.8M-row window output through a second range exchange. */
   val windowRangeFrameSql: String =
     """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity,
       |  sum(l_quantity) OVER w AS nbhd_qty,
@@ -131,15 +79,6 @@ object Windows {
       |             RANGE BETWEEN 5 PRECEDING AND CURRENT ROW)""".stripMargin
 
   /** first/last value over the full partition frame. */
-  val windowFirstLast: Q = (s, d) => {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    Tables.events(s, d)
-      .select(col("user_id"), col("event_id"),
-              first(col("event_type")).over(w).as("first_type"),
-              last(col("event_type")).over(w).as("last_type"))
-  }
-
   val windowFirstLastSql: String =
     """SELECT user_id, event_id,
       |  first_value(event_type) OVER w AS first_type,
@@ -149,15 +88,6 @@ object Windows {
       |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin
 
   /** Per-group top-k (secondary-sort + reducer-head idiom). */
-  val topkPerGroup: Q = (s, d) => {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    Tables.orders(s, d)
-      .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
-              row_number().over(w).as("rn"))
-      .where(col("rn") <= 3)
-  }
-
   val topkPerGroupSql: String =
     """SELECT * FROM (
       |  SELECT o_custkey, o_orderkey, o_totalprice,
@@ -165,16 +95,6 @@ object Windows {
       |  FROM orders)
       |WHERE rn <= 3""".stripMargin
 
-  /** Distribution analytics: percent_rank / cume_dist / deciles of customer
-    * balance within each nation. percent_rank = (rank-1)/(n-1) and
-    * cume_dist = rank/n are single IEEE divisions of identical integers —
-    * bit-identical across engines — but round 9 proved unrounded doubles do
-    * not survive the driver's hash canonicalization, so the outputs go
-    * through [[graft.Dsl.round6]]. NOT native round(_, 6): that broke on
-    * rounding-mode ties here (Spark rounds the shortest decimal repr
-    * HALF_UP, DuckDB rounds the binary value — 0.0640625 flipped at sf0.1);
-    * round6's floor spelling is the same IEEE arithmetic in both engines,
-    * tie-safe by construction. Ties on c_acctbal rank identically. */
   /** Batch sessionization as gaps-and-islands: a session breaks when the
     * gap to the user's previous event exceeds 30 minutes; the session index
     * is a running sum of break flags. The WINDOW-FUNCTION twin of the
@@ -187,25 +107,6 @@ object Windows {
     * sum (Spark plans a single Window node), where the streaming path
     * merges sessions in the state store. Determinism: events are ordered
     * by (ts, event_id) so equal timestamps cannot reorder. */
-  val windowSessionGap: Q = (s, d) => {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val runing = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.events(s, d)
-      .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
-      .withColumn("is_new",
-        when(col("prev_ts").isNull ||
-             unix_micros(col("ts")) - unix_micros(col("prev_ts")) > 1800L * 1000000, 1L)
-          .otherwise(0L))
-      .withColumn("session_idx", sum(col("is_new")).over(runing))
-      .groupBy("user_id", "session_idx")
-      .agg(count(lit(1)).as("n_events"),
-           min(col("ts")).as("s_start"),
-           max(col("ts")).as("s_end"))
-  }
-
   val windowSessionGapSql: String =
     """WITH flagged AS (
       |  SELECT user_id, event_id, ts,
@@ -308,21 +209,18 @@ object Windows {
       |FROM grid g
       |LEFT JOIN per_hour p ON g.user_id = p.user_id AND g.hr = p.hr""".stripMargin
 
-  val windowDistribution: Q = (s, d) => {
-    val byBal = Window.partitionBy(col("n_name")).orderBy(col("c_acctbal"))
-    val byBalKey = Window.partitionBy(col("n_name"))
-      .orderBy(col("c_acctbal"), col("c_custkey"))
-    Tables.customer(s, d)
-      .join(broadcast(Tables.nation(s, d)),
-            col("c_nationkey") === col("n_nationkey"))
-      .select(col("n_name"), col("c_custkey"), col("c_acctbal"),
-              round6(percent_rank().over(byBal)).as("pr"),
-              round6(cume_dist().over(byBal)).as("cd"),
-              ntile(10).over(byBalKey).as("decile"))
-  }
-
+  /** Distribution analytics: percent_rank / cume_dist / deciles of customer
+    * balance within each nation. percent_rank = (rank-1)/(n-1) and
+    * cume_dist = rank/n are single IEEE divisions of identical integers —
+    * bit-identical across engines — but round 9 proved unrounded doubles do
+    * not survive the driver's hash canonicalization, so the outputs go
+    * through [[graft.Dsl.round6]]. NOT native round(_, 6): that broke on
+    * rounding-mode ties here (Spark rounds the shortest decimal repr
+    * HALF_UP, DuckDB rounds the binary value — 0.0640625 flipped at sf0.1);
+    * round6's floor spelling is the same IEEE arithmetic in both engines,
+    * tie-safe by construction. Ties on c_acctbal rank identically. */
   val windowDistributionSql: String =
-    s"""SELECT n_name, c_custkey, c_acctbal,
+    s"""SELECT /*+ BROADCAST(nation) */ n_name, c_custkey, c_acctbal,
        |  ${round6Sql("percent_rank() OVER (PARTITION BY n_name ORDER BY c_acctbal)")} AS pr,
        |  ${round6Sql("cume_dist() OVER (PARTITION BY n_name ORDER BY c_acctbal)")} AS cd,
        |  cast(ntile(10) OVER (PARTITION BY n_name ORDER BY c_acctbal, c_custkey) as int) AS decile
@@ -331,24 +229,12 @@ object Windows {
   // ---- §2.6 sorts / limits / top-k ---------------------------------------
 
   /** Total-order global sort (TeraSort lineage: range partition + local sort). */
-  val sortGlobal: Q = (s, d) =>
-    Tables.lineitem(s, d)
-      .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_extendedprice")
-      .orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"),
-               col("l_partkey"), col("l_suppkey"))
-
   val sortGlobalSql: String =
     """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_extendedprice
       |FROM lineitem
       |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin
 
   /** Global top-k without a full sort (TakeOrderedAndProject). */
-  val sortTopk: Q = (s, d) =>
-    Tables.orders(s, d)
-      .select("o_orderkey", "o_totalprice")
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      .limit(100)
-
   val sortTopkSql: String =
     """SELECT o_orderkey, o_totalprice FROM orders
       |ORDER BY o_totalprice DESC, o_orderkey
@@ -360,24 +246,12 @@ object Windows {
     * they're contiguous in the total order); when downstream only needs
     * per-key locality, `repartition(user).sortWithinPartitions(...)` does it
     * without the global exchange — that variant is exercised in ScalaTest. */
-  val sortSecondary: Q = (s, d) =>
-    Tables.events(s, d)
-      .select("user_id", "ts", "event_id", "event_type")
-      .orderBy("user_id", "ts", "event_id")
-
   val sortSecondarySql: String =
     """SELECT user_id, ts, event_id, event_type
       |FROM events
       |ORDER BY user_id, ts, event_id""".stripMargin
 
   /** LIMIT/OFFSET pagination over a total order. */
-  val limitOffset: Q = (s, d) =>
-    Tables.customer(s, d)
-      .select("c_custkey", "c_name", "c_acctbal")
-      .orderBy("c_custkey")
-      .offset(100)
-      .limit(50)
-
   val limitOffsetSql: String =
     """SELECT c_custkey, c_name, c_acctbal FROM customer
       |ORDER BY c_custkey
@@ -428,24 +302,20 @@ object Windows {
     * dump by these keys and the oracle's ORDER BY is derived from them. The
     * sort_* family keeps its sorts: there the total order IS the semantics. */
   val ops: Seq[Op] = Seq(
-    Op("window_ranking", windowRanking, Sql(windowRankingSql), Seq("o_custkey", "o_orderkey")),
-    Op("window_ntile", windowNtile, Sql(windowNtileSql), Seq("c_mktsegment", "c_custkey")),
-    Op("window_lag_lead", windowLagLead, Sql(windowLagLeadSql), Seq("user_id", "event_id")),
-    Op("window_running_rows", windowRunningRows,
-      Sql(windowRunningRowsSql), Seq("o_custkey", "o_orderkey")),
-    Op("window_range_frame", windowRangeFrame,
-      Sql(windowRangeFrameSql), Relational.LineitemKey),
-    Op("window_first_last", windowFirstLast, Sql(windowFirstLastSql), Seq("user_id", "event_id")),
-    Op("window_distribution", windowDistribution,
-      Sql(windowDistributionSql), Seq("n_name", "c_acctbal", "c_custkey")),
-    Op("window_session_gap", windowSessionGap,
-      Sql(windowSessionGapSql), Seq("user_id", "session_idx")),
+    Op.shared("window_ranking", windowRankingSql, Seq("o_custkey", "o_orderkey")),
+    Op.shared("window_ntile", windowNtileSql, Seq("c_mktsegment", "c_custkey")),
+    Op.shared("window_lag_lead", windowLagLeadSql, Seq("user_id", "event_id")),
+    Op.shared("window_running_rows", windowRunningRowsSql, Seq("o_custkey", "o_orderkey")),
+    Op.shared("window_range_frame", windowRangeFrameSql, Relational.LineitemKey),
+    Op.shared("window_first_last", windowFirstLastSql, Seq("user_id", "event_id")),
+    Op.shared("window_distribution", windowDistributionSql, Seq("n_name", "c_acctbal", "c_custkey")),
+    Op.shared("window_session_gap", windowSessionGapSql, Seq("user_id", "session_idx")),
     Op("window_gap_fill", windowGapFill, Sql(windowGapFillSql), Seq("g.user_id", "g.hr")),
     Op("window_ewma", windowEwma, Sql(windowEwmaSql), Seq("user_id")),
-    Op("topk_per_group", topkPerGroup, Sql(topkPerGroupSql), Seq("o_custkey", "rn")),
-    Op("sort_global", sortGlobal, Sql(sortGlobalSql)),
-    Op("sort_topk", sortTopk, Sql(sortTopkSql)),
-    Op("sort_secondary", sortSecondary, Sql(sortSecondarySql)),
-    Op("limit_offset", limitOffset, Sql(limitOffsetSql)),
+    Op.shared("topk_per_group", topkPerGroupSql, Seq("o_custkey", "rn")),
+    Op.shared("sort_global", sortGlobalSql),
+    Op.shared("sort_topk", sortTopkSql),
+    Op.shared("sort_secondary", sortSecondarySql),
+    Op.shared("limit_offset", limitOffsetSql),
   )
 }

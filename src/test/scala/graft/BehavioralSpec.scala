@@ -14,7 +14,7 @@ import graft.operators.{Behavioral, DataQuality, Windows}
 class BehavioralSpec extends SparkSpec {
 
   test("funnel step counts are monotone and step 1 counts distinct viewers") {
-    val rows = Behavioral.eventsFunnel(spark, sfDir).collect()
+    val rows = SparkEntry.queries("events_funnel")(spark, sfDir).collect()
     assert(rows.map(_.getInt(0)).toSeq == Seq(1, 2, 3))
     val Seq(n1, n2, n3) = rows.map(_.getLong(1)).toSeq
     assert(n1 >= n2 && n2 >= n3, s"funnel must shrink: $n1 >= $n2 >= $n3")
@@ -71,7 +71,7 @@ class BehavioralSpec extends SparkSpec {
       .count(_.isInstanceOf[ExpandExec]) == 0)
     // the funnel's shrinking stages must stay equi-joins — a nested-loop or
     // cartesian here would be quadratic in users at scale
-    val fun = Behavioral.eventsFunnel(spark, sfDir)
+    val fun = SparkEntry.queries("events_funnel")(spark, sfDir)
     fun.collect()
     val funNodes = flattenPlan(fun.queryExecution.executedPlan)
     assert(!funNodes.exists(n => n.isInstanceOf[CartesianProductExec] ||
@@ -86,7 +86,7 @@ class BehavioralSpec extends SparkSpec {
   }
 
   test("attribution conserves revenue and the per-view share recombines") {
-    val rows = Behavioral.eventsAttribution(spark, sfDir).collect()
+    val rows = SparkEntry.queries("events_attribution")(spark, sfDir).collect()
     val attributed = rows.map(_.getDouble(3)).sum
     val totalPurchases = Tables.events(spark, sfDir)
       .where(col("event_type") === "purchase")

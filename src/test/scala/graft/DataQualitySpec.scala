@@ -88,7 +88,7 @@ class DataQualitySpec extends SparkSpec {
   }
 
   test("markov: each source row is a distribution over observed destinations") {
-    val rows = Behavioral.eventsMarkov(spark, sfDir).collect()
+    val rows = SparkEntry.queries("events_markov")(spark, sfDir).collect()
     rows.groupBy(_.getString(0)).foreach { case (src, rs) =>
       val total = rs.map(_.getDouble(3)).sum
       assert(math.abs(total - 1.0) < 1e-4, s"$src row sums to $total")

@@ -1,7 +1,6 @@
 package graft
 
-import graft.operators.{Aggregates, Relational, Windows}
-import graft.functions.Classics
+import graft.operators.{Relational, Windows}
 
 /** SURVEY.md §4.2 — physical-plan invariants. These are the 100 TB-scale
   * guarantees: broadcast where a dim is small, partial+final aggregation,
@@ -62,26 +61,26 @@ class ExplainInvariantsSpec extends SparkSpec {
   }
 
   test("join_broadcast plans a BroadcastHashJoin") {
-    assert(plan(Relational.joinBroadcast(spark, sfDir)).contains("BroadcastHashJoin"))
+    assert(plan(SparkEntry.queries("join_broadcast")(spark, sfDir)).contains("BroadcastHashJoin"))
   }
 
   test("agg_hash_group plans partial+final HashAggregate") {
-    val p = plan(Aggregates.aggHashGroup(spark, sfDir))
+    val p = plan(SparkEntry.queries("agg_hash_group")(spark, sfDir))
     assert("HashAggregate".r.findAllIn(p).size >= 2)
   }
 
   test("sort_topk plans TakeOrderedAndProject (no global sort)") {
-    val p = plan(Windows.sortTopk(spark, sfDir))
+    val p = plan(SparkEntry.queries("sort_topk")(spark, sfDir))
     assert(p.contains("TakeOrderedAndProject"))
   }
 
   test("filtered parquet scan pushes predicates into the reader") {
-    val p = plan(Relational.scanParquet(spark, sfDir))
+    val p = plan(SparkEntry.queries("scan_parquet")(spark, sfDir))
     assert(p.contains("PushedFilters: [") && !p.contains("PushedFilters: []"))
   }
 
   test("scan reads only projected columns (column pruning)") {
-    val p = plan(Relational.scanParquet(spark, sfDir))
+    val p = plan(SparkEntry.queries("scan_parquet")(spark, sfDir))
     // ReadSchema must not include money columns the query never touches
     assert(p.contains("ReadSchema") && !p.contains("l_extendedprice"))
   }
@@ -89,12 +88,12 @@ class ExplainInvariantsSpec extends SparkSpec {
   test("mr_chain fuses narrow ops into whole-stage codegen") {
     // `*(n)` is the whole-stage-codegen stage marker in the final AQE plan;
     // filter and project must share stage *(1) — fused, no materialization.
-    val p = finalPlan(Classics.mrChain(spark, sfDir))
+    val p = finalPlan(SparkEntry.queries("mr_chain")(spark, sfDir))
     assert(p.contains("*(1) Project") && p.contains("*(1) Filter"), p)
   }
 
   test("flagship broadcasts the customer dimension") {
-    assert(plan(SparkEntry.flagship(spark, sfDir)).contains("BroadcastHashJoin"))
+    assert(plan(SparkEntry.queries("flagship")(spark, sfDir)).contains("BroadcastHashJoin"))
   }
 
   test("join_broadcast and flagship broadcast by their hints, not by size") {
@@ -104,6 +103,12 @@ class ExplainInvariantsSpec extends SparkSpec {
       for (n <- Seq("join_broadcast", "flagship"))
         assert(plan(SparkEntry.queries(n)(spark, sfDir)).contains("BroadcastHashJoin"), n)
     }
+  }
+
+  test("join_sort_merge sort-merges by its hint, not by size") {
+    // both sides fit the broadcast threshold at fixture scale
+    val p = plan(SparkEntry.queries("join_sort_merge")(spark, sfDir))
+    assert(p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin"), p)
   }
 
   test("sql_star queries keep their Exchange and job counts at sf0.01") {
@@ -402,7 +407,7 @@ class ExplainInvariantsSpec extends SparkSpec {
   }
 
   test("null-safe join stays an equi hash join, not a theta join") {
-    val p = plan(Relational.joinNullSafe(spark, sfDir))
+    val p = plan(SparkEntry.queries("join_null_safe")(spark, sfDir))
     // EqualNullSafe keys hash-partition like any value; BNLJ/Cartesian
     // would mean Spark fell back to a non-equi strategy
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Relational, SetOps, Windows}
+import graft.operators.{Relational, SetOps}
 import graft.llm.Dedup
 import graft.streaming.Streams
 
@@ -11,7 +11,7 @@ class PropertiesSpec extends SparkSpec {
 
   test("sort_global output is a permutation of its input (TeraValidate)") {
     val in = Tables.lineitem(spark, sfDir)
-    val out = Windows.sortGlobal(spark, sfDir)
+    val out = SparkEntry.queries("sort_global")(spark, sfDir)
     assert(out.count() == in.count())
     val a = in.agg(sum(col("l_orderkey")), sum(col("l_linenumber"))).head
     val b = out.agg(sum(col("l_orderkey")), sum(col("l_linenumber"))).head
@@ -33,12 +33,12 @@ class PropertiesSpec extends SparkSpec {
       .where(col("o_orderpriority") === "1-URGENT").count()
     val high = Tables.orders(spark, sfDir)
       .where(col("o_orderpriority") === "2-HIGH").count()
-    assert(SetOps.setUnionAll(spark, sfDir).count() == urgent + high)
+    assert(SparkEntry.queries("set_union_all")(spark, sfDir).count() == urgent + high)
   }
 
   test("semi ⊎ anti partitions the left input") {
     val semi = Relational.joinLeftSemi(spark, sfDir).count()
-    val anti = Relational.joinLeftAnti(spark, sfDir).count()
+    val anti = SparkEntry.queries("join_left_anti")(spark, sfDir).count()
     assert(semi + anti == Tables.customer(spark, sfDir).count())
   }
 

@@ -21,6 +21,12 @@ Exchange counts on each side, and for DIFFERS the first differing line pair.
 An operator present on one side only is MISSING. Exits 1 when any operator
 DIFFERS or is MISSING, else 0.
 
+A query with several DISTINCT aggregates can list its Expand projections in
+another order when the queries planned before it in the same JVM changed:
+Spark groups the distinct aggregates by expression-id hash. Re-plan such an
+operator alone on both sides (`... plans <sfDir> <outDir> <suffix> <name>`)
+before reading its DIFFERS as a change.
+
 Dev tooling only, not part of the shipped library.
 """
 import os
