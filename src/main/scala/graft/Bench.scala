@@ -135,7 +135,7 @@ object Bench {
     }
     // Untimed warmup: JIT the scan/shuffle/agg machinery once so the first
     // measured query doesn't pay the whole session's compilation bill.
-    try SparkEntry.queries("flagship")(spark, sfDir)
+    try SparkEntry.flagship(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
     val all = sys.env.get("SPARK_GRAFT_BENCH_ALL").exists(_.nonEmpty)

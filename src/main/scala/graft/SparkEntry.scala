@@ -50,8 +50,11 @@ object SparkEntry {
        |ORDER BY revenue DESC, l_orderkey
        |LIMIT 10""".stripMargin
 
+  /** The registered flagship plan (the driver's smoke entry and Bench's warm-up). */
+  def flagship: Q = queries("flagship")
+
   def entry(spark: SparkSession): DataFrame =
-    queries("flagship")(spark, "/root/testdata/sf0.001")
+    flagship(spark, "/root/testdata/sf0.001")
 
   /** Every registered operator, in module order. */
   val ops: Seq[Op] =

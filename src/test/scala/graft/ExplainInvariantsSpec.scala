@@ -135,9 +135,10 @@ class ExplainInvariantsSpec extends SparkSpec {
       "stream_session" -> ((1, 2)),
       "skew_salted_join" -> ((3, 4)),
     )
+    val sf01 = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.01").toString
     val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
     val seen = expected.keys.toSeq.sorted.map { n =>
-      val df = SparkEntry.queries(n)(spark, "/root/testdata/sf0.01")
+      val df = SparkEntry.queries(n)(spark, sf01)
       val write = new java.util.concurrent.atomic.AtomicReference[SparkPlan]
       val l = new org.apache.spark.sql.util.QueryExecutionListener {
         def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
