@@ -32,10 +32,9 @@ final case class Op(name: String, build: Q, oracle: Oracle, sort: Seq[String] = 
 }
 
 object Op {
-  /** A plan declared in SQL text, run over the fixture views. */
-  def sqlQuery(sql: String): Q = (s, d) => {
-    Tables.registerViews(s, d); s.sql(sql)
-  }
+  /** A plan declared in SQL text, its fixture table names bound to the
+    * tables of the directory it is built over ([[Tables.sql]]). */
+  def sqlQuery(sql: String): Q = (s, d) => Tables.sql(s, d, sql)
 
   /** An operator whose Spark plan and DuckDB oracle are the same text. With
     * sort keys, Spark runs `sql` sort-free and only the oracle appends the

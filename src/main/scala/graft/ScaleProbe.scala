@@ -41,8 +41,7 @@ object ScaleProbe {
 
   def scaleTable(spark: SparkSession, base: String, name: String, k: Int,
                  outDir: String, regime: String): Unit = {
-    val df = if (name == "events") Tables.events(spark, base)
-             else Tables.load(spark, base, name)
+    val df = Tables.table(spark, base, name)
     val out =
       // k == 1 goes through the SAME copy loop (one copy, i = 0): the
       // default per-copy perturbations are identity at i = 0, and the

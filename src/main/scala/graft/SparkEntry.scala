@@ -25,8 +25,10 @@ import graft.streaming.Streams
   *    ORDER BY of its own. A key may name the oracle's table alias too
   *    (`d.doc_id`); the dump sorts by the column part.
   *  - `Op.shared(name, sql, sort)` runs the same text in both engines:
-  *    Spark runs `sql` as written and the oracle is `sql` plus the ORDER BY
-  *    the sort keys derive. Prefer it wherever the text plans the same as a
+  *    Spark runs `sql` as written, its fixture table names bound to the
+  *    directory's tables in the parsed plan ([[Tables.sql]], no temp view),
+  *    and the oracle is `sql` plus the ORDER BY the sort keys derive.
+  *    Prefer it wherever the text plans the same as a
   *    DataFrame would; a join hint rides the text as a Spark hint comment,
   *    which DuckDB reads as a plain comment.
   * Names are unique across modules; construction checks it.

@@ -1,6 +1,10 @@
 package graft
 
+import java.util.Locale
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.graft.GraftSql
 
 /** Named readers for the driver-generated fixtures (TESTDATA.md).
   *
@@ -13,6 +17,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `FileSystem` API (/root/reference/README.md:4 — public Hadoop release);
   * Spark reads through the very same `FileSystem` stack, so `hdfs://` paths
   * work unchanged on a real cluster.
+  *
+  * SQL text reaches the same readers through [[sql]], which binds the table
+  * names in the parsed plan: no temp view is registered, so building a query
+  * leaves no session state behind for another directory's build to clash with.
   */
 object Tables {
   /** Resolved-scan memo: `spark.read.parquet` runs a footer/schema-inference
@@ -95,13 +103,37 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Register every fixture as a temp view named like the table, so SQL-based
-    * operators can share one query text with the DuckDB oracle. */
-  def registerViews(s: SparkSession, d: String): Unit =
-    names.foreach { n =>
-      val df = if (n == "events") events(s, d) else load(s, d, n)
-      df.createOrReplaceTempView(n)
+  /** Resolve every fixture of `d` into the memo, registering nothing. Kept
+    * under this name because the benchmark harness (perfbench) times its
+    * table resolution with it. */
+  def registerViews(s: SparkSession, d: String): Unit = names.foreach(table(s, d, _))
+
+  /** Fixture `n` as every operator reads it: [[events]] through its encoding
+    * adapter, any other table straight from the memo. */
+  def table(s: SparkSession, d: String, n: String): DataFrame =
+    if (n == "events") events(s, d) else load(s, d, n)
+
+  /** Run SQL `text` over the fixtures of `d`, the text Spark shares with the
+    * DuckDB oracle. Each single-part table name in [[names]], in the plan,
+    * its subqueries and its CTE bodies, is bound in the parsed plan to the
+    * analyzed relation of [[table]], as a catalog table reference would be:
+    * no temp view, no catalog lookup, and only the tables the text names are
+    * resolved. Any other name (a CTE, a table the text creates) resolves
+    * through the session as usual; a CTE may not reuse a fixture name, which
+    * this binding would shadow. */
+  def sql(s: SparkSession, d: String, text: String): DataFrame = {
+    def fixture(name: String) = names.contains(name.toLowerCase(Locale.ROOT))
+    def bind(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
+      case UnresolvedRelation(Seq(n), _, _) if fixture(n) =>
+        SubqueryAlias(n, table(s, d, n.toLowerCase(Locale.ROOT)).queryExecution.analyzed)
+      case w: UnresolvedWith => // CTE bodies are neither children nor subqueries
+        require(!w.cteRelations.exists(c => fixture(c._1)),
+          s"a CTE shadows a fixture table: ${w.cteRelations.map(_._1).mkString(", ")}")
+        w.copy(cteRelations =
+          w.cteRelations.map(c => c.copy(_2 = bind(c._2).asInstanceOf[SubqueryAlias])))
     }
+    GraftSql.ofRows(s, bind(s.sessionState.sqlParser.parsePlan(text)))
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = load(s, d, "nation")

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{NoOracle, Op, Q, Sql, Tables}
+import graft.llm.Text
 
 /** §2.9 MapReduce classics — the examples-jar conformance suite re-expressed
   * (SURVEY.md). WordCount/Grep/etc. are the de-facto capability proofs of a
@@ -17,7 +18,7 @@ object Classics {
   private def tokens(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
-              explode(graft.llm.Text.words(col("text"))).as("w"))
+              explode(Text.words(col("text"))).as("w"))
 
   /** WordCount (~60 LoC of MR): tokenize, count per token. */
   val mrWordcount: Q = (s, d) =>
@@ -26,11 +27,10 @@ object Classics {
       .orderBy(col("cnt").desc, col("w"))
 
   val mrWordcountSql: String =
-    """SELECT w, count(*) AS cnt
-      |FROM (SELECT unnest(string_split_regex(lower(text), '\s+')) AS w FROM documents)
-      |WHERE w <> ''
-      |GROUP BY w
-      |ORDER BY cnt DESC, w""".stripMargin
+    s"""SELECT w, count(*) AS cnt
+       |FROM (SELECT unnest(${Text.wordsSql("text")}) AS w FROM documents)
+       |GROUP BY w
+       |ORDER BY cnt DESC, w""".stripMargin
 
   /** Per-source word counts (MultiFileWordCount idiom: input tag in the key). */
   val mrMultifilewc: Q = (s, d) =>
@@ -39,11 +39,10 @@ object Classics {
       .orderBy(col("source"), col("cnt").desc, col("w"))
 
   val mrMultifilewcSql: String =
-    """SELECT source, w, count(*) AS cnt
-      |FROM (SELECT source, unnest(string_split_regex(lower(text), '\s+')) AS w FROM documents)
-      |WHERE w <> ''
-      |GROUP BY source, w
-      |ORDER BY source, cnt DESC, w""".stripMargin
+    s"""SELECT source, w, count(*) AS cnt
+       |FROM (SELECT source, unnest(${Text.wordsSql("text")}) AS w FROM documents)
+       |GROUP BY source, w
+       |ORDER BY source, cnt DESC, w""".stripMargin
 
   /** Grep example: extract matches of a pattern, count, sort desc. */
   val mrGrep: Q = (s, d) =>

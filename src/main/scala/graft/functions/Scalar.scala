@@ -285,14 +285,12 @@ object Scalar {
     * not inline a non-cheap expression referenced three times, so the
     * variant binary is built once and probed thrice (the whole point of
     * the encoding: parse once, extract many). */
-  val fnVariant: Q = (s, d) => {
-    Tables.registerViews(s, d)
-    s.sql("""SELECT event_id,
-            |  cast(variant_get(v, '$.k', 'int') as int) AS k_int,
-            |  cast(variant_get(v, '$.k', 'string') as string) AS k_str,
-            |  cast(try_variant_get(v, '$.missing', 'int') IS NULL as int) AS missing_is_null
-            |FROM (SELECT event_id, parse_json(props) AS v FROM events)""".stripMargin)
-  }
+  val fnVariant: Q = Op.sqlQuery(
+    """SELECT event_id,
+      |  cast(variant_get(v, '$.k', 'int') as int) AS k_int,
+      |  cast(variant_get(v, '$.k', 'string') as string) AS k_str,
+      |  cast(try_variant_get(v, '$.missing', 'int') IS NULL as int) AS missing_is_null
+      |FROM (SELECT event_id, parse_json(props) AS v FROM events)""".stripMargin)
 
   val fnVariantSql: String =
     """SELECT event_id,
@@ -305,16 +303,14 @@ object Scalar {
     * fragment, parse it back with an explicit schema, and project the typed
     * fields — the round-trip proves parser + schema mapping. The oracle
     * recomputes the identity straight from the base table. */
-  val fnXml: Q = (s, d) => {
-    Tables.registerViews(s, d)
-    s.sql("""SELECT n_nationkey,
-            |  xml.k AS k, xml.name AS name
-            |FROM (
-            |  SELECT n_nationkey,
-            |    from_xml(concat('<r><k>', n_nationkey, '</k><name>', n_name, '</name></r>'),
-            |             'k INT, name STRING') AS xml
-            |  FROM nation)""".stripMargin)
-  }
+  val fnXml: Q = Op.sqlQuery(
+    """SELECT n_nationkey,
+      |  xml.k AS k, xml.name AS name
+      |FROM (
+      |  SELECT n_nationkey,
+      |    from_xml(concat('<r><k>', n_nationkey, '</k><name>', n_name, '</name></r>'),
+      |             'k INT, name STRING') AS xml
+      |  FROM nation)""".stripMargin)
 
   val fnXmlSql: String =
     """SELECT n_nationkey, cast(n_nationkey as int) AS k, n_name AS name

@@ -408,7 +408,7 @@ object Curation {
     val n = DecontamNgramN
     s"""WITH t AS (
        |  SELECT doc_id, source,
-       |         list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS t
+       |         ${Text.wordsSql("text")} AS t
        |  FROM documents),
        |g AS (
        |  SELECT doc_id, source, array_to_string(t[i:i+${n - 1}], ' ') AS g
@@ -584,7 +584,7 @@ object Curation {
   val seqPackSql: String =
     s"""WITH t AS (
        |  SELECT doc_id, lang,
-       |    cast(len(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) as bigint) AS n_toks
+       |    cast(len(${Text.wordsSql("text")}) as bigint) AS n_toks
        |  FROM documents),
        |pos AS (
        |  SELECT doc_id, lang, n_toks,
@@ -693,13 +693,13 @@ object Curation {
                        x => x.cast("string"))).as("postings"))
 
   val invertedIndexSql: String =
-    """WITH toks AS (
-      |  SELECT DISTINCT doc_id,
-      |    unnest(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')) AS w
-      |  FROM documents)
-      |SELECT w AS term, count(*) AS df,
-      |  array_to_string(list_sort(list(doc_id)), '|') AS postings
-      |FROM toks GROUP BY w""".stripMargin
+    s"""WITH toks AS (
+       |  SELECT DISTINCT doc_id,
+       |    unnest(${Text.wordsSql("text")}) AS w
+       |  FROM documents)
+       |SELECT w AS term, count(*) AS df,
+       |  array_to_string(list_sort(list(doc_id)), '|') AS postings
+       |FROM toks GROUP BY w""".stripMargin
 
   // ---- end-to-end curation composite --------------------------------------
 

@@ -113,13 +113,13 @@ object Dedup {
       .select(col("doc_id"), size(col("shs")).cast("bigint").as("n_sh"))
 
   val shinglesSqlCte: String =
-    """toks AS (
-      |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS t
-      |  FROM documents),
-      |shingles AS (
-      |  SELECT DISTINCT doc_id, array_to_string(t[i:i+4], ' ') AS sh
-      |  FROM toks, unnest(generate_series(1, len(t) - 4)) AS g(i)
-      |  WHERE len(t) >= 5)""".stripMargin
+    s"""toks AS (
+       |  SELECT doc_id, ${Text.wordsSql("text")} AS t
+       |  FROM documents),
+       |shingles AS (
+       |  SELECT DISTINCT doc_id, array_to_string(t[i:i+4], ' ') AS sh
+       |  FROM toks, unnest(generate_series(1, len(t) - 4)) AS g(i)
+       |  WHERE len(t) >= 5)""".stripMargin
 
   /** Exact content dedup: one representative (min doc_id) per sha256. */
   val exactDedup: Q = (s, d) =>
@@ -771,7 +771,7 @@ object Dedup {
 
   def substringDedupSqlAt(w: Int): String =
     s"""WITH toks AS (
-       |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS t
+       |  SELECT doc_id, ${Text.wordsSql("text")} AS t
        |  FROM documents),
        |spans AS (
        |  SELECT doc_id, md5(array_to_string(t[i:i+${w - 1}], ' ')) AS g
@@ -832,7 +832,7 @@ object Dedup {
 
   val winnowFingerprintSql: String =
     s"""WITH toks AS (
-       |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS t
+       |  SELECT doc_id, ${Text.wordsSql("text")} AS t
        |  FROM documents),
        |hs AS (
        |  SELECT doc_id, len(t) - 4 AS n_shingles,

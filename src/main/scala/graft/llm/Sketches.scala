@@ -49,9 +49,9 @@ object Sketches {
       .select(explode(Text.words(col("text"))).as("w"))
 
   private val toksSqlCte: String =
-    """toks AS (
-      |  SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')) AS w
-      |  FROM documents)""".stripMargin
+    s"""toks AS (
+       |  SELECT unnest(${Text.wordsSql("text")}) AS w
+       |  FROM documents)""".stripMargin
 
   /** Heavy hitters: exact top-20 tokens with their CMS estimates and the
     * sketch's overestimate — the validation view a pipeline uses before

@@ -5,9 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** The text front end every DataFrame operator shares: one word tokenizer
   * and one positional n-gram window. Changing the token rule, or swapping in
-  * a dedicated kernel, happens here and nowhere else. The DuckDB oracle SQL
-  * spells the same rule on its own (`string_split_regex(lower(text), '\s+')`
-  * with empty strings dropped) and is the reference these are checked
+  * a dedicated kernel, happens here and nowhere else. [[wordsSql]] is the
+  * same rule in the DuckDB oracle's dialect, the reference these are checked
   * against.
   */
 object Text {
@@ -20,6 +19,11 @@ object Text {
     * `ArrayRemove` generates code. */
   def words(text: Column): Column =
     array_remove(split(lower(text), "\\s+"), "")
+
+  /** [[words]] as DuckDB SQL over the column expression `text`, the one
+    * spelling every oracle text uses. */
+  def wordsSql(text: String): String =
+    s"list_filter(string_split_regex(lower($text), '\\s+'), t -> t <> '')"
 
   /** The positional n-token windows of a token array, in order, each joined
     * with a single space and mapped by `digest` inside the same lambda (so

@@ -123,10 +123,10 @@ object TextAnalysis {
       .transform(graft.Caching.cachedOnce)
 
   private val toksSqlCte: String =
-    """toks AS (
-      |  SELECT doc_id, lang, source, n_chars,
-      |         unnest(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')) AS w
-      |  FROM documents)""".stripMargin
+    s"""toks AS (
+       |  SELECT doc_id, lang, source, n_chars,
+       |         unnest(${Text.wordsSql("text")}) AS w
+       |  FROM documents)""".stripMargin
 
   /** Corpus analytics per language. */
   val textStats: Q = (s, d) =>
@@ -164,11 +164,11 @@ object TextAnalysis {
       .select("doc_id", "lang", "n_chars", "n_toks")
 
   val langFilterSql: String =
-    """SELECT doc_id, lang, n_chars,
-      |  cast(len(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')) as int) AS n_toks
-      |FROM documents
-      |WHERE lang = 'en' AND n_chars BETWEEN 100 AND 400
-      |  AND len(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')) >= 20""".stripMargin
+    s"""SELECT doc_id, lang, n_chars,
+       |  cast(len(${Text.wordsSql("text")}) as int) AS n_toks
+       |FROM documents
+       |WHERE lang = 'en' AND n_chars BETWEEN 100 AND 400
+       |  AND len(${Text.wordsSql("text")}) >= 20""".stripMargin
 
   /** Heuristic language-ID: score each doc against per-language keyword
     * profiles (n-gram-frequency heuristic), predict the argmax. Integer
@@ -478,17 +478,17 @@ object TextAnalysis {
       .limit(100)
 
   val ngramsSql: String =
-    """WITH t AS (
-      |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t
-      |  FROM documents),
-      |bi AS (
-      |  SELECT t[i] || ' ' || t[i+1] AS bigram
-      |  FROM t, unnest(generate_series(1, len(t) - 1)) AS g(i)
-      |  WHERE len(t) >= 2)
-      |SELECT bigram, count(*) AS cnt
-      |FROM bi GROUP BY bigram
-      |ORDER BY cnt DESC, bigram
-      |LIMIT 100""".stripMargin
+    s"""WITH t AS (
+       |  SELECT doc_id, ${Text.wordsSql("text")} AS t
+       |  FROM documents),
+       |bi AS (
+       |  SELECT t[i] || ' ' || t[i+1] AS bigram
+       |  FROM t, unnest(generate_series(1, len(t) - 1)) AS g(i)
+       |  WHERE len(t) >= 2)
+       |SELECT bigram, count(*) AS cnt
+       |FROM bi GROUP BY bigram
+       |ORDER BY cnt DESC, bigram
+       |LIMIT 100""".stripMargin
 
   /** Lexicon-based sentiment scoring (broadcast lexicon join). */
   val sentimentLexicon: Seq[(String, Int)] =
@@ -533,7 +533,7 @@ object TextAnalysis {
     s"""SELECT doc_id, lang, label,
        |  cast(len(embedding) as int) AS dim,
        |  ${round6Sql(s"sqrt(${Similarity.dotSql("embedding", "embedding")})")} AS l2_norm,
-       |  cast(len(list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')) as int) AS n_toks
+       |  cast(len(${Text.wordsSql("text")}) as int) AS n_toks
        |FROM documents JOIN embeddings ON doc_id = vec_id""".stripMargin
 
   /** Token counting two ways: whitespace tokens and a BPE-ish subword count
@@ -547,11 +547,11 @@ object TextAnalysis {
         length(col("text")).as("n_chars2"))
 
   val tokenCountSql: String =
-    """SELECT doc_id,
-      |  cast(len(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')) as int) AS ws_toks,
-      |  cast(len(regexp_extract_all(lower(text), '([a-z]{1,4})', 1)) as int) AS bpeish_toks,
-      |  cast(length(text) as int) AS n_chars2
-      |FROM documents""".stripMargin
+    s"""SELECT doc_id,
+       |  cast(len(${Text.wordsSql("text")}) as int) AS ws_toks,
+       |  cast(len(regexp_extract_all(lower(text), '([a-z]{1,4})', 1)) as int) AS bpeish_toks,
+       |  cast(length(text) as int) AS n_chars2
+       |FROM documents""".stripMargin
 
   /** Polynomial rolling hash over the token stream (content fingerprint that
     * is order-sensitive, unlike the min-shingle fingerprint): a left fold of
@@ -568,13 +568,13 @@ object TextAnalysis {
   }
 
   val rollingHashSql: String =
-    """SELECT doc_id,
-      |  list_reduce(
-      |    list_prepend(cast(0 as bigint),
-      |      list_transform(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> ''),
-      |                     t -> cast(ascii(t) * 131 + length(t) as bigint))),
-      |    (acc, c) -> ((acc * 31 + c) % 2147483647 + 2147483647) % 2147483647) AS rhash
-      |FROM documents""".stripMargin
+    s"""SELECT doc_id,
+       |  list_reduce(
+       |    list_prepend(cast(0 as bigint),
+       |      list_transform(${Text.wordsSql("text")},
+       |                     t -> cast(ascii(t) * 131 + length(t) as bigint))),
+       |    (acc, c) -> ((acc * 31 + c) % 2147483647 + 2147483647) % 2147483647) AS rhash
+       |FROM documents""".stripMargin
 
   /** End-to-end training-data pipeline composite: exact dedup (min-id
     * survivor per content hash) → quality gate (char band + minimum token
@@ -610,18 +610,17 @@ object TextAnalysis {
   }
 
   val pipelineE2eSql: String =
-    """WITH keep AS (
-      |  SELECT min(doc_id) AS doc_id FROM documents GROUP BY sha256(text)),
-      |docs AS (
-      |  SELECT d.*, cast(len(list_filter(string_split_regex(lower(text), '\s+'),
-      |                                   t -> t <> '')) as int) AS n_toks
-      |  FROM documents d JOIN keep USING (doc_id))
-      |SELECT lang, source, count(*) AS kept_docs,
-      |  cast(sum(n_toks) as bigint) AS total_toks,
-      |  cast(sum(n_chars) as bigint) AS sum_chars
-      |FROM docs
-      |WHERE n_chars BETWEEN 100 AND 2000 AND n_toks >= 10
-      |GROUP BY lang, source""".stripMargin
+    s"""WITH keep AS (
+       |  SELECT min(doc_id) AS doc_id FROM documents GROUP BY sha256(text)),
+       |docs AS (
+       |  SELECT d.*, cast(len(${Text.wordsSql("text")}) as int) AS n_toks
+       |  FROM documents d JOIN keep USING (doc_id))
+       |SELECT lang, source, count(*) AS kept_docs,
+       |  cast(sum(n_toks) as bigint) AS total_toks,
+       |  cast(sum(n_chars) as bigint) AS sum_chars
+       |FROM docs
+       |WHERE n_chars BETWEEN 100 AND 2000 AND n_toks >= 10
+       |GROUP BY lang, source""".stripMargin
 
   /** Intra-document repetition filter (the Gopher/C4-style quality rule the
     * inter-document dedup family cannot express): fraction of DUPLICATED
@@ -667,7 +666,7 @@ object TextAnalysis {
     s"""WITH $toksSqlCte,
        |arr AS (
        |  SELECT doc_id, lang,
-       |    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS t
+       |    ${Text.wordsSql("text")} AS t
        |  FROM documents),
        |bi AS (
        |  SELECT doc_id, lang,
@@ -1061,7 +1060,7 @@ object TextAnalysis {
   val docChunksSql: String =
     s"""WITH arr AS (
        |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS t
+       |    ${Text.wordsSql("text")} AS t
        |  FROM documents),
        |base AS (
        |  SELECT doc_id, t, cast(len(t) as bigint) AS n_toks
@@ -1186,7 +1185,7 @@ object TextAnalysis {
     s"""WITH tk AS (
        |  SELECT doc_id, g.i AS pos, t[g.i] AS tok
        |  FROM (SELECT doc_id,
-       |          list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS t
+       |          ${Text.wordsSql("text")} AS t
        |        FROM documents),
        |       unnest(generate_series(1, len(t))) AS g(i)),
        |n AS (SELECT doc_id, count(*) AS n_toks FROM tk GROUP BY doc_id),

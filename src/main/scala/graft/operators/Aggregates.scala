@@ -57,19 +57,17 @@ object Aggregates {
     * DataSketches encoding). At 100 TB this is the pattern every per-shard
     * stats job relies on: sketch per partition of work, union the KB-sized
     * states. */
-  val aggHllMerge: Q = (s, d) => {
-    Tables.registerViews(s, d)
-    s.sql("""SELECT 'merged_per_source' AS method,
-            |  hll_sketch_estimate(hll_union_agg(sk)) AS distinct_users
-            |FROM (
-            |  SELECT source AS grp, hll_sketch_agg(cast(doc_id % 2000 as string)) AS sk
-            |  FROM documents GROUP BY source)
-            |UNION ALL
-            |SELECT 'single_pass',
-            |  hll_sketch_estimate(hll_sketch_agg(cast(doc_id % 2000 as string)))
-            |FROM documents
-            |ORDER BY method""".stripMargin)
-  }
+  val aggHllMerge: Q = Op.sqlQuery(
+    """SELECT 'merged_per_source' AS method,
+      |  hll_sketch_estimate(hll_union_agg(sk)) AS distinct_users
+      |FROM (
+      |  SELECT source AS grp, hll_sketch_agg(cast(doc_id % 2000 as string)) AS sk
+      |  FROM documents GROUP BY source)
+      |UNION ALL
+      |SELECT 'single_pass',
+      |  hll_sketch_estimate(hll_sketch_agg(cast(doc_id % 2000 as string)))
+      |FROM documents
+      |ORDER BY method""".stripMargin)
 
   /** Sort-agg fallback path: collect_list goes through ObjectHashAggregate
     * with sort-based fallback; rows-only check + EXPLAIN unit test. */
@@ -89,8 +87,7 @@ object Aggregates {
        |FROM customer
        |JOIN nation ON c_nationkey = n_nationkey
        |JOIN region ON n_regionkey = r_regionkey
-       |GROUP BY ROLLUP (r_name, n_name)
-       |ORDER BY g_r, g_n, r_name2, n_name2""".stripMargin
+       |GROUP BY ROLLUP (r_name, n_name)""".stripMargin
 
   /** All grouping combinations over (segment, priority). */
   val aggCubeSql: String =
@@ -127,8 +124,7 @@ object Aggregates {
       |  coalesce(o_orderstatus, 'ALL') AS st, coalesce(o_orderpriority, 'ALL') AS pr,
       |  count(*) AS n
       |FROM orders
-      |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-      |ORDER BY g_st, g_pr, st, pr""".stripMargin
+      |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())""".stripMargin
 
   /** Per-group collected values, sorted for determinism (reducer Iterable). */
   val aggCollect: Q = (s, d) =>
@@ -313,13 +309,11 @@ object Aggregates {
     * the reducer-side "join the values" idiom; WITHIN GROUP fixes the element
     * order so the result is deterministic. DuckDB twin: string_agg with
     * ORDER BY. */
-  val aggListagg: Q = (s, d) => {
-    Tables.registerViews(s, d)
-    s.sql("""SELECT r_name,
-            |  listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name) AS members
-            |FROM nation JOIN region ON n_regionkey = r_regionkey
-            |GROUP BY r_name""".stripMargin)
-  }
+  val aggListagg: Q = Op.sqlQuery(
+    """SELECT r_name,
+      |  listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name) AS members
+      |FROM nation JOIN region ON n_regionkey = r_regionkey
+      |GROUP BY r_name""".stripMargin)
 
   val aggListaggSql: String =
     """SELECT r_name, string_agg(n_name, ',' ORDER BY n_name) AS members
@@ -353,8 +347,8 @@ object Aggregates {
     * (even a tiny sorted output pays an extra AQE stage + range exchange per
     * suite pass). Keys are the group-by keys (unique by construction). Verify
     * sorts the dump by these keys and the oracle's ORDER BY is derived from
-    * them. agg_rollup / agg_grouping_sets keep the ORDER BY inside their
-    * text. */
+    * them. agg_rollup / agg_grouping_sets sort by the grouping() flags and
+    * the coalesced names, none of which can be NULL. */
   val ops: Seq[Op] = Seq(
     Op.shared("agg_mode", aggModeSql, Seq("o_orderstatus")),
     Op("agg_unpivot", aggUnpivot, Sql(aggUnpivotSql), Seq("l_returnflag", "metric")),
@@ -375,9 +369,9 @@ object Aggregates {
     Op("agg_hll_merge", aggHllMerge,
       NoOracle("graft.LlmSpec", "HLL sketch estimates have no bit-equal DuckDB twin")),
     Op("agg_sort_fallback", aggSortFallback, Sql(aggSortFallbackSql), Seq("l_returnflag")),
-    Op.shared("agg_rollup", aggRollupSql),
+    Op.shared("agg_rollup", aggRollupSql, Seq("g_r", "g_n", "r_name2", "n_name2")),
     Op("agg_cube", aggCube, Sql(aggCubeSql), Seq("g_s", "g_p", "seg", "prio")),
-    Op.shared("agg_grouping_sets", aggGroupingSetsSql),
+    Op.shared("agg_grouping_sets", aggGroupingSetsSql, Seq("g_st", "g_pr", "st", "pr")),
     Op("agg_collect", aggCollect, Sql(aggCollectSql), Seq("c_custkey")),
     Op("agg_percentile", aggPercentile, Sql(aggPercentileSql), Seq("l_returnflag")),
     Op.shared("agg_histogram", aggHistogramSql, Seq("bucket")),

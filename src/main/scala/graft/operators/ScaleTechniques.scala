@@ -140,7 +140,6 @@ object ScaleTechniques {
     * would already be the filter). */
   val joinBloomPrefilter: Q = (s, d) => {
     registerBloomFunctions(s)
-    Tables.registerViews(s, d)
     // the filter is built by the codegen'd bloom_filter_agg (the expression
     // behind Spark's own InjectRuntimeFilter; insertion is set-bits so the
     // result is order-independent and deterministic for fixed (n, bits)).
@@ -150,7 +149,7 @@ object ScaleTechniques {
     // driver-side collect-and-rebroadcast, no per-row Scala UDF. The MERGE
     // hint forces a real shuffle join (the honest 100 TB scenario: a
     // broadcastable dim would make the join itself the filter).
-    s.sql(
+    Tables.sql(s, d,
       s"""WITH dim AS (SELECT c_custkey, c_nationkey FROM customer
          |            WHERE c_mktsegment = 'MACHINERY')
          |SELECT /*+ MERGE(dim) */ c_nationkey, count(*) AS n_orders,

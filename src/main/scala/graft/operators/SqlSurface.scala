@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Op, Q, Sql, Tables}
+import graft.llm.Text
 
 /** §2.12 SQL-dialect surface — the query shapes a Hadoop-stack user writes
   * through Hive-style SQL rather than an API: correlated/uncorrelated
@@ -85,12 +86,11 @@ object SqlSurface {
       |LIMIT 50""".stripMargin
 
   val lateralExplodeSql: String =
-    """SELECT w, count(*) AS cnt
-      |FROM (SELECT unnest(string_split_regex(lower(text), '\s+')) AS w FROM documents)
-      |WHERE w <> ''
-      |GROUP BY w
-      |ORDER BY cnt DESC, w
-      |LIMIT 50""".stripMargin
+    s"""SELECT w, count(*) AS cnt
+       |FROM (SELECT unnest(${Text.wordsSql("text")}) AS w FROM documents)
+       |GROUP BY w
+       |ORDER BY cnt DESC, w
+       |LIMIT 50""".stripMargin
 
   /** Recursive CTE (Spark 4 / SPARK-24497): 20 rows of exact bigint
     * factorials — pure integer recursion, no fixture dependence, shared
@@ -250,7 +250,6 @@ object SqlSurface {
   }
 
   val sqlCreateInsert: Q = (s, d) => {
-    Tables.registerViews(s, d)
     val loc = ddlScratchDir
     s.sql("DROP TABLE IF EXISTS graft_orders_ddl")
     s.sql(
@@ -259,7 +258,7 @@ object SqlSurface {
          |USING parquet
          |PARTITIONED BY (o_orderpriority)
          |LOCATION '$loc'""".stripMargin)
-    s.sql(
+    Tables.sql(s, d,
       """INSERT OVERWRITE TABLE graft_orders_ddl PARTITION (o_orderpriority)
         |SELECT o_orderkey, o_totalprice, o_orderpriority
         |FROM orders WHERE o_orderstatus = 'F'""".stripMargin)
@@ -326,6 +325,6 @@ object SqlSurface {
     Op.shared("sql_cte_chain", cteChainSql),
     Op("sql_lateral_explode", Op.sqlQuery(lateralExplodeSpark), Sql(lateralExplodeSql)),
     Op.shared("sql_recursive_cte", recursiveCteSql),
-    Op("mr_pi", (s, _) => s.sql(piSpark), Sql(piSql)),
+    Op("mr_pi", Op.sqlQuery(piSpark), Sql(piSql)),
   )
 }

@@ -97,8 +97,7 @@ class FixtureSchemaSpec extends SparkSpec {
     // Verify silently skipped. Force-analyze every loader so a drifted
     // encoding the tripwire's accepted-set misses still fails here, loudly.
     Tables.names.foreach { t =>
-      val df = if (t == "events") Tables.events(spark, sfDir)
-               else Tables.load(spark, sfDir, t)
+      val df = Tables.table(spark, sfDir, t)
       df.queryExecution.assertAnalyzed()
       assert(df.limit(1).count() == 1, s"$t: fixture is empty")
     }

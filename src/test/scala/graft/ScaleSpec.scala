@@ -55,11 +55,10 @@ class ScaleSpec extends SparkSpec {
     val dim = Tables.customer(spark, sfDir)
       .where(col("c_mktsegment") === "MACHINERY")
     ScaleTechniques.registerBloomFunctions(spark)
-    Tables.registerViews(spark, sfDir)
     val total = Tables.orders(spark, sfDir).count()
     // might_contain demands a constant/scalar-subquery filter side — same
     // spelling as the registered operator
-    val surviving = spark.sql(
+    val surviving = Tables.sql(spark, sfDir,
       """SELECT count(*) AS n FROM orders
         |WHERE might_contain(
         |  (SELECT bloom_filter_agg(c_custkey, 2000L, 19170L) FROM customer

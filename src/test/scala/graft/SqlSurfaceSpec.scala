@@ -44,10 +44,18 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(catalogRows == sourceRows)
   }
 
+  test("building every operator leaves no fixture temp view: SQL text binds the tables in its plan") {
+    val dir = new java.io.File(sfDir).getParent + "/sf0.01"
+    Tables.names.foreach(spark.catalog.dropTempView)
+    try SparkEntry.ops.foreach(_.build(spark, dir)) finally spark.catalog.clearCache()
+    val views = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && Tables.names.contains(t.name)).map(_.name)
+    assert(views.isEmpty, s"temp views left by a build: ${views.mkString(", ")}")
+  }
+
   test("GROUP BY ALL expands to the explicit grouping") {
     val viaAll = SparkEntry.queries("sql_group_by_all")(spark, sfDir).collect().toSeq
-    Tables.registerViews(spark, sfDir)
-    val explicit = spark.sql(
+    val explicit = Tables.sql(spark, sfDir,
       """SELECT l_returnflag, l_linestatus, count(*) AS cnt,
         |  cast(sum(cast(l_quantity as bigint)) as bigint) AS sum_qty
         |FROM lineitem
@@ -79,8 +87,7 @@ class SqlSurfaceSpec extends SparkSpec {
     val rows = SparkEntry.queries("sql_lateral_join")(spark, sfDir).collect()
     val perRegion = rows.groupBy(_.getString(0))
     assert(perRegion.values.forall(_.length <= 2))
-    Tables.registerViews(spark, sfDir)
-    val expect = spark.sql(
+    val expect = Tables.sql(spark, sfDir,
       """SELECT r_name, n_name FROM (
         |  SELECT r_name, n_name,
         |    row_number() OVER (PARTITION BY r_regionkey ORDER BY n_name) AS rk

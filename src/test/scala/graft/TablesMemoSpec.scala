@@ -34,8 +34,7 @@ class TablesMemoSpec extends SparkSpec {
   test("countOf sums the parquet footers: equals count() on every sf0.01 table, with no Spark job") {
     val dir = new java.io.File(sfDir).getParent + "/sf0.01"
     Tables.names.foreach { n =>
-      val counted = // events through its encoding adapter, as registerViews does
-        (if (n == "events") Tables.events(spark, dir) else Tables.load(spark, dir, n)).count()
+      val counted = Tables.table(spark, dir, n).count() // events through its adapter
       val (footer, jobs) = jobsDuring(Tables.countOf(spark, dir, n))
       assert(footer == counted, s"$n: footer rows $footer vs count() $counted")
       assert(jobs == 0, s"$n: countOf ran $jobs Spark job(s)")
